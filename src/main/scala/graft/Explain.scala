@@ -58,28 +58,6 @@ object Explain {
               .agg(org.apache.spark.sql.functions.collect_set(
                 org.apache.spark.sql.functions.col("l_partkey")).as("ps")),
             "ps"), levels = 1, rounds = 2)
-        case "_barrier_ab" => (s, d) => // SCALE.md cluster-barrier probe:
-          // time the SAME frames through localCheckpoint vs a reliable
-          // checkpoint dir (executor-loss-safe), V-row and E-row shapes
-          import org.apache.spark.sql.functions.{col, collect_set}
-          s.sparkContext.setCheckpointDir("/tmp/graft-ckpt-ab")
-          val sets = graft.sources.Tables.lineitem(s, d)
-            .groupBy(col("l_orderkey"))
-            .agg(collect_set(col("l_partkey")).as("ps"))
-          def time(what: String)(f: => Long): Unit = {
-            val t0 = System.nanoTime; val n = f
-            println(f"[barrier_ab] $what: ${(System.nanoTime - t0) / 1e9}%.2fs ($n rows)")
-          }
-          val eFrame = graft.ops.Graph.undirectedEdges(sets, "ps")
-          time("E-row localCheckpoint")(eFrame.localCheckpoint().count())
-          time("E-row reliable checkpoint")(eFrame.checkpoint().count())
-          val vFrame = eFrame.groupBy(col("src"))
-            .agg(collect_set(col("dst")).as("ns"))
-          time("V-row adjacency localCheckpoint")(
-            vFrame.localCheckpoint().count())
-          time("V-row adjacency reliable checkpoint")(
-            vFrame.checkpoint().count())
-          eFrame.limit(1)
         case "_lv_mv1" => (s, d) => // level-1 weighted move rounds alone
           // (public unweighted face = the same per-round exchange chain)
           graft.ops.Graph.modularityMoves(graft.ops.Graph.undirectedEdges(

@@ -389,7 +389,7 @@ object Relational3 {
 
   // ---------------------------------------------------------------- q91
   // Column profiler (ops/Profile): exact per-column stats in ONE scan
-  // (multi-count-distinct Expand + stack unpivot). The oracle is the
+  // (grouping-sets Expand + stack unpivot). The oracle is the
   // naive per-column UNION ALL — same rows, #cols scans; the point of the
   // operator is that the Spark plan does it in one.
   private def q91(s: SparkSession, d: String): DataFrame = {

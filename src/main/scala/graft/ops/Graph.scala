@@ -1,13 +1,22 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Iterative graph analytics over edge DataFrames. Companion to the
   * connected-components machinery in [[Dedup]] — same execution shape
   * (edge table checkpointed once, a slim per-node state frame joined
   * against it per round, `localCheckpoint` as the iteration barrier so
   * lineage never re-derives earlier rounds).
+  *
+  * The round loops share a handful of private kernels: one adjacency
+  * index builder ([[adjacency]], [[nodesOf]]), one seed resolver
+  * ([[seedsIn]]), one PageRank round ([[rankRounds]]), one BFS frontier
+  * expansion ([[frontierLayers]]) with its Brandes backward pass
+  * ([[brandesBackward]]), and one modularity move round
+  * ([[moveRounds]]). Every iteration barrier of those families sits in
+  * these kernels.
   */
 object Graph {
 
@@ -40,6 +49,80 @@ object Graph {
           .cast(t)))
   }
 
+  /** The ADJACENCY INDEX the round loops probe: one (src, ns[]) row per
+    * node with out-edges — V index rows instead of E edge rows. Each
+    * round equi-joins its slim state against the index and explodes only
+    * the MATCHED lists in-task, so no round re-shuffles the E-row edge
+    * table. NULL endpoints are dropped explicitly (a null is not a node).
+    * `ns` defaults to collect_set(dst), which also dedups parallel edges,
+    * so out-degree = size(ns); weighted callers pass [[weightedNs]] and
+    * any per-node aggregate in `more` (e.g. the out-weight sum `sw`).
+    * Degree-skew contract enforced by [[guardDegree]]. Lazy barrier: the
+    * first consumer (a control-plane count or the first probe)
+    * materializes it.
+    *
+    * @param edges (src, dst[, w]) rows */
+  private def adjacency(edges: DataFrame,
+      ns: Column = collect_set(col("dst")),
+      more: Seq[Column] = Nil): DataFrame =
+    guardDegree(edges.filter(col("src").isNotNull && col("dst").isNotNull)
+      .groupBy(col("src")).agg(ns.as("ns"), more: _*), "src", "ns")
+      .localCheckpoint(false)
+
+  /** Weighted index entries: (dst, w) structs, one per (src, dst) row. */
+  private def weightedNs: Column = collect_list(struct(col("dst"), col("w")))
+
+  /** (node) per index entry: the plain neighbor id, or the `dst` of a
+    * weighted (dst, w) entry. */
+  private def neighborIds(adj: DataFrame): DataFrame = {
+    val x = adj.select(explode(col("ns")).as("node"))
+    if (x.schema("node").dataType.isInstanceOf[StructType])
+      x.select(col("node.dst").as("node"))
+    else x
+  }
+
+  /** The node set of an index: its src keys plus the dst-only sinks. On
+    * a `symmetric` edge set (every (src,dst) has its (dst,src)) there are
+    * no sinks, so the node set IS the key set — a projection of the
+    * materialized index; the general union is checkpointed because every
+    * round reads it. */
+  private def nodesOf(adj: DataFrame, symmetric: Boolean): DataFrame =
+    if (symmetric) adj.select(col("src").as("node"))
+    else adj.select(col("src").as("node")).unionByName(neighborIds(adj))
+      .distinct().localCheckpoint(false)
+
+  /** The (node) seeds present in the graph. Validating a seed against the
+    * src keys is one slim semi-join; only seeds that are NOT src keys
+    * (sink nodes — none in a `symmetric` graph) force the full-|E|
+    * dst-side membership pass, which is driver-gated on that remainder
+    * being non-empty. Seeds outside the graph carry no edges and get no
+    * row. */
+  private def seedsIn(adj: DataFrame, seeds: DataFrame,
+      symmetric: Boolean): DataFrame = {
+    val sd0 = seeds.select(col("node")).distinct()
+    // sd feeds both the semi and the anti probe; symmetric skips the anti
+    // probe, so sd has one consumer and needs no barrier
+    val sd = if (symmetric) sd0 else sd0.localCheckpoint()
+    val keys = adj.select(col("src").as("node"))
+    val srcSeeds = sd.join(keys, Seq("node"), "left_semi")
+    lazy val rem = sd.join(keys, Seq("node"), "left_anti")
+    if (symmetric || rem.isEmpty) srcSeeds
+    else srcSeeds.unionByName(
+      rem.join(neighborIds(adj).distinct(), Seq("node"), "left_semi"))
+  }
+
+  /** md5_low64 of a string, sign-flipped so signed long order is the
+    * unsigned hash order — a content-keyed, engine-replayable priority
+    * ([[graft.functions.Md5Low64]] parity contract). */
+  private def unsignedMd5(s: Column): Column =
+    graft.functions.Md5Low64(s).bitwiseXOR(lit(Long.MinValue))
+
+  /** Rounds between state barriers in the lazily chained loops
+    * ([[rankRounds]], [[ssspWeighted]]): a bounded iteration count chains
+    * through Catalyst in one job, while long runs need the barrier to cap
+    * lineage depth and the stage-retry blast radius. */
+  private val barrierEvery = 8
+
   /** PageRank with damping 0.85 over a directed edge list, fixed
     * iteration count — entity-importance scoring (e.g. rank parts by
     * co-purchase centrality, domains by cross-link mass) where the
@@ -53,38 +136,24 @@ object Graph {
     * of mass per node per round (≈10⁻¹² relative) — ordering-irrelevant,
     * determinism-preserving.
     *
-    * Scale shape: contributions probe an ADJACENCY INDEX (the [[bfsHops]]
-    * form, applied here after it won there 6.6→3.7 s). One up-front
-    * collect_set aggregation folds the parallel-edge dedup and the
-    * grouping into a single exchange and materializes (src, ns[]) — V
-    * index rows instead of E edge rows; the out-degree is size(ns), free.
-    * Each round then equi-joins the slim (node, pr) state against the
-    * V-row index and explodes the matched adjacency lists IN-TASK, so the
-    * per-round shuffle moves V state rows + the partially-aggregated
-    * contribution sums, where the previous (src, dst, deg)-table form
-    * re-shuffled all E rows through the join every round. The state frame
-    * checkpoints only every `checkpointInterval` rounds: a bounded
-    * iteration count chains fine through Catalyst in one job, while long
-    * runs need the barrier to cap lineage depth and stage-retry blast
-    * radius (measured locally: per-round checkpoints tripled a 5-round
-    * wall-clock in scheduler overhead alone). N (node count) is a
+    * Scale shape: the [[adjacency]] index, built in one collect_set
+    * exchange, probed by the slim (node, pr) state every round
+    * ([[rankRounds]]); the per-round shuffle moves V state rows plus the
+    * partially-aggregated contribution sums. N (node count) is a
     * control-plane scalar. Nodes with no inbound edges settle at the base
     * rank; dangling nodes (no outbound) leak their mass by DEFAULT — the
     * standard simplification — or redistribute it uniformly when
     * `redistributeDangling` is set: each round then runs one extra slim
     * aggregate (Σ pr over the once-built dangling-node frame, a 1-row
-    * control-plane collect that becomes the next round's literal — the
-    * perceptron/BPE discipline) and adds `(dangling_mass div N)` to every
-    * node's contribution sum before damping, so Σ pr stays ≈ 1e12 up to
-    * the documented ≤1-unit-per-node floor leaks. On a dangling-free
-    * graph the frame is empty, the collects are skipped, and the output
-    * is bit-identical to the default path. Mass-conserving mode
-    * checkpoints the state per round (the collect forces it anyway).
-    * Degree-skew contract: one adjacency array per node must fit in an
-    * executor row — ENFORCED at build time by [[guardDegree]]
-    * (`graft.graph.maxDegree`, named error instead of an executor OOM);
-    * a web-scale hub graph should pre-cap degree or salt-split hub rows
-    * upstream.
+    * control-plane collect that becomes the next round's literal) and
+    * adds `(dangling_mass div N)` to every node's contribution sum
+    * before damping, so Σ pr stays ≈ 1e12 up to the documented
+    * ≤1-unit-per-node floor leaks. On a dangling-free graph the frame is
+    * empty, the collects are skipped, and the output is bit-identical to
+    * the default path. Mass-conserving mode checkpoints the state per
+    * round (the collect forces it anyway). Degree-skew contract: one
+    * adjacency array per node must fit in an executor row — ENFORCED at
+    * build time by [[guardDegree]] (`graft.graph.maxDegree`).
     *
     * @param edges (src, dst) rows; pass both directions for undirected
     * @param symmetric caller-asserted "every (src,dst) has its (dst,src)"
@@ -93,71 +162,82 @@ object Graph {
     *   and every node has inbound mass so the per-round dangling left
     *   join is the identity — pr reads straight off the contribution
     *   aggregate, one exchange per round instead of two. Results are
-    *   bit-identical to the general path on symmetric input (measured
-    *   clean-harness medians at sf0.1, q124 shape: 4.2 → 3.4 s).
+    *   bit-identical to the general path on symmetric input.
     * @return (node, pr) — pr in 1e12 units
     */
   def pageRank(edges: DataFrame, iterations: Int = 5,
-      checkpointInterval: Int = 8, symmetric: Boolean = false,
+      symmetric: Boolean = false,
       redistributeDangling: Boolean = false): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
-    // (src, ns[]) — collect_set dedups parallel edges, so this IS the
-    // distinct-edge adjacency; out-degree = size(ns). NULL endpoints are
-    // dropped EXPLICITLY (a null is not a node): collect_set would skip
-    // null dst anyway but silently keep a null-src group — declare the
-    // contract instead of inheriting aggregate null semantics.
-    // lazy index + node checkpoints (round-10 job-floor cut): the
-    // control-plane count below is the first consumer and materializes
-    // them inside its own job
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false)
-    // symmetric: dst values ⊆ src keys, so the adjacency keys are the
-    // node set — a projection of the materialized index (checkpointing
-    // a copy would only add a job); general: dst-only sinks exist and
-    // need the explode+distinct union (checkpointed: consumed per round)
-    val nodes = if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("node")))
-        .distinct().localCheckpoint(false)
+    uniformRank(adjacency(edges), iterations, symmetric, redistributeDangling)
+  }
+
+  /** [[pageRank]] / [[pageRankWeighted]] over a built index: every node
+    * starts at 1e12 div N and receives floor(0.15·1e12/N) teleport mass
+    * per round. */
+  private def uniformRank(adj: DataFrame, iterations: Int,
+      symmetric: Boolean, redistributeDangling: Boolean): DataFrame = {
+    val nodes = nodesOf(adj, symmetric)
     val n = nodes.count() // control-plane scalar (drives two literals)
-    val base = 150000000000L / n // floor(0.15 · 1e12 / N)
-    // mass-conserving mode: dangling nodes (no out-edges) are exactly the
-    // node-set remainder against the adjacency keys — built once; empty
-    // on symmetric input by construction (every node is a src key)
+    // dangling nodes (no out-edges) are the node-set remainder against the
+    // index keys — built once; empty on symmetric input by construction
     val dang = if (redistributeDangling && !symmetric)
-      nodes.join(adj.select(col("src").as("node")), Seq("node"), "left_anti")
-        .localCheckpoint() // consumed once per round
-    else null
-    val dangActive = dang != null && !dang.isEmpty
-    var pr = nodes.withColumn("pr", lit(1000000000000L / n))
+      Some(nodes.join(adj.select(col("src").as("node")), Seq("node"),
+        "left_anti").localCheckpoint()) // consumed once per round
+    else None
+    rankRounds(adj, nodes, nodes.withColumn("pr", lit(1000000000000L / n)),
+      iterations, symmetric, Some(150000000000L / n),
+      dang.filter(!_.isEmpty).map(_ -> n))
+  }
+
+  /** The PageRank round shared by [[pageRank]], [[personalizedPageRank]]
+    * and [[pageRankWeighted]], in integer 1e12 units:
+    *
+    *   pr' = teleport + (85·(Σcontrib + dangling share)) div 100
+    *
+    * Contributions split uniformly (`pr div size(ns)`) or, on a weighted
+    * index (one carrying the out-weight sum `sw`), in proportion to the
+    * edge weight (`(pr·w) div sw`). Each round equi-joins the slim state
+    * against the index, explodes the matched lists in-task and
+    * partially aggregates the sums. The state has one consumer per round,
+    * so rounds chain lazily and checkpoint only every [[barrierEvery]]
+    * rounds — every round in mass-conserving mode.
+    *
+    * @param basis the node universe the state is re-keyed on: (node) with
+    *   a uniform `base` teleport, or (node, sb) with per-node teleport
+    *   `sb` when `base` is None
+    * @param dangling the checkpointed non-empty dangling-node frame and N,
+    *   when dangling mass is redistributed
+    */
+  private def rankRounds(adj: DataFrame, basis: DataFrame, pr0: DataFrame,
+      iterations: Int, symmetric: Boolean, base: Option[Long],
+      dangling: Option[(DataFrame, Long)] = None): DataFrame = {
+    val weighted = adj.columns.contains("sw")
+    var pr = pr0
     for (i <- 1 to iterations) {
-      // dangling mass of the CURRENT state, folded in as a literal (the
-      // 1-row control-plane collect discipline); div N floors like every
-      // other mass split here
-      val dangShare = if (dangActive)
-        pr.join(dang, Seq("node"), "left_semi")
-          .agg(coalesce(sum(col("pr")), lit(0L))).head.getLong(0) / n
-      else 0L
-      val contrib = adj.join(pr.withColumnRenamed("node", "src"), "src")
-        .select(col("ns"), expr("pr div size(ns)").as("c"))
-        .select(explode(col("ns")).as("node"), col("c"))
+      // dangling mass of the CURRENT state, folded in as a literal (a 1-row
+      // control-plane collect); div N floors like every other mass split
+      val share = dangling.fold("") { case (dang, n) =>
+        val mass = pr.join(dang, Seq("node"), "left_semi")
+          .agg(coalesce(sum(col("pr")), lit(0L))).head().getLong(0)
+        s" + ${mass / n}L"
+      }
+      val probe = adj.join(pr.withColumnRenamed("node", "src"), "src")
+      val contrib = (if (weighted)
+          probe.select(explode(col("ns")).as("e"), col("pr"), col("sw"))
+            .select(col("e.dst").as("node"), expr("(pr * e.w) div sw").as("c"))
+        else probe.select(col("ns"), expr("pr div size(ns)").as("c"))
+            .select(explode(col("ns")).as("node"), col("c")))
         .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      // symmetric: contrib's key set == nodes (every node has an inbound
-      // mirror edge), so the dangling-node left join is the identity
-      pr = if (symmetric)
-        contrib.select(col("node"),
-          (lit(base) + expr(s"(85 * (sc + ${dangShare}L)) div 100")).as("pr"))
-      else nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr(
-            s"(85 * (coalesce(sc, 0L) + ${dangShare}L)) div 100")).as("pr"))
-      // dangling mode: the next round's collect forces the state anyway —
-      // checkpoint so it is computed once, not re-derived per consumer
-      if (dangActive && i < iterations) pr = pr.localCheckpoint()
-      else if (i % checkpointInterval == 0 && i < iterations)
+      // symmetric: every node receives a contribution (mirror edges), so
+      // contrib's key set is the node set — the re-key join is the
+      // identity (skipped under a uniform teleport, inner otherwise)
+      val keyed = if (symmetric && base.isDefined) contrib
+        else basis.join(contrib, Seq("node"), if (symmetric) "inner" else "left")
+      val sc = if (symmetric) "sc" else "coalesce(sc, 0L)"
+      pr = keyed.select(col("node"), (base.fold(col("sb"))(lit(_)) +
+        expr(s"(85 * ($sc$share)) div 100")).as("pr"))
+      if ((dangling.isDefined || i % barrierEvery == 0) && i < iterations)
         pr = pr.localCheckpoint()
     }
     pr
@@ -173,18 +253,15 @@ object Graph {
     * division of exact-in-double values (numerator ≤ maxdeg·10⁶ ≪ 2⁵³) —
     * bit-reproducible cross-engine.
     *
-    * Scale shape: the [[pageRank]]/[[bfsHops]] adjacency-index cost
-    * model, doubled because HITS scatters in both directions — an
-    * IN-index (dst, srcs[]) probed by the slim authority state (each
-    * authority scatters its score to its in-neighbors) and an OUT-index
-    * (src, dsts[]) probed by the hub state. Each index is one
-    * collect_set exchange (which also dedups parallel edges),
-    * checkpointed once; each round is then two V-row equi-joins with
-    * in-task explodes + partial-aggregated sums instead of two E-row
-    * edge-table joins; the max is a 1-row broadcast. State checkpoints
-    * once per round (it is consumed by the next round AND the final
-    * ranking). Same degree-skew contract as [[bfsHops]]: one adjacency
-    * array per node per executor row.
+    * Scale shape: the [[pageRank]] adjacency-index cost model, doubled
+    * because HITS scatters in both directions — an IN-index (dst,
+    * srcs[]) probed by the slim authority state and an OUT-index (src,
+    * dsts[]) probed by the hub state; each round is two V-row equi-joins
+    * with in-task explodes + partial-aggregated sums; the max is a 1-row
+    * broadcast. Same degree-skew contract as [[bfsHops]]: one adjacency
+    * array per node per executor row. Kept apart from [[rankRounds]]:
+    * two opposite-direction indexes and a per-half-round max
+    * normalization do not fit the single-index PageRank round.
     *
     * @param edges (src, dst) rows
     * @return (kind, node, score): kind ∈ {hub, authority}, score 0..1000;
@@ -193,14 +270,10 @@ object Graph {
   def hits(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, "hits needs at least one round")
     // upstream edge derivation is scanned exactly ONCE (into the
-    // out-index, whose collect_set partial aggregation dedups parallel
-    // edges map-side); the in-index re-derives the edge set from the
-    // materialized V-row out-index via an in-task explode — no raw E-row
-    // checkpoint needed
-    // null endpoints dropped explicitly — the [[pageRank]] contract
-    // LAZY checkpoints (round-10 job-floor cut): the in-index build
-    // materializes the out-index, the first round's probe materializes
-    // the in-index — no separate materialization jobs up front.
+    // out-index); the in-index re-derives the edge set from the
+    // materialized V-row out-index via an in-task explode. Lazy barriers:
+    // the in-index build materializes the out-index, the first round's
+    // probe materializes the in-index.
     val outAdj = guardDegree(edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .groupBy(col("src")).agg(collect_set(col("dst")).as("dsts")),
@@ -235,9 +308,7 @@ object Graph {
       // mid-run auth feeds the next round's hraw AND (via amax's broadcast
       // subtree) would be re-derived once per broadcast — without the
       // barrier lineage doubles per round. The LAST auth has exactly one
-      // consumer (the output union): checkpointing it would materialize a
-      // V-row frame nobody reads twice. Lazy: the next round's probe
-      // materializes it (round-10 job-floor cut).
+      // consumer (the output union), so it stays unmaterialized.
       if (r < rounds) auth = auth.localCheckpoint(false)
     }
     hub.select(lit("hub").as("kind"), col("node"), col("h").as("score"))
@@ -252,14 +323,13 @@ object Graph {
     * form generates k² and discards half. The array is sorted in-row via
     * `sort_array` (a plain codegen expression — `array_sort`'s default
     * LAMBDA comparator is a higher-order function and CodegenFallback,
-    * which split the span and measured ~1.8× slower warm at 100×), so
-    * the tail slice after position i holds exactly the elements greater
-    * than ps[i]; posexplode, Slice, and the inner explode all stay in
-    * whole-stage codegen (same HOF lesson as transform() — measured 1.5×
-    * slower at 10×; the [[graft.ops.RecordLinkage]] intra-block idiom).
-    * Arrays of size < 2 emit nothing with no guard needed: an empty
-    * array yields zero posexplode rows, and the last position's slice
-    * length (size − __i − 1, never negative since __i ≤ size − 1) is 0.
+    * which splits the codegen span), so the tail slice after position i
+    * holds exactly the elements greater than ps[i]; posexplode, Slice,
+    * and the inner explode all stay in whole-stage codegen (the
+    * [[graft.ops.RecordLinkage]] intra-block idiom). Arrays of size < 2
+    * emit nothing with no guard needed: an empty array yields zero
+    * posexplode rows, and the last position's slice length (size − __i −
+    * 1, never negative since __i ≤ size − 1) is 0.
     *
     * @param sets  one row per group, `setCol` holding the distinct set
     * @return (src, dst) with src < dst, one row per in-group pair
@@ -277,8 +347,6 @@ object Graph {
     * distinct frame is localCheckpoint'ed BEFORE mirroring so the
     * k(k−1)/2 generation runs once and both directions (plus any seed
     * derivation on the same frame) read the slim materialized edges.
-    * A/B'd at 100×: q124 PageRank 126 → 22 s cold / 57 → 8 s warm,
-    * q183 BFS 172 → 22 s cold / 27 → 11 s warm.
     *
     * @param sets one row per group, `setCol` holding the distinct set
     * @return (src, dst) distinct, both directions of every in-group pair
@@ -307,8 +375,7 @@ object Graph {
   def triangleCounts(edges: DataFrame, canonical: Boolean = false)
       : DataFrame = {
     val e = canonicalFrame(edges, canonical)
-    val deg = degreesOf(e)
-    triangleCountsOn(e, deg)
+    triangleCountsOn(e, degreesOf(e))
   }
 
   /** Canonical simple undirected edge frame: (u < v), deduped, self-loops
@@ -318,9 +385,9 @@ object Graph {
     edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      // lazy (round-10): every caller either counts it first (modularity,
-      // louvain — the count materializes it) or chains all consumers into
-      // one output job (block locks materialize it exactly once there)
+      // lazy: every caller either counts it first (modularity, louvain —
+      // the count materializes it) or chains all consumers into one
+      // output job (block locks materialize it exactly once there)
       .filter(col("u") =!= col("v")).distinct().localCheckpoint(false)
 
   /** [[canonicalUndirected]] with a caller assertion (the `symmetric`/
@@ -331,11 +398,10 @@ object Graph {
     * only the multi-consumer checkpoint remains. Results are identical
     * on genuinely canonical input; assert it only by construction.
     *
-    * SEAL (round-11, the verdict's watch item): a wrong assertion here
-    * produces wrong answers, not an error — so under
-    * `graft.graph.debugCanonical=true` (a debug conf, never set on the
-    * bench path) the assertion is VERIFIED: an in-plan raise_error on
-    * any row violating u < v, plus a driver-side duplicate-pair probe.
+    * SEAL: a wrong assertion here produces wrong answers, not an error —
+    * so under `graft.graph.debugCanonical=true` (a debug conf, never set
+    * on the bench path) the assertion is VERIFIED: an in-plan raise_error
+    * on any row violating u < v, plus a driver-side duplicate-pair probe.
     * Cost lives only in debug mode. */
   private def canonicalFrame(edges: DataFrame, canonical: Boolean): DataFrame =
     if (canonical) {
@@ -366,26 +432,29 @@ object Graph {
     e.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
 
-  private def triangleCountsOn(e: DataFrame, deg: DataFrame): DataFrame = {
+  private def triangleCountsOn(e: DataFrame, deg: DataFrame): DataFrame =
+    trianglesOf(e, deg)
+      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
+
+  /** Each triangle of a canonical edge frame exactly once, as (a, b, c)
+    * with b < c (the [[triangleCounts]] degree-oriented enumeration).
+    *
+    * @param deg the frame's [[degreesOf]] table */
+  private def trianglesOf(e: DataFrame, deg: DataFrame): DataFrame = {
     // orient: tail = (degree, id)-smaller endpoint
+    val uLow = col("du") < col("dv") ||
+      (col("du") === col("dv") && col("u") < col("v"))
     val dir = e
       .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
-      .select(
-        when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")), col("u"))
-          .otherwise(col("v")).as("lo"),
-        when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("hi"))
-    val wedges = dir.as("x").join(dir.as("y"),
+      .select(when(uLow, col("u")).otherwise(col("v")).as("lo"),
+        when(uLow, col("v")).otherwise(col("u")).as("hi"))
+    // b < c by construction → (b, c) is already canonical for the close test
+    dir.as("x").join(dir.as("y"),
         col("x.lo") === col("y.lo") && col("x.hi") < col("y.hi"))
       .select(col("x.lo").as("a"), col("x.hi").as("b"), col("y.hi").as("c"))
-    // b < c by construction → (b, c) is already canonical for the close test
-    val tris = wedges.join(e,
-      col("b") === col("u") && col("c") === col("v"), "left_semi")
-    tris.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
+      .join(e, col("b") === col("u") && col("c") === col("v"), "left_semi")
   }
 
   /** Per-node LOCAL CLUSTERING COEFFICIENT over the simple undirected
@@ -417,6 +486,23 @@ object Graph {
         expr("(2000000 * n_triangles) div (degree * (degree - 1))"))
   }
 
+  /** One-row-per-node enforcement for label frames: duplicate (node, label)
+    * rows would silently MULTIPLY through the u-/v-side edge joins of
+    * [[modularity]] and [[contractGraph]] (double-counted intra_edges,
+    * degree_sum, contraction weights) — so a node with more than one label
+    * row fails loudly with its id (the contractGraph null-endpoint
+    * discipline), never skews Q. One V-row aggregate, map-side combinable. */
+  private def uniqueLabels(labels: DataFrame, who: String): DataFrame =
+    labels.select(col("node"), col("label"))
+      .groupBy(col("node"))
+      .agg(min(col("label")).as("__l"), count(lit(1)).as("__n"))
+      .select(col("node"),
+        when(col("__n") > 1, raise_error(concat(
+          lit(s"$who: duplicate label rows for node "),
+          col("node").cast("string"),
+          lit(" (labels must have exactly one row per node)"))))
+          .otherwise(col("__l")).as("label"))
+
   /** MODULARITY of a node labeling over the simple undirected graph
     * (Newman–Girvan, public literature): Q = Σ_c [e_c/m − (d_c/2m)²]
     * with m the edge count, e_c the intra-community edge count and d_c
@@ -440,23 +526,6 @@ object Graph {
     * @param labels (node, label) — one row per node
     * @return (label, n_nodes, degree_sum, intra_edges, q_term_x9)
     */
-  /** One-row-per-node enforcement for label frames: duplicate (node, label)
-    * rows would silently MULTIPLY through the u-/v-side edge joins of
-    * [[modularity]] and [[contractGraph]] (double-counted intra_edges,
-    * degree_sum, contraction weights) — so a node with more than one label
-    * row fails loudly with its id (the contractGraph null-endpoint
-    * discipline), never skews Q. One V-row aggregate, map-side combinable. */
-  private def uniqueLabels(labels: DataFrame, who: String): DataFrame =
-    labels.select(col("node"), col("label"))
-      .groupBy(col("node"))
-      .agg(min(col("label")).as("__l"), count(lit(1)).as("__n"))
-      .select(col("node"),
-        when(col("__n") > 1, raise_error(concat(
-          lit(s"$who: duplicate label rows for node "),
-          col("node").cast("string"),
-          lit(" (labels must have exactly one row per node)"))))
-          .otherwise(col("__l")).as("label"))
-
   def modularity(edges: DataFrame, labels: DataFrame,
       canonical: Boolean = false): DataFrame = {
     val e = canonicalFrame(edges, canonical)
@@ -465,8 +534,7 @@ object Graph {
   }
 
   /** [[modularity]] body on an ALREADY-canonical checkpointed edge frame
-    * with its edge count — [[louvain]] evaluates the gate once per level
-    * and must not re-run the canonical distinct each time. */
+    * with its edge count. */
   private def modularityFromCanonical(e: DataFrame, m: Long,
       labels: DataFrame): DataFrame = {
     require(m > 0, "modularity needs at least one edge")
@@ -485,12 +553,17 @@ object Graph {
     byLabel.join(intra, Seq("label"), "left")
       .select(col("label"), col("n_nodes"), col("degree_sum"),
         coalesce(col("intra_edges"), lit(0L)).as("intra_edges"))
-      .withColumn("q_term_x9",
-        floor((lit(m).cast("decimal(38,0)") * 4 * col("intra_edges") -
-          col("degree_sum").cast("decimal(38,0)") * col("degree_sum"))
-          .cast("double") * 1e9 / lit(4.0 * m.toDouble * m.toDouble))
-          .cast("long"))
+      .withColumn("q_term_x9", qTerm(m, col("intra_edges"), col("degree_sum")))
   }
+
+  /** One community's floor-quantized modularity term ·1e9:
+    * (4m·intra − degsum²) in exact DECIMAL(38,0), then one double
+    * multiply-divide and floor. */
+  private def qTerm(m: Long, intra: Column, degsum: Column): Column =
+    floor((lit(m).cast("decimal(38,0)") * 4 * intra -
+      degsum.cast("decimal(38,0)") * degsum)
+      .cast("double") * 1e9 / lit(4.0 * m.toDouble * m.toDouble))
+      .cast("long")
 
   /** Multi-source BFS hop distance, bounded rounds: every node reachable
     * from a seed within `rounds` hops gets its exact hop distance; nodes
@@ -504,24 +577,14 @@ object Graph {
     * EXACTNESS: distances are integers produced only by min() and +1 —
     * no floats anywhere, bit-identical across engines and partitionings.
     *
-    * Scale shape: FRONTIER expansion over an ADJACENCY INDEX. One
-    * up-front collect_set aggregation folds the parallel-edge dedup and
-    * the grouping into a single exchange and materializes (src, ns[])
-    * — V index rows instead of E edge rows. Each round then probes the
-    * index with the (slim) frontier and explodes only the MATCHED
-    * adjacency lists: per-round cost O(V + |edges(frontier)|), where
-    * joining the raw edge table re-scans all E rows every round (the
-    * round-4 profile: 4 rounds × 2M-row edge scans dominated the query;
-    * the index form scans 2M once and ~20k per round after). A node's
-    * distance is final the round it appears (min over rounds ≡
-    * first-reached round), so only nodes discovered in round r−1 expand
-    * in round r. Each round materializes ONLY the new frontier
-    * (localCheckpoint — it feeds the next expansion, the anti-join, and
-    * the result); the reached set is the lazy union of the checkpointed
-    * frontiers, and an EMPTY frontier short-circuits the remaining
-    * rounds on the driver (the checkpoint already materialized it, so
-    * the emptiness probe is control-plane — semantics are unchanged,
-    * rounds past the eccentricity were always no-ops).
+    * Scale shape: FRONTIER expansion over the [[adjacency]] index
+    * ([[frontierLayers]]): each round probes the index with the slim
+    * frontier and explodes only the MATCHED adjacency lists — per-round
+    * cost O(V + |edges(frontier)|), where joining the raw edge table
+    * re-scans all E rows every round. A node's distance is final the
+    * round it appears, so only nodes discovered in round r−1 expand in
+    * round r; an EMPTY frontier short-circuits the remaining rounds on
+    * the driver (rounds past the eccentricity were always no-ops).
     *
     * Degree-skew caveat: one adjacency array per node must fit in an
     * executor row (the collect_set contract) — fine through ~10⁷-degree
@@ -541,58 +604,79 @@ object Graph {
   def bfsHops(edges: DataFrame, seeds: DataFrame, rounds: Int = 6,
       symmetric: Boolean = false): DataFrame = {
     require(rounds >= 1, "bfsHops needs at least one round")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: f0's count materializes it
-    // seeds outside the graph carry no edges and (as before) no row.
-    // Validating a seed against the src keys is one slim semi-join; only
-    // seeds that are NOT src keys (sink nodes — none at all in symmetric
-    // graphs) force the expensive dst-side membership pass, so that
-    // full-|E| explode is driver-gated on the remainder being non-empty
-    // (at 30× the unconditional node-set distinct was a third of the
-    // whole query).
-    // one checkpoint: sd feeds both the semi and the anti probe; the
-    // probes themselves are slim single-consumer frames (rem is re-derived
-    // on the rare non-empty path — cheaper than a barrier per query).
-    // symmetric: the anti probe is empty by construction, so sd has one
-    // consumer and stays lazy — no checkpoint job.
-    val sd0 = seeds.select(col("node")).distinct()
-    val sd = if (symmetric) sd0 else sd0.localCheckpoint()
-    val srcSeeds = sd.join(adj.select(col("src").as("node")),
-      Seq("node"), "left_semi")
-    val f0 = (if (symmetric || rem(sd, adj).isEmpty) srcSeeds
-      else srcSeeds.unionByName(
-        rem(sd, adj).join(adj.select(explode(col("ns")).as("node")).distinct(),
-          Seq("node"), "left_semi")))
-      .withColumn("dist", lit(0L))
+    val adj = adjacency(edges)
+    unionOf(frontierLayers(adj, seedsIn(adj, seeds, symmetric), rounds, Nil,
+      sigma = false)._1, "node", "dist")
+  }
+
+  /** The BFS frontier kernel shared by [[bfsHops]], [[bfsPathCounts]],
+    * [[betweennessDependencies]] and [[betweennessSampled]]: starting
+    * from the layer-0 rows, each round probes the index with the current
+    * frontier, drops already-reached nodes (anti-join against the union
+    * of earlier layers) and materializes ONLY the new layer — it feeds
+    * the next expansion, the anti-join and the result. Each layer is a
+    * lazy barrier whose count is both its materialization and the
+    * emptiness probe: one job per layer.
+    *
+    * With `sigma`, each layer also carries σ, the number of shortest
+    * paths: all shortest paths to a dist-r node arrive through dist-(r−1)
+    * neighbors, so σ is the per-round SUM over the frontier's σ and is
+    * final the round a node first appears (contributions into
+    * already-reached nodes are non-shortest arrivals the anti-join
+    * drops). Each layer's σ is pinned by the [[longLoud]] guard.
+    *
+    * @param seeds (keys..., node) layer-0 rows
+    * @param keys per-source key columns: empty for one multi-seed BFS,
+    *   `Seq("s")` for a batch of independent BFS runs, one per s
+    * @return every layer as (keys..., node, dist[, sigma]) rows, and
+    *   whether an empty layer ended the expansion (then the last layer
+    *   is that empty one)
+    */
+  private def frontierLayers(adj: DataFrame, seeds: DataFrame, rounds: Int,
+      keys: Seq[String], sigma: Boolean): (Seq[DataFrame], Boolean) = {
+    val id = keys :+ "node"
+    val carried = (if (sigma) id :+ "sigma" else id).map(col)
+    val d0 = seeds.withColumn("dist", lit(0L))
+    val f0 = (if (sigma) d0.withColumn("sigma", lit(1L)) else d0)
       .localCheckpoint(false)
     val layers = scala.collection.mutable.ArrayBuffer(f0)
-    var frontier = f0.select(col("node"))
+    var frontier = f0.select(carried: _*)
     var r = 1
-    // LAZY checkpoint + count (round-10 job-floor cut): the count job is
-    // both the materialization AND the emptiness probe — one job per
-    // layer where eager-checkpoint-then-isEmpty paid two.
     var done = f0.count() == 0L
     while (r <= rounds && !done) {
-      val reached = layers.map(_.select(col("node"))).reduce(_.unionByName(_))
-      val newly = adj.join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(explode(col("ns")).as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
+      val reached = unionOf(layers.toSeq, id: _*)
+      val probe = adj.join(frontier.withColumnRenamed("node", "src"), Seq("src"))
+        .select(keys.map(col) ++ (explode(col("ns")).as("node") +:
+          (if (sigma) Seq(col("sigma")) else Nil)): _*)
+      val arrived =
+        if (!sigma) probe.distinct()
+        else probe.groupBy(id.map(col): _*)
+          .agg(sum(col("sigma")).as("sigma"))
+          .withColumn("sigma", longLoud(col("sigma"), "sigma"))
+      val newly = arrived.join(reached, id, "left_anti")
         .withColumn("dist", lit(r.toLong))
         .localCheckpoint(false)
       layers += newly
-      frontier = newly.select(col("node"))
+      frontier = newly.select(carried: _*)
       done = newly.count() == 0L
       r += 1
     }
-    layers.map(df => df.select(col("node"), col("dist")))
-      .reduce(_.unionByName(_))
+    (layers.toSeq, done)
   }
 
-  // seeds that are not src keys — the sink-node remainder ([[bfsHops]])
-  private def rem(sd: DataFrame, adj: DataFrame): DataFrame =
-    sd.join(adj.select(col("src").as("node")), Seq("node"), "left_anti")
+  /** The union of per-layer frames, each projected to `cols`. */
+  private def unionOf(layers: Seq[DataFrame], cols: String*): DataFrame =
+    layers.map(_.select(cols.map(col): _*)).reduce(_.unionByName(_))
+
+  /** [[frontierLayers]] with σ, cut at the real horizon: `done` ⇒ the
+    * LAST layer is empty, so it is dropped and the backward pass starts
+    * from a populated layer (an all-empty BFS keeps f0: the union and the
+    * δ=0 base case are both well-defined on it). */
+  private def sigmaFrontier(adj: DataFrame, seeds: DataFrame, rounds: Int,
+      keys: Seq[String]): Seq[DataFrame] = {
+    val (ls, done) = frontierLayers(adj, seeds, rounds, keys, sigma = true)
+    if (done && ls.size > 1) ls.init else ls
+  }
 
   /** Multi-source BFS with SHORTEST-PATH COUNTS: every node within
     * `rounds` hops gets its exact hop distance AND σ = the number of
@@ -601,19 +685,13 @@ object Graph {
     * route to the flagged set; large σ means redundancy) and the forward
     * pass of Brandes' betweenness. Same bounded-round contract and
     * frontier-over-adjacency-index shape as [[bfsHops]]; the only
-    * addition is a per-round SUM over the frontier's σ values (all
-    * shortest paths to a dist-r node arrive through dist-(r−1)
-    * neighbors, so σ is final the round a node first appears —
-    * contributions into already-reached nodes are non-shortest arrivals
-    * and the anti-join drops them).
+    * addition is a per-round SUM over the frontier's σ values
+    * ([[frontierLayers]]).
     *
-    * EXACTNESS: σ is integer sums only — BIGINT accumulators (round-11;
-    * primitive hash-agg buffers, half the shuffle bytes of the former
-    * DECIMAL(38,0) carriers) because path counts compound
-    * multiplicatively with depth (branching^rounds); past the 2⁶² layer
-    * guard ([[longLoud]]) or a 2⁶³ ANSI sum overflow the query fails
-    * loudly rather than wrapping — the BIGINT presentation seam capped
-    * the usable range at 2⁶³ anyway.
+    * EXACTNESS: σ is integer sums only, in BIGINT accumulators (primitive
+    * hash-agg buffers) — path counts compound multiplicatively with depth
+    * (branching^rounds), so past the 2⁶² layer guard ([[longLoud]]) or a
+    * 2⁶³ ANSI sum overflow the query fails loudly rather than wrapping.
     * Multi-seed semantics: seeds sit at distance 0 with σ = 1; a node's
     * σ totals shortest paths from ALL nearest seeds.
     *
@@ -621,23 +699,20 @@ object Graph {
     */
   def bfsPathCounts(edges: DataFrame, seeds: DataFrame, rounds: Int = 4,
       symmetric: Boolean = false): DataFrame =
-    sigmaLayers(edges, seeds, rounds, symmetric)._2
-      .map(df => df.select(col("node"), col("dist"), col("sigma")))
-      .reduce(_.unionByName(_))
+    unionOf(sigmaLayers(edges, seeds, rounds, symmetric)._2,
+      "node", "dist", "sigma")
 
-  /** 2⁶² loud ceiling for the long-typed σ/δ accumulators (round-11; the
+  /** 2⁶² loud ceiling for the long-typed σ/δ accumulators (the
     * bigintLoud discipline pushed inside the operator): every layer's
     * aggregate output is pinned ≤ 2⁶², so no single downstream add can
     * silently pass 2⁶³ — and ANSI mode (Spark 4 default, asserted at
     * operator entry by [[requireAnsi]]) makes the long SUM itself throw
-    * on overflow, never wrap. The operating envelope narrows from
-    * DECIMAL(38,0)'s 10³⁸ to 2⁶², which the output seam's BIGINT
-    * presentation capped at 2⁶³ anyway — in exchange the hot per-layer
-    * aggregates run on primitive long hash-agg buffers (half the
-    * shuffle bytes, no per-row Decimal allocation). */
+    * on overflow, never wrap. The operating envelope is 2⁶², which the
+    * output seam's BIGINT presentation caps at 2⁶³ anyway; in exchange
+    * the hot per-layer aggregates run on primitive long hash-agg
+    * buffers. */
   private val loudCeil = 1L << 62
-  private def longLoud(c: org.apache.spark.sql.Column, what: String)
-      : org.apache.spark.sql.Column =
+  private def longLoud(c: Column, what: String): Column =
     when(c > lit(loudCeil) || c < 0L,
       raise_error(concat(
         lit(s"$what overflows the 2^62 long-accumulator guard: "),
@@ -657,53 +732,13 @@ object Graph {
       symmetric: Boolean): (DataFrame, Seq[DataFrame]) = {
     require(rounds >= 1, "bfsPathCounts needs at least one round")
     requireAnsi(edges, "bfsPathCounts")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: f0's count materializes it
-    val sd0 = seeds.select(col("node")).distinct()
-    val sd = if (symmetric) sd0 else sd0.localCheckpoint()
-    val srcSeeds = sd.join(adj.select(col("src").as("node")),
-      Seq("node"), "left_semi")
-    val f0 = (if (symmetric || rem(sd, adj).isEmpty) srcSeeds
-      else srcSeeds.unionByName(
-        rem(sd, adj).join(adj.select(explode(col("ns")).as("node")).distinct(),
-          Seq("node"), "left_semi")))
-      .withColumn("dist", lit(0L))
-      .withColumn("sigma", lit(1L))
-      .localCheckpoint(false)
-    val layers = scala.collection.mutable.ArrayBuffer(f0)
-    var frontier = f0.select(col("node"), col("sigma"))
-    var r = 1
-    // lazy checkpoint + count: materialization and emptiness probe share
-    // one job per layer (the bfsHops round-10 cut)
-    var done = f0.count() == 0L
-    while (r <= rounds && !done) {
-      val reached = layers.map(_.select(col("node"))).reduce(_.unionByName(_))
-      val newly = adj
-        .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(explode(col("ns")).as("node"), col("sigma"))
-        .groupBy(col("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .withColumn("sigma", longLoud(col("sigma"), "sigma"))
-        .join(reached, Seq("node"), "left_anti")
-        .withColumn("dist", lit(r.toLong))
-        .localCheckpoint(false)
-      layers += newly
-      frontier = newly.select(col("node"), col("sigma"))
-      done = newly.count() == 0L
-      r += 1
-    }
-    // `done` ⇒ the LAST layer is empty; drop it so the backward pass
-    // starts from a real horizon (an all-empty BFS keeps f0: the union
-    // and the δ=0 base case are both well-defined on it)
-    val ls = layers.toSeq
-    (adj, if (done && ls.size > 1) ls.init else ls)
+    val adj = adjacency(edges)
+    (adj, sigmaFrontier(adj, seedsIn(adj, seeds, symmetric), rounds, Nil))
   }
 
   /** Betweenness-centrality dependencies — Brandes' BACKWARD pass over the
-    * multi-source BFS DAG of [[bfsPathCounts]] (Brandes 2001; the round-7
-    * verdict's missing-depth item #1): walking layers deepest-first,
+    * multi-source BFS DAG of [[bfsPathCounts]] (Brandes 2001): walking
+    * layers deepest-first,
     *
     *   δ(v) = Σ_{w ∈ succ(v)} σ(v)/σ(w) · (1 + δ(w)),
     *
@@ -721,53 +756,64 @@ object Graph {
     * the exact bits with 128-bit `//`.
     *
     * Scale shape: the forward pass is [[bfsPathCounts]] (V-row adjacency
-    * index, one probe per layer); the backward pass runs the SAME probe
-    * per layer in reverse — layer d's nodes probe the index, matched
-    * adjacency lists explode in-task, and the join with layer d+1's
-    * checkpointed state keeps only DAG successors; one map-side-combinable
-    * aggregate per layer. Bounded rounds ⇒ bounded (2·rounds) joins total.
-    * Like the forward σ, δ of the horizon layer is DEFINED over the
-    * truncated DAG: nodes past `rounds` hops contribute nothing (callers
-    * size `rounds` to the radius they care about — the [[kCore]]
-    * discipline).
+    * index, one probe per layer); the backward pass
+    * ([[brandesBackward]]) runs the SAME probe per layer in reverse.
+    * Bounded rounds ⇒ bounded (2·rounds) joins total. Like the forward
+    * σ, δ of the horizon layer is DEFINED over the truncated DAG: nodes
+    * past `rounds` hops contribute nothing (callers size `rounds` to the
+    * radius they care about — the [[kCore]] discipline).
     *
     * @return (node, dist, sigma, delta_x9) for nodes within `rounds` hops
     */
   def betweennessDependencies(edges: DataFrame, seeds: DataFrame,
       rounds: Int = 4, symmetric: Boolean = false): DataFrame = {
     val (adj, layers) = sigmaLayers(edges, seeds, rounds, symmetric)
+    unionOf(brandesBackward(adj, layers, Nil),
+      "node", "dist", "sigma", "delta_x9")
+  }
+
+  /** Brandes' backward pass over [[frontierLayers]] σ layers, keyed like
+    * them (`keys` empty: one merged DAG; `Seq("s")`: one DAG per
+    * source). Layer d's nodes probe the index, matched adjacency lists
+    * explode in-task, and the join with layer d+1's state keeps only DAG
+    * successors of the same source; one map-side-combinable aggregate
+    * per layer. Every state is a lazy barrier read by the next-shallower
+    * round and by the caller's union — both land in the single job the
+    * output action runs, so the whole pass is one job.
+    *
+    * @return the (keys..., node, dist, sigma, delta_x9) state per layer,
+    *   shallowest first
+    */
+  private def brandesBackward(adj: DataFrame, layers: Seq[DataFrame],
+      keys: Seq[String]): List[DataFrame] = {
+    val ks = keys.map(col)
     val zero = lit(0L)
-    // LAZY backward states (round-10 job-floor cut): each state is read
-    // by the next-shallower round's successor join and by the final
-    // union — both land in the single job the output action runs, so the
-    // whole backward pass collapses from one eager job per layer into
-    // one job, with each marked frame persisted at first compute.
     var states = List(layers.last.withColumn("delta_x9", zero)
       .localCheckpoint(false))
     for (d <- layers.size - 2 to 0 by -1) {
-      val next = states.head.select(col("node").as("w"),
-        col("sigma").as("__sw"), col("delta_x9").as("__dw"))
+      val next = states.head.select(ks ++ Seq(col("node").as("w"),
+        col("sigma").as("__sw"), col("delta_x9").as("__dw")): _*)
       val terms = adj
-        .join(layers(d).select(col("node").as("src"), col("sigma").as("__sv")),
-          Seq("src"))
-        .select(col("src").as("node"), col("__sv"),
-          explode(col("ns")).as("w"))
-        .join(next, Seq("w")) // keeps only successors (dist = d+1)
-        .select(col("node"),
+        .join(layers(d).select(ks ++ Seq(col("node").as("src"),
+          col("sigma").as("__sv")): _*), Seq("src"))
+        .select(ks ++ Seq(col("src").as("node"), col("__sv"),
+          explode(col("ns")).as("w")): _*)
+        .join(next, keys :+ "w") // keeps only successors (dist = d+1)
+        .select(ks ++ Seq(col("node"),
           graft.functions.BrandesTerm(col("__sv"), col("__dw"), col("__sw"))
-            .as("__t"))
-        .groupBy(col("node"))
+            .as("__t")): _*)
+        .groupBy(ks :+ col("node"): _*)
         .agg(sum(col("__t")).as("__dsum"))
       states = layers(d)
-        .join(terms, Seq("node"), "left")
+        .join(terms, keys :+ "node", "left")
         // longLoud is null-transparent (a null sum falls to the otherwise
         // branch), so the guard composes with the left-join coalesce
-        .select(col("node"), col("dist"), col("sigma"),
-          coalesce(longLoud(col("__dsum"), "delta_x9"), zero).as("delta_x9"))
+        .select(ks ++ Seq(col("node"), col("dist"), col("sigma"),
+          coalesce(longLoud(col("__dsum"), "delta_x9"), zero)
+            .as("delta_x9")): _*)
         .localCheckpoint(false) :: states
     }
-    states.map(_.select(col("node"), col("dist"), col("sigma"),
-      col("delta_x9"))).reduce(_.unionByName(_))
+    states
   }
 
   /** SAMPLED-SOURCE betweenness — the form a 100 TB graph actually runs
@@ -784,7 +830,8 @@ object Graph {
     * bit-identical everywhere, exact betweenness×1e9 when k = n.
     *
     * Scale shape: all k sources run SIMULTANEOUSLY as one batched BFS —
-    * state rows are (s, node, dist, sigma), so the per-layer cost is the
+    * the [[frontierLayers]] / [[brandesBackward]] kernels keyed by s, so
+    * state rows are (s, node, dist, sigma) and the per-layer cost is the
     * SAME bounded probe-explode-aggregate as the single BFS with k× the
     * state rows, not k sequential passes (2·rounds joins total, not
     * 2·rounds·k). The estimator is how betweenness stays subquadratic:
@@ -804,84 +851,26 @@ object Graph {
     require(k >= 1, "betweennessSampled needs at least one source")
     require(rounds >= 1, "betweennessSampled needs at least one round")
     requireAnsi(edges, "betweennessSampled")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: the node count materializes it
+    val adj = adjacency(edges)
+    // a checkpointed node set in both modes (unlike [[nodesOf]]): the
+    // count and the sample's TakeOrdered both read it
     val nodes = (if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("node"))))
-      // lazy: the count below is the first consumer and materializes it
+      else adj.select(col("src").as("node")).unionByName(neighborIds(adj)))
       .distinct().localCheckpoint(false)
     val n = nodes.count()
     // deterministic sample: k smallest unsigned-md5 node ids (the ANN
     // seed discipline — replayable as ORDER BY md5_number_lower LIMIT k).
-    // NOT checkpointed: f0 is its only consumer and is materialized
-    // itself, so the TakeOrdered runs exactly once either way.
+    // NOT checkpointed: the first layer is its only consumer and is
+    // materialized itself, so the TakeOrdered runs exactly once.
     val srcs = nodes
-      .withColumn("__m", graft.functions.Md5Low64(col("node").cast("string"))
-        .bitwiseXOR(lit(Long.MinValue)))
+      .withColumn("__m", unsignedMd5(col("node").cast("string")))
       .orderBy(col("__m"), col("node"))
       .limit(k)
       .select(col("node").as("s"))
-    // batched per-source forward pass: layers keyed (s, node).
-    // lazy checkpoint + count per layer — the bfsHops round-10 cut.
-    val f0 = srcs.select(col("s"), col("s").as("node"))
-      .withColumn("dist", lit(0L))
-      .withColumn("sigma", lit(1L))
-      .localCheckpoint(false)
-    val layers = scala.collection.mutable.ArrayBuffer(f0)
-    var frontier = f0.select(col("s"), col("node"), col("sigma"))
-    var r = 1
-    var done = f0.count() == 0L
-    while (r <= rounds && !done) {
-      val reached = layers.map(_.select(col("s"), col("node")))
-        .reduce(_.unionByName(_))
-      val newly = adj
-        .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("s"), explode(col("ns")).as("node"), col("sigma"))
-        .groupBy(col("s"), col("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .withColumn("sigma", longLoud(col("sigma"), "sigma"))
-        .join(reached, Seq("s", "node"), "left_anti")
-        .withColumn("dist", lit(r.toLong))
-        .localCheckpoint(false)
-      layers += newly
-      frontier = newly.select(col("s"), col("node"), col("sigma"))
-      done = newly.count() == 0L
-      r += 1
-    }
-    val ls0 = layers.toSeq
-    val ls = if (done && ls0.size > 1) ls0.init else ls0
-    // batched backward pass: δ per (s, node), deepest layer first —
-    // lazy states, the [[betweennessDependencies]] round-10 cut (the
-    // whole backward chain runs as one job under the output action)
-    val zero = lit(0L)
-    var states = List(ls.last.withColumn("delta_x9", zero)
-      .localCheckpoint(false))
-    for (d <- ls.size - 2 to 0 by -1) {
-      val next = states.head.select(col("s"), col("node").as("w"),
-        col("sigma").as("__sw"), col("delta_x9").as("__dw"))
-      val terms = adj
-        .join(ls(d).select(col("s"), col("node").as("src"),
-          col("sigma").as("__sv")), Seq("src"))
-        .select(col("s"), col("src").as("node"), col("__sv"),
-          explode(col("ns")).as("w"))
-        .join(next, Seq("s", "w")) // same-source successors only
-        .select(col("s"), col("node"),
-          graft.functions.BrandesTerm(col("__sv"), col("__dw"), col("__sw"))
-            .as("__t"))
-        .groupBy(col("s"), col("node"))
-        .agg(sum(col("__t")).as("__dsum"))
-      states = ls(d)
-        .join(terms, Seq("s", "node"), "left")
-        .select(col("s"), col("node"), col("dist"), col("sigma"),
-          coalesce(longLoud(col("__dsum"), "delta_x9"), zero).as("delta_x9"))
-        .localCheckpoint(false) :: states
-    }
-    val all = states.map(_.select(col("s"), col("node"), col("delta_x9")))
-      .reduce(_.unionByName(_))
-    all.filter(col("node") =!= col("s")) // endpoints excluded (Brandes)
+    val layers = sigmaFrontier(adj,
+      srcs.select(col("s"), col("s").as("node")), rounds, Seq("s"))
+    unionOf(brandesBackward(adj, layers, Seq("s")), "s", "node", "delta_x9")
+      .filter(col("node") =!= col("s")) // endpoints excluded (Brandes)
       .groupBy(col("node"))
       .agg(sum(col("delta_x9")).as("delta_sum_x9"))
       .withColumn("delta_sum_x9", longLoud(col("delta_sum_x9"), "delta_sum_x9"))
@@ -910,15 +899,13 @@ object Graph {
     * and partition layouts. Non-seed nodes with no inbound mass sit at
     * exactly 0.
     *
-    * Scale shape: identical to [[pageRank]] — one collect_set exchange
-    * builds the V-row adjacency index; each round equi-joins the slim
-    * rank state and explodes matched lists in-task. The only addition is
-    * the (node, seed-base) frame, built once by a left-semi-derived flag
-    * join and checkpointed: per-round cost is unchanged. |S| counts only
-    * seeds PRESENT in the graph (a seed with no edges can neither give
-    * nor receive mass through the walk; callers wanting strict teleport
-    * semantics over absent seeds should union them in as isolated
-    * self-loop nodes explicitly).
+    * Scale shape: identical to [[pageRank]] ([[rankRounds]]). The only
+    * addition is the (node, seed-base) frame, built once by a
+    * left-semi-derived flag join and checkpointed: per-round cost is
+    * unchanged. |S| counts only seeds PRESENT in the graph (a seed with
+    * no edges can neither give nor receive mass through the walk; callers
+    * wanting strict teleport semantics over absent seeds should union
+    * them in as isolated self-loop nodes explicitly).
     *
     * @param edges (src, dst) rows; pass both directions for undirected
     * @param seeds (node) rows — the teleport set; must intersect the graph
@@ -927,51 +914,24 @@ object Graph {
     * @return (node, pr) — pr in 1e12 units
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-      iterations: Int = 5, checkpointInterval: Int = 8,
-      symmetric: Boolean = false): DataFrame = {
+      iterations: Int = 5, symmetric: Boolean = false): DataFrame = {
     require(iterations >= 1, "personalizedPageRank needs at least one iteration")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: the seed count materializes it
-    val nodes = if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("node")))
-        .distinct().localCheckpoint(false)
+    val adj = adjacency(edges)
+    val nodes = nodesOf(adj, symmetric)
     val sd = seeds.select(col("node")).distinct()
       .join(nodes, Seq("node"), "left_semi")
-    // (node, sb) — per-node teleport base, the only state beyond pageRank's;
-    // checkpointed once (lazily — the nSeeds count is the first consumer
-    // and materializes it), consumed every round. |S| is control-plane.
+    // (node, __s) seed flag — checkpointed once (lazily: the |S| count is
+    // the first consumer and materializes it), consumed every round
     val flagged = nodes.join(sd.withColumn("__s", lit(1)), Seq("node"), "left")
       .localCheckpoint(false)
     val nSeeds = flagged.filter(col("__s").isNotNull).count()
     require(nSeeds >= 1, "personalizedPageRank: no seed is present in the graph")
-    // lazy projections of the one checkpoint — materializing copies
-    // would only add jobs
-    val basis = flagged.select(col("node"),
-      when(col("__s").isNotNull, lit(150000000000L / nSeeds))
-        .otherwise(lit(0L)).as("sb"))
-    var pr = flagged.select(col("node"),
-      when(col("__s").isNotNull, lit(1000000000000L / nSeeds))
-        .otherwise(lit(0L)).as("pr"))
-    for (i <- 1 to iterations) {
-      val contrib = adj.join(pr.withColumnRenamed("node", "src"), "src")
-        .select(col("ns"), expr("pr div size(ns)").as("c"))
-        .select(explode(col("ns")).as("node"), col("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      // symmetric: every node receives a contribution row (mirror edges),
-      // so basis ⋈ contrib is total — inner join, one exchange
-      pr = if (symmetric)
-        basis.join(contrib, Seq("node"))
-          .select(col("node"), (col("sb") + expr("(85 * sc) div 100")).as("pr"))
-      else basis.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (col("sb") + expr("(85 * coalesce(sc, 0L)) div 100")).as("pr"))
-      if (i % checkpointInterval == 0 && i < iterations) pr = pr.localCheckpoint()
-    }
-    pr
+    // lazy projections of the one checkpoint
+    def seedShare(mass: Long): Column =
+      when(col("__s").isNotNull, lit(mass / nSeeds)).otherwise(lit(0L))
+    rankRounds(adj, flagged.select(col("node"), seedShare(150000000000L).as("sb")),
+      flagged.select(col("node"), seedShare(1000000000000L).as("pr")),
+      iterations, symmetric, base = None)
   }
 
   /** WEIGHTED PageRank: each node's rank splits across its out-edges in
@@ -990,9 +950,9 @@ object Graph {
     *
     * Scale shape: identical to [[pageRank]] — (dst, w)-struct adjacency
     * index with the out-weight sum folded into the SAME build exchange
-    * (no per-round weight aggregation, no higher-order functions — the
-    * q242 lesson), rounds chain lazily, one V-row state join + in-task
-    * explode + partial-aggregated sum per round.
+    * (no per-round weight aggregation, no higher-order functions), rounds
+    * chain lazily, one V-row state join + in-task explode +
+    * partial-aggregated sum per round.
     *
     * @param edges (src, dst, w) rows, w positive integral; pass both
     *              directions for undirected
@@ -1003,43 +963,15 @@ object Graph {
     * @return (node, pr) — pr in 1e12 units
     */
   def pageRankWeighted(edges: DataFrame, iterations: Int = 5,
-      checkpointInterval: Int = 8, symmetric: Boolean = false,
-      uniqueEdges: Boolean = false): DataFrame = {
+      symmetric: Boolean = false, uniqueEdges: Boolean = false): DataFrame = {
     require(iterations >= 1, "pageRankWeighted needs at least one iteration")
     val typed = edges
       .select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
     val summed = if (uniqueEdges) typed
       else typed.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-    val adj = guardDegree(summed
-      .groupBy(col("src"))
-      .agg(collect_list(struct(col("dst"), col("w"))).as("ns"),
-        sum(col("w")).as("sw")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: the node count materializes it
-    val nodes = if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("e"))
-          .select(col("e.dst").as("node")))
-        .distinct().localCheckpoint(false)
-    val n = nodes.count()
-    val base = 150000000000L / n
-    var pr = nodes.withColumn("pr", lit(1000000000000L / n))
-    for (i <- 1 to iterations) {
-      val contrib = adj.join(pr.withColumnRenamed("node", "src"), "src")
-        .select(explode(col("ns")).as("e"), col("pr"), col("sw"))
-        .select(col("e.dst").as("node"),
-          expr("(pr * e.w) div sw").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      pr = if (symmetric)
-        contrib.select(col("node"),
-          (lit(base) + expr("(85 * sc) div 100")).as("pr"))
-      else nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + expr("(85 * coalesce(sc, 0L)) div 100")).as("pr"))
-      if (i % checkpointInterval == 0 && i < iterations) pr = pr.localCheckpoint()
-    }
-    pr
+    uniformRank(adjacency(summed, weightedNs, Seq(sum(col("w")).as("sw"))),
+      iterations, symmetric, redistributeDangling = false)
   }
 
   /** Bounded-round single-source(-set) shortest paths over NON-NEGATIVE
@@ -1064,17 +996,13 @@ object Graph {
     * every node's relaxed neighbors AND (via the self-edge) its own cost,
     * so a min-aggregate both relaxes and carries unimproved state — the
     * previous round is consumed exactly ONCE, lineage stays linear, and
-    * all rounds chain LAZILY into a single job (the [[pageRank]] shape;
-    * state checkpoints only every `checkpointInterval` rounds). Measured
-    * against the delta-frontier alternative (probe with only improved
-    * nodes, checkpoint + merge + empty-probe per round): the per-round
-    * materialization barriers cost more than the full-relaxation explode
-    * saves at bench scale (sf0.1 co-purchase q242, isolated: 11.3 s
-    * frontier → 7.2 s lazy HOF form → 4.1 s self-edge form; 100×:
-    * 238.8 → 31.2 s) — revisit the frontier form
-    * only for graphs whose diameter ≫ rounds where late-round change sets
-    * vanish against V. The self-edge also makes each round EXACTLY the
-    * oracle's full-relaxation CTE, not just equivalent to it.
+    * rounds chain LAZILY into a single job (the [[pageRank]] shape; state
+    * checkpoints only every [[barrierEvery]] rounds). The full-relaxation
+    * form beats a delta-frontier form (probe with only improved nodes,
+    * checkpoint + merge + empty-probe per round) whenever per-round
+    * barriers cost more than the explode saves — revisit only for graphs
+    * whose diameter ≫ rounds. The self-edge also makes each round EXACTLY
+    * the oracle's full-relaxation CTE, not just equivalent to it.
     *
     * @param edges (src, dst, w) rows, w a non-negative integral column;
     *              pass both directions for undirected
@@ -1090,44 +1018,21 @@ object Graph {
     * @return (node, cost) for nodes reachable within `rounds` edges
     */
   def ssspWeighted(edges: DataFrame, seeds: DataFrame, rounds: Int = 4,
-      symmetric: Boolean = false, uniqueEdges: Boolean = false,
-      checkpointInterval: Int = 8): DataFrame = {
+      symmetric: Boolean = false, uniqueEdges: Boolean = false): DataFrame = {
     require(rounds >= 1, "ssspWeighted needs at least one round")
     val typed = edges
       .select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("w") >= 0)
     val minEdges = if (uniqueEdges) typed
       else typed.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-    // the index carries a ZERO-WEIGHT SELF-EDGE per node (appended once,
-    // before the checkpoint): relaxing it re-emits the node's own cost,
-    // so each round's "carry unimproved state" candidate comes out of the
-    // SAME plain-codegen explode as the neighbors. The first shipped form
-    // built the self-candidate per row per round with transform()+concat()
-    // — higher-order functions are CodegenFallback and allocate a struct
-    // array per node per round, measured 238.8 s isolated at 100× vs
-    // 35.8 s for the identically-shaped q243 explode; the self-edge form
-    // moves that work to one materialized build.
-    val adj = guardDegree(minEdges
-      .groupBy(col("src"))
-      .agg(collect_list(struct(col("dst"), col("w"))).as("ns"))
-      .select(col("src"), concat(col("ns"),
-        array(struct(col("src").as("dst"), lit(0L).as("w")))).as("ns")),
-      "src", "ns")
-      // lazy: the rounds chain into one job whose first probe
-      // materializes the index (round-10 job-floor cut)
-      .localCheckpoint(false)
-    val sd0 = seeds.select(col("node")).distinct()
-    val sd = if (symmetric) sd0 else sd0.localCheckpoint()
-    val srcSeeds = sd.join(adj.select(col("src").as("node")),
-      Seq("node"), "left_semi")
-    // sink-only seeds: the bfsHops driver-gated membership probe
-    var dist = (if (symmetric || rem(sd, adj).isEmpty) srcSeeds
-      else srcSeeds.unionByName(
-        rem(sd, adj).join(
-          adj.select(explode(col("ns")).as("e"))
-            .select(col("e.dst").as("node")).distinct(),
-          Seq("node"), "left_semi")))
-      .withColumn("cost", lit(0L))
+    // the ZERO-WEIGHT SELF-EDGE is appended once, inside the index build:
+    // relaxing it re-emits the node's own cost, so each round's "carry
+    // unimproved state" candidate comes out of the SAME plain-codegen
+    // explode as the neighbors (a per-round transform()+concat() would be
+    // a CodegenFallback higher-order function allocating per node)
+    val adj = adjacency(minEdges, concat(weightedNs,
+      array(struct(col("src").as("dst"), lit(0L).as("w")))))
+    var dist = seedsIn(adj, seeds, symmetric).withColumn("cost", lit(0L))
     for (r <- 1 to rounds) {
       // right join: every reached node survives (explode_outer + coalesce
       // cover the sink-only nodes with no index row — their "self-edge"
@@ -1140,7 +1045,7 @@ object Graph {
         .select(coalesce(col("e.dst"), col("src")).as("node"),
           (col("cost") + coalesce(col("e.w"), lit(0L))).as("c"))
         .groupBy(col("node")).agg(min(col("c")).as("cost"))
-      if (r % checkpointInterval == 0 && r < rounds) dist = dist.localCheckpoint()
+      if (r % barrierEvery == 0 && r < rounds) dist = dist.localCheckpoint()
     }
     dist
   }
@@ -1159,8 +1064,7 @@ object Graph {
     * EXACTNESS: labels are ids, updates are integer counts + an ordered
     * argmax — bit-identical across engines and partition layouts. The
     * argmax is one aggregate, not a per-node window: min over the packed
-    * (−count, label) atom ([[ArgmaxPack]] — order-identical to the
-    * former struct-min, but hash-aggregable) picks
+    * (−count, label) atom ([[ArgmaxPack]]) picks
     * max-count-then-min-label for any id sign, so the plan stays two
     * map-side-combinable HASH exchanges per round (counts to the
     * (node, label) axis, then the atom-min to nodes).
@@ -1172,7 +1076,8 @@ object Graph {
     * table again. On the symmetric path the state has exactly one
     * consumer per round, so rounds chain lazily into a single job; the
     * general path's keep-old merge adds a second consumer and a per-round
-    * checkpoint barrier with it.
+    * checkpoint barrier with it. Kept apart from [[moveRounds]]: a plain
+    * count argmax with no community totals or modularity score.
     *
     * @param edges (src, dst) rows; pass both directions for undirected
     * @param symmetric caller-asserted mirrored edge set: the node set is
@@ -1183,24 +1088,14 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 3,
       symmetric: Boolean = false): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
-    val adj = guardDegree(edges.select(col("src"), col("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("ns")),
-      "src", "ns")
-      .localCheckpoint(false) // lazy: the first probe materializes it
-    val nodes = if (symmetric) adj.select(col("src").as("node"))
-      else adj.select(col("src").as("node"))
-        .unionByName(adj.select(explode(col("ns")).as("node")))
-        .distinct().localCheckpoint(false)
-    var lab = nodes.select(col("node"), col("node").as("label"))
+    val adj = adjacency(edges)
+    var lab = nodesOf(adj, symmetric).select(col("node"), col("node").as("label"))
     for (r <- 1 to rounds) {
       val cnt = adj.join(lab.withColumnRenamed("node", "src"), "src")
         .select(explode(col("ns")).as("node"), col("label"))
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
-      // packed hash argmax (round-11, [[ArgmaxPack]]): c is a physical
-      // row count — always inside the 2^61 packing guard — so min(atom)
-      // hash-aggregates where the struct-min forced SortAggregate (two
-      // sorts of the candidate frame per round)
+      // packed hash argmax ([[ArgmaxPack]]): c is a physical row count —
+      // always inside the 2^61 packing guard
       val best = cnt
         .groupBy(col("node"))
         .agg(min(ArgmaxPack.atom(col("c"), col("label"))).as("__a"))
@@ -1210,12 +1105,9 @@ object Graph {
           .join(best, Seq("node"), "left")
           .select(col("node"), coalesce(col("label"), col("__old")).as("label")))
       // general path: lab feeds both the next probe and the keep-old merge
-      // — without the barrier lineage doubles per round. Symmetric path:
-      // exactly one consumer per round, so the whole loop chains lazily
-      // into one job (the pageRank/ssspWeighted shape; measured sf0.1
-      // q244: 5.5 → 2.6 s isolated dropping the per-round barrier).
-      // Lazy barrier: both consumers sit in the next round's plan, so the
-      // first stage that needs it materializes it (block-locked once).
+      // — without the barrier lineage doubles per round; lazy: both
+      // consumers sit in the next round's plan, so the first stage that
+      // needs it materializes it. Symmetric path: one consumer per round.
       if (!symmetric && r < rounds) lab = lab.localCheckpoint(false)
     }
     lab
@@ -1233,19 +1125,15 @@ object Graph {
     * EXACTNESS: the gain comparison multiplies out the 1/2m² terms —
     * score(C) = 2m·k_{i,C} − k_i·(Σtot(C) − [C = cur]·k_i), computed in
     * DECIMAL(38,0) (2m·c wraps int64 past ~10⁹ edges), argmax by
-    * (score desc, label asc) via [[argmaxLabel]] — the packed
-    * hash-aggregable atom while 4m² fits the 2⁶¹ guard, the
-    * min-over-(−score, label) struct beyond — one exchange, no per-node
-    * window, bit-identical across engines and layouts. Ties break to the
-    * SMALLEST community id (not "prefer staying") — a deterministic,
-    * documented choice.
+    * (score desc, label asc) via [[argmaxLabel]] — one exchange, no
+    * per-node window, bit-identical across engines and layouts. Ties
+    * break to the SMALLEST community id (not "prefer staying") — a
+    * deterministic, documented choice.
     *
-    * Scale shape: the [[pageRank]] adjacency-index cost model — the
-    * V-row index is built once; per round the slim (node, label) state
-    * makes one Σtot aggregate (community axis), one index probe with
-    * in-task explode (neighbor-label counts, map-side combinable), and
-    * one argmax exchange. State has three consumers per round, so each
-    * round checkpoints (the general-LPA barrier discipline).
+    * Scale shape: [[moveRounds]] over the [[adjacency]] index — per round
+    * one Σtot aggregate (community axis), one index probe with in-task
+    * explode (neighbor-label counts, map-side combinable), and one argmax
+    * exchange; the state checkpoints per round.
     *
     * @param edges any direction/duplication — canonicalized internally;
     *              degree = simple undirected degree
@@ -1257,37 +1145,58 @@ object Graph {
     val e = canonicalFrame(edges, canonical)
     val m = e.count() // control-plane scalar off the checkpoint
     require(m > 0, "modularityMoves needs at least one edge")
-    val mir = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-    val adj = guardDegree(
-      mir.groupBy(col("u").as("src")).agg(collect_set(col("v")).as("ns")),
-      "src", "ns").localCheckpoint(false) // lazy: first probe materializes
+    val adj = adjacency(mirror(e))
     val deg = adj.select(col("src").as("node"),
       size(col("ns")).cast("long").as("k"))
+    moveRounds(adj, deg, m, rounds, monotone = false)(
+      _.select(explode(col("ns")).as("node"), col("label"))
+        .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c")))
+  }
+
+  /** Both directions of a canonical (u, v[, w]) frame, as (src, dst[, w]). */
+  private def mirror(e: DataFrame): DataFrame = {
+    val rest = e.columns.filterNot(Set("u", "v")).map(col).toSeq
+    e.select(col("u").as("src") +: col("v").as("dst") +: rest: _*)
+      .unionByName(e.select(col("v").as("src") +: col("u").as("dst") +: rest: _*))
+  }
+
+  /** The synchronous modularity move round shared by [[modularityMoves]]
+    * and [[modularityMovesWeighted]]: per round, score every candidate
+    * community C of every node — the neighbor labels plus the node's
+    * current one — as 2m·c − k·(Σtot(C) − [C = cur]·k) and move to the
+    * [[argmaxLabel]] winner. The state has three consumers per round, so
+    * each round ends in a lazy barrier.
+    *
+    * @param deg (node, k) degrees — also the node universe
+    * @param monotone admit only candidates with label ≤ current (the
+    *   [[modularityMovesWeighted]] termination rule)
+    * @param counts the index ⋈ (src, label) state probe → (node, label,
+    *   c) neighbor-label mass
+    */
+  private def moveRounds(adj: DataFrame, deg: DataFrame, m: Long,
+      rounds: Int, monotone: Boolean)(
+      counts: DataFrame => DataFrame): DataFrame = {
     var lab = deg.select(col("node"), col("node").as("label"))
     for (r <- 1 to rounds) {
       // (node, cur, k) once per round: one V-row join instead of separate
-      // cur and deg joins against the E-row candidate frame below. NOT
-      // checkpointed (the round-10 job-floor cut): both parents are
-      // materialized (lab checkpointed per round, deg a projection of the
-      // checkpointed index), so each of the three consumers re-derives a
-      // slim V-row join inside its own stage instead of paying an eager
-      // materialization job + block-store copy per round.
+      // cur and deg joins against the E-row candidate frame. Both parents
+      // are materialized, so each of the three consumers re-derives it
+      // inside its own stage instead of paying a materialization job.
       val state = lab.select(col("node"), col("label").as("__cur"))
         .join(deg, Seq("node"))
       val tot = state.groupBy(col("__cur").as("label"))
         .agg(sum(col("k")).as("tot"))
-      val cnt = adj.join(lab.withColumnRenamed("node", "src"), Seq("src"))
-        .select(explode(col("ns")).as("node"), col("label"))
-        .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
       // the node's CURRENT community is always a candidate, even when no
       // neighbor shares it. NO dedup aggregate: when cur is also a
       // neighbor label, its zero-count row scores strictly below the true
       // row of the SAME label (score is monotone in c), so the argmax is
-      // untouched — a full E-row re-aggregation bought nothing.
-      val cand = cnt.unionByName(
-        state.select(col("node"), col("__cur").as("label"), lit(0L).as("c")))
-      val scored = cand
+      // untouched.
+      val cand = counts(adj.join(lab.withColumnRenamed("node", "src"), Seq("src")))
+        .unionByName(state.select(col("node"), col("__cur").as("label"),
+          lit(0L).as("c")))
         .join(state, Seq("node"))
+      val scored = (if (monotone) cand.filter(col("label") <= col("__cur"))
+        else cand)
         .join(tot, Seq("label"))
         .select(col("node"), col("label"),
           (lit(2L * m).cast("decimal(38,0)") * col("c") -
@@ -1295,9 +1204,6 @@ object Graph {
               (col("tot") - when(col("label") === col("__cur"), col("k"))
                 .otherwise(lit(0L)))).as("s"))
       lab = argmaxLabel(scored, m)
-      // lab feeds the probe + next round's state build — lazy barrier
-      // (all consumers sit in the next round's plan; block locks
-      // materialize it once)
       if (r < rounds) lab = lab.localCheckpoint(false)
     }
     lab
@@ -1341,22 +1247,30 @@ object Graph {
     * @return (label_a, label_b, weight) with label_a ≤ label_b
     */
   def contractGraph(edges: DataFrame, labels: DataFrame,
-      canonical: Boolean = false): DataFrame = {
-    val e = canonicalFrame(edges, canonical)
+      canonical: Boolean = false): DataFrame =
+    contracted(canonicalFrame(edges, canonical), labels, "label_a", "label_b")
+      .groupBy(col("label_a"), col("label_b"))
+      .agg(count(lit(1)).as("weight"))
+
+  /** The label-join body of [[contractGraph]] / [[contractGraphWeighted]]:
+    * both endpoints of every (u, v[, w]) row mapped to their labels
+    * (loudly on an unlabeled endpoint), emitted as (lo ≤ hi) plus the
+    * carried weight column. */
+  private def contracted(e: DataFrame, labels: DataFrame, lo: String,
+      hi: String): DataFrame = {
     // two consumers (u- and v-side joins): one V-row materialization
     val lbl = uniqueLabels(labels, "contractGraph").localCheckpoint(false)
-    val guard = (l: org.apache.spark.sql.Column) => when(l.isNull,
+    val guard = (l: Column) => when(l.isNull,
       raise_error(concat(lit("contractGraph: unlabeled edge endpoint "),
         lit("(labels must cover every node in the edge set)")))).otherwise(l)
+    val rest = e.columns.filterNot(Set("u", "v")).map(col).toSeq
     e.join(lbl.select(col("node").as("u"), col("label").as("lu")),
         Seq("u"), "left")
       .join(lbl.select(col("node").as("v"), col("label").as("lv")),
         Seq("v"), "left")
-      .select(guard(col("lu")).as("lu"), guard(col("lv")).as("lv"))
-      .select(least(col("lu"), col("lv")).as("label_a"),
-        greatest(col("lu"), col("lv")).as("label_b"))
-      .groupBy(col("label_a"), col("label_b"))
-      .agg(count(lit(1)).as("weight"))
+      .select(guard(col("lu")).as("lu") +: guard(col("lv")).as("lv") +: rest: _*)
+      .select(least(col("lu"), col("lv")).as(lo) +:
+        greatest(col("lu"), col("lv")).as(hi) +: rest: _*)
   }
 
   /** Weighted synchronous modularity moves — [[modularityMoves]]' exact
@@ -1369,12 +1283,22 @@ object Graph {
     * convention, which keeps Σk_i = 2m) but never in c — a node cannot
     * move "toward itself".
     *
+    * MONOTONE move rule: only candidates with label ≤ current are
+    * admissible. Synchronous argmax moves 2-cycle on mutually-attracted
+    * community PAIRS (A adopts B's label while B adopts A's — fatal on
+    * coarse graphs, where communities come in attracted pairs by
+    * construction); restricting moves to label-descending makes Σ labels
+    * strictly decrease whenever anything moves, so the sweep TERMINATES
+    * — no oscillation at any level — at the documented price that only
+    * the lower-id community of a pair can absorb the other (one extra
+    * round instead of a swap).
+    *
     * Input contract: CANONICAL weighted frame (u ≤ v, one row per
     * unordered pair, long weights, self-loops allowed) — what
     * [[contractGraphWeighted]] emits. Scale shape identical to
-    * [[modularityMoves]]: V-row adjacency index with in-task explode,
-    * one Σtot + one argmax exchange per round. */
-  /** @param m0 caller-known Σw (one E-scan saved). [[louvain]] passes the
+    * [[modularityMoves]] ([[moveRounds]] over a weighted index).
+    *
+    * @param m0 caller-known Σw (one E-scan saved). [[louvain]] passes the
     *   level-0 edge count at EVERY level: contraction conserves total
     *   edge mass (each original edge lands in exactly one coarse pair or
     *   self-loop), so Σw is level-invariant.
@@ -1391,60 +1315,21 @@ object Graph {
     val m = m0.getOrElse(
       e.agg(coalesce(sum(col("w")), lit(0L))).first().getLong(0))
     require(m > 0, "modularityMovesWeighted needs positive total weight")
-    val nonSelf = e.filter(col("u") =!= col("v"))
-    val mir = nonSelf.unionByName(
-      nonSelf.select(col("v").as("u"), col("u").as("v"), col("w")))
-    val adj = guardDegree(
-      mir.groupBy(col("u").as("src"))
-        .agg(collect_list(struct(col("v").as("dst"), col("w").as("w")))
-          .as("ns")),
-      "src", "ns").localCheckpoint(false) // lazy: first probe materializes
+    val mir = mirror(e.filter(col("u") =!= col("v")))
+    val adj = adjacency(mir, weightedNs)
     val selfW = e.filter(col("u") === col("v"))
       .select(col("u").as("node"), (col("w") * 2).as("sw"))
-    val nbrW = mir.groupBy(col("u").as("node")).agg(sum(col("w")).as("nw"))
+    val nbrW = mir.groupBy(col("src").as("node")).agg(sum(col("w")).as("nw"))
     // full outer: a self-loop-only community node still carries degree
     val deg = nbrW.join(selfW, Seq("node"), "full")
       .select(col("node"),
         (coalesce(col("nw"), lit(0L)) + coalesce(col("sw"), lit(0L)))
           .as("k"))
       .localCheckpoint(false) // lazy: the first round's tot materializes
-    var lab = deg.select(col("node"), col("node").as("label"))
-    for (r <- 1 to rounds) {
-      // un-checkpointed V-row state join — the [[modularityMoves]]
-      // round-10 job-floor cut (both parents materialized)
-      val state = lab.select(col("node"), col("label").as("__cur"))
-        .join(deg, Seq("node"))
-      val tot = state.groupBy(col("__cur").as("label"))
-        .agg(sum(col("k")).as("tot"))
-      val cnt = adj.join(lab.withColumnRenamed("node", "src"), Seq("src"))
-        .select(explode(col("ns")).as("n"), col("label"))
+    moveRounds(adj, deg, m, rounds, monotone = true)(
+      _.select(explode(col("ns")).as("n"), col("label"))
         .groupBy(col("n.dst").as("node"), col("label"))
-        .agg(sum(col("n.w")).as("c"))
-      val cand = cnt.unionByName(
-        state.select(col("node"), col("__cur").as("label"), lit(0L).as("c")))
-      val scored = cand
-        .join(state, Seq("node"))
-        // MONOTONE move rule: only candidates with label ≤ current are
-        // admissible. Synchronous argmax moves 2-cycle on mutually-
-        // attracted community PAIRS (A adopts B's label while B adopts
-        // A's — fatal on coarse graphs, where communities come in
-        // attracted pairs by construction); restricting moves to
-        // label-descending makes Σ labels strictly decrease whenever
-        // anything moves, so the sweep TERMINATES — no oscillation at
-        // any level — at the documented price that only the lower-id
-        // community of a pair can absorb the other (one extra round
-        // instead of a swap).
-        .filter(col("label") <= col("__cur"))
-        .join(tot, Seq("label"))
-        .select(col("node"), col("label"),
-          (lit(2L * m).cast("decimal(38,0)") * col("c") -
-            col("k").cast("decimal(38,0)") *
-              (col("tot") - when(col("label") === col("__cur"), col("k"))
-                .otherwise(lit(0L)))).as("s"))
-      lab = argmaxLabel(scored, m)
-      if (r < rounds) lab = lab.localCheckpoint(false) // lazy barrier
-    }
-    lab
+        .agg(sum(col("n.w")).as("c")))
   }
 
   /** Weight-preserving [[contractGraph]]: same label joins and loud
@@ -1452,25 +1337,12 @@ object Graph {
     * rows, and intra-community mass lands on (l, l) self-loops — the
     * exact coarse graph the next Louvain level moves on. */
   private[ops] def contractGraphWeighted(wedges: DataFrame,
-      labels: DataFrame): DataFrame = {
-    val lbl = uniqueLabels(labels, "contractGraph").localCheckpoint(false)
-    val guard = (l: org.apache.spark.sql.Column) => when(l.isNull,
-      raise_error(concat(lit("contractGraph: unlabeled edge endpoint "),
-        lit("(labels must cover every node in the edge set)")))).otherwise(l)
-    wedges
-      .join(lbl.select(col("node").as("u"), col("label").as("lu")),
-        Seq("u"), "left")
-      .join(lbl.select(col("node").as("v"), col("label").as("lv")),
-        Seq("v"), "left")
-      .select(guard(col("lu")).as("lu"), guard(col("lv")).as("lv"), col("w"))
-      .select(least(col("lu"), col("lv")).as("u"),
-        greatest(col("lu"), col("lv")).as("v"), col("w"))
+      labels: DataFrame): DataFrame =
+    contracted(wedges.select(col("u"), col("v"), col("w")), labels, "u", "v")
       .groupBy(col("u"), col("v")).agg(sum(col("w")).as("w"))
-  }
 
   /** Multi-level LOUVAIN (Blondel et al. 2008, public literature) — the
-    * composed move → contract → move pipeline the round-7 verdict asked
-    * for, with [[modularity]] on the ORIGINAL graph as the per-level
+    * composed move → contract → move pipeline, with [[modularity]] on the ORIGINAL graph as the per-level
     * acceptance gate:
     *
     *   level ℓ: labels = weighted moves on the current coarse graph;
@@ -1509,17 +1381,12 @@ object Graph {
     // aggregate — no label joins (value-identical to q(identity)). The
     // degree table doubles as the node universe for the identity
     // mapping: ONE E-row pass feeds both, instead of a separate
-    // explode-distinct exchange (canonical edges ⇒ every node has d ≥ 1)
-    // LAZY checkpoint (round-10 job-floor cut): bestQ's first() is the
-    // first consumer and materializes it in its own job anyway; eager
-    // would pay a separate materialization job first.
+    // explode-distinct exchange (canonical edges ⇒ every node has d ≥ 1).
+    // Lazy: bestQ's first() is the first consumer and materializes it.
     val deg0 = degreesOf(base).localCheckpoint(false)
     var mapping = deg0
       .select(col("n").as("node"), col("n").as("label"))
-    var bestQ = deg0
-      .select(floor(((col("d").cast("decimal(38,0)") * col("d") * -1)
-        .cast("double") * 1e9) / lit(4.0 * m0.toDouble * m0.toDouble))
-        .cast("long").as("t"))
+    var bestQ = deg0.select(qTerm(m0, lit(0L), col("d")).as("t"))
       .agg(coalesce(sum(col("t")), lit(0L))).first().getLong(0)
     var level = 1
     var improving = true
@@ -1531,20 +1398,15 @@ object Graph {
       // defensive E-row pin never fires here
       val lab = modularityMovesWeighted(cur, rounds, Some(m0),
         materialized = true)
-      // contraction doubles as the Q audit (the round-9 cut: the audit
-      // used to re-join composite labels over the ORIGINAL E rows at
-      // every level — ~2 full-E passes per accepted level at sf0.1).
-      // Contraction conserves both masses q_term_x9 is built from —
+      // contraction doubles as the Q audit: contraction conserves both masses q_term_x9 is built from —
       // intra(c) = the (c,c) self-loop weight, degree_sum(c) = 2·self +
       // mirrored cross mass — so the per-community floor-quantized terms
       // computed off the coarse graph are BIT-IDENTICAL to the original-
       // graph audit, and past level 1 the audited frame is community-
       // sized, not E-sized.
-      // LAZY checkpoint: qFromCoarse's 1-row first() is the first
-      // consumer and materializes the coarse graph inside its own job
-      // (local-mode block locks dedup the two subtree reads); the
-      // accepted-level reuse (`cur`) then reads the persisted blocks —
-      // one job per level where eager paid two.
+      // lazy: qFromCoarse's 1-row first() is the first consumer and
+      // materializes the coarse graph; the accepted-level reuse (`cur`)
+      // then reads the persisted blocks
       val cg = contractGraphWeighted(cur, lab).localCheckpoint(false)
       val qc = qFromCoarse(cg, m0)
       if (qc > bestQ) {
@@ -1579,10 +1441,7 @@ object Graph {
       .select(coalesce(col("iw"), lit(0L)).as("intra"),
         (coalesce(col("nw"), lit(0L)) +
           coalesce(col("iw"), lit(0L)) * 2).as("degsum"))
-      .select(floor((lit(m).cast("decimal(38,0)") * 4 * col("intra") -
-          col("degsum").cast("decimal(38,0)") * col("degsum"))
-          .cast("double") * 1e9 / lit(4.0 * m.toDouble * m.toDouble))
-          .cast("long").as("t"))
+      .select(qTerm(m, col("intra"), col("degsum")).as("t"))
       .agg(coalesce(sum(col("t")), lit(0L))).first().getLong(0)
   }
 
@@ -1663,6 +1522,8 @@ object Graph {
     * state frame is consumed three times per round, so without the
     * barrier lineage re-derivation grows 3^rounds. Cost per round is
     * O(|E_round|), monotonically shrinking.
+    * Kept apart from the shared round kernels: a peel over a shrinking
+    * edge frame, with no index and no per-node state.
     *
     * @param edges (src, dst) rows, any direction/duplication
     * @return (node, degree) for nodes surviving `rounds` peels, degree
@@ -1672,9 +1533,7 @@ object Graph {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
     var alive = canonicalFrame(edges, canonical)
     for (_ <- 1 to rounds) {
-      val keep = alive.select(explode(array(col("u"), col("v"))).as("n"))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k.toLong).select(col("n"))
+      val keep = degreesOf(alive).filter(col("d") >= k.toLong).select(col("n"))
       alive = alive
         .join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
@@ -1687,29 +1546,6 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
   }
 
-  /** Coreness (k-core number) of every node via the H-INDEX ITERATION
-    * (Lü, Chen, Ren, Zhang, Yan & Zhou 2016): c₀(v) = deg(v), then each
-    * round c(v) ← H({c(u) : u ∈ N(v)}) — the largest h such that at
-    * least h neighbors currently hold value ≥ h. The sequence is
-    * monotone non-increasing per node and converges to the exact core
-    * number, so a BOUNDED round count yields a per-node UPPER bound that
-    * is exact wherever the iteration has settled (the pageRank/bfsHops
-    * bounded-round contract; deep nested-core chains need more rounds).
-    * Unlike [[kCore]] (fixed k, global peeling) this produces the whole
-    * decomposition in one pass family — the standard "how deep in the
-    * graph's cohesive core is this node" curation signal.
-    *
-    * Scale shape: the adjacency index builds once ([[guardDegree]]
-    * contract); each round equi-joins the slim (node, c) state against
-    * the index, explodes in-task, and computes the H-index RELATIONALLY —
-    * desc-sort the collected neighbor values, posexplode, count positions
-    * with value ≥ position — keeping every stage whole-stage codegen
-    * (the orderedPairs HOF lesson: an aggregate()/zip_with() form splits
-    * the span). Per round: E in-task rows, two V-row exchanges.
-    *
-    * @param edges (src, dst) rows, any direction/duplication
-    * @return (node, coreness) — exact once converged, else upper bound
-    */
   /** k-truss of the simple undirected graph — the subgraph where every
     * surviving edge sits in ≥ k−2 triangles OF THE SUBGRAPH (Cohen 2008):
     * the edge-level cohesion cut one notch stronger than [[kCore]]
@@ -1738,7 +1574,7 @@ object Graph {
     val minSup = (k - 2).toLong
     var e = canonicalFrame(edges, canonical)
     def supportOf(ed: DataFrame): DataFrame = {
-      val tris = trianglesOf(ed)
+      val tris = trianglesOf(ed, degreesOf(ed))
       tris.select(explode(array(
           struct(least(col("a"), col("b")).as("u"),
             greatest(col("a"), col("b")).as("v")),
@@ -1778,6 +1614,8 @@ object Graph {
     * adjacency explode + one min-aggregate + two anti-joins — all
     * E-row-bounded, map-side combinable; the remaining-edge frame
     * checkpoints per round exactly like [[kCore]]'s peel.
+    * Kept apart from the shared round kernels for the same reason as
+    * [[kCore]]: each round shrinks the edge frame itself.
     *
     * @param edges (src, dst) rows, any direction/duplication
     * @return (node, mis_round) for every selected node — a node whose
@@ -1791,8 +1629,7 @@ object Graph {
     val pri = e0.select(explode(array(col("u"), col("v"))).as("node"))
       .distinct()
       .select(col("node"),
-        graft.functions.Md5Low64(concat(lit("mis:"), col("node").cast("string")))
-          .bitwiseXOR(lit(Long.MinValue)).as("p"))
+        unsignedMd5(concat(lit("mis:"), col("node").cast("string"))).as("p"))
       .localCheckpoint(false) // lazy: round 1's probe materializes it
     var remaining = pri
     var alive = e0
@@ -1824,34 +1661,38 @@ object Graph {
     mis
   }
 
-  /** Each triangle of a canonical edge frame exactly once, as (a, b, c)
-    * with b < c (the [[triangleCounts]] degree-oriented enumeration). */
-  private def trianglesOf(e: DataFrame): DataFrame = {
-    val deg = degreesOf(e)
-    val dir = e
-      .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
-      .select(
-        when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")), col("u"))
-          .otherwise(col("v")).as("lo"),
-        when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")), col("v"))
-          .otherwise(col("u")).as("hi"))
-    dir.as("x").join(dir.as("y"),
-        col("x.lo") === col("y.lo") && col("x.hi") < col("y.hi"))
-      .select(col("x.lo").as("a"), col("x.hi").as("b"), col("y.hi").as("c"))
-      .join(e, col("b") === col("u") && col("c") === col("v"), "left_semi")
-  }
-
+  /** Coreness (k-core number) of every node via the H-INDEX ITERATION
+    * (Lü, Chen, Ren, Zhang, Yan & Zhou 2016): c₀(v) = deg(v), then each
+    * round c(v) ← H({c(u) : u ∈ N(v)}) — the largest h such that at
+    * least h neighbors currently hold value ≥ h. The sequence is
+    * monotone non-increasing per node and converges to the exact core
+    * number, so a BOUNDED round count yields a per-node UPPER bound that
+    * is exact wherever the iteration has settled (the pageRank/bfsHops
+    * bounded-round contract; deep nested-core chains need more rounds).
+    * Unlike [[kCore]] (fixed k, global peeling) this produces the whole
+    * decomposition in one pass family — the standard "how deep in the
+    * graph's cohesive core is this node" curation signal.
+    *
+    * Scale shape: the adjacency index builds once ([[guardDegree]]
+    * contract); each round equi-joins the slim (node, c) state against
+    * the index, explodes in-task, and computes the H-index RELATIONALLY —
+    * desc-sort the collected neighbor values, posexplode, count positions
+    * with value ≥ position — keeping every stage whole-stage codegen
+    * (the orderedPairs HOF lesson: an aggregate()/zip_with() form splits
+    * the span). Per round: E in-task rows, two V-row exchanges.
+    *
+    * Kept apart from the shared round kernels: its index is keyed by
+    * node and each round is an H-index aggregate, not a scatter-sum.
+    *
+    * @param edges (src, dst) rows, any direction/duplication
+    * @return (node, coreness) — exact once converged, else upper bound
+    */
   def coreness(edges: DataFrame, rounds: Int = 4,
       canonical: Boolean = false): DataFrame = {
     require(rounds >= 1, "rounds must be positive")
     val e = canonicalFrame(edges, canonical)
-    val und = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-    val adj = guardDegree(
-      und.groupBy(col("u").as("node")).agg(collect_list(col("v")).as("ns")),
-      "node", "ns").localCheckpoint(false)
+    val adj = guardDegree(mirror(e).groupBy(col("src").as("node"))
+      .agg(collect_list(col("dst")).as("ns")), "node", "ns").localCheckpoint(false)
     var state = adj.select(col("node"), size(col("ns")).cast("long").as("c"))
     for (_ <- 1 to rounds) {
       state = adj.select(col("node"), explode(col("ns")).as("nb"))

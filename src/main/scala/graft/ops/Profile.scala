@@ -4,10 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Column profiling (data-quality/ingest audit): exact per-column stats —
-  * row count, non-null count, distinct count, typed min/max — in TWO
-  * column-pruned scans of the table (one keyless streaming pass for
-  * count/min/max, one hash-aggregated Expand pass for the exact distinct
-  * counts — see the split rationale inside [[profile]]).
+  * row count, non-null count, distinct count, typed min/max — in ONE
+  * column-pruned scan of the table (a hash-aggregated grouping-sets
+  * Expand — see the rationale inside [[profile]]).
   *
   * Shape: global aggregates compute every column's stats side by side
   * (the multi-count-distinct plans as one Expand pass — #cols projections
@@ -35,22 +34,18 @@ object Profile {
   def profile(df: DataFrame, cols: Seq[(String, Column)],
       approxDistinct: Boolean = false, rsd: Double = 0.01): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
-    // Exact mode runs TWO aggregates over two column-pruned scans
-    // (round-11): ONE aggregate mixing countDistinct with typed min/max
-    // forced the whole multi-distinct Expand chain into SortAggregate —
-    // min/max over STRING columns carry non-UnsafeRow-mutable buffers, so
-    // the first-stage aggregate over the ×(cols+1) expanded row mass paid
-    // a full (gid, all values) sort. Split, Spark hashes everything it
-    // can: the regular pass (count/min/max per column + count(*)) is
-    // KEYLESS — a SortAggregate with no grouping keys needs no sort, one
-    // streaming pass, no Expand — and the distinct pass carries ONLY
-    // countDistinct (long buffers → HashAggregate over a one-column-per-
-    // branch Expand). The second pruned scan is far cheaper than the
-    // sort it replaces (plan + ABAB in plans/r11, OPTIMIZATION_r11.md);
-    // values are identical — the same aggregate functions, just split
-    // across two 1-row frames crossJoined back together. Approx mode was
-    // always one hash pass (constant HLL state per column) and keeps its
-    // single scan.
+    // Exact mode reads the table ONCE without ever sorting the expanded
+    // row mass: GROUPING SETS ((c1), …, (cn)) plan as one Expand (each row
+    // once per column, that column alone non-null) under a hash aggregate
+    // of (value, set) → row count. A keyless aggregate over those distinct
+    // values then yields every stat: count(v) is the distinct count, the
+    // row counts of non-null values sum to the non-null count, one set's
+    // counts sum to the row count, and min/max over the distinct values
+    // equal min/max over the rows. Mixing countDistinct with typed
+    // min/max in ONE aggregate would instead force the whole
+    // multi-distinct Expand chain into SortAggregate: min/max over STRING
+    // columns carry non-UnsafeRow-mutable buffers. Approx mode is one hash
+    // pass (constant HLL state per column) with no Expand at all.
     val one =
       if (approxDistinct) {
         val aggs = cols.flatMap { case (n, c) =>
@@ -61,16 +56,20 @@ object Profile {
         } :+ count(lit(1)).as("__rows")
         df.agg(aggs.head, aggs.tail: _*)
       } else {
-        val regular = cols.flatMap { case (n, c) =>
-          Seq(count(c).as(s"__nn_$n"),
-            min(c).cast("string").as(s"__mn_$n"),
-            max(c).cast("string").as(s"__mx_$n"))
-        } :+ count(lit(1)).as("__rows")
-        val distincts = cols.map { case (n, c) =>
-          countDistinct(c).as(s"__nd_$n")
-        }
-        df.agg(regular.head, regular.tail: _*)
-          .crossJoin(df.agg(distincts.head, distincts.tail: _*))
+        val names = cols.indices.map(i => s"__v$i")
+        val vs = names.map(col)
+        val aggs = cols.zip(vs).flatMap { case ((n, _), v) =>
+          Seq(coalesce(sum(when(v.isNotNull, col("__cnt"))), lit(0L))
+              .as(s"__nn_$n"),
+            count(v).as(s"__nd_$n"),
+            min(v).cast("string").as(s"__mn_$n"),
+            max(v).cast("string").as(s"__mx_$n"))
+        } :+ coalesce(sum(when(col("__g") === 0, col("__cnt"))), lit(0L))
+          .as("__rows")
+        df.select(cols.zip(names).map { case ((_, c), v) => c.as(v) }: _*)
+          .groupingSets(vs.map(Seq(_)), vs: _*)
+          .agg(count(lit(1)).as("__cnt"), grouping(vs.head).as("__g"))
+          .agg(aggs.head, aggs.tail: _*)
       }
     val stackArgs = cols.map { case (n, _) =>
       s"'$n', `__nn_$n`, `__nd_$n`, `__mn_$n`, `__mx_$n`"

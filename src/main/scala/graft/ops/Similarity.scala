@@ -50,38 +50,6 @@ object Similarity {
       transform(a, x => x.cast("decimal(19,0)") * x.cast("decimal(19,0)")),
       lit(0L).cast("decimal(38,0)"), (acc, x) => acc + x)
 
-  /** Per-element inline quantization on the RAW float array. Critical for
-    * the hot paths: a `transform(...)` lambda is interpreted
-    * (CodegenFallback) AND CollapseProject inlines it into every consumer —
-    * profiled as the array being re-quantized 128× per pair. Element-wise
-    * floor/cast/multiply on a stored column stays entirely in whole-stage
-    * codegen. Quantized components are ≤ ~2^12, so 64-term sums sit far
-    * below long overflow (ANSI-safe). */
-  private def qat(v: Column, i: Int): Column =
-    floor(element_at(v, i).cast("double") * 1000 + 0.5).cast("long")
-
-  /** Unrolled fixed-dimension quantized dot/norm over raw float vectors.
-    * The dim bound is ENFORCED, not conventional: past ~64 terms the
-    * generated ANSI-checked expression tree exceeds the JIT method-size
-    * budget and silently deoptimizes to interpreted bytecode (the
-    * SCALE.md negative result) — higher dims belong on the
-    * [[bruteForceTopK]] mapPartitions kernel path. */
-  private def requireUnrollable(dim: Int): Unit =
-    require(dim >= 1 && dim <= 64,
-      s"unrolled kernels are JIT-bounded to dim <= 64 (got $dim); use the " +
-        "mapPartitions kernel paths (bruteForceTopK/cosineNearDupPairs) " +
-        "for higher dimensions")
-
-  def dotIntUnrolled(a: Column, b: Column, dim: Int): Column = {
-    requireUnrollable(dim)
-    (1 to dim).map(i => qat(a, i) * qat(b, i)).reduce(_ + _)
-  }
-
-  def normIntUnrolled(a: Column, dim: Int): Column = {
-    requireUnrollable(dim)
-    (1 to dim).map(i => qat(a, i) * qat(a, i)).reduce(_ + _)
-  }
-
   /** Exact cosine between quantized vectors, as double.
     * sqrt(na)*sqrt(nb), NOT sqrt(na*nb): the long product overflows for
     * high-dim/unnormalized vectors (≈1536 dims × |x|≳30 → na·nb ≈ 2e24 > 2^63,
@@ -90,12 +58,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dotInt(a, b).cast("double") /
       (sqrt(normInt(a).cast("double")) * sqrt(normInt(b).cast("double")))
-
-  /** Exact cosine, fixed-dim codegen path — takes RAW float vectors. */
-  def cosineUnrolled(a: Column, b: Column, dim: Int): Column =
-    dotIntUnrolled(a, b, dim).cast("double") /
-      (sqrt(normIntUnrolled(a, dim).cast("double")) *
-        sqrt(normIntUnrolled(b, dim).cast("double")))
 
   // ---- pairwise-scoring kernels -------------------------------------
   // The O(|Q|·N) / O(N²) dot-product loops are the one place the

@@ -23,20 +23,6 @@ import graft.ops.TextAnalysis
   */
 object DocumentStreams {
 
-  /** The documents table as an unbounded file-source stream (mirrors
-    * [[graft.sources.Tables.eventsStream]]). Handles both layouts: a
-    * directory-of-parts table streams directly; a single `documents.parquet`
-    * FILE needs the glob-filtered parent (the streaming file source wants a
-    * directory, and pathGlobFilter matches leaf file names only). */
-  def documentsStream(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val schema = graft.sources.Tables.documents(s, d).schema
-    val table = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = table.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val reader = s.readStream.schema(schema)
-    if (fs.getFileStatus(table).isDirectory) reader.parquet(table.toString)
-    else reader.option("pathGlobFilter", "documents.parquet").parquet(d)
-  }
-
   /** Streaming count-min sketch face: [[graft.ops.Sketches.cmsBuild]]
     * applied UNCHANGED to the document stream — the explode is stateless
     * and the (r, bucket) count is a standard streaming aggregation whose

@@ -104,12 +104,6 @@ class NoRecomputeSweepSpec extends SparkSpec {
     "q163_winsorize" -> Set("events"), // percentile cuts + clamp pass
     "q166_heaps_curve" -> Set("documents"), // prefix vocab: two token passes
     "q173_join_size_audit" -> Set("orders"), // estimate vs actual sides
-    // exact profiler split (round 11): count/min/max in a keyless
-    // streaming pass + countDistincts in a hash-aggregated Expand pass —
-    // one aggregate mixing both forced the whole ×(cols+1) expanded mass
-    // through SortAggregate (string min/max buffers are not hash-able);
-    // the second pruned scan is far cheaper than the sort it replaces
-    "q91_profile" -> Set("orders"),
     "q179_woe_iv" -> Set("documents"), // per-bin counts + class totals
     "q180_rfm_segments" -> Set("orders"), // quantile cuts + application
     "q192_jl_distortion" -> Set("embeddings"), // original vs projected spaces

@@ -997,4 +997,98 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(a == bounded, "coreness must not depend on partition layout")
   }
+
+  /** Jobs `body` runs, counted by a listener scoped to a fresh job group.
+    * A marker job run afterwards under a second group drains the listener
+    * queue: events arrive in post order, so once the marker is seen every
+    * job of the body has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graphspec-jobs-${java.util.UUID.randomUUID}"
+    val marker = group + "-drained"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      body
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  // two bridged triangles plus a pendant tail, mirrored
+  private lazy val floorEdges = {
+    val half = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (4L, 6L), (5L, 6L), (6L, 7L))
+    (half ++ half.map(_.swap)).toDF("src", "dst")
+  }
+
+  test("job floor: the round kernels run a fixed number of jobs — a " +
+      "barrier turned eager or a probe added in a shared kernel changes " +
+      "the count without changing any result") {
+    val seeds = Seq(1L).toDF("node")
+    // (jobs while the query is built, jobs of its output action)
+    def floor(q: => org.apache.spark.sql.DataFrame): (Int, Int) = {
+      var df: org.apache.spark.sql.DataFrame = null
+      val built = jobsOf { df = q }
+      (built, jobsOf(df.collect()))
+    }
+    val got = Map(
+      "bfsHops" -> floor(Graph.bfsHops(floorEdges, seeds, rounds = 4)),
+      "bfsPathCounts" -> floor(
+        Graph.bfsPathCounts(floorEdges, seeds, rounds = 4)),
+      "betweennessDependencies" -> floor(
+        Graph.betweennessDependencies(floorEdges, seeds, rounds = 4)),
+      "labelPropagation" -> floor(
+        Graph.labelPropagation(floorEdges, rounds = 3, symmetric = true)),
+      "pageRank" -> floor(
+        Graph.pageRank(floorEdges, iterations = 5, symmetric = true)))
+    // BFS: the per-layer count jobs plus their AQE map stages; every
+    // backward state and every PageRank/LPA round stays lazy
+    assert(got("bfsHops") == (28, 1), got)
+    assert(got("bfsPathCounts") == (28, 1), got)
+    assert(got("labelPropagation") == (1, 9), got)
+    assert(got("pageRank") == (3, 8), got)
+    // the lazy backward states submit their AQE map stages while the
+    // query is built, and one of those jobs races (51 or 52 build jobs,
+    // both seen on the same fixture); an eager backward state would add
+    // a job per layer
+    val (bdBuilt, bdRun) = got("betweennessDependencies")
+    assert((bdBuilt == 51 || bdBuilt == 52) && bdRun == 1, got)
+  }
+
+  test("betweennessSampled with k = 1 ≡ betweennessDependencies seeded " +
+      "at the sampled source: per-node δ agrees") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val s = floorEdges.select(col("src").as("node")).distinct()
+      .orderBy(graft.functions.Md5Low64(col("node").cast("string"))
+        .bitwiseXOR(lit(Long.MinValue)), col("node"))
+      .as[Long].head()
+    val sampled = Graph.betweennessSampled(floorEdges, k = 1, rounds = 4,
+        symmetric = true)
+      .select($"node", $"delta_sum_x9".cast("long"))
+      .as[(Long, Long)].collect().toMap
+    val single = Graph.betweennessDependencies(floorEdges, Seq(s).toDF("node"),
+        rounds = 4, symmetric = true)
+      .filter($"node" =!= s)
+      .select($"node", $"delta_x9".cast("long"))
+      .as[(Long, Long)].collect().toMap
+    assert(sampled.size == 6 && !sampled.contains(s))
+    assert(sampled == single)
+  }
 }

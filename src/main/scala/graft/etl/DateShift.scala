@@ -1,8 +1,9 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import graft.functions.LenientDate
+import graft.functions.{LenientDate, LenientTimestamp}
 
 /** Date de-identification (SURVEY.md J2/F1-F5;
   * /root/reference/dcc_transforms.py:34-174), three modes:
@@ -28,6 +29,8 @@ import graft.functions.LenientDate
   *  - unparseable dates: the reference crashes in two of three modes; we
   *    always leave the row uncleaned (→ dropped fail-closed by the PHI
   *    filter) and surface it on the error channel.
+  *  - an unparseable `standard_date` fails the run on the driver, before
+  *    any job, with an `IllegalArgumentException` naming the config key.
   *
   * All arithmetic is integer epoch-seconds — codegen-friendly, no UDFs.
   */
@@ -52,8 +55,6 @@ object DateShift {
         col("status").as("__ctype"))
   }
 
-  private def parsedValue: Column = LenientDate.parseTs(col("value"))
-
   /** Render `ts` at the row's granularity — `date_format` needs a literal
     * pattern, so this is a 4-arm CASE (still codegen'd). */
   private def renderByGran(ts: Column): Column =
@@ -68,11 +69,14 @@ object DateShift {
     eav.join(broadcast(dateFields(fieldMap)), Seq("field_name"), "left")
 
   /** Shared core: tag date fields, rewrite `value` with `rendered` where the
-    * row parses (and `extraOk` holds), mark cleaned, surface failures. */
+    * row parses (and `extraOk` holds), mark cleaned, surface failures.
+    * Only date-field rows are parsed; every use of `__parsed` is guarded
+    * by `isDate`. */
   private def applyShift(eav: DataFrame, fieldMap: DataFrame, rendered: Column,
       extraOk: Column = lit(true)): Result = {
-    val t = tagged(eav, fieldMap).withColumn("__parsed", parsedValue)
     val isDate = col("__gran").isNotNull
+    val t = tagged(eav, fieldMap)
+      .withColumn("__parsed", when(isDate, LenientDate.parseTs(col("value"))))
     val ok = isDate && col("__parsed").isNotNull && extraOk
     val out = t
       .withColumn("value", when(ok, rendered).otherwise(col("value")))
@@ -85,11 +89,23 @@ object DateShift {
     Result(dropInternal(out), errors)
   }
 
+  /** `standard_date` as epoch seconds, parsed on the driver in the session
+    * time zone. A null anchor would shift every date row to null (and the
+    * PHI filter would admit it as cleaned) or drop it without an error, so
+    * an unparseable value fails here. */
+  private def anchorSeconds(eav: DataFrame, standardDate: String): Column = {
+    val tz = eav.sparkSession.conf.get("spark.sql.session.timeZone")
+    val micros = LenientTimestamp(Literal(standardDate), Some(tz)).eval()
+    if (micros == null) throw new IllegalArgumentException(
+      s"[dcc_transforms] standard_date: cannot parse '$standardDate' as a date")
+    lit(Math.floorDiv(micros.asInstanceOf[Long], 1000000L))
+  }
+
   /** Mode 1: per-record dob shift. `standardDate` is the anchor all records
     * land on (ISO string, config `standard_date`). */
   def dobShift(eav: DataFrame, fieldMap: DataFrame, standardDate: String,
       dobField: String = "np_dob"): Result = {
-    val anchor = unix_timestamp(LenientDate.parseTs(lit(standardDate)))
+    val anchor = anchorSeconds(eav, standardDate)
     // deterministic "winner" per record: max parsed dob (see scaladoc)
     val shifts = eav
       .filter(col("field_name") === dobField)
@@ -108,7 +124,7 @@ object DateShift {
 
   /** Mode 2: seconds-until-standard-date (integer string output). */
   def totalSeconds(eav: DataFrame, fieldMap: DataFrame, standardDate: String): Result = {
-    val anchor = unix_timestamp(LenientDate.parseTs(lit(standardDate)))
+    val anchor = anchorSeconds(eav, standardDate)
     val secs = (anchor - unix_timestamp(col("__parsed"))).cast("long")
     applyShift(eav, fieldMap, secs.cast("string"))
   }

@@ -6,37 +6,24 @@ import org.apache.spark.sql.functions._
 /** Lenient ISO-8601 parsing (SURVEY.md F1): REDCap values are strings at
   * mixed granularities (`yyyy`, `yyyy-MM`, date, minute, second, with space
   * or 'T' separator — /root/reference/dcc_transforms.py:41,46,58,115,121,138
-  * parse with dateutil.isoparse). A coalesce chain over `to_timestamp`
-  * candidate formats stays fully inside whole-stage codegen — no UDF.
-  * Unparseable input → null (callers route to the error channel rather
-  * than crash, unlike the reference's total_seconds mode).
+  * parse with dateutil.isoparse). Unparseable input → null (callers route
+  * to the error channel rather than crash, unlike the reference's
+  * total_seconds mode).
+  *
+  * The parse is one native expression, [[LenientTimestamp]], that tries
+  * its candidate patterns in order without throwing: a value no pattern
+  * matches (a lab result, free text) costs no exception. Its answer is the
+  * answer of `coalesce(try_to_timestamp(value, lit(p)) …)` over the same
+  * patterns under `spark.sql.legacy.timeParserPolicy=CORRECTED`, Spark's
+  * default. Under EXCEPTION (and LEGACY) it runs that chain's own
+  * exception-driven per-pattern parse, so a value only the legacy parser
+  * reads still raises `SparkUpgradeException` under EXCEPTION instead of
+  * quietly becoming null.
   */
 object LenientDate {
-  private val formats = Seq(
-    // fractional seconds and UTC offsets first (most specific wins):
-    // dateutil.isoparse accepts both, so dropping them would silently
-    // fail-close real clinical timestamps
-    "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-    "yyyy-MM-dd HH:mm:ss.SSSSSSXXX",
-    "yyyy-MM-dd'T'HH:mm:ss.SSSXXX",
-    "yyyy-MM-dd HH:mm:ss.SSSXXX",
-    "yyyy-MM-dd HH:mm:ss.SSSSSS",
-    "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-    "yyyy-MM-dd HH:mm:ss.SSS",
-    "yyyy-MM-dd'T'HH:mm:ss.SSS",
-    "yyyy-MM-dd'T'HH:mm:ssXXX",
-    "yyyy-MM-dd HH:mm:ssXXX",
-    "yyyy-MM-dd HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-MM-dd HH:mm",
-    "yyyy-MM-dd'T'HH:mm",
-    "yyyy-MM-dd",
-    "yyyy-MM",
-    "yyyy")
 
   /** Parse a lenient ISO string to TimestampType; null when unparseable. */
-  def parseTs(c: Column): Column =
-    coalesce(formats.map(f => try_to_timestamp(c, lit(f))): _*)
+  def parseTs(c: Column): Column = LenientTimestamp(c)
 
   /** Render a timestamp at one of the four reference granularities. */
   def render(ts: Column, pattern: String): Column = date_format(ts, pattern)

@@ -27,4 +27,11 @@ object Bridge {
       ext: org.apache.spark.sql.SparkSessionExtensions,
       session: org.apache.spark.sql.SparkSession): Unit =
     ext.registerFunctions(session.sessionState.functionRegistry)
+
+  /** Spark's own file-listing rules (`private[spark]`): a path with glob
+    * characters, and a name the file index skips (`_SUCCESS`, `.crc`). */
+  def isGlobPath(p: org.apache.hadoop.fs.Path): Boolean =
+    org.apache.spark.deploy.SparkHadoopUtil.get.isGlobPath(p)
+  def isHiddenPath(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

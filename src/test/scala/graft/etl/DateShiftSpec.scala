@@ -90,6 +90,22 @@ class DateShiftSpec extends SparkSpec {
     assert(valuesOf(r.eav)(("r1", "visit_sec")) == "60")
   }
 
+  test("unparseable standard_date fails on the driver, naming the key, " +
+      "in both modes that use it") {
+    // a null anchor used to write every date row of total_seconds as a
+    // cleaned NULL (which the PHI filter admits) and to drop every date
+    // row of dob_shifting without an error
+    val in = eav(("r1", "np_dob", "2000-01-01"), ("r1", "visit_sec", "2009-12-31 23:59:00"))
+    for ((mode, run) <- Seq[(String, () => Unit)](
+        "total_seconds" -> (() => DateShift.totalSeconds(in, fieldMap, "2010-13-01")),
+        "dob_shifting" -> (() => DateShift.dobShift(in, fieldMap, "2010-13-01")))) {
+      var e: IllegalArgumentException = null
+      assert(jobsOf { e = intercept[IllegalArgumentException](run()) } == 0, mode)
+      assert(e.getMessage.contains("[dcc_transforms] standard_date") &&
+        e.getMessage.contains("2010-13-01"), s"$mode: ${e.getMessage}")
+    }
+  }
+
   test("fixedShift: constant seconds at each granularity") {
     val in = eav(
       ("r1", "visit_date", "2001-06-15"),

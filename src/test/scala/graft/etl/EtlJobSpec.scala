@@ -135,6 +135,62 @@ class EtlJobSpec extends SparkSpec {
     assert(lines.tail.forall(_.contains("redcap_records")))
   }
 
+  test("FieldMap.load: Spark's inferred schema and rows, without a job") {
+    val headers = Seq(
+      "quoted comma" -> "\"field, name\",status\nage,Include\n",
+      "duplicate names" -> "field_name,status,Status,status\nage,a,b,c\n",
+      "empty name" -> "field_name,,status\nage,x,Include\n",
+      "leading blank line" -> "\nfield_name,status\nage,Include\n")
+    val single = s"$dir/fieldmap-single"
+    Sinks.csvSingle(FieldMap.load(spark, fieldMapCsv), single)
+    val cases = headers.map { case (n, c) =>
+      n -> write(s"header-${n.replace(' ', '_')}.csv", c)
+    } :+ ("csvSingle output directory" -> single)
+    for ((name, path) <- cases) {
+      var loaded: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { loaded = FieldMap.load(spark, path) } == 0, name)
+      val inferred = spark.read.option("header", "true").csv(path)
+      assert(loaded.schema == inferred.schema, name)
+      assert(loaded.collect().toSeq == inferred.collect().toSeq, name)
+    }
+    // several data files: Spark's own inference picks the header file
+    val multi = s"$dir/fieldmap-multi"
+    FieldMap.load(spark, fieldMapCsv).repartition(2)
+      .write.option("header", "true").csv(multi)
+    assert(FieldMap.load(spark, multi).schema ==
+      spark.read.option("header", "true").csv(multi).schema)
+  }
+
+  test("job floor: the three control-table loads run no job, so a full run " +
+      "with field map, calc-variable table and secondary-id map runs 3 fewer") {
+    val deid = write("deid.csv",
+      """study_id,exp_age_decade
+        |r1,3
+        |""".stripMargin)
+    val secondary = write("secondary.csv",
+      """redcap_record_id,secondary_id
+        |r1,S-001
+        |r2,S-002
+        |""".stripMargin)
+    val cfg = IniConfig.parse(
+      s"""[default]
+         |field_map_file = $fieldMapCsv
+         |out_dir = $dir/outfloor
+         |[dcc_transforms]
+         |datetransform_type = dob_shifting
+         |standard_date = 2010-01-01
+         |dob_shift_inplace = true
+         |deid_data_file = $deid
+         |secondary_id_file = $secondary
+         |[redcap]
+         |eav_source = $eavCsv
+         |""".stripMargin)
+    assert(jobsOf(FieldMap.load(spark, fieldMapCsv)) == 0)
+    EtlJob.run(spark, cfg) // warm: first-use jobs stay out of the count
+    // 17 when each load ran a header-inference job
+    assert(jobsOf(EtlJob.run(spark, cfg)) == 14)
+  }
+
   test("EtlMain parses the reference's argparse surface") {
     assert(EtlMain.parse(Nil) == EtlMain.Args())
     assert(EtlMain.parse(Seq("-c", "x.ini", "-f", "-p")) ==

@@ -998,39 +998,6 @@ class GraphSpec extends SparkSpec {
     assert(a == bounded, "coreness must not depend on partition layout")
   }
 
-  /** Jobs `body` runs, counted by a listener scoped to a fresh job group.
-    * A marker job run afterwards under a second group drains the listener
-    * queue: events arrive in post order, so once the marker is seen every
-    * job of the body has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"graphspec-jobs-${java.util.UUID.randomUUID}"
-    val marker = group + "-drained"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      body
-      sc.setJobGroup(marker, marker)
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   // two bridged triangles plus a pendant tail, mirrored
   private lazy val floorEdges = {
     val half = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L),

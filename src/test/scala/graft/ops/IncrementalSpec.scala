@@ -55,4 +55,38 @@ class IncrementalSpec extends SparkSpec {
     assert(math.abs(est - exact).toDouble / exact < 0.05,
       s"estimate $est vs exact $exact")
   }
+
+  test("profile exact mode reads a non-deterministic input once: " +
+      "count, min, max and n_distinct agree on one draw") {
+    // every read of `df` draws a new k from rand() and a read counter:
+    // its single partition sees row 0 first, so all rows of one read
+    // share that read's k, and v = id % k then has exactly k distinct
+    // values, 0 .. k-1. Stats taken from two different reads would
+    // disagree.
+    val draw = udf { (id: Long, r: Double) =>
+      if (id == 0) IncrementalSpec.k.set(
+        2 + ((r * 500).toInt + IncrementalSpec.reads.incrementAndGet()) % 500)
+      IncrementalSpec.k.get
+    }.asNondeterministic()
+    val n = 1000L
+    val df = spark.range(0, n, 1, 1)
+      .withColumn("k", draw(col("id"), rand()))
+      .select((col("id") % col("k")).as("v"), (col("id") % col("k") + col("k")).as("w"))
+    val first = df.agg(max("v")).as[Long].head() + 1
+    val again = df.agg(max("v")).as[Long].head() + 1
+    assert(first != again, "the input must change between reads")
+    val got = Profile.profile(df, Seq("v" -> col("v"), "w" -> col("w")))
+      .as[(String, Long, Long, Long, String, String)].collect().toList.sortBy(_._1)
+    val k = got.head._4
+    assert(k >= 2 && k <= 501, got)
+    assert(got == List(
+      ("v", n, n, k, "0", (k - 1).toString),
+      ("w", n, n, k, k.toString, (2 * k - 1).toString)))
+  }
+}
+
+object IncrementalSpec {
+  // executor-side state shared by every read (local mode: one JVM)
+  val reads = new java.util.concurrent.atomic.AtomicInteger
+  val k = new java.util.concurrent.atomic.AtomicInteger
 }

@@ -3,7 +3,7 @@ package graft
 /** Dev tool: time a registered query twice (cold/warm) and print its
   * formatted physical plan. `runMain graft.Explain <queryName> [sfDir]
   * [key=value ...]` — trailing args become runtime session confs (e.g.
-  * `graft.dedup.shingleHash=rolling` for signature-family A/B runs). */
+  * `graft.rangeJoin.bucketWidth=3600` to plan an opt-in rewrite). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -32,7 +32,7 @@ object Explain {
           graft.ops.Dedup.minhashDuplicatePairs(
             graft.sources.Tables.documents(s, d), threshold = 0.5)
         case "_mh_bands" => (s, d) => // signature kernel alone (no banding
-          // exchange, no verification) — isolates the shingle-hash family
+          // exchange, no verification)
           graft.ops.Dedup.minhashBandRows(
             graft.sources.Tables.documents(s, d))
         case "_semdedup64" => (s, d) => // q67 with the nCentroids scale knob

@@ -182,74 +182,14 @@ object Dedup {
     }
   }
 
-  // ---- shingle-hash families -----------------------------------------
-  // The signature cost of the LSH pipelines is per-shingle hashing: the
-  // default "string" family materializes every word n-gram as a String
-  // (StringBuilder alloc + copy) and xxhash64s its ~20-40 bytes — each
-  // input byte is hashed n times across the n windows it belongs to. The
-  // "rolling" family hashes each TOKEN once (xxhash64) and combines the n
-  // token hashes per window with GramHashes' Rabin–Karp roll (odd-B
-  // polynomial mod 2⁶⁴, fmix64-finalized): O(1) per window, zero per-
-  // shingle allocation — the round-7 verdict's task #1 for the q60/q117
-  // 100× signature tail. Same ~2⁻⁶⁴ pair-collision class (fmix64 is
-  // bijective, so collisions are exactly the roll's difference-polynomial
-  // class over xx64 token hashes). The family changes signature BITS, so
-  // LSH candidates can differ within the usual banding probability; exact-
-  // Jaccard verification is family-invariant (distinct windows ↦ distinct
-  // hashes in both). Selected per-session via conf
-  // `graft.dedup.shingleHash` ("string" | "rolling"); the family is part
-  // of any persisted signature-store format (streaming ingest, cross-
-  // corpus stores) — pick it once per store. DedupShingleFamilySpec pins
-  // pair/cluster parity between families on the oracle fixture.
-
-  /** Stream one document's hashed shingle multiset into `f` under the
-    * selected family — foreach-shaped (Function1[Long, Unit] is
-    * @specialized) so the hot signature loop never boxes a hash.
-    * "string" = xxhash64 over each materialized n-gram (bit-parity with
-    * the expression path); "rolling" = per-token xxhash64 + O(1) window
-    * roll. Documents shorter than n tokens yield ONE partial-gram hash
-    * (matching [[shinglesJvm]]'s whole-text fallback). */
-  private[ops] def foreachShingleHash(text: String, n: Int,
-      family: String)(f: Long => Unit): Unit = family match {
-    case "string" => shinglesJvm(text, n).foreach(sh => f(xxStr(sh)))
-    case "rolling" =>
-      import graft.functions.GramHashes.{B, fmix64}
-      val toks = normalizedJvm(text).split(" ", -1)
-      val m = toks.length
-      val th = new Array[Long](m)
-      var i = 0
-      while (i < m) { th(i) = xxStr(toks(i)); i += 1 }
-      if (m < n) {
-        var h = 0L; var j = 0
-        while (j < m) { h = h * B + th(j); j += 1 }
-        f(fmix64(h))
-      } else {
-        var bl = 1L // B^(n-1), rolls the leading token hash out
-        var j = 0
-        while (j < n - 1) { bl *= B; j += 1 }
-        var h = 0L
-        j = 0
-        while (j < n) { h = h * B + th(j); j += 1 }
-        f(fmix64(h))
-        var p = 1
-        while (p <= m - n) {
-          h = (h - th(p - 1) * bl) * B + th(p + n - 1)
-          f(fmix64(h))
-          p += 1
-        }
-      }
-    case other => throw new IllegalArgumentException(
-      s"unknown graft.dedup.shingleHash family: $other (string | rolling)")
-  }
-
-  /** Session-selected shingle-hash family (validated eagerly on the
-    * driver so a typo fails at plan build, not mid-task). */
-  private def shingleFamily(docs: DataFrame): String = {
-    val f = docs.sparkSession.conf.get("graft.dedup.shingleHash", "string")
-    require(f == "string" || f == "rolling",
-      s"unknown graft.dedup.shingleHash family: $f (string | rolling)")
-    f
-  }
+  /** Stream one document's hashed shingle multiset into `f`: xxhash64 over
+    * each materialized n-gram (bit-parity with the expression path) —
+    * foreach-shaped (Function1[Long, Unit] is @specialized) so the hot
+    * signature loop never boxes a hash. Documents shorter than n tokens
+    * yield ONE partial-gram hash ([[shinglesJvm]]'s whole-text fallback). */
+  private[ops] def foreachShingleHash(text: String, n: Int)(
+      f: Long => Unit): Unit =
+    shinglesJvm(text, n).foreach(sh => f(xxStr(sh)))
 
   private def kernelRows(docs: DataFrame, textCol: String, idCol: String,
       outFields: Seq[org.apache.spark.sql.types.StructField])(
@@ -274,12 +214,11 @@ object Dedup {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
     val r = k / bands
     require(bands * r == k, "bands must divide k")
-    val family = shingleFamily(docs)
     kernelRows(docs, textCol, idCol,
       Seq(StructField("band", IntegerType, false), StructField("bh", LongType, false))) {
       (id, text) =>
         val mins = Array.fill(k)(Long.MaxValue)
-        foreachShingleHash(text, 3, family) { h1 =>
+        foreachShingleHash(text, 3) { h1 =>
           // xxhash64(sh, 1): the string hash seeds the INT 1 (lit(1) is int)
           val h2 = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(1, h1)
           mins(0) = math.min(mins(0), h1)
@@ -307,11 +246,10 @@ object Dedup {
   def hashedShingleSets(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, LongType, StructField}
-    val family = shingleFamily(docs)
     kernelRows(docs, textCol, idCol,
       Seq(StructField("sh", ArrayType(LongType, false), false))) { (id, text) =>
       val set = new java.util.HashSet[Long]()
-      foreachShingleHash(text, 3, family)(set.add(_))
+      foreachShingleHash(text, 3)(set.add(_))
       val arr = new Array[Long](set.size)
       val it = set.iterator(); var i = 0
       while (it.hasNext) { arr(i) = it.next(); i += 1 }

@@ -395,7 +395,7 @@ object TextAnalysis {
     *
     *  - The corpus is always scanned ONCE (distributed) to build the
     *    word-frequency table — the only corpus-sized work.
-    *  - \|vocab\| ≤ `graft.bpe.localVocabMax` (default 262144 rows):
+    *  - \|vocab\| ≤ `BpeLocalVocabMax` (262144 rows):
     *    the table is collected once and the entire merge loop runs
     *    in-JVM — merges=1000 costs seconds, not 1000 scheduled jobs
     *    (the adaptive union-find precedent in [[Dedup.componentsAuto]]).
@@ -404,7 +404,7 @@ object TextAnalysis {
     *    aggregate + one (batchTopK+1)-row collect, and the driver
     *    accepts the longest SYMBOL-DISJOINT PREFIX of the sorted
     *    candidate list, trimmed to counts STRICTLY above the first
-    *    excluded candidate (`graft.bpe.batchTopK`, default 64; 1 =
+    *    excluded candidate (`BpeBatchTopK`, 64; 1 =
     *    one-merge-per-job). This batch is PROVABLY sequential-
     *    equivalent: (a) old pairs never gain occurrences (new
     *    adjacencies always involve a new symbol) and disjointness keeps
@@ -420,22 +420,23 @@ object TextAnalysis {
     *    argmax alone is applied — that IS the sequential step, so
     *    progress is guaranteed. Fully-merged single-symbol words drop
     *    from the state each super-round.
-    *  - DELTA-MAINTAINED pair counts (`graft.bpe.deltaCounts`, default
-    *    true): the pair-count table is seeded by ONE corpus-sized
-    *    aggregate and thereafter maintained incrementally — each round
-    *    withdraws (−freq) the old pairs and asserts (+freq) the new
-    *    pairs of exactly the words the fold changed, then folds the
-    *    signed delta into the maintained (l, r, n) frame. Per-round
+    *  - DELTA-MAINTAINED pair counts: the pair-count table is seeded
+    *    by ONE corpus-sized aggregate and thereafter maintained
+    *    incrementally — each round withdraws (−freq) the old pairs and
+    *    asserts (+freq) the new pairs of exactly the words the fold
+    *    changed, then folds the signed delta into the maintained
+    *    (l, r, n) frame. Per-round
     *    shuffle drops from Θ(all adjacent positions) to Θ(touched
     *    positions) + the V₂-row table update — the decisive term in the
     *    overlap-bounded regime where batching degrades to ~1 merge per
     *    round. Exact by construction (integer sums; a word's
     *    contribution moves atomically in one aggregate), pinned
-    *    batched ≡ delta ≡ sequential ≡ in-JVM by the conf-forced spec.
+    *    batched ≡ sequential ≡ in-JVM by the tier-forcing spec.
     *
     * The two tiers are exactly equivalent (same greedy fold, same
-    * UTF-8-order tie-break, same early stop) — pinned by a spec that
-    * runs both on the same fixture.
+    * UTF-8-order tie-break, same early stop) — pinned by specs that
+    * force the distributed tier and vary the batch width through the
+    * `private[ops]` overload taking `localVocabMax` and `batchTopK`.
     *
     * @param corpus frame with a text column
     * @param merges maximum number of merge rounds (the vocab-size knob:
@@ -444,7 +445,18 @@ object TextAnalysis {
     *         artifact a tokenizer builds its vocab from
     */
   def bpeTrain(corpus: DataFrame, merges: Int,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame =
+    bpeTrain(corpus, merges, textCol, BpeLocalVocabMax, BpeBatchTopK)
+
+  /** Vocabulary size (word-table rows) up to which [[bpeTrain]] merges in-JVM. */
+  private val BpeLocalVocabMax = 262144L
+  /** Merge candidates one distributed [[bpeTrain]] super-round considers. */
+  private val BpeBatchTopK = 64
+
+  /** [[bpeTrain]] with the tier threshold and batch width explicit — specs
+    * force the distributed tier (`localVocabMax = 0`) and vary the batch. */
+  private[ops] def bpeTrain(corpus: DataFrame, merges: Int, textCol: String,
+      localVocabMax: Long, batchTopK: Int): DataFrame = {
     require(merges >= 1, "bpeTrain needs at least one merge round")
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -455,18 +467,12 @@ object TextAnalysis {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(expr("regexp_extract_all(w, '.', 0)").as("syms"), col("freq"))
       .localCheckpoint()
-    val localMax = spark.conf
-      .getOption("graft.bpe.localVocabMax").map(_.toLong).getOrElse(262144L)
-    if (words.count() <= localMax) { // control-plane scalar off the checkpoint
+    if (words.count() <= localVocabMax) { // control-plane scalar off the checkpoint
       val collected = words.as[(Array[String], Long)].collect()
       return bpeTrainLocal(collected, merges).toDF(
         "round", "lhs", "rhs", "pair_count")
     }
-    val batchTopK = spark.conf
-      .getOption("graft.bpe.batchTopK").map(_.toInt).getOrElse(64)
-    require(batchTopK >= 1, "graft.bpe.batchTopK must be >= 1")
-    val deltaCounts = spark.conf
-      .getOption("graft.bpe.deltaCounts").forall(_.toBoolean)
+    require(batchTopK >= 1, "bpeTrain batchTopK must be >= 1")
     // Signed adjacent-pair structs of a symbol array — the unit both the
     // full aggregate and the delta maintenance count in.
     def pairStructs(syms: Column, d: Column): Column =
@@ -474,21 +480,13 @@ object TextAnalysis {
         slice(syms, lit(1), size(syms) - 1),
         slice(syms, lit(2), size(syms) - 1),
         (a, b) => struct(a.as("l"), b.as("r"), d.as("d")))
-    // Delta mode: pair counts live in a maintained V₂-row (l, r, n) frame
-    // (invariant: ≡ the full aggregate over the CURRENT word table, exact
-    // integer sums). Seeded by one corpus-sized aggregate; per round only
-    // the TOUCHED words (fold changed their symbols) are re-counted, so
-    // the per-round shuffle is Θ(touched pairs) + the pair-table update,
-    // never a corpus-positions re-explode. Exactness is structural: a
-    // word's contribution is withdrawn (−freq on its old pairs) and
-    // re-asserted (+freq on its new pairs) atomically in one aggregate.
-    var pairCounts: DataFrame =
-      if (!deltaCounts) null
-      else words
-        .select(explode(pairStructs(col("syms"), col("freq"))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("p.d")).as("n"))
-        .localCheckpoint()
+    // The maintained V₂-row (l, r, n) frame (invariant: ≡ the full
+    // aggregate over the CURRENT word table, exact integer sums).
+    var pairCounts = words
+      .select(explode(pairStructs(col("syms"), col("freq"))).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("p.d")).as("n"))
+      .localCheckpoint()
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, Long)]
     var round = 1
@@ -496,13 +494,7 @@ object TextAnalysis {
     while (round <= merges && !exhausted) {
       val want = merges - round + 1
       val k = math.min(batchTopK, want)
-      val topSource =
-        if (deltaCounts) pairCounts
-        else words
-          .select(explode(pairStructs(col("syms"), col("freq"))).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("p.d")).as("n"))
-      val top = topSource
+      val top = pairCounts
         .orderBy(col("n").desc, col("l"), col("r"))
         .limit(k + 1) // +1: the first excluded candidate bounds the trim
         .as[(String, String, Long)]
@@ -532,37 +524,30 @@ object TextAnalysis {
         val foldExpr = batch.foldLeft(col("syms")) { case (c, (l, r, _)) =>
           mergePairFold(c, l, r)
         }
-        if (deltaCounts) {
-          // One checkpoint holds (old, new) so the fold runs once and
-          // both the next word table and the delta derive from it.
-          val folded = words
-            .select(col("syms"), foldExpr.as("nsyms"), col("freq"))
-            .localCheckpoint()
-          val delta = folded
-            .filter(col("nsyms") =!= col("syms"))
-            .select(explode(concat(
-              pairStructs(col("syms"), -col("freq")),
-              pairStructs(col("nsyms"), col("freq")))).as("p"))
-            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-            .agg(sum(col("p.d")).as("d"))
-            .filter(col("d") =!= 0)
-          pairCounts = pairCounts
-            .join(delta, Seq("l", "r"), "full_outer")
-            .select(col("l"), col("r"),
-              (coalesce(col("n"), lit(0L)) +
-                coalesce(col("d"), lit(0L))).as("n"))
-            .filter(col("n") > 0) // a fully-withdrawn pair is dead
-            .localCheckpoint()
-          // Projection of the checkpointed frame — no second job.
-          words = folded
-            .select(col("nsyms").as("syms"), col("freq"))
-            .filter(size(col("syms")) >= 2) // fully-merged words are dead
-        } else {
-          words = words
-            .select(foldExpr.as("syms"), col("freq"))
-            .filter(size(col("syms")) >= 2) // fully-merged words are dead
-            .localCheckpoint()
-        }
+        // One checkpoint holds (old, new) so the fold runs once and
+        // both the next word table and the delta derive from it.
+        val folded = words
+          .select(col("syms"), foldExpr.as("nsyms"), col("freq"))
+          .localCheckpoint()
+        val delta = folded
+          .filter(col("nsyms") =!= col("syms"))
+          .select(explode(concat(
+            pairStructs(col("syms"), -col("freq")),
+            pairStructs(col("nsyms"), col("freq")))).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("p.d")).as("d"))
+          .filter(col("d") =!= 0)
+        pairCounts = pairCounts
+          .join(delta, Seq("l", "r"), "full_outer")
+          .select(col("l"), col("r"),
+            (coalesce(col("n"), lit(0L)) +
+              coalesce(col("d"), lit(0L))).as("n"))
+          .filter(col("n") > 0) // a fully-withdrawn pair is dead
+          .localCheckpoint()
+        // Projection of the checkpointed frame — no second job.
+        words = folded
+          .select(col("nsyms").as("syms"), col("freq"))
+          .filter(size(col("syms")) >= 2) // fully-merged words are dead
       }
     }
     out.toSeq.toDF("round", "lhs", "rhs", "pair_count")

@@ -68,7 +68,7 @@ object EavSource {
     StructField("value", StringType)))
 
   private[sources] def readAllLines(path: String): Seq[Array[String]] = {
-    val src = scala.io.Source.fromFile(path)
+    val src = scala.io.Source.fromFile(path)(scala.io.Codec.UTF8)
     // fixture CSV: our own writer, no embedded commas/quotes
     try src.getLines().drop(1).map(_.split(",", -1)).toList
     finally src.close()
@@ -104,6 +104,28 @@ object EavSource {
       row.mkString(""), seed.toInt)
     val u = (h & 0x7fffffff).toDouble / (Int.MaxValue.toDouble + 1)
     u >= lo && u < hi
+  }
+
+  /** The id universe cut into `chunkSize`-id partitions (≙ the reference's
+    * 100-ids-per-request loop). */
+  private[sources] def chunks(ids: Seq[String], chunkSize: Int): Array[InputPartition] =
+    ids.grouped(chunkSize).map(g => EavChunk(g.toArray): InputPartition).toArray
+
+  /** ≙ one REST POST for this chunk's ids with fields= and filterLogic=
+    * (redcap-etl.py:71-135): one transport request, counted in
+    * [[chunkFetches]], with the id set, pushed filters and sample re-applied
+    * locally (transports may over-return — the pushes are hints, not
+    * guarantees). */
+  private[sources] def chunkRows(transport: EavTransport, chunk: EavChunk,
+      pushed: Array[Filter],
+      sample: Option[(Double, Double, Long)]): Iterator[Array[String]] = {
+    chunkFetches.incrementAndGet()
+    val idSet = chunk.recordIds.toSet
+    transport.fetchChunk(chunk.recordIds, pushed).iterator
+      .filter(r => idSet.contains(r(0)))
+      .filter(r => pushed.forall(matches(r, _)))
+      .filter(r => sample.forall { case (lo, hi, seed) =>
+        sampleKeep(r, lo, hi, seed) })
   }
 
   /** Aggregate shapes the source evaluates per chunk (partial push). */
@@ -310,7 +332,7 @@ class EavScan(transport: EavTransport, chunkSize: Int, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val all = transport.recordIds()
     val ids = runtimeIds.fold(all)(keep => all.filter(keep.contains))
-    ids.grouped(chunkSize).map(g => EavChunk(g.toArray): InputPartition).toArray
+    EavSource.chunks(ids, chunkSize)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new EavReaderFactory(transport, required, pushed, limit, topN, sample, columnar = true)
@@ -342,10 +364,8 @@ class EavMicroBatchStream(transport: EavTransport, chunkSize: Int, required: Str
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{Offset => V2Offset, ReadLimit}
 
-  private def allChunks(): Array[EavChunk] = {
-    val ids = transport.recordIds()
-    ids.grouped(chunkSize).map(g => EavChunk(g.toArray)).toArray
-  }
+  private def allChunks(): Array[InputPartition] =
+    EavSource.chunks(transport.recordIds(), chunkSize)
 
   override def initialOffset(): V2Offset = EavOffset(0L)
   override def deserializeOffset(json: String): V2Offset = EavOffset(json.toLong)
@@ -375,7 +395,7 @@ class EavMicroBatchStream(transport: EavTransport, chunkSize: Int, required: Str
     val s = start.asInstanceOf[EavOffset].chunks.toInt
     val e = end.asInstanceOf[EavOffset].chunks.toInt
     if (e <= s) Array.empty
-    else allChunks().slice(s, e).map(c => c: InputPartition)
+    else allChunks().slice(s, e)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -409,10 +429,8 @@ class EavAggScan(transport: EavTransport, chunkSize: Int, pushed: Array[Filter],
       s"PushedAggregation: [${aggs.mkString(", ")}] " +
       s"GroupBy: [${groupBy.map(EavSource.schema.fieldNames(_)).mkString(", ")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val ids = transport.recordIds()
-    ids.grouped(chunkSize).map(g => EavChunk(g.toArray): InputPartition).toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    EavSource.chunks(transport.recordIds(), chunkSize)
   override def createReaderFactory(): PartitionReaderFactory =
     new EavAggReaderFactory(transport, pushed, groupBy, aggs, sample)
 }
@@ -438,17 +456,8 @@ class EavAggPartitionReader(transport: EavTransport, chunk: EavChunk,
     UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
 
   private val it: Iterator[InternalRow] = {
-    EavSource.chunkFetches.incrementAndGet()
-    val idSet = chunk.recordIds.toSet
-    // one transport request for this chunk; id/filter re-applied locally
-    // (transports may over-return — the pushes are hints, not guarantees)
-    val rows = transport.fetchChunk(chunk.recordIds, pushed).iterator
-      .filter(r => idSet.contains(r(0)))
-      .filter(r => pushed.forall(EavSource.matches(r, _)))
-      .filter(r => sample.forall { case (lo, hi, seed) =>
-        EavSource.sampleKeep(r, lo, hi, seed) })
     val groups = scala.collection.mutable.LinkedHashMap.empty[Seq[String], Array[Any]]
-    rows.foreach { r =>
+    chunkRows(transport, chunk, pushed, sample).foreach { r =>
       val key = groupBy.map(r(_)).toSeq
       val acc = groups.getOrElseUpdate(key, aggs.map {
         case CountStarAgg | _: CountColAgg => 0L: Any
@@ -518,15 +527,7 @@ class EavColumnarPartitionReader(transport: EavTransport, chunk: EavChunk,
 
   private val capacity = 4096
   private val requiredIdx = required.fieldNames.map(EavSource.schema.fieldIndex)
-  private val rows: Iterator[Array[String]] = {
-    EavSource.chunkFetches.incrementAndGet()
-    val idSet = chunk.recordIds.toSet
-    transport.fetchChunk(chunk.recordIds, pushed).iterator
-      .filter(r => idSet.contains(r(0)))
-      .filter(r => pushed.forall(EavSource.matches(r, _)))
-      .filter(r => sample.forall { case (lo, hi, seed) =>
-        EavSource.sampleKeep(r, lo, hi, seed) })
-  }
+  private val rows = EavSource.chunkRows(transport, chunk, pushed, sample)
   private val vectors = OnHeapColumnVector.allocateColumns(capacity, required)
   private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
 
@@ -558,18 +559,9 @@ class EavPartitionReader(transport: EavTransport, chunk: EavChunk,
     sample: Option[(Double, Double, Long)] = None)
     extends PartitionReader[InternalRow] {
 
-  /** ≙ one REST POST for this chunk's ids with fields= and filterLogic=
-    * (redcap-etl.py:71-135). Swap the body for an HTTP call in production. */
+  /** The chunk's rows with the pushed per-chunk top-n or limit applied. */
   private def fetchChunk(): Iterator[Array[String]] = {
-    EavSource.chunkFetches.incrementAndGet()
-    val idSet = chunk.recordIds.toSet
-    // one transport request for this chunk; id/filter re-applied locally
-    // (transports may over-return — the pushes are hints, not guarantees)
-    val rows = transport.fetchChunk(chunk.recordIds, pushed).iterator
-      .filter(r => idSet.contains(r(0)))
-      .filter(r => pushed.forall(EavSource.matches(r, _)))
-      .filter(r => sample.forall { case (lo, hi, seed) =>
-        EavSource.sampleKeep(r, lo, hi, seed) })
+    val rows = EavSource.chunkRows(transport, chunk, pushed, sample)
     if (topN.nonEmpty) {
       // per-chunk ORDER BY … LIMIT under Spark's own binary string order
       // (UTF8String), so the partial top-n is an exact superset of the

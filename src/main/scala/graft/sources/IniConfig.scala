@@ -1,6 +1,6 @@
 package graft.sources
 
-import scala.io.Source
+import scala.io.{Codec, Source}
 
 /** INI config loader (SURVEY.md §1.2 item 6;
   * /root/reference/example-config.ini:1-20, loaded with python ConfigParser
@@ -52,7 +52,7 @@ object IniConfig {
   }
 
   def load(path: String): IniConfig = {
-    val src = Source.fromFile(path)
+    val src = Source.fromFile(path)(Codec.UTF8)
     try parse(src.mkString) finally src.close()
   }
 }

@@ -34,7 +34,7 @@ class DedupSpec extends SparkSpec {
 
   test("from-sets fusion seam: band rows, verified pairs, and " +
       "contamination hits computed from materialized shingle sets are " +
-      "bit-identical to the text-path operators (both hash families)") {
+      "bit-identical to the text-path operators") {
     val nearDup = base.replace("tonight", "today")
     val docs = Seq(
       (1L, base),
@@ -45,29 +45,24 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val bench = Seq((100L, "the lazy dog and runs far away today"))
       .toDF("doc_id", "text")
-    for (family <- Seq("string", "rolling")) {
-      spark.conf.set("graft.dedup.shingleHash", family)
-      try {
-        val shs = Dedup.hashedShingleSets(docs).localCheckpoint()
-        val fromText = Dedup.minhashBandRows(docs)
-          .as[(Long, Int, Long)].collect().toSet
-        val fromSets = Dedup.minhashBandRowsFromSets(shs)
-          .as[(Long, Int, Long)].collect().toSet
-        assert(fromText == fromSets, s"band rows diverge ($family)")
-        val pairsText = Dedup.minhashPairsOnDistinct(docs, threshold = 0.5)
-          .as[(Long, Long, Double)].collect().toSet
-        val pairsSets = Dedup.minhashPairsFromSets(shs, threshold = 0.5)
-          .as[(Long, Long, Double)].collect().toSet
-        assert(pairsText == pairsSets, s"verified pairs diverge ($family)")
-        val hitsText = Dedup.contaminationHits(docs, bench)
-          .as[(Long, Long)].collect().toSet
-        val hitsSets = Dedup.contaminationHitsFromSets(shs, bench)
-          .as[(Long, Long)].collect().toSet
-        assert(hitsText == hitsSets, s"contamination hits diverge ($family)")
-        assert(pairsText.map(p => (p._1, p._2)).contains((1L, 2L)))
-        assert(hitsText.nonEmpty)
-      } finally spark.conf.unset("graft.dedup.shingleHash")
-    }
+    val shs = Dedup.hashedShingleSets(docs).localCheckpoint()
+    val fromText = Dedup.minhashBandRows(docs)
+      .as[(Long, Int, Long)].collect().toSet
+    val fromSets = Dedup.minhashBandRowsFromSets(shs)
+      .as[(Long, Int, Long)].collect().toSet
+    assert(fromText == fromSets, "band rows diverge")
+    val pairsText = Dedup.minhashPairsOnDistinct(docs, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    val pairsSets = Dedup.minhashPairsFromSets(shs, threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(pairsText == pairsSets, "verified pairs diverge")
+    val hitsText = Dedup.contaminationHits(docs, bench)
+      .as[(Long, Long)].collect().toSet
+    val hitsSets = Dedup.contaminationHitsFromSets(shs, bench)
+      .as[(Long, Long)].collect().toSet
+    assert(hitsText == hitsSets, "contamination hits diverge")
+    assert(pairsText.map(p => (p._1, p._2)).contains((1L, 2L)))
+    assert(hitsText.nonEmpty)
   }
 
   test("applyExact / applyPairsDedup shrink the corpus, keep canonical docs") {
@@ -487,11 +482,7 @@ class DedupSpec extends SparkSpec {
 
   test("crossShardGramMiss: quantifies the duplicate-gram mass no single " +
       "shard sees twice; captured mass excluded; clean corpus all zeros") {
-    import org.apache.spark.sql.functions.pmod
-    val shard = (i: Long) => spark.range(i, i + 1)
-      .select(pmod(graft.functions.Md5Low64($"id".cast("string")), lit(4L)))
-      .as[Long].collect().head
-    val ids = (0L until 32L).map(i => i -> shard(i))
+    val ids = shardTable("", 32L, 4L).toSeq.sorted
     val (idA, shA) = ids.head
     val (idB, _) = ids.find(_._2 != shA).get
     val (idC, _) = ids.find(p => p._2 == shA && p._1 != idA).get
@@ -522,11 +513,8 @@ class DedupSpec extends SparkSpec {
 
   test("suffixArraySpans: recall is within-shard by construction — a pair " +
       "split across shards is missed at shards=4, found at shards=1") {
-    import org.apache.spark.sql.functions.pmod
     // find two ids landing in different md5 shards
-    val ids = (0L until 16L).map(i => i ->
-      spark.range(i, i + 1).select(pmod(graft.functions.Md5Low64(
-        $"id".cast("string")), lit(4L))).as[Long].collect().head)
+    val ids = shardTable("", 16L, 4L).toSeq.sorted
     val (idA, shA) = ids.head
     val (idB, _) = ids.find(_._2 != shA).get
     val shared = "this exact duplicated sentence appears in both documents"
@@ -536,11 +524,13 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.suffixArraySpans(docs, gramLen = 12, shards = 1).count() == 2L)
   }
 
-  private def shardOf(i: Long, salt: String, shards: Long): Long =
-    spark.range(i, i + 1)
-      .select(pmod(graft.functions.Md5Low64(
+  /** id -> shard for ids 0 until n under `salt`: the operator's
+    * `pmod(Md5Low64(salt ++ id), shards)`, one job for the whole range. */
+  private def shardTable(salt: String, n: Long, shards: Long): Map[Long, Long] =
+    spark.range(0L, n)
+      .select($"id", pmod(graft.functions.Md5Low64(
         concat(lit(salt), $"id".cast("string"))), lit(shards)))
-      .as[Long].collect().head
+      .as[(Long, Long)].collect().toMap
 
   test("suffixArraySpansRotated: rotations=1 is bit-identical to the base " +
       "operator (rotation 0 is the unsalted sharding)") {
@@ -562,11 +552,12 @@ class DedupSpec extends SparkSpec {
     // deterministic id search: base sharding separates them, rot1
     // sharding co-locates them (independent hashes, so such pairs exist
     // in any modest id range)
+    val base = shardTable("", 64L, 4L)
+    val rot1 = shardTable(Dedup.rotationSalt(1), 64L, 4L)
     val pair = (for {
       a <- 0L until 64L; b <- (a + 1) until 64L
-      if shardOf(a, "", 4) != shardOf(b, "", 4)
-      if shardOf(a, Dedup.rotationSalt(1), 4) ==
-        shardOf(b, Dedup.rotationSalt(1), 4)
+      if base(a) != base(b)
+      if rot1(a) == rot1(b)
     } yield (a, b)).headOption
     assert(pair.nonEmpty, "no base-split rot1-co-sharded pair in 0..63")
     val (idA, idB) = pair.get
@@ -585,8 +576,9 @@ class DedupSpec extends SparkSpec {
     // one doc sharing its HEAD with doc a (co-sharded base) and its TAIL
     // with doc b (co-sharded only under rot1) — rotated output must be
     // the merged union of the two per-rotation spans
-    val ids = (0L until 256L).map(i =>
-      (i, shardOf(i, "", 4), shardOf(i, Dedup.rotationSalt(1), 4)))
+    val base = shardTable("", 256L, 4L)
+    val rot1 = shardTable(Dedup.rotationSalt(1), 256L, 4L)
+    val ids = (0L until 256L).map(i => (i, base(i), rot1(i)))
     val center = ids.head
     val a = ids.find(t => t._2 == center._2 && t._1 != center._1).get
     val b = ids.find(t => t._3 == center._3 && t._2 != center._2

@@ -395,19 +395,21 @@ class TextAnalysisSpec extends SparkSpec {
     out.toSeq
   }
 
+  /** [[TextAnalysis.bpeTrain]] forced onto the distributed tier. */
+  private def bpeDistributed(corpus: org.apache.spark.sql.DataFrame,
+      merges: Int, batchTopK: Int = 64): Seq[(Long, String, String, Long)] =
+    TextAnalysis.bpeTrain(corpus, merges, "text", localVocabMax = 0L,
+      batchTopK = batchTopK).as[(Long, String, String, Long)].collect().toSeq
+
   test("bpeTrain: local tier ≡ distributed tier on the same corpus " +
-      "(graft.bpe.localVocabMax=0 forces the distributed loop)") {
+      "(localVocabMax = 0 forces the distributed loop)") {
     val corpus = Seq("the cat sat", "the hat", "a bat sat", "cab cab",
       "aaaa abab", "the the the").toDF("text")
     val local = TextAnalysis.bpeTrain(corpus, merges = 6)
       .as[(Long, String, String, Long)].collect().toSeq.sortBy(_._1)
-    spark.conf.set("graft.bpe.localVocabMax", "0")
-    try {
-      val dist = TextAnalysis.bpeTrain(corpus, merges = 6)
-        .as[(Long, String, String, Long)].collect().toSeq.sortBy(_._1)
-      assert(local == dist, s"\nlocal $local\ndist  $dist")
-      assert(local.nonEmpty)
-    } finally spark.conf.unset("graft.bpe.localVocabMax")
+    val dist = bpeDistributed(corpus, merges = 6).sortBy(_._1)
+    assert(local == dist, s"\nlocal $local\ndist  $dist")
+    assert(local.nonEmpty)
   }
 
   test("bpeTrain distributed tier: BATCHED merge selection ≡ sequential " +
@@ -424,21 +426,11 @@ class TextAnalysisSpec extends SparkSpec {
       val corpus = corpus0.toDF("text")
       val reference = TextAnalysis.bpeTrain(corpus, merges = 8)
         .as[(Long, String, String, Long)].collect().toSeq.sortBy(_._1)
-      for (topK <- Seq("1", "3", "64"); delta <- Seq("true", "false")) {
-        spark.conf.set("graft.bpe.localVocabMax", "0")
-        spark.conf.set("graft.bpe.batchTopK", topK)
-        spark.conf.set("graft.bpe.deltaCounts", delta)
-        try {
-          val got = TextAnalysis.bpeTrain(corpus, merges = 8)
-            .as[(Long, String, String, Long)].collect().toSeq.sortBy(_._1)
-          assert(got == reference,
-            s"batchTopK=$topK delta=$delta on $corpus0:\n" +
-              s"ref $reference\ngot $got")
-        } finally {
-          spark.conf.unset("graft.bpe.localVocabMax")
-          spark.conf.unset("graft.bpe.batchTopK")
-          spark.conf.unset("graft.bpe.deltaCounts")
-        }
+      for (topK <- Seq(1, 3, 64)) {
+        val got = bpeDistributed(corpus, merges = 8, batchTopK = topK)
+          .sortBy(_._1)
+        assert(got == reference,
+          s"batchTopK=$topK on $corpus0:\nref $reference\ngot $got")
       }
     }
   }
@@ -449,16 +441,15 @@ class TextAnalysisSpec extends SparkSpec {
     // it into unpaired surrogates and merge those instead
     val corpus = Seq("x🍕y x🍕y", "🍕🍕").toDF("text")
     for (forceDist <- Seq(false, true)) {
-      if (forceDist) spark.conf.set("graft.bpe.localVocabMax", "0")
-      try {
-        val got = TextAnalysis.bpeTrain(corpus, merges = 1)
+      val got =
+        if (forceDist) bpeDistributed(corpus, merges = 1)
+        else TextAnalysis.bpeTrain(corpus, merges = 1)
           .as[(Long, String, String, Long)].collect().toSeq
-        // best pair: (x,🍕) n=2 — ties (🍕,y) n=2 and (🍕,🍕) n=1 lose on
-        // UTF-8 order (x < 🍕)
-        // a code-unit split would instead merge lone-surrogate symbols
-        // (\uD83C,\uDF55) — the exact-match assertion rules that out
-        assert(got == Seq((1L, "x", "🍕", 2L)), s"forceDist=$forceDist got $got")
-      } finally if (forceDist) spark.conf.unset("graft.bpe.localVocabMax")
+      // best pair: (x,🍕) n=2 — ties (🍕,y) n=2 and (🍕,🍕) n=1 lose on
+      // UTF-8 order (x < 🍕)
+      // a code-unit split would instead merge lone-surrogate symbols
+      // (\uD83C,\uDF55) — the exact-match assertion rules that out
+      assert(got == Seq((1L, "x", "🍕", 2L)), s"forceDist=$forceDist got $got")
     }
   }
 

@@ -32,6 +32,19 @@ class EavSourceSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 3) // 250 ids / 100-id chunks
   }
 
+  test("non-ASCII values decode as UTF-8 whatever the JVM default charset") {
+    val f = Files.createTempFile("eavutf8", ".csv")
+    Files.write(f, Seq(
+      "record_id,redcap_event_name,redcap_repeat_instrument,redcap_repeat_instance,field_name,value",
+      "r1,screening_arm_1,,,cafe,café",
+      "r1,screening_arm_1,,,city,Zürich",
+      "r2,screening_arm_1,,,food,🍕").mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val got = spark.read.format("graft-eav").option("path", f.toString).load()
+      .select("field_name", "value").as[(String, String)].collect().toSet
+    assert(got == Set("cafe" -> "café", "city" -> "Zürich", "food" -> "🍕"))
+  }
+
   test("filter pushdown: field_name equality lands in PushedFilters") {
     val df = read.load().filter($"field_name" === "age")
     val plan = df.queryExecution.executedPlan.toString

@@ -35,4 +35,12 @@ class IniConfigSpec extends AnyFunSuite {
     val c2 = IniConfig.parse("[a]\nx = %(missing)s/y\n")
     assert(c2.resolved("a", "x").contains("%(missing)s/y"))
   }
+
+  test("load decodes the file as UTF-8 (non-ASCII values)") {
+    val f = java.nio.file.Files.createTempFile("graft", ".ini")
+    java.nio.file.Files.write(f, "[site]\nname = Zürich café 🍕\n"
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(IniConfig.load(f.toString).get("site", "name")
+      .contains("Zürich café 🍕"))
+  }
 }

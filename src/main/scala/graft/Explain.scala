@@ -25,9 +25,9 @@ object Explain {
           graft.sources.Tables.documents(s, d)
             .select(org.apache.spark.sql.functions.explode(
               graft.ops.Dedup.shingles(org.apache.spark.sql.functions.col("text"))))
-        case "_pp_candidates" => (s, d) =>
-          graft.ops.Dedup.prefixCandidates(
-            graft.sources.Tables.documents(s, d), threshold = 0.5)
+        case "_pp_candidates" => (s, d) => // q137's PPJoin candidate stage
+          graft.ops.Dedup.prefixCandidates(graft.ops.Dedup.hashedShingleSets(
+            graft.sources.Tables.documents(s, d)).localCheckpoint(), 0.5)
         case "_mh_pairs" => (s, d) => // q60's pair-mining stage alone
           graft.ops.Dedup.minhashDuplicatePairs(
             graft.sources.Tables.documents(s, d), threshold = 0.5)

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines (north-star EXT,
   * SURVEY.md J8): exact, MinHash+LSH, SimHash, exact n-gram Jaccard.
@@ -25,17 +27,19 @@ object Dedup {
   def normalized(text: Column): Column =
     regexp_replace(lower(trim(text)), "\\s+", " ")
 
+  /** Content key: xxhash64 of the [[normalized]] text. Equal keys mean
+    * equal shingle sets (up to a 2^-64 collision). */
+  private def contentKey(text: Column): Column = xxhash64(normalized(text))
+
   // ------------------------------------------------------------- exact
   /** Exact dedup: keep the minimum `idCol` per normalized-content group.
-    * Equivalent plan to groupBy(xxhash64) but keyed on the hash so 100 TB of
-    * text never shuffles — only (hash, id) pairs do. */
-  def exact(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val h = xxhash64(normalized(col(textCol)))
-    docs.select(h.as("__h"), col(idCol))
+    * Groups on the content key, so only (key, id) pairs shuffle — never
+    * the text. */
+  def exact(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    docs.select(contentKey(col(textCol)).as("__h"), col(idCol))
       .groupBy(col("__h"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
       .drop("__h")
-  }
 
   // ------------------------------------------------------------- shingles
   /** Word n-gram shingle array (distinct). Documents shorter than n words
@@ -94,11 +98,6 @@ object Dedup {
   }
 
   // ------------------------------------------------------------- minhash
-  /** k-lane MinHash signature per doc via explode + partial-aggregated
-    * min()s. Each shingle string is hashed once; the k lanes re-mix that
-    * long with `xxhash64(h, lane)` — a handful of codegen'd integer ops,
-    * overflow-free under ANSI. (Higher-order array lambdas are interpreted
-    * in Spark, so the row-local formulation is ~10× slower at scale.) */
   /** (id, h1, h2) rows — one base-hash pair per shingle occurrence. */
   private def hashedShingleRows(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     shingleRows(docs, textCol, idCol)
@@ -117,6 +116,10 @@ object Dedup {
     (0 until k).map(i => min(lane(i)).as(s"mh_$i"))
   }
 
+  /** k-lane MinHash signature per doc, (id, mh_0 … mh_{k-1}), via explode
+    * + partial-aggregated min()s over the [[laneAggs]] lanes: each shingle
+    * string is hashed twice, the lanes are a handful of codegen'd integer
+    * ops, overflow-free under ANSI. */
   def minhashSignatures(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 64): DataFrame = {
     val lanes = laneAggs(k)
@@ -137,7 +140,7 @@ object Dedup {
   /** Spark-parity xxhash64 of a string column value (seed 42). */
   private[ops] def xxStr(s: String, seed: Long = 42L): Long = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+    XXH64.hashUnsafeBytes(
       b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, seed)
   }
 
@@ -191,129 +194,90 @@ object Dedup {
       f: Long => Unit): Unit =
     shinglesJvm(text, n).foreach(sh => f(xxStr(sh)))
 
-  private def kernelRows(docs: DataFrame, textCol: String, idCol: String,
-      outFields: Seq[org.apache.spark.sql.types.StructField])(
-      perDoc: (Any, String) => Iterator[org.apache.spark.sql.Row]): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val in = docs.select(col(idCol), col(textCol))
+  /** Zero-shuffle per-document kernel: `perDoc(id, row)` over the
+    * (idCol, payloadCol) rows of `docs` inside mapPartitions; rows with a
+    * null id or payload emit nothing. */
+  private def kernelRows(docs: DataFrame, payloadCol: String, idCol: String,
+      outFields: Seq[StructField])(
+      perDoc: (Any, Row) => Iterator[Row]): DataFrame = {
+    val in = docs.select(col(idCol), col(payloadCol))
     val idField = in.schema.fields.head.copy(name = "id")
     val schema = StructType(idField +: outFields)
     in.mapPartitions { it =>
       it.flatMap { r =>
         if (r.isNullAt(1) || r.isNullAt(0)) Iterator.empty
-        else perDoc(r.get(0), r.getString(1))
+        else perDoc(r.get(0), r)
       }
     }(org.apache.spark.sql.Encoders.row(schema))
   }
 
-  /** (id, band, bh) rows straight off the parquet scan — the exact input of
+  private val bandFields =
+    Seq(StructField("band", IntegerType, false), StructField("bh", LongType, false))
+
+  /** One doc's (id, band, bh) rows from its shingle hashes: the k lanes of
+    * [[laneAggs]] min-folded over `foreachHash`, then each band's r = k/bands
+    * lane minima chained through XXH64 (seed 42). Min is duplicate-blind,
+    * so a shingle multiset and its distinct set give the same rows. */
+  private def bandRowsOf(id: Any, k: Int, bands: Int)(
+      foreachHash: (Long => Unit) => Unit): Iterator[Row] = {
+    val r = k / bands
+    val mins = Array.fill(k)(Long.MaxValue)
+    foreachHash { h1 =>
+      // xxhash64(sh, 1): the string hash seeds the INT 1 (lit(1) is int)
+      val h2 = XXH64.hashInt(1, h1)
+      mins(0) = math.min(mins(0), h1)
+      var i = 1
+      while (i < k) {
+        val lane = h1 ^ ((h2 << i) | (h2 >>> (64 - i)))
+        if (lane < mins(i)) mins(i) = lane
+        i += 1
+      }
+    }
+    (0 until bands).iterator.map { b =>
+      var bh = 42L
+      var j = 0
+      while (j < r) { bh = XXH64.hashLong(mins(b * r + j), bh); j += 1 }
+      Row(id, b, bh)
+    }
+  }
+
+  /** (id, band, bh) rows straight off the text scan — the exact input of
     * the LSH bucket exchange, computed with zero shuffle. Same lanes as
     * [[laneAggs]], same band hash as the expression path. */
   def minhashBandRows(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 64, bands: Int = 16): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
-    val r = k / bands
-    require(bands * r == k, "bands must divide k")
-    kernelRows(docs, textCol, idCol,
-      Seq(StructField("band", IntegerType, false), StructField("bh", LongType, false))) {
-      (id, text) =>
-        val mins = Array.fill(k)(Long.MaxValue)
-        foreachShingleHash(text, 3) { h1 =>
-          // xxhash64(sh, 1): the string hash seeds the INT 1 (lit(1) is int)
-          val h2 = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(1, h1)
-          mins(0) = math.min(mins(0), h1)
-          var i = 1
-          while (i < k) {
-            val lane = h1 ^ ((h2 << i) | (h2 >>> (64 - i)))
-            if (lane < mins(i)) mins(i) = lane
-            i += 1
-          }
-        }
-        (0 until bands).iterator.map { b =>
-          var bh = 42L
-          var j = 0
-          while (j < r) {
-            bh = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(mins(b * r + j), bh)
-            j += 1
-          }
-          org.apache.spark.sql.Row(id, b, bh)
-        }
+    require(bands * (k / bands) == k, "bands must divide k")
+    kernelRows(docs, textCol, idCol, bandFields) { (id, r) =>
+      bandRowsOf(id, k, bands)(foreachShingleHash(r.getString(1), 3))
     }
   }
 
   /** (id, sh: array<long>) — each doc's DISTINCT hashed shingle set in one
-    * narrow pass (replaces window + collect_set for the verification side). */
+    * narrow pass, sorted ascending. Every consumer is order-invariant, and
+    * the sort lets verify stages use the allocation-free merge intersect
+    * ([[graft.functions.SortedIntersectCount]]). */
   def hashedShingleSets(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, LongType, StructField}
+      idCol: String = "doc_id"): DataFrame =
     kernelRows(docs, textCol, idCol,
-      Seq(StructField("sh", ArrayType(LongType, false), false))) { (id, text) =>
+      Seq(StructField("sh", ArrayType(LongType, false), false))) { (id, r) =>
       val set = new java.util.HashSet[Long]()
-      foreachShingleHash(text, 3)(set.add(_))
+      foreachShingleHash(r.getString(1), 3)(set.add(_))
       val arr = new Array[Long](set.size)
       val it = set.iterator(); var i = 0
       while (it.hasNext) { arr(i) = it.next(); i += 1 }
-      // sorted-ascending contract: every consumer is order-invariant
-      // (intersect/size/explode/min-lanes), and sorting once at build lets
-      // verify stages use the allocation-free merge intersect
-      // ([[graft.functions.SortedIntersectCount]]) instead of a hash-set
-      // build per candidate pair
       java.util.Arrays.sort(arr)
-      Iterator.single(org.apache.spark.sql.Row(id, arr.toSeq))
+      Iterator.single(Row(id, arr.toSeq))
     }
-  }
 
-  /** [[minhashBandRows]] computed from PRE-BUILT distinct shingle sets
-    * ([[hashedShingleSets]] output) instead of raw text: the min of each
-    * hash lane over a doc's distinct set equals the min over its full
-    * multiset (min is duplicate-blind), so the (band, bh) bits are
-    * IDENTICAL to the text path's — with zero tokenize/shingle-hash work
-    * here. The q68 fusion seam (round-11): one materialized gram frame
-    * feeds LSH banding, exact verification, and decontamination, where
-    * each stage used to re-run the shingle kernel over its own text
-    * scan. */
+  /** [[minhashBandRows]] from pre-built (id, sh) sets ([[hashedShingleSets]]
+    * output) instead of text: the same (band, bh) rows, with no tokenizing
+    * or shingle hashing. */
   def minhashBandRowsFromSets(shs: DataFrame, k: Int = 64,
       bands: Int = 16): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
-      StructType}
-    val r = k / bands
-    require(bands * r == k, "bands must divide k")
-    val in = shs.select(col("id"), col("sh"))
-    val idField = in.schema.fields.head.copy(name = "id")
-    val schema = StructType(idField +:
-      Seq(StructField("band", IntegerType, false),
-        StructField("bh", LongType, false)))
-    in.mapPartitions { it =>
-      it.flatMap { row =>
-        if (row.isNullAt(0) || row.isNullAt(1)) Iterator.empty
-        else {
-          val id = row.get(0)
-          val sh = row.getSeq[Long](1)
-          val mins = Array.fill(k)(Long.MaxValue)
-          sh.foreach { h1 =>
-            val h2 = org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashInt(1, h1)
-            mins(0) = math.min(mins(0), h1)
-            var i = 1
-            while (i < k) {
-              val lane = h1 ^ ((h2 << i) | (h2 >>> (64 - i)))
-              if (lane < mins(i)) mins(i) = lane
-              i += 1
-            }
-          }
-          (0 until bands).iterator.map { b =>
-            var bh = 42L
-            var j = 0
-            while (j < r) {
-              bh = org.apache.spark.sql.catalyst.expressions.XXH64
-                .hashLong(mins(b * r + j), bh)
-              j += 1
-            }
-            org.apache.spark.sql.Row(id, b, bh)
-          }
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    require(bands * (k / bands) == k, "bands must divide k")
+    kernelRows(shs, "sh", "id", bandFields) { (id, r) =>
+      bandRowsOf(id, k, bands)(f => r.getSeq[Long](1).foreach(f))
+    }
   }
 
   /** (id, sim) 64-bit SimHash per doc, zero-shuffle (same bits as
@@ -321,16 +285,15 @@ object Dedup {
     * `"md5"` = DuckDB-reproducible [[md5Low64]] token hashes). */
   def simhashSignaturesKernel(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", tokenHash: String = "xx64"): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField}
     val hashFn: String => Long = tokenHash match {
       case "xx64" => xxStr(_, 42L)
       case "md5"  => md5Low64 _
       case other  => throw new IllegalArgumentException(s"unknown tokenHash: $other")
     }
     kernelRows(docs, textCol, idCol,
-      Seq(StructField("sim", LongType, false))) { (id, text) =>
+      Seq(StructField("sim", LongType, false))) { (id, r) =>
       val counts = new Array[Int](64)
-      normalizedJvm(text).split(" ", -1).foreach { t =>
+      normalizedJvm(r.getString(1)).split(" ", -1).foreach { t =>
         val h = hashFn(t)
         var i = 0
         while (i < 64) {
@@ -341,7 +304,7 @@ object Dedup {
       var sim = 0L
       var i = 0
       while (i < 64) { if (counts(i) > 0) sim |= (1L << i); i += 1 }
-      Iterator.single(org.apache.spark.sql.Row(id, sim))
+      Iterator.single(Row(id, sim))
     }
   }
 
@@ -361,66 +324,65 @@ object Dedup {
       .filter(col("n_docs") > maxBucketSize)
   }
 
-  /** Audit for the clone-group cap in [[minhashDuplicatePairs]]: (content
-    * hash, representative id, member count) of every identical-content
-    * group whose members will NOT fan out into pairs at these parameters
-    * (only the rep participates). Alert on this alongside
-    * [[oversizedMinhashBuckets]] — together they cover everything the
-    * pair pipeline drops. */
-  def oversizedCloneGroups(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxBucketSize: Int = 1000): DataFrame =
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), xxhash64(normalized(col(textCol))).as("ch"))
-      .groupBy(col("ch"))
-      .agg(min(col("id")).as("rep"), count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > maxBucketSize)
+  // ------------------------------------------------------- clone groups
+  // Identical normalized text ⇒ identical shingle set ⇒ identical result
+  // against every third doc, so the pair and corpus-statistics operators
+  // run on one REPRESENTATIVE (the min id) per content group and fan
+  // their results back to the members. Null-text docs belong to no group,
+  // exactly as the shingle kernel emits no rows for them.
 
-  /** Candidate duplicate pairs via LSH banding + exact-Jaccard verification.
-    *
-    * @param bands     b bands of r = k/bands rows; P(candidate) ≈
-    *                  1-(1-s^r)^b — defaults catch s ≳ 0.5
-    * @param threshold exact-Jaccard cutoff applied to candidates
-    * @return (id_a, id_b, jaccard) with id_a < id_b, distinct
-    */
-  def minhashDuplicatePairs(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
-    // Content-group pre-stage: identical normalized text ⇒ identical
-    // shingle set ⇒ identical jaccard against every third doc, so the
-    // LSH + verification pipeline only needs one REPRESENTATIVE per
-    // distinct content. Corpora re-crawl and mirror heavily (the 10×
-    // bench clones every doc), making clone groups the dominant near-dup
-    // mass — verifying reps cuts signature/verify work by the clone
-    // factor and pair EXPANSION becomes pure output-sized joins:
-    // rep-pair × member lists cross-group, plus all intra-group pairs at
-    // jaccard exactly 1 (identical sets). Bit-identical to running the
-    // full pipeline on every doc (null-text docs are excluded here exactly
-    // as the kernel produces no rows for them); the q41 oracle
-    // (brute-force all-pairs) pins that. Clone groups LARGER than
-    // `maxBucketSize` get the same anti-spam treatment as oversized LSH
-    // buckets: their members do not fan out — only the rep participates —
-    // so a 100k-clone boilerplate blob cannot emit C(100k,2) pairs.
-    val keyed = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), xxhash64(normalized(col(textCol))).as("ch"))
-    val groups = keyed.groupBy(col("ch"))
-      .agg(min(col("id")).as("rep"), collect_list(col("id")).as("ids"))
-      .localCheckpoint() // slim (hash, ids): reused by reps semi-join + both expansions
-    val bounded = groups.filter(size(col("ids")) <= maxBucketSize)
-    // oversized groups collapse to their rep for cross expansion (the
-    // rep-level pair still surfaces; members don't fan out)
-    val expandable = groups.select(col("rep"),
+  /** (id, ch) for every doc with non-null text; ch is its content key. */
+  private[ops] def contentKeyed(docs: DataFrame, textCol: String,
+      idCol: String): DataFrame =
+    docs.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), contentKey(col(textCol)).as("ch"))
+
+  /** (ch, rep, `members`) per content group of a [[contentKeyed]] frame:
+    * rep is the group's min id, `members` one aggregate over its ids. */
+  private[ops] def contentGroups(keyed: DataFrame, members: Column): DataFrame =
+    keyed.groupBy(col("ch")).agg(min(col("id")).as("rep"), members)
+
+  /** True when some group has `groupSize` ≥ 2 — one limit-1 job over the
+    * caller's materialized groups; false sends the caller to its direct
+    * per-document path. */
+  private[ops] def anyClones(groups: DataFrame, groupSize: Column): Boolean =
+    !groups.filter(groupSize >= 2).limit(1).isEmpty
+
+  /** The docs that represent their content group. */
+  private[ops] def repDocs(docs: DataFrame, groups: DataFrame,
+      idCol: String): DataFrame =
+    docs.join(groups.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
+
+  /** Materialized (ch, rep, ids) groups: the rep semi-join and the
+    * fan-back both read them. */
+  private def cloneGroups(docs: DataFrame, textCol: String,
+      idCol: String): DataFrame =
+    contentGroups(contentKeyed(docs, textCol, idCol),
+      collect_list(col("id")).as("ids")).localCheckpoint()
+
+  /** (rep, ids) with every group larger than `maxBucketSize` collapsed to
+    * its rep: such a group's members never fan out (the anti-spam cap the
+    * LSH buckets get), while the rep still pairs. */
+  private def cappedMembers(groups: DataFrame, maxBucketSize: Int): DataFrame =
+    groups.select(col("rep"),
       when(size(col("ids")) <= maxBucketSize, col("ids"))
         .otherwise(array(col("rep"))).as("ids"))
-    // all-unique corpus (the common post-applyExact shape): reps == docs —
-    // skip the semi-join and both expansion joins entirely; the clone
-    // check is one limit-1 scan over the checkpointed slim groups
-    if (groups.filter(size(col("ids")) >= 2).limit(1).isEmpty)
-      return minhashPairsOnDistinct(docs, textCol, idCol, k, bands,
-        threshold, maxBucketSize)
-    val reps = docs.join(groups.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    val repPairs = minhashPairsOnDistinct(reps, textCol, idCol, k, bands,
-      threshold, maxBucketSize)
-    val members = expandable
+
+  /** The clone-group pre-stage of the pair operators. `pairsOnDistinct`
+    * is the operator's pipeline over content-distinct docs. If no content
+    * has a clone it runs on `docs` as is; otherwise it runs on the reps
+    * and its (id_a, id_b, jaccard) rows fan back: each rep pair crosses
+    * the two (capped) member lists, and each group within the cap adds all
+    * its intra pairs at jaccard exactly 1. Pair expansion is then pure
+    * output-sized joins, and signature and verify work shrink by the
+    * clone factor. */
+  private def viaCloneGroups(docs: DataFrame, textCol: String, idCol: String,
+      threshold: Double, maxBucketSize: Int)(
+      pairsOnDistinct: DataFrame => DataFrame): DataFrame = {
+    val groups = cloneGroups(docs, textCol, idCol)
+    if (!anyClones(groups, size(col("ids")))) return pairsOnDistinct(docs)
+    val repPairs = pairsOnDistinct(repDocs(docs, groups, idCol))
+    val members = cappedMembers(groups, maxBucketSize)
     val cross = repPairs
       .join(members.select(col("rep").as("id_a"), col("ids").as("ids_a")), Seq("id_a"))
       .join(members.select(col("rep").as("id_b"), col("ids").as("ids_b")), Seq("id_b"))
@@ -428,7 +390,7 @@ object Dedup {
       .select(col("ma"), explode(col("ids_b")).as("mb"), col("jaccard"))
       .select(least(col("ma"), col("mb")).as("id_a"),
         greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
-    val intra = bounded
+    val intra = groups.filter(size(col("ids")) <= maxBucketSize)
       .filter(size(col("ids")) >= 2 && lit(1.0) >= threshold)
       .select(explode(col("ids")).as("ma"), col("ids"))
       .select(col("ma"), explode(col("ids")).as("mb"))
@@ -438,100 +400,99 @@ object Dedup {
     cross.unionByName(intra)
   }
 
+  /** Audit for the clone-group cap in [[minhashDuplicatePairs]]: (content
+    * hash, representative id, member count) of every identical-content
+    * group whose members will NOT fan out into pairs at these parameters
+    * (only the rep participates). Alert on this alongside
+    * [[oversizedMinhashBuckets]] — together they cover everything the
+    * pair pipeline drops. */
+  def oversizedCloneGroups(docs: DataFrame, textCol: String = "text",
+      idCol: String = "doc_id", maxBucketSize: Int = 1000): DataFrame =
+    contentGroups(contentKeyed(docs, textCol, idCol), count(lit(1)).as("n_docs"))
+      .filter(col("n_docs") > maxBucketSize)
+
+  // ------------------------------------------------------------ LSH pairs
+  /** Near-duplicate pairs via MinHash LSH banding + exact-Jaccard
+    * verification, run on one representative per distinct content (the
+    * clone-group pre-stage). Identical to the direct pipeline on every
+    * doc; clone groups larger than `maxBucketSize` pair through their rep
+    * only ([[oversizedCloneGroups]] lists them).
+    *
+    * @param bands     b bands of r = k/bands rows; P(candidate) ≈
+    *                  1-(1-s^r)^b — defaults catch s ≳ 0.5
+    * @param threshold exact-Jaccard cutoff applied to candidates
+    * @return (id_a, id_b, jaccard) with id_a < id_b, distinct
+    */
+  def minhashDuplicatePairs(docs: DataFrame, textCol: String = "text",
+      idCol: String = "doc_id", k: Int = 64, bands: Int = 16,
+      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
+    viaCloneGroups(docs, textCol, idCol, threshold, maxBucketSize)(
+      minhashPairsOnDistinct(_, textCol, idCol, k, bands, threshold,
+        maxBucketSize))
+
+  /** The LSH tail of the single-corpus pair operators: (id, band, bh) rows
+    * → bucket member lists in ONE exchange (buckets outside
+    * [2, maxBucketSize] dropped) → distinct candidate pairs → exact
+    * Jaccard on sorted shingle sets. `setsOf` maps the candidate ids
+    * (column `cid`) to their (id, sh) sets, so sets are built or sliced
+    * for candidate docs only. */
+  private def lshPairs(bandRows: DataFrame, threshold: Double,
+      maxBucketSize: Int)(setsOf: DataFrame => DataFrame): DataFrame = {
+    val candidates = bandRows
+      .groupBy(col("band"), col("bh"))
+      .agg(collect_list(col("id")).as("ids"))
+      .filter(size(col("ids")).between(2, maxBucketSize))
+      .select(explode(col("ids")).as("id_a"), col("ids"))
+      .select(col("id_a"), explode(col("ids")).as("id_b"))
+      .filter(col("id_a") < col("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      // slim pairs read three times (both sides of the candidate-id union
+      // + the verify join): materialize, or each re-derives the band rows
+      .localCheckpoint()
+    val candidateIds = candidates.select(col("id_a").as("cid"))
+      .union(candidates.select(col("id_b")))
+      .distinct()
+    // candidate-sized and read by both verify sides: materialize
+    val sets = setsOf(candidateIds).withColumnRenamed("id", "sid")
+      .localCheckpoint()
+    def side(s: String) = sets.select(col("sid").as(s"id_$s"), col("sh").as(s"sh_$s"))
+    verifiedPairs(candidates, side("a"), side("b"), threshold)
+  }
+
+  /** Candidate (id_a, id_b) pairs joined to (id_a, sh_a) and (id_b, sh_b)
+    * sorted sets, kept where the exact Jaccard ≥ threshold. */
+  private def verifiedPairs(candidates: DataFrame, setsA: DataFrame,
+      setsB: DataFrame, threshold: Double): DataFrame =
+    candidates.join(setsA, Seq("id_a")).join(setsB, Seq("id_b"))
+      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+
   /** The LSH + exact-verification pipeline over content-DISTINCT docs.
     * Call this directly when the corpus is exact-deduped BY CONSTRUCTION
     * (e.g. right after [[applyExact]]) — it skips the wrapper's
     * clone-group pass entirely; [[minhashDuplicatePairs]] is the safe
     * general entry. Identical-content docs that DO slip in are simply
-    * redundant LSH work, never wrong output. */
+    * redundant LSH work, never wrong output. Nothing shuffles before the
+    * bucket exchange, and shingle sets are rebuilt only for the
+    * semi-join-pruned candidate docs. */
   def minhashPairsOnDistinct(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
-    // (id, band, bh) computed in the zero-shuffle kernel: nothing shuffles
-    // before the bucket exchange — never text or shingle arrays.
-    val exploded = minhashBandRows(docs, textCol, idCol, k, bands)
-    // bucket → member list in ONE shuffle (a window + self-join would cost
-    // a sort plus a second shuffle); cap pathological buckets, then expand
-    // pairs with a double explode.
-    val buckets = exploded
-      .groupBy(col("band"), col("bh"))
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")).between(2, maxBucketSize))
-    val candidates = buckets
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      // slim (id_a, id_b) pairs consumed THREE times (both sides of the
-      // candidate-id union + the verification join): materialize, or the
-      // whole band/bucket subtree — including the corpus scan — re-derives
-      // per consumer
-      .localCheckpoint()
-    // exact-Jaccard verification on HASHED shingle sets, built ONLY for
-    // candidate docs: the docs plane is semi-join-pruned before re-shingling,
-    // so the second pass is proportional to |candidates|, not the corpus
-    // (collecting sets for every doc in the signature aggregate measured
-    // slower — the buffers dominate). Long-array intersect/union is ~5×
-    // cheaper than strings; xxhash64 collisions (~2^-64) are immaterial.
-    val candidateIds = candidates.select(col("id_a").as("cid"))
-      .union(candidates.select(col("id_b")))
-      .distinct()
-    val candidateDocs = docs.join(candidateIds,
-      col(idCol) === col("cid"), "left_semi")
-    val shs = hashedShingleSets(candidateDocs, textCol, idCol)
-      .withColumnRenamed("id", "sid")
-      // |candidates|-sized by the semi-join prune, and consumed by BOTH
-      // sides of the verification join: materialize so the shingle kernel
-      // runs once per candidate doc, not twice
-      .localCheckpoint()
-    candidates
-      .join(shs.withColumnRenamed("sid", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
-      .join(shs.withColumnRenamed("sid", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
+    lshPairs(minhashBandRows(docs, textCol, idCol, k, bands), threshold,
+      maxBucketSize) { ids =>
+      hashedShingleSets(docs.join(ids, col(idCol) === col("cid"), "left_semi"),
+        textCol, idCol)
+    }
 
   /** [[minhashPairsOnDistinct]] over PRE-BUILT (and caller-materialized)
-    * distinct shingle sets: banding, the bucket exchange, candidate
-    * expansion, and exact verification all read the SAME gram frame —
-    * the pipeline runs zero text passes. Bits identical to the text
-    * path: [[minhashBandRowsFromSets]] proves the signatures, and the
-    * verification Jaccard is computed on the very sets the text path
-    * would have rebuilt. */
+    * distinct shingle sets ([[hashedShingleSets]] output): banding and
+    * verification both read that frame, so the pipeline makes no text
+    * pass. Same pairs as the text path on the docs the sets came from. */
   def minhashPairsFromSets(shs: DataFrame, k: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
-    val exploded = minhashBandRowsFromSets(shs, k, bands)
-    val buckets = exploded
-      .groupBy(col("band"), col("bh"))
-      .agg(collect_list(col("id")).as("ids"))
-      .filter(size(col("ids")).between(2, maxBucketSize))
-    val candidates = buckets
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      // slim pairs, three consumers (both candidate-id union sides + the
-      // verification join) — same materialization rule as the text path
-      .localCheckpoint()
-    val candidateIds = candidates.select(col("id_a").as("cid"))
-      .union(candidates.select(col("id_b")))
-      .distinct()
-    // candidate-pruned slice of the gram frame: the broadcast semi-join
-    // keeps the corpus-sized arrays out of any exchange, and the slim
-    // result is read by both verification sides
-    val shsC = shs.join(candidateIds, col("id") === col("cid"), "left_semi")
-      .withColumnRenamed("id", "sid")
-      .localCheckpoint()
-    candidates
-      .join(shsC.withColumnRenamed("sid", "id_a")
-        .withColumnRenamed("sh", "sh_a"), Seq("id_a"))
-      .join(shsC.withColumnRenamed("sid", "id_b")
-        .withColumnRenamed("sh", "sh_b"), Seq("id_b"))
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
+    lshPairs(minhashBandRowsFromSets(shs, k, bands), threshold,
+      maxBucketSize)(ids => shs.join(ids, col("id") === col("cid"), "left_semi"))
 
   /** Cross-corpus near-duplicate pairs: docs in `a` whose normalized text
     * is near-duplicate (exact-verified Jaccard ≥ threshold) of a doc in
@@ -540,15 +501,16 @@ object Dedup {
     * document-level big sibling of eval decontamination (which is gram-
     * level, [[contaminationHits]]).
     *
-    * Same scale posture as the single-corpus path: both sides reduce to
-    * (id, band, bh) in the zero-shuffle kernel, candidates come from ONE
-    * bucket join on (band, bh) with per-side bucket caps (an oversized
-    * boilerplate bucket on either side cannot cross-explode), and exact
-    * verification re-shingles only semi-join-pruned candidate docs. Text
-    * never crosses an exchange. */
+    * Both sides reduce to (id, band, bh) in the zero-shuffle kernel,
+    * candidates come from ONE bucket join on (band, bh) with per-side
+    * bucket caps (an oversized boilerplate bucket on either side cannot
+    * cross-explode), and exact verification re-shingles only
+    * semi-join-pruned candidate docs. Text never crosses an exchange. */
   def crossCorpusPairs(a: DataFrame, b: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
+    // per-side buckets keep singletons (a one-doc bucket on each side is a
+    // candidate), so this does not share lshPairs' [2, cap] bucket filter
     val ga = minhashBandRows(a, textCol, idCol, k, bands)
       .groupBy(col("band"), col("bh"))
       .agg(collect_list(col("id")).as("ids_a"))
@@ -564,18 +526,11 @@ object Dedup {
       // slim id pairs consumed three times (two semi-join prunes + the
       // verification join): materialize so BOTH band-row subtrees run once
       .localCheckpoint()
-    val aDocs = a.join(candidates.select(col("id_a").as("cid")).distinct(),
-      col(idCol) === col("cid"), "left_semi")
-    val bDocs = b.join(candidates.select(col("id_b").as("cid")).distinct(),
-      col(idCol) === col("cid"), "left_semi")
-    val sa = hashedShingleSets(aDocs, textCol, idCol)
-      .select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val sb = hashedShingleSets(bDocs, textCol, idCol)
-      .select(col("id").as("id_b"), col("sh").as("sh_b"))
-    candidates.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    def setsOf(docs: DataFrame, s: String) = hashedShingleSets(
+        docs.join(candidates.select(col(s"id_$s").as("cid")).distinct(),
+          col(idCol) === col("cid"), "left_semi"), textCol, idCol)
+      .select(col("id").as(s"id_$s"), col("sh").as(s"sh_$s"))
+    verifiedPairs(candidates, setsOf(a, "a"), setsOf(b, "b"), threshold)
   }
 
   // ----------------------------------------------------- decontamination
@@ -591,22 +546,14 @@ object Dedup {
     * collision against the benchmark set (~2^-64·|bench| per gram —
     * immaterial; flagged docs get human/exact review anyway). */
   def contaminationHits(corpus: DataFrame, benchmark: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val benchGrams = hashedShingleSets(benchmark, textCol, idCol)
-      .select(explode(col("sh")).as("g")).distinct()
-    hashedShingleSets(corpus, textCol, idCol)
-      .select(col("id"), explode(col("sh")).as("g"))
-      .join(broadcast(benchGrams), "g")
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_shared"))
-  }
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    contaminationHitsFromSets(hashedShingleSets(corpus, textCol, idCol),
+      benchmark, textCol, idCol)
 
   /** [[contaminationHits]] over a PRE-BUILT corpus gram frame
-    * ([[hashedShingleSets]] output — the q68 fusion seam): the corpus
-    * side explodes the materialized sets instead of re-running the
-    * shingle kernel over a text scan; the (tiny, fixed) benchmark side
-    * still builds its grams from text. Identical hits: the text path's
-    * corpus grams ARE these sets. */
+    * ([[hashedShingleSets]] output): the corpus side explodes those sets
+    * instead of shingling text; the (tiny, fixed) benchmark side still
+    * builds its grams from text. */
   def contaminationHitsFromSets(corpusSh: DataFrame, benchmark: DataFrame,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val benchGrams = hashedShingleSets(benchmark, textCol, idCol)
@@ -713,14 +660,10 @@ object Dedup {
   def dedupClusters(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", k: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
-    val keyed = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), xxhash64(normalized(col(textCol))).as("ch"))
-    val groups = keyed.groupBy(col("ch"))
-      .agg(min(col("id")).as("rep"), collect_list(col("id")).as("ids"))
-      .localCheckpoint()
-    val reps = docs.join(groups.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    val repPairs = minhashPairsOnDistinct(reps, textCol, idCol, k, bands,
-      threshold, maxBucketSize).localCheckpoint()
+    // no anyClones probe: the fan-back below is member-sized either way
+    val groups = cloneGroups(docs, textCol, idCol)
+    val repPairs = minhashPairsOnDistinct(repDocs(docs, groups, idCol),
+      textCol, idCol, k, bands, threshold, maxBucketSize).localCheckpoint()
     val repCC = connectedComponents(repPairs)
     // groups whose members appear in the pair set: intra edges (m ≥ 2,
     // within cap, jaccard 1 ≥ threshold) or rep present in a rep pair
@@ -731,13 +674,8 @@ object Dedup {
     val eligible = intraEligible.unionByName(
         groups.join(paired, Seq("rep"), "left_semi"))
       .dropDuplicates("ch")
-    // oversized groups: only the rep itself appears (cap semantics)
-    val members = eligible
-      .select(col("rep"),
-        when(size(col("ids")) <= maxBucketSize, col("ids"))
-          .otherwise(array(col("rep"))).as("ids"))
+    cappedMembers(eligible, maxBucketSize)
       .select(col("rep"), explode(col("ids")).as("id"))
-    members
       .join(repCC.withColumnRenamed("id", "rep"), Seq("rep"), "left")
       .select(col("id"), coalesce(col("component"), col("rep")).as("component"))
   }
@@ -785,8 +723,7 @@ object Dedup {
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .distinct()
       .localCheckpoint()
-    val integralIds = idType == org.apache.spark.sql.types.LongType ||
-      idType == org.apache.spark.sql.types.IntegerType
+    val integralIds = idType == LongType || idType == IntegerType
     if (integralIds && undirected.count() <= localSolveMaxEdges)
       return localComponents(undirected, idType)
     val edges = undirected
@@ -948,10 +885,11 @@ object Dedup {
     * The rarity order is the scale lever: prefixes are built from the
     * RAREST grams, so candidate buckets are small by construction —
     * boilerplate grams that appear everywhere are pushed out of every
-    * prefix (the frequency table is the same slim aggregate the LSH path
-    * would never need; one extra pass buys exactness). Use this when a
-    * missed near-dup is unacceptable (eval decontamination, compliance
-    * deletion sweeps); LSH remains the cheaper open-web default.
+    * prefix. Use this when a missed near-dup is unacceptable (eval
+    * decontamination, compliance deletion sweeps); LSH remains the
+    * cheaper open-web default. Runs on one representative per distinct
+    * content, like [[minhashDuplicatePairs]], with the same clone-group
+    * cap.
     *
     * @return (id_a, id_b, jaccard) with id_a < id_b, Jaccard ≥ threshold
     */
@@ -959,62 +897,28 @@ object Dedup {
       idCol: String = "doc_id", threshold: Double = 0.5,
       maxBucketSize: Int = 1000): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
-    // Content-group pre-stage — the same wrapper as
-    // [[minhashDuplicatePairs]], for the same reason: identical
-    // normalized text ⇒ identical shingle set ⇒ identical jaccard
-    // against every third doc, so the exact PPJoin only needs one
-    // representative per distinct content. On heavily-mirrored corpora
-    // this is THE scale lever: true near-dup pairs grow quadratically in
-    // the clone factor, and without the pre-stage the candidate join and
-    // verify pay that square on full shingle sets (measured: 54 s at
-    // 10×, 368 s at 30× on the clone-replicated bench; the pre-stage
-    // makes verify proportional to distinct contents and pair expansion
-    // pure output-sized joins). Bit-identical to the direct pipeline:
-    // intra-group pairs have jaccard exactly 1 ≥ any threshold.
-    val keyed = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), xxhash64(normalized(col(textCol))).as("ch"))
-    val groups = keyed.groupBy(col("ch"))
-      .agg(min(col("id")).as("rep"), collect_list(col("id")).as("ids"))
-      .localCheckpoint()
-    if (groups.filter(size(col("ids")) >= 2).limit(1).isEmpty)
-      return prefixFilterPairsOnDistinct(docs, textCol, idCol, threshold)
-    val bounded = groups.filter(size(col("ids")) <= maxBucketSize)
-    val expandable = groups.select(col("rep"),
-      when(size(col("ids")) <= maxBucketSize, col("ids"))
-        .otherwise(array(col("rep"))).as("ids"))
-    val reps = docs.join(groups.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    val repPairs = prefixFilterPairsOnDistinct(reps, textCol, idCol, threshold)
-    val cross = repPairs
-      .join(expandable.select(col("rep").as("id_a"), col("ids").as("ids_a")), Seq("id_a"))
-      .join(expandable.select(col("rep").as("id_b"), col("ids").as("ids_b")), Seq("id_b"))
-      .select(explode(col("ids_a")).as("ma"), col("ids_b"), col("jaccard"))
-      .select(col("ma"), explode(col("ids_b")).as("mb"), col("jaccard"))
-      .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
-    val intra = bounded
-      .filter(size(col("ids")) >= 2)
-      .select(explode(col("ids")).as("ma"), col("ids"))
-      .select(col("ma"), explode(col("ids")).as("mb"))
-      .filter(col("ma") < col("mb"))
-      .select(col("ma").as("id_a"), col("mb").as("id_b"),
-        lit(1.0).as("jaccard"))
-    cross.unionByName(intra)
+    viaCloneGroups(docs, textCol, idCol, threshold, maxBucketSize)(
+      prefixFilterPairsOnDistinct(_, textCol, idCol, threshold))
   }
 
-  /** Diagnostic: the candidate-pair stage of [[prefixFilterPairsOnDistinct]]
-    * alone (prefix build + bucket join + distinct), for stage timing. */
-  private[graft] def prefixCandidates(docs: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      threshold: Double = 0.5): DataFrame = {
-    val sets = hashedShingleSets(docs, textCol, idCol).localCheckpoint()
+  /** The candidate stage of [[prefixFilterPairsOnDistinct]] over
+    * materialized (id, sh) sets: (id_a, id_b) pairs whose PPJoin prefixes
+    * share a gram and whose sizes pass the length filter, distinct. */
+  private[graft] def prefixCandidates(sets: DataFrame,
+      threshold: Double): DataFrame = {
     val ex = sets.select(col("id"), explode(col("sh")).as("g"))
     val freq = ex.groupBy(col("g")).agg(count(lit(1)).as("f"))
+    // rank within each doc by global rarity; prefix keeps the first
+    // |sh| − ⌈t·|sh|⌉ + 1 — the PPJoin prefix bound
     val w = Window.partitionBy(col("id")).orderBy(col("f"), col("g"))
     val prefix = ex.join(freq, Seq("g"))
       .withColumn("rk", row_number().over(w))
       .join(sets.select(col("id"), size(col("sh")).as("sz")), Seq("id"))
       .filter(col("rk") <= col("sz") - ceil(col("sz") * threshold) + 1)
       .select(col("id"), col("g"), col("sz"))
+    // length filter (PPJoin's second prune): Jaccard ≥ t forces
+    // t·|y| ≤ |x| ≤ |y|/t, so size-mismatched bucket-mates drop before
+    // the distinct and the verify join
     prefix.as("a").join(prefix.as("b"), col("a.g") === col("b.g"))
       .filter(col("a.id") < col("b.id")
         && col("a.sz") >= ceil(col("b.sz") * threshold)
@@ -1031,36 +935,14 @@ object Dedup {
       idCol: String = "doc_id", threshold: Double = 0.5): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     val sets = hashedShingleSets(docs, textCol, idCol).localCheckpoint()
-    val ex = sets.select(col("id"), explode(col("sh")).as("g"))
-    val freq = ex.groupBy(col("g")).agg(count(lit(1)).as("f"))
-    // rank within each doc by global rarity; prefix keeps the first
-    // |sh| − ⌈t·|sh|⌉ + 1 — the PPJoin prefix bound
-    val w = Window.partitionBy(col("id")).orderBy(col("f"), col("g"))
-    val prefix = ex.join(freq, Seq("g"))
-      .withColumn("rk", row_number().over(w))
-      .join(sets.select(col("id"), size(col("sh")).as("sz")), Seq("id"))
-      .filter(col("rk") <= col("sz") - ceil(col("sz") * threshold) + 1)
-      .select(col("id"), col("g"), col("sz"))
-    // length filter (PPJoin's second prune): Jaccard ≥ t forces
-    // t·|y| ≤ |x| ≤ |y|/t, so size-mismatched bucket-mates drop BEFORE
-    // the distinct and the array-verify join ever see them. (The
-    // positional filter was tried and reverted: on this corpus its rank
-    // bookkeeping in the bucket join cost more than its ~10% prune.)
-    val candidates = prefix.as("a").join(prefix.as("b"), col("a.g") === col("b.g"))
-      .filter(col("a.id") < col("b.id")
-        && col("a.sz") >= ceil(col("b.sz") * threshold)
-        && col("b.sz") >= ceil(col("a.sz") * threshold))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    // verify with ONE allocation-free merge per pair: the shingle arrays
-    // are sorted-distinct by construction, so |∪| = |a| + |b| − |∩| (no
-    // array_union) and the sorted-merge count replaces array_intersect's
-    // per-call hash-set build — the verify stage was 3/4 of the whole
-    // query at 10× once variant replicas made every candidate real
+    // verify with ONE allocation-free merge per pair (sets are sorted-
+    // distinct, so |∪| = |a| + |b| − |∩|). Sizes ride from the sets side
+    // here, unlike verifiedPairs' post-join size(): sharing it would
+    // change this plan.
     val inter = graft.functions.SortedIntersectCount(
       col("sh_a"), col("sh_b")).cast("double")
     val unionSz = (col("sz_a") + col("sz_b")).cast("double") - inter
-    candidates
+    prefixCandidates(sets, threshold)
       .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a"),
         size(col("sh")).as("sz_a")), Seq("id_a"))
       .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b"),

@@ -50,6 +50,8 @@ object RecordLinkage {
   def hammingKeyJoin(df: DataFrame, idCol: String, keyCol: String,
       keyLen: Int, maxDist: Int): DataFrame = {
     require(maxDist >= 0 && keyLen > maxDist, "need keyLen > maxDist >= 0")
+    // not Dedup's clone-group pre-stage: groups carry sorted ids for the
+    // posexplode intra expansion, and joining that seam changes q97/q271's plans
     val groups = df.select(col(idCol).as("id"), col(keyCol).as("key"))
       .filter(length(col("key")) === keyLen)
       .groupBy(col("key")).agg(sort_array(collect_list(col("id"))).as("ids"))

@@ -1004,24 +1004,17 @@ object TextAnalysis {
     */
   def commonNgramStats(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", minDf: Int = 2): DataFrame = {
-    // Clone-group pre-stage (same argument as Dedup.minhashDuplicatePairs):
-    // identical normalized text ⇒ identical shingle set ⇒ identical stats,
-    // and a shingle's document frequency is the sum of the CLONE COUNTS of
-    // the distinct contents containing it. Shingle explode + df join run
-    // over reps only; per-doc results fan back through the slim
-    // (id, content-hash) table. Null-text docs produce no kernel rows in
-    // the direct path, so they are excluded here too. All-unique corpora
-    // take the direct path unchanged.
-    val keyed = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), xxhash64(Dedup.normalized(col(textCol))).as("ch"))
-    val groups = keyed.groupBy(col("ch"))
-      .agg(min(col("id")).as("rep"), count(lit(1)).as("m"))
+    // Clone-group pre-stage (Dedup's content groups): a shingle's document
+    // frequency is the sum of the CLONE COUNTS of the distinct contents
+    // containing it, so the explode and df join run over reps only and
+    // per-doc results fan back through the slim (id, content key) table.
+    val keyed = Dedup.contentKeyed(docs, textCol, idCol)
+    val groups = Dedup.contentGroups(keyed, count(lit(1)).as("m"))
       .localCheckpoint()
-    if (groups.filter(col("m") >= 2).limit(1).isEmpty)
+    if (!Dedup.anyClones(groups, col("m")))
       return commonNgramStatsDirect(docs, textCol, idCol, minDf)
-    val reps = docs.join(
-      groups.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    val repIds = Dedup.hashedShingleSets(reps, textCol, idCol)
+    val repIds = Dedup.hashedShingleSets(Dedup.repDocs(docs, groups, idCol),
+        textCol, idCol)
       .select(col("id").as("rep"), explode(col("sh")).as("h"))
       .localCheckpoint()
     val dfTab = repIds.join(groups.select(col("rep"), col("m")), Seq("rep"))
@@ -1046,16 +1039,12 @@ object TextAnalysis {
     * direct path. */
   def distinctiveTerms(docs: DataFrame, topK: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val keyed = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("__did"), xxhash64(Dedup.normalized(col(textCol))).as("ch"))
-    val groups = keyed.groupBy(col("ch"))
-      .agg(min(col("__did")).as("rep"), count(lit(1)).as("m"))
+    val keyed = Dedup.contentKeyed(docs, textCol, idCol)
+    val groups = Dedup.contentGroups(keyed, count(lit(1)).as("m"))
       .localCheckpoint()
-    if (groups.filter(col("m") >= 2).limit(1).isEmpty)
+    if (!Dedup.anyClones(groups, col("m")))
       return distinctiveTermsDirect(docs, topK, textCol, idCol)
-    val reps = docs.join(
-      groups.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    val toks = reps.select(col(idCol).as("rep"),
+    val toks = Dedup.repDocs(docs, groups, idCol).select(col(idCol).as("rep"),
       explode(split(Dedup.normalized(col(textCol)), " ")).as("term"))
     val tf = toks.groupBy(col("rep"), col("term")).agg(count(lit(1)).as("tf"))
       .localCheckpoint()
@@ -1068,7 +1057,7 @@ object TextAnalysis {
       .filter(col("rn") <= topK)
     keyed.join(groups.select(col("ch"), col("rep")), Seq("ch"))
       .join(top, Seq("rep"))
-      .select(col("__did").as(idCol), col("term"), col("tf"), col("df"), col("rn"))
+      .select(col("id").as(idCol), col("term"), col("tf"), col("df"), col("rn"))
   }
 
   private def distinctiveTermsDirect(docs: DataFrame, topK: Int,

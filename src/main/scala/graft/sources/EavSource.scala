@@ -67,13 +67,6 @@ object EavSource {
     StructField("field_name", StringType),
     StructField("value", StringType)))
 
-  private[sources] def readAllLines(path: String): Seq[Array[String]] = {
-    val src = scala.io.Source.fromFile(path)(scala.io.Codec.UTF8)
-    // fixture CSV: our own writer, no embedded commas/quotes
-    try src.getLines().drop(1).map(_.split(",", -1)).toList
-    finally src.close()
-  }
-
   private[sources] def matches(row: Array[String], f: Filter): Boolean = {
     def colIdx(name: String): Int = schema.fieldIndex(name)
     f match {

@@ -25,13 +25,9 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, In}
   * re-apply them locally, so a transport may ignore them.
   */
 trait EavTransport extends Serializable {
-  /** Full CSV plane, no id restriction — the driver-side id-universe scan
-    * and the in-memory parse path (S9). Header row excluded. */
-  def allRows(): Seq[Array[String]]
-
   /** The distinct, sorted record-id universe (≙ `get_study_ids`,
     * redcap-etl.py:137-161): a cheap ids-only request, NOT a full fetch. */
-  def recordIds(): Seq[String] = allRows().map(_(0)).distinct.sorted
+  def recordIds(): Seq[String]
 
   /** One extraction request for one chunk of record ids (≙ one REST POST
     * with `records[i]=` params, redcap-etl.py:104-120). */
@@ -55,8 +51,9 @@ object EavTransport {
         throw new IllegalArgumentException("graft-eav needs a path or url option")))
     }
 
-  /** Parse a CSV response body: header line dropped, naive comma split
-    * (the EAV plane is our own writer/stub — no embedded commas/quotes). */
+  /** Parse a CSV body (an HTTP response or a local file): header line and
+    * blank lines dropped, naive comma split (the EAV plane is our own
+    * writer/stub — no embedded commas/quotes). */
   private[sources] def parseCsv(body: String): Seq[Array[String]] =
     body.linesIterator.drop(1).filter(_.nonEmpty).map(_.split(",", -1)).toList
 }
@@ -65,11 +62,15 @@ object EavTransport {
   * the file by id — the same rows a server-side `records[i]=` restriction
   * would return. */
 final case class FileEavTransport(path: String) extends EavTransport {
-  override def allRows(): Seq[Array[String]] = EavSource.readAllLines(path)
+  /** The whole file, decoded as UTF-8 and parsed like an HTTP body. */
+  private def rows(): Seq[Array[String]] = EavTransport.parseCsv(new String(
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+    StandardCharsets.UTF_8))
+  override def recordIds(): Seq[String] = rows().map(_(0)).distinct.sorted
   override def fetchChunk(recordIds: Array[String],
       filters: Array[Filter]): Seq[Array[String]] = {
     val idSet = recordIds.toSet
-    allRows().filter(r => idSet.contains(r(0)))
+    rows().filter(r => idSet.contains(r(0)))
   }
   override def sizeHintBytes(): Long = new java.io.File(path).length()
 }
@@ -89,9 +90,6 @@ final case class FileEavTransport(path: String) extends EavTransport {
   */
 final case class HttpEavTransport(url: String, token: String,
     maxRetries: Int, timeoutMs: Int) extends EavTransport {
-
-  override def allRows(): Seq[Array[String]] =
-    EavTransport.parseCsv(post(baseParams ++ Seq("type" -> "eav")))
 
   override def recordIds(): Seq[String] =
     // ids-only request (≙ get_study_ids): the driver plans chunks from

@@ -268,7 +268,8 @@ object DocumentStreams {
       dh.filter(!col("decoded")).select(col("doc_id")), Seq("doc_id"), "left_semi")
     // within-batch: first-arrival (min id) wins its exact-clone group;
     // near-dup pairs among batch-distinct fingerprints then suppress the
-    // larger rep id transitively via the shared pair convention
+    // larger rep id transitively via the shared pair convention (keyed on
+    // dHash bits, not Dedup's text content key, so not its content groups)
     val groups = dh.filter(col("decoded"))
       .groupBy(col("dbits"))
       .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("ids"))

@@ -18,7 +18,7 @@ import graft.SparkEntry
   *
   * Scans that Spark itself deduplicates (ReusedExchange/ReuseSubquery)
   * still print one Location per node, so the count is conservative.
-  * `ScanCountDump` (Test/runMain) reprints the current inventory.
+  * `PlanDump` (Test/runMain, no query names) reprints the current inventory.
   */
 class NoRecomputeSweepSpec extends SparkSpec {
 

@@ -1,0 +1,74 @@
+package graft.operators
+
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Plan-identity dump for registered queries (Test/runMain):
+  *
+  * {{{
+  * sbt "Test/runMain graft.operators.PlanDump <sfDir> [query ...]"
+  * }}}
+  *
+  * For each named query (full registry key, or its `qNN` prefix) it prints
+  * the formatted physical plan with expression ids, RDD ids, lambda names,
+  * object hash codes and source line numbers stripped, then the number of
+  * Spark jobs run while the query is built and while its rows are
+  * collected. Two checkouts' dumps diff cleanly unless a plan or a job
+  * count changed.
+  *
+  * With no query named it prints the scan inventory instead: one
+  * `MULTI <query> <table>=<n>,…` line per query that scans a parquet
+  * table two or more times (the input of NoRecomputeSweepSpec's
+  * allowlist).
+  */
+object PlanDump {
+  private val tables = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Formatted plan text with run-to-run noise removed. */
+  def normalize(plan: String): String = plan
+    .replaceAll("#\\d+L?", "#")                     // expression ids
+    .replaceAll("\\[\\d+\\](?= at )", "[]")         // RDD ids: Foo[12] at …
+    .replaceAll("RDD\\[\\d+\\]", "RDD[]")
+    .replaceAll("\\$\\$Lambda\\$?[\\w/$.@]*", "\\$\\$Lambda") // lambda classes
+    .replaceAll("\\.scala:\\d+", ".scala")          // source line numbers
+    .replaceAll("plan_id=\\d+", "plan_id=")
+    .replaceAll("@[0-9a-f]{4,8}\\b", "@")          // object hash codes
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val names = args.drop(1)
+    val spark = graft.GraftSession.builder("plan-dump", Some("local[4]"))
+      .config("spark.sql.shuffle.partitions", 4).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val queries = graft.SparkEntry.queries
+    try {
+      if (names.isEmpty) scanInventory(spark, sfDir, queries)
+      else names.foreach { n =>
+        val key = queries.keys.find(k => k == n || k.startsWith(n + "_"))
+          .getOrElse(sys.error(s"no registered query $n"))
+        var df: org.apache.spark.sql.DataFrame = null
+        val built = graft.SparkSpec.jobsIn(spark) { df = queries(key)(spark, sfDir) }
+        val plan = df.queryExecution.explainString(FormattedMode)
+        val run = graft.SparkSpec.jobsIn(spark) { df.collect() }
+        println(s"==== $key")
+        println(normalize(plan).trim)
+        println(s"jobs build=$built run=$run")
+      }
+    } finally spark.stop()
+  }
+
+  private def scanInventory(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String,
+      queries: Map[String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame]): Unit =
+    queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      try {
+        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val counts = tables.flatMap { t =>
+          val n = s"$t\\.parquet".r.findAllIn(plan).size
+          if (n >= 2) Some(s"$t=$n") else None
+        }
+        if (counts.nonEmpty) println(s"MULTI $name ${counts.mkString(",")}")
+      } catch { case e: Throwable => println(s"ERR $name ${e.getMessage}") }
+    }
+}

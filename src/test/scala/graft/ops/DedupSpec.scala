@@ -142,19 +142,62 @@ class DedupSpec extends SparkSpec {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val df = (Seq((1L, null.asInstanceOf[String]), (2L, null.asInstanceOf[String])) ++
       (10L to 15L).map(i => (i, base))).toDF("doc_id", "text")
-    // default cap: nulls drop, 6-clone group emits C(6,2)=15 pairs
-    val normal = Dedup.minhashDuplicatePairs(df, threshold = 0.5)
-      .as[(Long, Long, Double)].collect()
-    assert(!normal.exists(p => p._1 <= 2L || p._2 <= 2L))
-    assert(normal.count(_._3 == 1.0) == 15)
-    // cap below the clone-group size: members don't fan out at all
-    val capped = Dedup.minhashDuplicatePairs(df, threshold = 0.5, maxBucketSize = 3)
-    assert(capped.count() == 0)
+    // the PPJoin wrapper runs the same clone-group pre-stage and cap
+    val wrappers = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "minhashDuplicatePairs" -> (cap =>
+        Dedup.minhashDuplicatePairs(df, threshold = 0.5, maxBucketSize = cap)),
+      "prefixFilterPairs" -> (cap =>
+        Dedup.prefixFilterPairs(df, threshold = 0.5, maxBucketSize = cap)))
+    for ((name, pairsOf) <- wrappers) {
+      // default cap: nulls drop, 6-clone group emits C(6,2)=15 pairs
+      val normal = pairsOf(1000).as[(Long, Long, Double)].collect()
+      assert(!normal.exists(p => p._1 <= 2L || p._2 <= 2L), name)
+      assert(normal.count(_._3 == 1.0) == 15, name)
+      // cap below the clone-group size: members don't fan out at all
+      assert(pairsOf(3).count() == 0, name)
+    }
     // ...and the companion audit reports exactly that dropped group
     val audited = Dedup.oversizedCloneGroups(df, maxBucketSize = 3)
       .select("rep", "n_docs").as[(Long, Long)].collect()
     assert(audited.toSeq == Seq((10L, 6L)))
     assert(Dedup.oversizedCloneGroups(df).count() == 0) // default cap: nothing dropped
+  }
+
+  test("job floor: the near-dup family runs a fixed number of jobs on a " +
+      "clone-heavy and an all-unique corpus (both sides of the clone probe)") {
+    val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+      "lambda mu nu xi omicron pi rho sigma tau upsilon"
+    val w = words.split(" ")
+    // all-unique: 12 distinct texts, overlapping word windows (many near-dups)
+    val unique = ((1L to 10L).map(i => (i, w.drop(i.toInt % 7).mkString(" ") +
+        s" doc$i tail$i")) ++
+      Seq((11L, words), (12L, words.replace("upsilon", "phi"))))
+      .toDF("doc_id", "text")
+    // clone-heavy: the same texts, each cloned three times, plus null text
+    val clones = unique.as[(Long, String)].collect().toSeq
+      .flatMap { case (i, t) => (0 until 3).map(c => (i * 100 + c, t)) }
+    val heavy = (clones :+ ((9999L, null.asInstanceOf[String])))
+      .toDF("doc_id", "text")
+    def family(docs: org.apache.spark.sql.DataFrame) = Map(
+      "minhashDuplicatePairs" -> jobFloor(
+        Dedup.minhashDuplicatePairs(docs, threshold = 0.5)),
+      "prefixFilterPairs" -> jobFloor(
+        Dedup.prefixFilterPairs(docs, threshold = 0.5)),
+      "dedupClusters" -> jobFloor(Dedup.dedupClusters(docs, threshold = 0.5)),
+      "commonNgramStats" -> jobFloor(TextAnalysis.commonNgramStats(docs)),
+      "distinctiveTerms" -> jobFloor(TextAnalysis.distinctiveTerms(docs)))
+    val got = Map("unique" -> family(unique), "heavy" -> family(heavy))
+    // all-unique: one groups job + the limit-1 probe, then the direct
+    // path; clone-heavy: the probe sends the wrappers to the reps and
+    // fan-back. dedupClusters runs no probe, so both corpora cost the same.
+    assert(got == Map(
+      "unique" -> Map("minhashDuplicatePairs" -> ((9, 3)),
+        "prefixFilterPairs" -> ((4, 7)), "dedupClusters" -> ((18, 6)),
+        "commonNgramStats" -> ((4, 4)), "distinctiveTerms" -> ((3, 6))),
+      "heavy" -> Map("minhashDuplicatePairs" -> ((11, 4)),
+        "prefixFilterPairs" -> ((5, 8)), "dedupClusters" -> ((18, 6)),
+        "commonNgramStats" -> ((5, 7)), "distinctiveTerms" -> ((6, 7)))),
+      got)
   }
 
   test("dedupClusters ≡ connectedComponents over the pair API (clones, chains, caps)") {

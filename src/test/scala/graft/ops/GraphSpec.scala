@@ -1009,21 +1009,15 @@ class GraphSpec extends SparkSpec {
       "barrier turned eager or a probe added in a shared kernel changes " +
       "the count without changing any result") {
     val seeds = Seq(1L).toDF("node")
-    // (jobs while the query is built, jobs of its output action)
-    def floor(q: => org.apache.spark.sql.DataFrame): (Int, Int) = {
-      var df: org.apache.spark.sql.DataFrame = null
-      val built = jobsOf { df = q }
-      (built, jobsOf(df.collect()))
-    }
     val got = Map(
-      "bfsHops" -> floor(Graph.bfsHops(floorEdges, seeds, rounds = 4)),
-      "bfsPathCounts" -> floor(
+      "bfsHops" -> jobFloor(Graph.bfsHops(floorEdges, seeds, rounds = 4)),
+      "bfsPathCounts" -> jobFloor(
         Graph.bfsPathCounts(floorEdges, seeds, rounds = 4)),
-      "betweennessDependencies" -> floor(
+      "betweennessDependencies" -> jobFloor(
         Graph.betweennessDependencies(floorEdges, seeds, rounds = 4)),
-      "labelPropagation" -> floor(
+      "labelPropagation" -> jobFloor(
         Graph.labelPropagation(floorEdges, rounds = 3, symmetric = true)),
-      "pageRank" -> floor(
+      "pageRank" -> jobFloor(
         Graph.pageRank(floorEdges, iterations = 5, symmetric = true)))
     // BFS: the per-layer count jobs plus their AQE map stages; every
     // backward state and every PageRank/LPA round stays lazy

@@ -45,6 +45,23 @@ class EavSourceSpec extends SparkSpec {
     assert(got == Set("cafe" -> "café", "city" -> "Zürich", "food" -> "🍕"))
   }
 
+  test("blank lines in the file (middle and end) are skipped, not read " +
+      "as a record") {
+    val f = Files.createTempFile("eavblank", ".csv")
+    Files.write(f, Seq(
+      "record_id,redcap_event_name,redcap_repeat_instrument,redcap_repeat_instance,field_name,value",
+      "r1,screening_arm_1,,,age,41",
+      "",
+      "r2,screening_arm_1,,,age,37",
+      "").mkString("\n").concat("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val df = spark.read.format("graft-eav").option("path", f.toString).load()
+    val got = df.select("record_id", "value").as[(String, String)]
+      .collect().toSet
+    assert(got == Set("r1" -> "41", "r2" -> "37"))
+    assert(df.select("record_id").distinct().count() == 2)
+  }
+
   test("filter pushdown: field_name equality lands in PushedFilters") {
     val df = read.load().filter($"field_name" === "age")
     val plan = df.queryExecution.executedPlan.toString

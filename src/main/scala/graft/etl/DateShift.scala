@@ -137,6 +137,6 @@ object DateShift {
 
   private def dropInternal(df: DataFrame): DataFrame = {
     val internal = df.columns.filter(_.startsWith("__"))
-    df.drop(internal: _*)
+    df.drop(internal.toIndexedSeq: _*)
   }
 }

@@ -39,6 +39,6 @@ object DictionaryMerge {
         df.withColumn(c, coalesce(col(s"`__ex_$c`"), col(s"`$c`")))
       else df
     }
-    out.select(fresh.columns.map(c => col(s"`$c`")): _*)
+    out.select(fresh.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)
   }
 }

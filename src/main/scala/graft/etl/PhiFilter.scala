@@ -57,7 +57,7 @@ object PhiFilter {
 
     val keep = dagCol || completeCol || include || cleanedDate
 
-    val kept = joined.filter(keep).select(eav.columns.map(col): _*)
+    val kept = joined.filter(keep).select(eav.columns.toIndexedSeq.map(col): _*)
     val unknown = joined
       .filter(!dagCol && !completeCol && !known)
       .select(col("field_name")).distinct()

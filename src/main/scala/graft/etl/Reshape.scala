@@ -49,6 +49,6 @@ object Reshape {
       when(coalesce(expr(s"try_cast(`$c` AS int)"), lit(0)) =!= 0, lit(code)).as(c)
     }
     df.withColumn(outCol, array_sort(filter(array(terms: _*), x => x.isNotNull)))
-      .drop(oneHot: _*)
+      .drop(oneHot.toIndexedSeq: _*)
   }
 }

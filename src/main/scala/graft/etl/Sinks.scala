@@ -142,7 +142,7 @@ object Sinks {
     * keys cannot be null — a null key (e.g. from an upstream outer join)
     * renders as the literal "null" key instead of aborting the write. */
   def keyedJson(df: DataFrame, keyCol: String): DataFrame = {
-    val payload = struct(df.columns.filter(_ != keyCol).map(col): _*)
+    val payload = struct(df.columns.toIndexedSeq.filter(_ != keyCol).map(col): _*)
     val key = coalesce(col(keyCol).cast("string"), lit("null"))
     df.select(to_json(map(key, payload)).as("doc"))
   }
@@ -180,7 +180,7 @@ object Sinks {
     val spark = df.sparkSession
     import spark.implicits._
     val extra = metaFields(meta)
-    val json = df.select(to_json(struct(df.columns.map(col): _*)).as("j")).as[String]
+    val json = df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("j")).as[String]
     json.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId().toLong
       it.grouped(chunkRows).zipWithIndex.map { case (chunk, i) =>
@@ -200,11 +200,11 @@ object Sinks {
     val spark = df.sparkSession
     import spark.implicits._
     val extra = metaFields(meta)
-    val json = df.select(to_json(struct(df.columns.map(col): _*)).as("j")).as[String]
+    val json = df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("j")).as[String]
     val bodies = json.mapPartitions { it =>
       it.grouped(chunkRows).map(_.mkString("[", ",", "]"))
     }
-    bodies.rdd.zipWithIndex.map { case (body, i) =>
+    bodies.rdd.zipWithIndex().map { case (body, i) =>
       s"""{"chunk_number":${i + 1}$extra,"redcap_records":$body}"""
     }.toDF("envelope")
   }
@@ -243,7 +243,7 @@ object Sinks {
       // header payloads must be control-plane sized (transform DICTIONARIES,
       // REDCap metadata) — never per-record data; the collect() here is the
       // one legitimate driver materialization.
-    d.select(to_json(struct(d.columns.map(col): _*))).collect()
+    d.select(to_json(struct(d.columns.toIndexedSeq.map(col): _*))).collect()
         .map(_.getString(0)).mkString("[", ",", "]")
   }
 

@@ -127,7 +127,7 @@ final class CalcVariableTransform(
     * nulls become "" too, matching pandas' object-frame behavior. */
   override def metadata(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
     deidDataDictionary.map { d =>
-      d.select(d.columns.map(c =>
+      d.select(d.columns.toIndexedSeq.map(c =>
         coalesce(col(s"`$c`").cast("string"), lit("")).as(c)): _*)
     }
 }

@@ -448,10 +448,10 @@ object MixtureQueries {
       $"source", $"doc_id", lit(1L).as("one"),
       graft.functions.Md5Low64($"doc_id".cast("string"))
         .bitwiseXOR(Long.MinValue).as("mh"))
-    graft.ops.Packing.packSequencesGrouped(docs, "source", "doc_id",
-        "one", orderCols = Seq("mh", "doc_id"), seqTokens = Long.MaxValue)
-      .filter($"start_tok" < 5)
-      .select($"id".as("doc_id"), $"group".as("source"), $"start_tok".as("rank"))
+    graft.ops.Packing.prefixSum(docs, "doc_id", "one", Seq("mh", "doc_id"),
+        "rank", Some("source"))
+      .filter($"rank" < 5)
+      .select($"doc_id", $"source", $"rank")
       .orderBy($"doc_id")
   }
   private val q114Sql =
@@ -471,10 +471,10 @@ object MixtureQueries {
       $"source", $"doc_id",
       TextAnalysis.tokenCount($"text").cast("long").as("nt"),
       (-floor(TextAnalysis.qualityScore($"text") * 1e6).cast("long")).as("negq"))
-    graft.ops.Packing.packSequencesGrouped(docs, "source", "doc_id",
-        "nt", orderCols = Seq("negq", "doc_id"), seqTokens = Long.MaxValue)
+    graft.ops.Packing.prefixSum(docs, "doc_id", "nt", Seq("negq", "doc_id"),
+        "start_tok", Some("source"))
       .filter($"start_tok" < 600)
-      .select($"id".as("doc_id"), $"group".as("source"), $"start_tok")
+      .select($"doc_id", $"source", $"start_tok")
       .orderBy($"doc_id")
   }
   private val q115Sql =

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object Skew {
 
   private def saltOf(df: DataFrame, n: Int): Column =
-    pmod(xxhash64(df.columns.map(col): _*), lit(n)).cast("int")
+    pmod(xxhash64(df.columns.toIndexedSeq.map(col): _*), lit(n)).cast("int")
 
   /** Equi-join `large ⋈ small` on `key` with the small side replicated
     * `saltBuckets`× — each hot key's rows spread over `saltBuckets`

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -14,6 +14,22 @@ import graft.ops.{Privacy, Profile, Regression, Stats}
   * identical operation tree replicated in the DuckDB oracle. */
 object StatsQueries {
   import LlmQueries.{normSql, toksSql}
+
+  /** Orders per (market segment, epoch week) aggregated by `aggs` over
+    * their `cents` — the slim bounded weekly axis that the pair and rank
+    * statistics of q201, q203 and q204 run on, checkpointed once. */
+  private def segmentWeeks(s: SparkSession, d: String, aggs: Column*)
+      : DataFrame = {
+    import s.implicits._
+    Tables.orders(s, d)
+      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
+      .select($"c_mktsegment".as("seg"),
+        expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') " +
+          "AS BIGINT) div 7").as("wk"), // positive ⇒ div ≡ DuckDB //
+        expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
+      .groupBy($"seg", $"wk").agg(aggs.head, aggs.tail: _*)
+      .localCheckpoint()
+  }
 
   // ---------------------------------------------------------------- q143
   // Characteristic vocabulary per language by 2×2 chi-square on doc-level
@@ -2046,15 +2062,8 @@ object StatsQueries {
   // (q142/q188), Kendall (q203), Spearman.
   private def q204(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val weekly = Tables.orders(s, d)
-      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
-      .select($"c_mktsegment".as("seg"),
-        expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') " +
-          "AS BIGINT) div 7").as("wk"),
-        expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
-      .groupBy($"seg", $"wk")
-      .agg(count(lit(1)).as("n_orders"), sum($"cents").as("cents"))
-      .localCheckpoint()
+    val weekly = segmentWeeks(s, d, count(lit(1)).as("n_orders"),
+      sum($"cents").as("cents"))
     Stats.spearmanRho(weekly, Seq("seg"), $"n_orders", $"cents")
       .orderBy($"seg")
   }
@@ -2152,15 +2161,8 @@ object StatsQueries {
   // q188's rolling Pearson (a few outlier weeks can't flip the sign).
   private def q203(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val weekly = Tables.orders(s, d)
-      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
-      .select($"c_mktsegment".as("seg"),
-        expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') " +
-          "AS BIGINT) div 7").as("wk"),
-        expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
-      .groupBy($"seg", $"wk")
-      .agg(count(lit(1)).as("n_orders"), sum($"cents").as("cents"))
-      .localCheckpoint() // slim bounded-axis series feeds the pair join
+    val weekly = segmentWeeks(s, d, count(lit(1)).as("n_orders"),
+      sum($"cents").as("cents"))
     Stats.kendallTau(weekly, Seq("seg"), $"wk", $"n_orders", $"cents")
       .orderBy($"seg")
   }
@@ -2212,14 +2214,7 @@ object StatsQueries {
   // ceiling-rank pick (tie-order-proof).
   private def q201(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val weekly = Tables.orders(s, d)
-      .join(Tables.customer(s, d), $"o_custkey" === $"c_custkey")
-      .select($"c_mktsegment".as("seg"),
-        expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') " +
-          "AS BIGINT) div 7").as("wk"), // positive ⇒ div ≡ DuckDB //
-        expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
-      .groupBy($"seg", $"wk").agg(sum($"cents").as("c"))
-      .localCheckpoint() // slim bounded-axis series feeds the pair join
+    val weekly = segmentWeeks(s, d, sum($"cents").as("c"))
     Stats.theilSenSlope(weekly, Seq("seg"), $"wk", $"c")
       .orderBy($"seg")
   }
@@ -2664,11 +2659,10 @@ object StatsQueries {
       .agg(sum(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"))
         .as("x"))
       .localCheckpoint() // feeds both prefix-sum passes + the totals
-    def pack(tok: String, out: String) = graft.ops.Packing.packSequences(
+    def pack(tok: String, out: String) = graft.ops.Packing.prefixSum(
         spend.withColumn("__one", lit(1L)), "o_custkey", tok,
-        orderCols = Seq("x", "o_custkey"), seqTokens = Long.MaxValue)
-      .select(col("id").as("o_custkey"),
-        (col("start_tok") + col("n_tokens")).as(out))
+        Seq("x", "o_custkey"), out, inclusive = true)
+      .select(col("o_custkey"), col(out))
     val packed = pack("x", "cum_cents").join(pack("__one", "rn"), "o_custkey")
     val tot = spend.agg(count(lit(1)).as("n"), sum($"x").as("tot"))
     val decs = s.range(1, 11).toDF("decile")

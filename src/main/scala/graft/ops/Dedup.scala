@@ -741,7 +741,7 @@ object Dedup {
     // decimal aggregate per round (exact at any id magnitude) instead of a
     // join + filter + isEmpty pass.
     def labelSum(df: DataFrame): java.math.BigDecimal = df
-      .agg(sum(col("component").cast("decimal(38,0)"))).head.getDecimal(0)
+      .agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
     var prevSum = labelSum(labels)
     var round = 0
     var converged = false

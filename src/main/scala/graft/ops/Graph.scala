@@ -1498,14 +1498,8 @@ object Graph {
         sum(col("dx").cast(d19) * col("dy").cast(d19)).as("sxy"),
         sum(col("dx").cast(d19) * col("dx").cast(d19)).as("sxx"),
         sum(col("dy").cast(d19) * col("dy").cast(d19)).as("syy"))
-    val dbl = "double"
-    val nd = col("n_edges").cast(dbl)
-    val num = nd * col("sxy").cast(dbl) - col("sx").cast(dbl) * col("sy").cast(dbl)
-    val vx = nd * col("sxx").cast(dbl) - col("sx").cast(dbl) * col("sx").cast(dbl)
-    val vy = nd * col("syy").cast(dbl) - col("sy").cast(dbl) * col("sy").cast(dbl)
     stats.select(col("n_edges"),
-      when(vx > 0d && vy > 0d, num / (sqrt(vx) * sqrt(vy)))
-        .as("assortativity"))
+      Stats.pearson(col("n_edges")).as("assortativity"))
   }
 
   /** Bounded-round k-core peel: repeatedly remove nodes with (current)

@@ -77,8 +77,8 @@ object Mixture {
     * cross-engine parity contract.
     *
     * Output: (epoch, id, pos) with pos ∈ [0, n) dense per epoch.
-    * Positions come from [[Packing.packSequences]] with every doc counting
-    * 1 token — the two-phase prefix sum, not a global window. */
+    * Positions come from [[Packing.prefixSum]] with every doc counting 1
+    * — the two-phase prefix sum, not a global window. */
   def epochShuffle(docs: DataFrame, idCol: String, epochs: Int): DataFrame = {
     require(epochs >= 1, "epochs must be >= 1")
     val frames = (0 until epochs).map { e =>
@@ -88,9 +88,8 @@ object Mixture {
         graft.functions.Md5Low64(
           concat(col(idCol).cast("string"), lit(":"), lit(e.toString)))
           .bitwiseXOR(Long.MinValue).as("efp"))
-      Packing.packSequences(keyed, idCol, "one",
-          orderCols = Seq("efp", idCol), seqTokens = Long.MaxValue)
-        .select(lit(e).as("epoch"), col("id"), col("start_tok").as("pos"))
+      Packing.prefixSum(keyed, idCol, "one", Seq("efp", idCol), "pos")
+        .select(lit(e).as("epoch"), col(idCol).as("id"), col("pos"))
     }
     frames.reduce(_ unionByName _)
   }
@@ -113,9 +112,9 @@ object Mixture {
     // descending quality through the ascending pack machinery: negate
     val keyed = docs.select(col(idCol), lit(1L).as("one"),
       (-quality.cast("long")).as("negq"))
-    val positioned = Packing.packSequences(keyed, idCol, "one",
-        orderCols = Seq("negq", idCol), seqTokens = Long.MaxValue)
-      .select(col("id"), col("start_tok").as("pos"))
+    val positioned = Packing.prefixSum(keyed, idCol, "one",
+        Seq("negq", idCol), "pos")
+      .select(col(idCol).as("id"), col("pos"))
     // n is a 1-row broadcast, same control-plane shape as the allocation
     val total = positioned.agg(count(lit(1)).as("n"))
     positioned.crossJoin(broadcast(total))
@@ -146,9 +145,9 @@ object Mixture {
       lit(1L).as("one"),
       graft.functions.Md5Low64(col(idCol).cast("string"))
         .bitwiseXOR(Long.MinValue).as("mh"))
-    val ranked = Packing.packSequencesGrouped(keyed, "group", idCol, "one",
-        orderCols = Seq("mh", idCol), seqTokens = Long.MaxValue)
-      .select(col("id"), col("group"), col("start_tok").as("r"))
+    val ranked = Packing.prefixSum(keyed, idCol, "one", Seq("mh", idCol), "r",
+        Some("group"))
+      .select(col(idCol).as("id"), col("group"), col("r"))
     val counts = ranked.groupBy(col("group")).agg(count(lit(1)).as("n_s"))
     val total = ranked.agg(count(lit(1)).as("total"))
     ranked.join(counts, Seq("group")).crossJoin(broadcast(total))
@@ -184,10 +183,9 @@ object Mixture {
       .withColumn("basis",
         floor(sqrt(sqrt((col("n") * col("n") * col("n")).cast("double"))) * 1e6)
           .cast("long"))
-    Packing.packSequences(counts, "token", "basis",
-        orderCols = Seq("token"), seqTokens = Long.MaxValue)
-      .select(col("id").as("token"), col("start_tok").as("cum_start"),
-        (col("start_tok") + col("n_tokens")).as("cum_end"))
+    Packing.prefixSum(counts, "token", "basis", Seq("token"), "cum_start")
+      .select(col("token"), col("cum_start"),
+        (col("cum_start") + col("basis")).as("cum_end"))
       .join(counts, Seq("token"))
       .select(col("token"), col("n"), col("basis"),
         col("cum_start"), col("cum_end"))

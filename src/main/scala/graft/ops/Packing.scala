@@ -169,4 +169,31 @@ object Packing {
     ordered.unpersist()
     packed
   }
+
+  /** Running sum of the long column `value` in `order` — the value-axis
+    * prefix sum the statistics family reads ranks, at-risk counts and
+    * cumulative weights from. It is [[packSequences]] (with `group`,
+    * [[packSequencesGrouped]], restarting per group) over one unbounded
+    * sequence, so the same two-phase plan and no global window.
+    *
+    * @param order total order; may name `idCol` itself (a distinct-value
+    *              axis keyed by the value)
+    * @return one row per input row: `idCol`, `group` (when grouped),
+    *         `value` (NULL read as 0) and `out` — the sum over the rows
+    *         before this one, or through it when `inclusive`
+    */
+  private[graft] def prefixSum(df: DataFrame, idCol: String, value: String,
+      order: Seq[String], out: String, group: Option[String] = None,
+      inclusive: Boolean = false, partitions: Int = 0): DataFrame = {
+    val packed = group match {
+      case Some(g) => packSequencesGrouped(df, g, idCol, value, order,
+        Long.MaxValue, partitions)
+      case None => packSequences(df, idCol, value, order, Long.MaxValue,
+        partitions)
+    }
+    val sum = if (inclusive) col("start_tok") + col("n_tokens")
+      else col("start_tok")
+    packed.select(Seq(col("id").as(idCol)) ++ group.map(g => col("group").as(g))
+      ++ Seq(col("n_tokens").as(value), sum.as(out)): _*)
+  }
 }

@@ -200,7 +200,8 @@ object Ranking {
     }.sortBy(_._1)
     val lam = lambdaMilli.toLong
     val mu = 1000L - lam
-    val remaining = scala.collection.mutable.LinkedHashMap(cs.map(c => c._1 -> c): _*)
+    val remaining = scala.collection.mutable.LinkedHashMap(
+      cs.toIndexedSeq.map(c => c._1 -> c): _*)
     val sel = scala.collection.mutable.ArrayBuffer.empty[(Array[Long], Long)]
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Long, Long)]
     var rn = 1

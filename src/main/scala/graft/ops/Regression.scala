@@ -90,15 +90,10 @@ object Regression {
       }
     val stats = proj.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    val nd = col("n").cast("double")
     val pairStructs = pairs.map { case (a, b) =>
-      val sx = col(s"__s_$a").cast("double")
-      val sy = col(s"__s_$b").cast("double")
-      val num = nd * col(s"__p_${a}_$b").cast("double") - sx * sy
-      val vx = nd * col(s"__q_$a").cast("double") - sx * sx
-      val vy = nd * col(s"__q_$b").cast("double") - sy * sy
       struct(lit(a).as("var_x"), lit(b).as("var_y"),
-        when(vx > 0d && vy > 0d, num / (sqrt(vx) * sqrt(vy))).as("corr"))
+        Stats.pearson(col("n"), col(s"__s_$a"), col(s"__s_$b"), col(s"__q_$a"),
+          col(s"__q_$b"), col(s"__p_${a}_$b")).as("corr"))
     }
     stats
       .select(groupCols.map(col) ++ Seq(col("n"),

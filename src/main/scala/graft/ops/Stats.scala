@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Statistical-testing / drift-audit operators: the experimentation layer
@@ -174,17 +174,16 @@ object Stats {
     * @return per group: n_a, n_b, mean_a, mean_b, t, df */
   def welchTTest(df: DataFrame, groupCols: Seq[String], cohortA: Column,
       valQ: Column): DataFrame = {
+    // n, Σx, Σx² of the cohort where `in` holds
+    def side(in: Column, c: String) = Seq(
+      sum(when(in, 1L).otherwise(0L)).as(s"n_$c"),
+      sum(when(in, col("__x")).otherwise(0L)).as(s"__s$c"),
+      sum(when(in, col("__x") * col("__x")).otherwise(0L)).as(s"__q$c"))
+    val aggs = side(col("__a"), "a") ++ side(!col("__a"), "b")
     val stats = df
       .select(groupCols.map(col) :+ cohortA.as("__a")
         :+ valQ.cast("long").as("__x"): _*)
-      .groupBy(groupCols.map(col): _*)
-      .agg(
-        sum(when(col("__a"), 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("__a"), col("__x")).otherwise(0L)).as("__sa"),
-        sum(when(col("__a"), col("__x") * col("__x")).otherwise(0L)).as("__qa"),
-        sum(when(!col("__a"), 1L).otherwise(0L)).as("n_b"),
-        sum(when(!col("__a"), col("__x")).otherwise(0L)).as("__sb"),
-        sum(when(!col("__a"), col("__x") * col("__x")).otherwise(0L)).as("__qb"))
+      .groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
     val sa = col("__sa").cast("double"); val sb = col("__sb").cast("double")
     val qa = col("__qa").cast("double"); val qb = col("__qb").cast("double")
@@ -219,29 +218,13 @@ object Stats {
     * @return per group: n_a, n_b, u2_a, z */
   def mannWhitneyU2(df: DataFrame, groupCols: Seq[String], cohortA: Column,
       valQ: Column): DataFrame = {
-    val base = df.select(groupCols.map(col) :+ cohortA.as("__a")
-      :+ valQ.cast("long").as("__x"): _*)
-    val wRank = Window.partitionBy(groupCols.map(col): _*).orderBy(col("__x"))
-    val wTies = Window.partitionBy(groupCols.map(col) :+ col("__x"): _*)
-    val ranked = base
-      .withColumn("__r2",
-        lit(2L) * rank().over(wRank).cast("long")
-          + count(lit(1)).over(wTies) - lit(1L))
-    val stats = ranked.groupBy(groupCols.map(col): _*)
-      .agg(
-        sum(when(col("__a"), 1L).otherwise(0L)).as("n_a"),
-        sum(when(!col("__a"), 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("__a"), col("__r2")).otherwise(0L)).as("__sr2"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
-    val u2 = col("__sr2") - col("n_a") * (col("n_a") + lit(1L))
     val mu = na * nb
     val sigma = sqrt((na * nb * (na + nb + lit(1.0))) / lit(12.0))
-    stats
-      .withColumn("u2_a", u2)
+    rankSumU2(df, groupCols, cohortA.as("__a"), valQ, "n_a", "n_b", "u2_a")
       .withColumn("z",
         when(col("n_a") > 0L && col("n_b") > 0L && sigma > 0d,
           (col("u2_a").cast("double") - mu) / (lit(2.0) * sigma)))
-      .drop("__sr2")
   }
 
   /** Functional-dependency audit for one candidate FD A → B: does every
@@ -285,18 +268,11 @@ object Stats {
   def winsorize(df: DataFrame, groupCols: Seq[String], valQ: Column,
       ordCol: Column, loPct: Int = 5, hiPct: Int = 95): DataFrame = {
     require(0 < loPct && loPct < hiPct && hiPct <= 100, "bad percentile bounds")
-    val wOrd = Window.partitionBy(groupCols.map(col): _*).orderBy(valQ, ordCol)
-    val wAll = Window.partitionBy(groupCols.map(col): _*)
-    val ranked = df
-      .withColumn("__x", valQ.cast("long"))
-      .withColumn("__rn", row_number().over(wOrd).cast("long"))
-      .withColumn("__n", count(lit(1)).over(wAll))
+    val ranked = withPosition(df.withColumn("__x", valQ.cast("long")),
+      groupCols, Seq(valQ, ordCol))
     val bounds = ranked.groupBy(groupCols.map(col): _*)
-      .agg(
-        max(when(col("__rn") ===
-          expr(s"(__n * $loPct + 99) div 100"), col("__x"))).as("p_lo"),
-        max(when(col("__rn") ===
-          expr(s"(__n * $hiPct + 99) div 100"), col("__x"))).as("p_hi"))
+      .agg(pickAt(col("__rn"), ceilRank("__n", loPct), col("__x")).as("p_lo"),
+        pickAt(col("__rn"), ceilRank("__n", hiPct), col("__x")).as("p_hi"))
     df.withColumn("__x", valQ.cast("long"))
       .join(broadcast(bounds), groupCols)
       .withColumn("__w", greatest(least(col("__x"), col("p_hi")), col("p_lo")))
@@ -319,19 +295,10 @@ object Stats {
     * @return per group: n, then one `p<pct>` column per requested pct */
   def discreteQuantiles(df: DataFrame, groupCols: Seq[String], valQ: Column,
       ordCol: Column, pcts: Seq[Int]): DataFrame = {
-    require(pcts.nonEmpty && pcts.forall(p => p >= 1 && p <= 100),
-      "percents must be in 1..100")
-    val wOrd = Window.partitionBy(groupCols.map(col): _*).orderBy(valQ, ordCol)
-    val wAll = Window.partitionBy(groupCols.map(col): _*)
-    val ranked = df
-      .withColumn("__x", valQ.cast("long"))
-      .withColumn("__rn", row_number().over(wOrd).cast("long"))
-      .withColumn("__n", count(lit(1)).over(wAll))
-    val aggs = max(col("__n")).as("n") +: pcts.map { p =>
-      max(when(col("__rn") === expr(s"(__n * $p + 99) div 100"), col("__x")))
-        .as(s"p$p")
-    }
-    ranked.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val aggs = ceilPicks(pcts)
+    withPosition(df.withColumn("__x", valQ.cast("long")), groupCols,
+        Seq(valQ, ordCol))
+      .groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Quantile normalization against the POOLED distribution: each row's
@@ -341,7 +308,7 @@ object Stats {
     * per-group scale/shape (the expression-array normalization, applied
     * to any grouped metric). Target rank: ⌈r·N/n⌉ as exact integers.
     *
-    * Scale: the pooled rank is [[Packing.packSequences]]'s two-phase
+    * Scale: the pooled rank is [[Packing.prefixSum]]'s two-phase
     * prefix sum (range partition + broadcast offsets), NEVER a global
     * window; the per-group rank is a keyed window; the reference lookup
     * is an equi-join on the computed rank. No driver materialization
@@ -353,21 +320,17 @@ object Stats {
     val base = df
       .select(groupCols.map(col) :+ col(idCol) :+ valQ.cast("long").as("__x"): _*)
       .localCheckpoint() // slim (groups, id, long); three consumers below
-    val keyed = base.select(col(idCol), lit(1L).as("one"), col("__x"))
-    val pooled = Packing.packSequences(keyed, idCol, "one",
-        orderCols = Seq("__x", idCol), seqTokens = Long.MaxValue)
-      .select(col("id").as("__pid"), (col("start_tok") + lit(1L)).as("__grank"))
+    val pooled = Packing.prefixSum(
+        base.select(col(idCol), lit(1L).as("one"), col("__x")), idCol, "one",
+        Seq("__x", idCol), "__before")
+      .select(col(idCol).as("__pid"), (col("__before") + lit(1L)).as("__grank"))
     val ref = pooled
       .join(base.select(col(idCol).as("__pid"), col("__x").as("__refv")),
         "__pid")
       .select(col("__grank"), col("__refv"))
-    val wr = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col("__x"), col(idCol))
-    val wn = Window.partitionBy(groupCols.map(col): _*)
     val total = base.agg(count(lit(1)).as("__nn"))
-    val ranked = base
-      .withColumn("__r", row_number().over(wr).cast("long"))
-      .withColumn("__gn", count(lit(1)).over(wn))
+    val ranked = withPosition(base, groupCols, Seq(col("__x"), col(idCol)),
+        "__r", "__gn")
       .crossJoin(broadcast(total))
       .withColumn("__tg", expr("((__r * __nn) + __gn - 1) div __gn"))
     ranked.join(ref, col("__tg") === col("__grank"))
@@ -393,22 +356,21 @@ object Stats {
     *         degenerate: one class, zero within-variance, or n ≤ L) */
   def oneWayAnova(df: DataFrame, unitCols: Seq[String], classCol: String,
       valQ: Column): DataFrame = {
+    // floor(s²/n · 10³): the quantized between-class term
+    def sq3(s: String, n: String) = floor(((col(s).cast("double")
+      * col(s).cast("double")) / col(n).cast("double")) * 1e3).cast("long")
     val perClass = df
       .select(unitCols.map(col) :+ col(classCol).as("__c")
         :+ valQ.cast("long").as("__x"): _*)
       .groupBy(unitCols.map(col) :+ col("__c"): _*)
       .agg(count(lit(1)).as("__nl"), sum(col("__x")).as("__sl"),
         sum(col("__x") * col("__x")).as("__ql"))
-      .withColumn("__t3", floor(((col("__sl").cast("double")
-        * col("__sl").cast("double")) / col("__nl").cast("double")) * 1e3)
-        .cast("long"))
+      .withColumn("__t3", sq3("__sl", "__nl"))
     val perUnit = perClass.groupBy(unitCols.map(col): _*)
       .agg(sum(col("__nl")).as("n"), count(lit(1)).as("n_classes"),
         sum(col("__sl")).as("__s"), sum(col("__ql")).as("__q"),
         sum(col("__t3")).as("__st3"))
-      .withColumn("ssb_x3", col("__st3")
-        - floor(((col("__s").cast("double") * col("__s").cast("double"))
-          / col("n").cast("double")) * 1e3).cast("long"))
+      .withColumn("ssb_x3", col("__st3") - sq3("__s", "n"))
       .withColumn("ssw_x3", col("__q") * lit(1000L) - col("__st3"))
     val nD = col("n").cast("double"); val lD = col("n_classes").cast("double")
     perUnit
@@ -434,9 +396,7 @@ object Stats {
     *         score_abs (=|n·P_k − k·S|), score_signed */
   def cusumChangePoint(df: DataFrame, groupCols: Seq[String], stepCol: Column,
       cnt: Column): DataFrame = {
-    val wOrd = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col("__step"))
-    val wAll = Window.partitionBy(groupCols.map(col): _*)
+    val (wOrd, wAll) = groupWindows(groupCols, col("__step"))
     val scored = df
       .select(groupCols.map(col) :+ stepCol.as("__step")
         :+ cnt.cast("long").as("__x"): _*)
@@ -556,9 +516,8 @@ object Stats {
     * window: the order statistic of a multiset is read off the running
     * count of its distinct-value histogram, and grouping keys like
     * event_type have single-digit cardinality, so a per-row
-    * `row_number() over (partition by group)` funnels the whole table
-    * through |groups| reducers — measured 29.7 s at 100× (one 2M-row
-    * sort per task, twice) vs full-parallel map-side-combined counts.
+    * `row_number() over (partition by group)` would funnel the whole
+    * table through |groups| reducers, where the counts combine map-side.
     * The histogram is |groups|·|distinct x| rows — bounded by the
     * quantized value domain, not the row count — so its own rank pick
     * is control-plane-sized at any SF. The MAD histogram folds straight
@@ -579,13 +538,11 @@ object Stats {
       .localCheckpoint() // slim frame, fans out to med pick + dev histogram
     // rank-k = first distinct value whose running count reaches k
     def histPick(h: DataFrame, out: String): DataFrame = {
-      val wOrd = Window.partitionBy(groupCols.map(col): _*).orderBy(col("__v"))
-      val wAll = Window.partitionBy(groupCols.map(col): _*)
+      val (wOrd, wAll) = groupWindows(groupCols, col("__v"))
       h.withColumn("__cum", sum(col("__c")).over(wOrd))
         .withColumn("__n", sum(col("__c")).over(wAll))
         .withColumn("__k", expr("(__n + 1) div 2"))
-        .filter(col("__cum") >= col("__k") &&
-          col("__cum") - col("__c") < col("__k"))
+        .filter(reaches("__cum", "__c", "__k"))
         .select(groupCols.map(col) :+ col("__v").as(out): _*)
     }
     val med = histPick(hist, "med")
@@ -605,10 +562,9 @@ object Stats {
   /** Per-group sum of the top-(n div `fracDenom`) values — the exact
     * "share of mass carried by the top decile" statistic — WITHOUT
     * ranking the rows. `row_number() over (partition by group order by
-    * v desc)` funnels each group through one reducer (measured 10.9 s
-    * at 100× on 5 order priorities); a rank-k top sum only needs the
-    * k-th largest value v* plus Σ/# of values strictly above it, and
-    * both come from two-phase histogram selection:
+    * v desc)` funnels each group through one reducer; a rank-k top sum
+    * only needs the k-th largest value v* plus Σ/# of values strictly
+    * above it, and both come from two-phase histogram selection:
     *
     *  phase 1  (group, v div `bucketWidth`) count+sum histogram —
     *           domain-bounded rows, map-side combined; a descending
@@ -643,10 +599,9 @@ object Stats {
     require(bucketWidth >= 1, "groupTopFractionSum: bucketWidth must be >= 1")
     val g = groupCols.map(col)
     val base = df.withColumn("__v", valQ.cast("long"))
+    val bucket = expr(s"(__v - pmod(__v, ${bucketWidth}L)) div ${bucketWidth}L")
     val coarse = base
-      .groupBy(g :+ expr(
-        s"(__v - pmod(__v, ${bucketWidth}L)) div ${bucketWidth}L")
-        .as("__b"): _*)
+      .groupBy(g :+ bucket.as("__b"): _*)
       .agg(count(lit(1)).as("__c"), sum(col("__v")).as("__s"))
       .withColumn("__b", when(col("__b").isNull, raise_error(lit(
         "groupTopFractionSum: null value in valQ — nulls have no rank; " +
@@ -664,24 +619,20 @@ object Stats {
       .withColumn("__cumc", sum(col("__c")).over(wDesc))
       .withColumn("__cums", sum(col("__s")).over(wDesc))
       .join(broadcast(totals.select(g :+ col("n_top"): _*)), groupCols)
-      .filter(col("__cumc") >= col("n_top") &&
-        col("__cumc") - col("__c") < col("n_top"))
+      .filter(reaches("__cumc", "__c", "n_top"))
       .select(g ++ Seq(col("__b"),
         (col("__cumc") - col("__c")).as("cnt_above"),
         (col("__cums") - col("__s")).as("sum_above")): _*)
     val wFine = Window.partitionBy(g: _*).orderBy(col("__v").desc)
     val fine = base
       .join(broadcast(bound), groupCols)
-      .filter(expr(
-        s"(__v - pmod(__v, ${bucketWidth}L)) div ${bucketWidth}L") ===
-        col("__b"))
+      .filter(bucket === col("__b"))
       .groupBy(g :+ col("__v") :+ col("cnt_above") :+ col("sum_above"): _*)
       .agg(count(lit(1)).as("__c"), sum(col("__v")).as("__s"))
       .withColumn("__cumc", sum(col("__c")).over(wFine) + col("cnt_above"))
       .withColumn("__cums", sum(col("__s")).over(wFine) + col("sum_above"))
       .join(broadcast(totals), groupCols)
-      .filter(col("__cumc") >= col("n_top") &&
-        col("__cumc") - col("__c") < col("n_top"))
+      .filter(reaches("__cumc", "__c", "n_top"))
     fine.select(g ++ Seq(col("n"), col("total"), col("n_top"),
       (col("__cums") - col("__s") +
         (col("n_top") - (col("__cumc") - col("__c"))) * col("__v"))
@@ -707,21 +658,18 @@ object Stats {
     */
   def jsDivergenceDrift(df: DataFrame, groupCol: String, catCol: String)
       : DataFrame = {
-    val a = df.groupBy(col(groupCol).as("g"), col(catCol).as("cat"))
-      .agg(count(lit(1)).as("a"))
-      .localCheckpoint() // one scan; group totals + global both re-read
-    val ga = a.groupBy(col("g")).agg(sum(col("a")).as("n_rows"))
-    val gc = a.groupBy(col("cat")).agg(sum(col("a")).as("gcat"))
-    val tot = a.agg(sum(col("a")).as("gtot"))
+    val (a, ga, gc, tot) = contingency(df, col(groupCol).as("g"),
+      col(catCol).as("cat"), cell = "a", xm = "n_rows", ym = "gcat",
+      total = "gtot")
     val full = ga.crossJoin(broadcast(gc)).crossJoin(broadcast(tot))
       .join(a, Seq("g", "cat"), "left")
       .withColumn("a0", coalesce(col("a"), lit(0L)))
     val p = col("a0").cast("double") / col("n_rows").cast("double")
     val q = col("gcat").cast("double") / col("gtot").cast("double")
-    val termP = when(col("a0") > 0L,
-      floor((p * log((lit(2.0) * p) / (p + q))) * 1e9).cast("long"))
-      .otherwise(0L)
-    val termQ = floor((q * log((lit(2.0) * q) / (p + q))) * 1e9).cast("long")
+    def term(x: Column) =
+      floor((x * log((lit(2.0) * x) / (p + q))) * 1e9).cast("long")
+    val termP = when(col("a0") > 0L, term(p)).otherwise(0L)
+    val termQ = term(q)
     full.select(col("g"), col("n_rows"), termP.as("__tp"), termQ.as("__tq"))
       .groupBy(col("g"), col("n_rows"))
       .agg((sum(col("__tp")) + sum(col("__tq"))).as("jsd2_x9"))
@@ -747,26 +695,13 @@ object Stats {
     */
   def aucByGroup(df: DataFrame, groupCols: Seq[String], scoreQ: Column,
       positive: Column): DataFrame = {
-    val base = df.select(groupCols.map(col) :+ positive.as("__p")
-      :+ scoreQ.cast("long").as("__x"): _*)
-    val wRank = Window.partitionBy(groupCols.map(col): _*).orderBy(col("__x"))
-    val wTies = Window.partitionBy(groupCols.map(col) :+ col("__x"): _*)
-    val ranked = base.withColumn("__r2",
-      lit(2L) * rank().over(wRank).cast("long")
-        + count(lit(1)).over(wTies) - lit(1L))
-    ranked.groupBy(groupCols.map(col): _*)
-      .agg(
-        sum(when(col("__p"), 1L).otherwise(0L)).as("n_pos"),
-        sum(when(!col("__p"), 1L).otherwise(0L)).as("n_neg"),
-        sum(when(col("__p"), col("__r2")).otherwise(0L)).as("__sr2"))
-      .withColumn("u2_pos",
-        col("__sr2") - col("n_pos") * (col("n_pos") + lit(1L)))
+    rankSumU2(df, groupCols, positive.as("__p"), scoreQ, "n_pos", "n_neg",
+        "u2_pos")
       .withColumn("auc",
         when(col("n_pos") > 0L && col("n_neg") > 0L,
           col("u2_pos").cast("double") /
             (col("n_pos").cast("double") * col("n_neg").cast("double")
               * lit(2.0))))
-      .drop("__sr2")
   }
 
   /** Calibration (reliability) table: fixed-width score bins vs observed
@@ -792,7 +727,7 @@ object Stats {
   }
 
   /** Global discrete quantile cut values WITHOUT a global window: ranks
-    * come from [[Packing.packSequences]]'s two-phase prefix sum (range
+    * come from [[Packing.prefixSum]]'s two-phase prefix sum (range
     * partition + broadcast partition offsets), so no single task ever
     * sorts the whole frame. The cut at percent p is the value at CEILING
     * rank (n·p + 99) div 100 under the total (value, id) order —
@@ -802,21 +737,15 @@ object Stats {
     * @return one row: n, p<pct> for each requested percent */
   def globalQuantileCuts(df: DataFrame, idCol: String, valQ: Column,
       pcts: Seq[Int]): DataFrame = {
-    require(pcts.nonEmpty && pcts.forall(p => p >= 1 && p <= 100),
-      "percents must be in 1..100")
+    val aggs = ceilPicks(pcts)
     val vals = df.select(col(idCol).as("__id"), valQ.cast("long").as("__x"))
       .localCheckpoint() // consumed by the rank pass and the join-back
-    val ranked = Packing.packSequences(
+    val ranked = Packing.prefixSum(
         vals.select(col("__id"), lit(1L).as("__one"), col("__x")),
-        "__id", "__one", orderCols = Seq("__x", "__id"),
-        seqTokens = Long.MaxValue)
-      .select(col("id").as("__id"), (col("start_tok") + lit(1L)).as("__rn"))
+        "__id", "__one", Seq("__x", "__id"), "__before")
+      .select(col("__id"), (col("__before") + lit(1L)).as("__rn"))
       .join(vals, Seq("__id"))
     val nF = vals.agg(count(lit(1)).as("__n"))
-    val aggs = max(col("__n")).as("n") +: pcts.map { p =>
-      max(when(col("__rn") === expr(s"(__n * $p + 99) div 100"), col("__x")))
-        .as(s"p$p")
-    }
     ranked.crossJoin(broadcast(nF)).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -837,17 +766,15 @@ object Stats {
     def cuts(c: String, pfx: String) =
       globalQuantileCuts(units, idCol, col(c), pcts)
         .select(pcts.map(p => col(s"p$p").as(s"__$pfx$p")): _*)
-    def scoreHigh(v: Column, pfx: String) = pcts.map(p =>
-      when(v > col(s"__$pfx$p"), 1L).otherwise(0L)).reduce(_ + _) + lit(1L)
-    def scoreLow(v: Column, pfx: String) = pcts.map(p =>
-      when(v < col(s"__$pfx$p"), 1L).otherwise(0L)).reduce(_ + _) + lit(1L)
+    def score(pfx: String, beats: Column => Column) = pcts.map(p =>
+      when(beats(col(s"__$pfx$p")), 1L).otherwise(0L)).reduce(_ + _) + lit(1L)
     units
       .crossJoin(broadcast(cuts(rCol, "r")))
       .crossJoin(broadcast(cuts(fCol, "f")))
       .crossJoin(broadcast(cuts(mCol, "m")))
-      .withColumn("r_score", scoreLow(col(rCol), "r"))
-      .withColumn("f_score", scoreHigh(col(fCol), "f"))
-      .withColumn("m_score", scoreHigh(col(mCol), "m"))
+      .withColumn("r_score", score("r", col(rCol) < _))
+      .withColumn("f_score", score("f", col(fCol) > _))
+      .withColumn("m_score", score("m", col(mCol) > _))
       .withColumn("segment",
         when(col("r_score") >= 4L && col("f_score") >= 4L
           && col("m_score") >= 4L, "champion")
@@ -964,19 +891,6 @@ object Stats {
         col("woe_x6"), col("iv_term_x9"))
   }
 
-  /** Cohen's kappa between two categorical raters — chance-corrected
-    * agreement, the standard consistency check between an automatic
-    * classifier and a reference label (or two annotator passes).
-    * κ = (p_o − p_e)/(1 − p_e) with p_o = agreements/n and
-    * p_e = Σ_c rm_c·cm_c / n², both ratios of exact integer counts;
-    * the κ tree is fixed, so the double is cross-engine exact.
-    *
-    * Scale: three fixed-width count aggregates (joint agree count plus
-    * one marginal per rater) and a |classes|-row join of aggregate
-    * frames — the data plane collapses to counts in the first pass.
-    *
-    * @return one row: n, n_agree, pe_num (Σ rm·cm), po, pe, kappa
-    *         (null when p_e = 1, i.e. both raters constant) */
   /** Autocorrelation of a regular series at a set of lags — the
     * periodicity / persistence diagnostic behind seasonality detection
     * ("is daily revenue weekly-periodic?") and sampling-interval choice.
@@ -1013,27 +927,14 @@ object Stats {
       groupCols.map(col) ++ Seq(col(tCol).cast("long").as("__t"),
         valQ.cast("long").as("__v")): _*)
       .localCheckpoint() // re-read twice per lag
-    val dbl = "double"
     val perLag = lags.map { k =>
       val cond = groupCols.map(g => col(s"a.$g") === col(s"b.$g"))
         .foldLeft((col("a.__t") + lit(k.toLong)) === col("b.__t"))(_ && _)
       val agg = s0.as("a").join(s0.as("b"), cond)
         .groupBy(groupCols.map(g => col(s"a.$g").as(g)): _*)
-        .agg(count(lit(1)).as("n"),
-          sum(col("a.__v")).as("sx"), sum(col("b.__v")).as("sy"),
-          sum(col("a.__v") * col("a.__v")).as("sxx"),
-          sum(col("b.__v") * col("b.__v")).as("syy"),
-          sum(col("a.__v") * col("b.__v")).as("sxy"))
-      val vx = col("n").cast(dbl) * col("sxx").cast(dbl) -
-        col("sx").cast(dbl) * col("sx").cast(dbl)
-      val vy = col("n").cast(dbl) * col("syy").cast(dbl) -
-        col("sy").cast(dbl) * col("sy").cast(dbl)
-      val num = col("n").cast(dbl) * col("sxy").cast(dbl) -
-        col("sx").cast(dbl) * col("sy").cast(dbl)
+        .agg(count(lit(1)).as("n"), pearsonSums(col("a.__v"), col("b.__v")): _*)
       agg.select(groupCols.map(col) ++ Seq(lit(k.toLong).as("lag"),
-        col("n").as("n_pairs"),
-        when(vx > 0.0d && vy > 0.0d, num / (sqrt(vx) * sqrt(vy)))
-          .as("acf")): _*)
+        col("n").as("n_pairs"), pearson(col("n")).as("acf")): _*)
     }
     perLag.reduce(_ unionByName _)
   }
@@ -1060,12 +961,7 @@ object Stats {
     */
   def mutualInfo(df: DataFrame, xCol: Column, yCol: Column,
       pairName: String): DataFrame = {
-    val cells = df.groupBy(xCol.as("__x"), yCol.as("__y"))
-      .agg(count(lit(1)).as("nxy"))
-      .localCheckpoint() // one scan feeds both marginals + the total
-    val mx = cells.groupBy(col("__x")).agg(sum(col("nxy")).as("nx"))
-    val my = cells.groupBy(col("__y")).agg(sum(col("nxy")).as("ny"))
-    val tot = cells.agg(sum(col("nxy")).as("n"))
+    val (cells, mx, my, tot) = contingency(df, xCol.as("__x"), yCol.as("__y"))
     val dbl = "double"
     // p_xy·ln(p_xy·N / (n_x·p_y·… )) rearranged to pure counts:
     // (nxy/N) · ln((nxy·N) / (nx·ny)) — each factor an exact long
@@ -1108,7 +1004,6 @@ object Stats {
     require(window >= 2, "rollingCorr needs a window of at least 2")
     val w = Window.partitionBy(groupCols.map(col): _*)
       .orderBy(col("t")).rowsBetween(-(window - 1), Window.currentRow)
-    val dbl = "double"
     val base = series.select(
       groupCols.map(col) ++ Seq(col(tCol).as("t"),
         xQ.cast("long").as("__x"), yQ.cast("long").as("__y")): _*)
@@ -1119,15 +1014,8 @@ object Stats {
       .withColumn("syy", sum(col("__y") * col("__y")).over(w))
       .withColumn("sxy", sum(col("__x") * col("__y")).over(w))
       .filter(col("n_window") === window.toLong)
-    val vx = col("n_window").cast(dbl) * col("sxx").cast(dbl) -
-      col("sx").cast(dbl) * col("sx").cast(dbl)
-    val vy = col("n_window").cast(dbl) * col("syy").cast(dbl) -
-      col("sy").cast(dbl) * col("sy").cast(dbl)
-    val num = col("n_window").cast(dbl) * col("sxy").cast(dbl) -
-      col("sx").cast(dbl) * col("sy").cast(dbl)
     base.select(groupCols.map(col) ++ Seq(col("t"), col("n_window"),
-      when(vx > 0.0d && vy > 0.0d, num / (sqrt(vx) * sqrt(vy)))
-        .as("corr")): _*)
+      pearson(col("n_window")).as("corr")): _*)
   }
 
   /** Deterministic half-sample bootstrap CI for per-group means: `reps`
@@ -1165,12 +1053,11 @@ object Stats {
       .agg(count(lit(1)).as("nb"), sum(col("v")).as("sb"))
       .select(col("g"), col("b"), (col("sb").cast("double") / col("nb")).as("m"))
     val rr = rm.withColumn("rn", row_number().over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy(col("g")).orderBy(col("m"), col("b"))))
+      Window.partitionBy(col("g")).orderBy(col("m"), col("b"))))
     val ci = rr.groupBy(col("g"))
       .agg(count(lit(1)).as("n_reps"),
-        max(when(col("rn") === loRank, col("m"))).as("boot_lo"),
-        max(when(col("rn") === hiRank, col("m"))).as("boot_hi"))
+        pickAt(col("rn"), lit(loRank), col("m")).as("boot_lo"),
+        pickAt(col("rn"), lit(hiRank), col("m")).as("boot_hi"))
     val overall = base.groupBy(col("g"))
       .agg(count(lit(1)).as("n"),
         (sum(col("v")).cast("double") / count(lit(1))).as("mean"))
@@ -1208,21 +1095,16 @@ object Stats {
     val g = groupCols.map(col)
     val base = df.select(g :+ xCol.cast("long").as("__x")
       :+ yCol.cast("long").as("__y"): _*)
-    val l = base.as("l"); val r = base.as("r")
-    val joinCond = groupCols.map(c => col(s"l.$c") === col(s"r.$c"))
-      .reduceOption(_ && _).map(_ && col("r.__x") > col("l.__x"))
-      .getOrElse(col("r.__x") > col("l.__x"))
-    val pairs = l.join(r, joinCond)
-      .select(groupCols.map(c => col(s"l.$c").as(c)) :+
+    val pairs = groupPairs(base, groupCols, col("r.__x") > col("l.__x"))
+      .select(pairKeys(groupCols) :+
         floor((col("r.__y") - col("l.__y")).cast("double") * 1e6 /
           (col("r.__x") - col("l.__x"))).cast("long").as("s"): _*)
-    val ranked = pairs.withColumn("rn", row_number().over(
-        Window.partitionBy(g: _*).orderBy(col("s"))))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(g: _*)))
+    val (wOrd, wAll) = groupWindows(groupCols, col("s"))
+    val ranked = pairs.withColumn("rn", row_number().over(wOrd))
+      .withColumn("n", count(lit(1)).over(wAll))
     val med = ranked.groupBy(g: _*)
       .agg(max(col("n")).as("n_pairs"),
-        max(when(col("rn") === expr("(n + 1) div 2"), col("s")))
-          .as("ts_slope_x6"))
+        pickAt(col("rn"), expr("(n + 1) div 2"), col("s")).as("ts_slope_x6"))
     val pts = base.groupBy(g: _*).agg(count(lit(1)).as("n_points"))
     pts.join(med, groupCols, "left")
       .select(g :+ col("n_points") :+
@@ -1302,13 +1184,10 @@ object Stats {
     val g = groupCols.map(col)
     val base = df.select(g :+ idCol.cast("long").as("__i")
       :+ xCol.cast("long").as("__x") :+ yCol.cast("long").as("__y"): _*)
-    val l = base.as("l"); val r = base.as("r")
-    val joinCond = (groupCols.map(c => col(s"l.$c") === col(s"r.$c")) :+
-      (col("l.__i") < col("r.__i"))).reduce(_ && _)
     val dx = col("r.__x") - col("l.__x")
     val dy = col("r.__y") - col("l.__y")
-    val cnt = l.join(r, joinCond)
-      .select(groupCols.map(c => col(s"l.$c").as(c)) :+
+    val cnt = groupPairs(base, groupCols, col("l.__i") < col("r.__i"))
+      .select(pairKeys(groupCols) :+
         when(dx > 0 && dy > 0 || dx < 0 && dy < 0, lit(1L))
           .otherwise(0L).as("c") :+
         when(dx > 0 && dy < 0 || dx < 0 && dy > 0, lit(1L))
@@ -1321,11 +1200,8 @@ object Stats {
         sum(col("tx")).as("ties_x"), sum(col("ty")).as("ties_y"))
     val groups = base.select(g: _*).distinct()
     val full = groups.join(cnt, groupCols, "left")
-      .select(g :+ coalesce(col("n_pairs"), lit(0L)).as("n_pairs")
-        :+ coalesce(col("concordant"), lit(0L)).as("concordant")
-        :+ coalesce(col("discordant"), lit(0L)).as("discordant")
-        :+ coalesce(col("ties_x"), lit(0L)).as("ties_x")
-        :+ coalesce(col("ties_y"), lit(0L)).as("ties_y"): _*)
+      .select(g ++ Seq("n_pairs", "concordant", "discordant", "ties_x",
+        "ties_y").map(c => coalesce(col(c), lit(0L)).as(c)): _*)
     val p = col("n_pairs").cast("double")
     val px = p - col("ties_x").cast("double")
     val py = p - col("ties_y").cast("double")
@@ -1339,8 +1215,7 @@ object Stats {
     * ranks (2·rank + ties − 1, the [[mannWhitneyU2]] integer trick), so
     * every sufficient statistic is an exact long under any partitioning;
     * rho is one fixed double tree with a SINGLE sqrt of the variance
-    * product, so perfectly monotone series report exactly ±1.0 (two
-    * sqrts would round to 0.999…; the [[kendallTau]] lesson). NULL when
+    * product, so perfectly monotone series report exactly ±1.0. NULL when
     * either variable never varies.
     *
     * Scale contract: two rank windows per group over the bounded series
@@ -1353,28 +1228,12 @@ object Stats {
     val g = groupCols.map(col)
     val base = df.select(g :+ xCol.cast("long").as("__x")
       :+ yCol.cast("long").as("__y"): _*)
-    def doubledRank(c: String): Column =
-      lit(2L) * rank().over(
-        Window.partitionBy(g: _*).orderBy(col(c))).cast("long") +
-        count(lit(1)).over(Window.partitionBy(g :+ col(c): _*)) - lit(1L)
     val ranked = base
-      .withColumn("__rx", doubledRank("__x"))
-      .withColumn("__ry", doubledRank("__y"))
-    val stats = ranked.groupBy(g: _*).agg(
-      count(lit(1)).as("n"),
-      sum(col("__rx")).as("sx"), sum(col("__ry")).as("sy"),
-      sum(col("__rx") * col("__rx")).as("sxx"),
-      sum(col("__ry") * col("__ry")).as("syy"),
-      sum(col("__rx") * col("__ry")).as("sxy"))
-    val dbl = "double"
-    val vx = col("n").cast(dbl) * col("sxx").cast(dbl) -
-      col("sx").cast(dbl) * col("sx").cast(dbl)
-    val vy = col("n").cast(dbl) * col("syy").cast(dbl) -
-      col("sy").cast(dbl) * col("sy").cast(dbl)
-    val num = col("n").cast(dbl) * col("sxy").cast(dbl) -
-      col("sx").cast(dbl) * col("sy").cast(dbl)
-    stats.select(g :+ col("n") :+
-      when(vx > 0.0d && vy > 0.0d, num / sqrt(vx * vy)).as("rho"): _*)
+      .withColumn("__rx", midRank2(groupCols, "__x"))
+      .withColumn("__ry", midRank2(groupCols, "__y"))
+    ranked.groupBy(g: _*)
+      .agg(count(lit(1)).as("n"), pearsonSums(col("__rx"), col("__ry")): _*)
+      .select(g :+ col("n") :+ pearson(col("n"), oneSqrt = true).as("rho"): _*)
   }
 
   /** Exact weighted quantiles per group, windowless: weights aggregate
@@ -1382,7 +1241,7 @@ object Stats {
     * merge — quantiles are unchanged and the axis is the natural unique
     * key, so no synthetic row id is ever needed), then cumulative weight
     * in value order via the grouped two-phase prefix sum
-    * ([[Packing.packSequencesGrouped]] — NO per-group global window), and
+    * ([[Packing.prefixSum]] by group — NO per-group global window), and
     * each percentile is the smallest value whose cumulative weight
     * reaches the ceiling target ⌈W·p/100⌉ — one conditional aggregation
     * per requested percent. All integers throughout; weights must be
@@ -1397,26 +1256,16 @@ object Stats {
       axisPartitions: Int = 0): DataFrame = {
     require(percents.nonEmpty && percents.forall(p => p >= 1 && p <= 100),
       s"percents must be in 1..100; got $percents")
-    val base = df.select(col(groupCol),
-        value.cast("long").as("__v"), weight.cast("long").as("__w"))
-      .groupBy(col(groupCol), col("__v"))
-      .agg(sum(col("__w")).as("__w"))
-      // (group, distinct value) axis — far smaller than the fact table, and
-      // consumed twice (grouped prefix sum + totals): materialize so the
-      // fact scan+aggregate runs exactly once
-      .localCheckpoint()
-    // order key aliased: idCol and orderCols must be distinct column names
-    val packed = Packing.packSequencesGrouped(
-        base.withColumn("__vo", col("__v")), groupCol, "__v",
-        "__w", orderCols = Seq("__vo"), seqTokens = Long.MaxValue,
-        partitions = axisPartitions)
-      .select(col("group").as(groupCol), col("id").as("__v"),
-        (col("start_tok") + col("n_tokens")).as("__cumw"))
+    // read by the grouped prefix sum and the totals
+    val base = valueAxis(df, groupCol, value, Seq(weight.cast("long").as("__w")),
+      sum(col("__w")).as("__w"))
+    val packed = Packing.prefixSum(base, "__v", "__w", Seq("__v"), "__cumw",
+        Some(groupCol), inclusive = true, partitions = axisPartitions)
+      .select(col(groupCol), col("__v"), col("__cumw"))
     val totals = base.groupBy(col(groupCol))
       .agg(sum(col("__w")).as("w_total"))
     val aggs = percents.map(p =>
-      min(when(col("__cumw") >= expr(s"(w_total * $p + 99) div 100"),
-        col("__v"))).as(s"p$p"))
+      min(when(col("__cumw") >= ceilRank("w_total", p), col("__v"))).as(s"p$p"))
     packed.join(broadcast(totals), groupCol)
       .groupBy(col(groupCol), col("w_total"))
       .agg(aggs.head, aggs.tail: _*)
@@ -1443,20 +1292,13 @@ object Stats {
     *         identical on every row: floor(H·1e6); hc_x6 = tie-corrected */
   def kruskalWallis(df: DataFrame, groupCol: String, valQ: Column,
       axisPartitions: Int = 4): DataFrame = {
-    val base = df.select(col(groupCol), valQ.cast("long").as("__v"))
-      .groupBy(col(groupCol), col("__v"))
-      .agg(count(lit(1)).as("__n"))
-      // (group, distinct value) axis, consumed by the value-axis rollup
-      // AND the rank join: one fact scan only
-      .localCheckpoint()
+    val base = valueAxis(df, groupCol, valQ) // value rollup + rank join
     val byVal = base.groupBy(col("__v")).agg(sum(col("__n")).as("__nv"))
       .localCheckpoint() // prefix sum + tie-term aggregate
-    val ranked = Packing.packSequences(
-        byVal.withColumn("__vo", col("__v")), "__v", "__nv",
-        orderCols = Seq("__vo"), seqTokens = Long.MaxValue,
+    val ranked = Packing.prefixSum(byVal, "__v", "__nv", Seq("__v"), "__cb",
         partitions = axisPartitions)
-      .select(col("id").as("__v"),
-        (lit(2L) * col("start_tok") + col("n_tokens") + lit(1L)).as("__r2"))
+      .select(col("__v"),
+        (lit(2L) * col("__cb") + col("__nv") + lit(1L)).as("__r2"))
     val perGroup = base.join(ranked, Seq("__v"))
       .groupBy(col(groupCol))
       .agg(sum(col("__n")).as("n"), sum(col("__n") * col("__r2")).as("r2_sum"))
@@ -1474,6 +1316,7 @@ object Stats {
             / ((col("__nt").cast(dbl) * (col("__nt") + lit(1L)).cast(dbl))
                * col("n").cast(dbl)))
           * lit(1e6)).cast("long"))
+    val n3 = col("__nt") * col("__nt") * col("__nt") - col("__nt") // N³ − N
     val hSum = withH.agg(sum(col("__h_x6")).as("__hs"),
       first(col("__nt")).as("__nt"))
     val stats = hSum.crossJoin(broadcast(ties))
@@ -1482,11 +1325,8 @@ object Stats {
           .as("h_x6"),
         col("__nt"), col("__t"))
       .withColumn("hc_x6",
-        when(col("__t") < col("__nt") * col("__nt") * col("__nt") - col("__nt"),
-          floor((col("h_x6").cast(dbl) / lit(1e6))
-            / (lit(1.0) - col("__t").cast(dbl)
-               / (col("__nt") * col("__nt") * col("__nt") - col("__nt"))
-                 .cast(dbl))
+        when(col("__t") < n3, floor((col("h_x6").cast(dbl) / lit(1e6))
+            / (lit(1.0) - col("__t").cast(dbl) / n3.cast(dbl))
             * lit(1e6)).cast("long")))
       .select(col("h_x6"), col("hc_x6"))
     withH.drop("__h_x6", "__nt").crossJoin(broadcast(stats))
@@ -1494,7 +1334,7 @@ object Stats {
 
   /** Brown–Forsythe test (Levene with median centers): are group variances
     * equal? The robust homogeneity check that should precede any pooled-
-    * variance ANOVA ([[anovaOneWay]]-style analyses) — classic Levene
+    * variance ANOVA ([[oneWayAnova]]-style analyses) — classic Levene
     * centers on the mean and melts under the same heavy tails it is
     * supposed to diagnose; centering on the median keeps the test honest.
     *
@@ -1512,32 +1352,22 @@ object Stats {
     *         2·median; f_x6 = floor(F·1e6), identical on every row */
   def brownForsythe(df: DataFrame, groupCol: String, valQ: Column,
       axisPartitions: Int = 4): DataFrame = {
-    val base = df.select(col(groupCol), valQ.cast("long").as("__v"))
-      .groupBy(col(groupCol), col("__v"))
-      .agg(count(lit(1)).as("__n"))
-      // (group, distinct value) axis: the grouped prefix sum, the group
-      // sizes, AND the deviation aggregate all read it — one fact scan
-      .localCheckpoint()
-    val packed = Packing.packSequencesGrouped(
-        base.withColumn("__vo", col("__v")), groupCol, "__v", "__n",
-        orderCols = Seq("__vo"), seqTokens = Long.MaxValue,
-        partitions = axisPartitions)
-      .select(col("group").as(groupCol), col("id").as("__v"),
-        col("start_tok").as("__cb"), col("n_tokens").as("__nv"))
+    // read by the grouped prefix sum, the group sizes and the deviations
+    val base = valueAxis(df, groupCol, valQ)
+    val packed = Packing.prefixSum(base, "__v", "__n", Seq("__v"), "__cb",
+        Some(groupCol), partitions = axisPartitions)
+      .select(col(groupCol), col("__v"), col("__cb"), col("__n").as("__nv"))
     val sizes = base.groupBy(col(groupCol)).agg(sum(col("__n")).as("n"))
     // the two middle order statistics: value v covers sorted positions
     // (__cb, __cb+__nv]; the middles sit at (n+1) div 2 and n div 2 + 1
     // (equal when n is odd), so med2 = 2·median stays integer
+    def covering(pos: Column) = min(when(col("__cb") + col("__nv") >= pos
+      && pos > col("__cb"), col("__v")))
     val med2 = packed.join(broadcast(sizes), groupCol)
       .withColumn("__p1", expr("(n + 1) div 2"))
       .withColumn("__p2", expr("n div 2 + 1"))
       .groupBy(col(groupCol))
-      .agg(
-        (min(when(col("__cb") + col("__nv") >= col("__p1")
-            && col("__p1") > col("__cb"), col("__v")))
-          + min(when(col("__cb") + col("__nv") >= col("__p2")
-            && col("__p2") > col("__cb"), col("__v"))))
-          .as("med2"))
+      .agg((covering(col("__p1")) + covering(col("__p2"))).as("med2"))
     val perGroup = base.join(broadcast(med2), groupCol)
       .select(col(groupCol), col("__n"),
         abs(lit(2L) * col("__v") - col("med2")).as("__z"))
@@ -1627,6 +1457,19 @@ object Stats {
         (col("dev_w") * lit(1000000L) - col("s_x6")).as("resid_x6"))
   }
 
+  /** Cohen's kappa between two categorical raters — chance-corrected
+    * agreement, the standard consistency check between an automatic
+    * classifier and a reference label (or two annotator passes).
+    * κ = (p_o − p_e)/(1 − p_e) with p_o = agreements/n and
+    * p_e = Σ_c rm_c·cm_c / n², both ratios of exact integer counts;
+    * the κ tree is fixed, so the double is cross-engine exact.
+    *
+    * Scale: three fixed-width count aggregates (joint agree count plus
+    * one marginal per rater) and a |classes|-row join of aggregate
+    * frames — the data plane collapses to counts in the first pass.
+    *
+    * @return one row: n, n_agree, pe_num (Σ rm·cm), po, pe, kappa
+    *         (null when p_e = 1, i.e. both raters constant) */
   def cohenKappa(df: DataFrame, rater1: Column, rater2: Column)
       : DataFrame = {
     val base = df.select(rater1.as("__a"), rater2.as("__b"))
@@ -1679,12 +1522,9 @@ object Stats {
       .agg(sum(when(col("__s"), 1L).otherwise(0L)).as("na"),
         sum(when(!col("__s"), 1L).otherwise(0L)).as("nb"))
       .localCheckpoint() // feeds both cumulative passes + the totals
-    def cum(c: String, out: String) = Packing.packSequences(
-        base.withColumn("__vo", col("__v")), "__v", c,
-        orderCols = Seq("__vo"), seqTokens = Long.MaxValue,
-        partitions = axisPartitions)
-      .select(col("id").as("__v"),
-        (col("start_tok") + col("n_tokens")).as(out))
+    def cum(c: String, out: String) = Packing.prefixSum(base, "__v", c,
+        Seq("__v"), out, inclusive = true, partitions = axisPartitions)
+      .select(col("__v"), col(out))
     val tot = base.agg(sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"))
     val terms = cum("na", "ca").join(cum("nb", "cb"), Seq("__v"))
       .crossJoin(broadcast(tot))
@@ -1734,12 +1574,8 @@ object Stats {
     val base = df.select(g :+ tCol.cast("long").as("__t")
       :+ vCol.cast("long").as("__v"): _*)
       .localCheckpoint() // pair join (both sides) + ties + point counts
-    val l = base.as("l"); val r = base.as("r")
-    val joinCond = groupCols.map(c => col(s"l.$c") === col(s"r.$c"))
-      .reduceOption(_ && _).map(_ && col("r.__t") > col("l.__t"))
-      .getOrElse(col("r.__t") > col("l.__t"))
-    val pairs = l.join(r, joinCond)
-      .groupBy(groupCols.map(c => col(s"l.$c").as(c)): _*)
+    val pairs = groupPairs(base, groupCols, col("r.__t") > col("l.__t"))
+      .groupBy(pairKeys(groupCols): _*)
       .agg(count(lit(1)).as("n_pairs"),
         sum(signum(col("r.__v") - col("l.__v")).cast("long")).as("s_stat"))
     // tie groups of v: Σ t(t−1)(2t+5) over runs of equal values
@@ -1796,13 +1632,9 @@ object Stats {
     */
   def cramersV(df: DataFrame, xCol: Column, yCol: Column,
       pairName: String): DataFrame = {
-    val cells = df.groupBy(coalesce(xCol.cast("string"), lit("")).as("__x"),
-        coalesce(yCol.cast("string"), lit("")).as("__y"))
-      .agg(count(lit(1)).as("nxy"))
-      .localCheckpoint() // one scan feeds both marginals + the total
-    val mx = cells.groupBy(col("__x")).agg(sum(col("nxy")).as("nx"))
-    val my = cells.groupBy(col("__y")).agg(sum(col("nxy")).as("ny"))
-    val tot = cells.agg(sum(col("nxy")).as("n"))
+    val (cells, mx, my, tot) = contingency(df,
+      coalesce(xCol.cast("string"), lit("")).as("__x"),
+      coalesce(yCol.cast("string"), lit("")).as("__y"))
     val dbl = "double"
     val o = coalesce(col("nxy"), lit(0L))
     // (O·n − nx·ny)²/(n·nx·ny): numerator diff is an exact long (≤ n²),
@@ -1852,12 +1684,8 @@ object Stats {
   def transitionEntropy(transitions: DataFrame, groupCols: Seq[String],
       fromCol: Column, toCol: Column): DataFrame = {
     val g = groupCols.map(col)
-    val cells = transitions
-      .groupBy(g :+ fromCol.as("__f") :+ toCol.as("__j"): _*)
-      .agg(count(lit(1)).as("nij"))
-      .localCheckpoint() // grid-sized; feeds the marginal + the terms
-    val marg = cells.groupBy(g :+ col("__f"): _*)
-      .agg(sum(col("nij")).as("ni"))
+    val (cells, marg, _, _) = contingency(transitions, fromCol.as("__f"),
+      toCol.as("__j"), cell = "nij", xm = "ni", keys = groupCols)
     val dbl = "double"
     val p = col("nij").cast(dbl) / col("ni").cast(dbl)
     cells.join(broadcast(marg), groupCols :+ "__f")
@@ -1868,4 +1696,135 @@ object Stats {
         count(lit(1)).as("n_next_states"),
         sum(col("__t")).as("h_x9"))
   }
+
+  // ---- shared exact-statistics pieces ----
+
+  /** The (ordered, whole-group) window pair over `groupCols`. */
+  private def groupWindows(groupCols: Seq[String], order: Column*)
+      : (WindowSpec, WindowSpec) = {
+    val all = Window.partitionBy(groupCols.map(col): _*)
+    (all.orderBy(order: _*), all)
+  }
+
+  /** Adds `rn`, the 1-based position under `order`, and `n`, the group
+    * size — the ranked frame every ceiling-rank pick reads. */
+  private def withPosition(df: DataFrame, groupCols: Seq[String],
+      order: Seq[Column], rn: String = "__rn", n: String = "__n"): DataFrame = {
+    val (wOrd, wAll) = groupWindows(groupCols, order: _*)
+    df.withColumn(rn, row_number().over(wOrd).cast("long"))
+      .withColumn(n, count(lit(1)).over(wAll))
+  }
+
+  /** The value `x` on the row whose position `rn` equals `rank`. */
+  private def pickAt(rn: Column, rank: Column, x: Column): Column =
+    max(when(rn === rank, x))
+
+  /** Ceiling rank (n·p + 99) div 100 of integer percent `p` among `n`. */
+  private def ceilRank(n: String, p: Int): Column =
+    expr(s"($n * $p + 99) div 100")
+
+  /** `n` and one ceiling-rank pick `p<pct>` of `__x` per percent, over a
+    * [[withPosition]] frame. */
+  private def ceilPicks(pcts: Seq[Int]): Seq[Column] = {
+    require(pcts.nonEmpty && pcts.forall(p => p >= 1 && p <= 100),
+      "percents must be in 1..100")
+    max(col("__n")).as("n") +: pcts.map(p =>
+      pickAt(col("__rn"), ceilRank("__n", p), col("__x")).as(s"p$p"))
+  }
+
+  /** The histogram row whose running count `cum` (through its own count
+    * `c`) first reaches rank `k`. */
+  private def reaches(cum: String, c: String, k: String): Column =
+    col(cum) >= col(k) && col(cum) - col(c) < col(k)
+
+  /** Doubled average rank 2·rank + ties − 1 of `x` within its group: an
+    * exact long, so tied values share the half-integer mean rank. */
+  private def midRank2(groupCols: Seq[String], x: String): Column = {
+    val g = groupCols.map(col)
+    lit(2L) * rank().over(Window.partitionBy(g: _*).orderBy(col(x)))
+      .cast("long") + count(lit(1)).over(Window.partitionBy(g :+ col(x): _*)) -
+      lit(1L)
+  }
+
+  /** The (group, distinct value) axis of `valQ` as `__v`: one row per
+    * pair with its row count `__n` (or the aggregate `mass` over the
+    * `extra` columns), far smaller than the facts and checkpointed, so the
+    * fact scan runs once however many passes read it. */
+  private def valueAxis(df: DataFrame, groupCol: String, valQ: Column,
+      extra: Seq[Column] = Nil, mass: Column = count(lit(1)).as("__n"))
+      : DataFrame =
+    df.select(col(groupCol) +: valQ.cast("long").as("__v") +: extra: _*)
+      .groupBy(col(groupCol), col("__v")).agg(mass).localCheckpoint()
+
+  /** Per group: the size `nIn` of the cohort flagged by `in` (an aliased
+    * boolean), the size `nOut` of the rest, and the cohort's doubled
+    * Mann–Whitney statistic `u2` = Σ [[midRank2]] of `value` − nIn(nIn+1),
+    * an exact long. */
+  private def rankSumU2(df: DataFrame, groupCols: Seq[String], in: Column,
+      value: Column, nIn: String, nOut: String, u2: String): DataFrame = {
+    val base = df.select(groupCols.map(col) :+ in
+      :+ value.cast("long").as("__x"): _*)
+    val flag = col(base.columns(groupCols.size))
+    base.withColumn("__r2", midRank2(groupCols, "__x"))
+      .groupBy(groupCols.map(col): _*)
+      .agg(sum(when(flag, 1L).otherwise(0L)).as(nIn),
+        sum(when(!flag, 1L).otherwise(0L)).as(nOut),
+        sum(when(flag, col("__r2")).otherwise(0L)).as("__sr2"))
+      .withColumn(u2, col("__sr2") - col(nIn) * (col(nIn) + lit(1L)))
+      .drop("__sr2")
+  }
+
+  /** The sums [[pearson]] reads besides the count: Σx, Σy, Σx², Σy², Σxy. */
+  private def pearsonSums(x: Column, y: Column): Seq[Column] = Seq(
+    sum(x).as("sx"), sum(y).as("sy"), sum(x * x).as("sxx"),
+    sum(y * y).as("syy"), sum(x * y).as("sxy"))
+
+  /** Pearson correlation over six exact sums as a fixed double tree:
+    * num = n·Σxy − Σx·Σy, vx = n·Σx² − (Σx)², vy likewise; NULL when
+    * either variance is zero. The divisor is √vx·√vy, or with
+    * `oneSqrt` √(vx·vy) — a single rounding, so a perfectly monotone
+    * rank pair reports exactly ±1. */
+  private[ops] def pearson(n: Column, sx: Column = col("sx"),
+      sy: Column = col("sy"), sxx: Column = col("sxx"),
+      syy: Column = col("syy"), sxy: Column = col("sxy"),
+      oneSqrt: Boolean = false): Column = {
+    val dbl = "double"
+    val nd = n.cast(dbl)
+    val vx = nd * sxx.cast(dbl) - sx.cast(dbl) * sx.cast(dbl)
+    val vy = nd * syy.cast(dbl) - sy.cast(dbl) * sy.cast(dbl)
+    val num = nd * sxy.cast(dbl) - sx.cast(dbl) * sy.cast(dbl)
+    when(vx > 0.0d && vy > 0.0d,
+      if (oneSqrt) num / sqrt(vx * vy) else num / (sqrt(vx) * sqrt(vy)))
+  }
+
+  /** One-scan contingency of (keys…, x, y): the checkpointed cell count
+    * `cell`, and from it the (keys, x) marginal `xm`, the (keys, y)
+    * marginal `ym` and the per-keys total `total`. */
+  private def contingency(df: DataFrame, x: Column, y: Column,
+      cell: String = "nxy", xm: String = "nx", ym: String = "ny",
+      total: String = "n", keys: Seq[String] = Nil)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val k = keys.map(col)
+    val cells = df.groupBy(k :+ x :+ y: _*).agg(count(lit(1)).as(cell))
+      .localCheckpoint() // one scan feeds both marginals + the total
+    val Seq(xn, yn) = cells.columns.slice(keys.size, keys.size + 2).toSeq
+    def margin(by: Seq[Column], out: String) =
+      cells.groupBy(by: _*).agg(sum(col(cell)).as(out))
+    (cells, margin(k :+ col(xn), xm), margin(k :+ col(yn), ym),
+      margin(k, total))
+  }
+
+  /** Ordered pairs of rows within a group: `base` self-joined as `l` and
+    * `r` on `groupCols` plus `ordered`, a predicate over `l.`/`r.` columns.
+    * Groups with fewer than two rows have no pairs; callers left-join the
+    * pair aggregate onto a per-group frame to keep them with NULLs. */
+  private def groupPairs(base: DataFrame, groupCols: Seq[String],
+      ordered: Column): DataFrame =
+    base.as("l").join(base.as("r"),
+      (groupCols.map(c => col(s"l.$c") === col(s"r.$c")) :+ ordered)
+        .reduce(_ && _))
+
+  /** The group columns of a [[groupPairs]] frame, under their own names. */
+  private def pairKeys(groupCols: Seq[String]): Seq[Column] =
+    groupCols.map(c => col(s"l.$c").as(c))
 }

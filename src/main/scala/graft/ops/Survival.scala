@@ -24,6 +24,58 @@ import org.apache.spark.sql.functions._
   */
 object Survival {
 
+  /** Per-entity lifetime aggregates of an event log: first and last
+    * observed day and the first event day, plus `aggs` over the event rows
+    * (whose own inputs are the `inputs` columns). */
+  private def lifetimes(events: DataFrame, eventPred: Column,
+      entityCol: String, tsCol: String, inputs: Seq[Column] = Nil,
+      aggs: Seq[Column] = Nil): DataFrame = {
+    val day: Column = expr(s"unix_micros($tsCol) div 86400000000")
+    events.select(Seq(col(entityCol).as("entity"), day.as("day"),
+        eventPred.as("is_event")) ++ inputs: _*)
+      .groupBy(col("entity"))
+      .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day")
+        +: min(when(col("is_event"), col("day"))).as("event_day") +: aggs: _*)
+  }
+
+  /** A [[lifetimes]] row's duration (event day, or the censoring last
+    * day, minus the first day) and whether the event hit. */
+  private def durationAndHit: Seq[Column] = Seq(
+    (coalesce(col("event_day"), col("last_day")) - col("first_day"))
+      .as("duration"),
+    col("event_day").isNotNull.as("hit"))
+
+  /** Shared risk table: one row per distinct duration with at-risk and
+    * event counts — the exact integer state both estimators ([[kaplanMeier]],
+    * [[nelsonAalen]]) read. Same lifetimes/censoring semantics as
+    * documented on kaplanMeier; at-risk via the two-phase prefix sum. */
+  private[ops] def riskTable(events: DataFrame, eventPred: Column,
+      entityCol: String, tsCol: String): DataFrame = {
+    val lives = lifetimes(events, eventPred, entityCol, tsCol)
+    val stats = lives.agg(count(lit(1)).as("n_users"))
+    val u = lives.crossJoin(broadcast(stats))
+      .select(durationAndHit :+ col("n_users"): _*)
+    // One row per distinct duration (≤ observation-window days) — tiny, and
+    // consumed TWICE below (prefix sum + join). Materialize so the per-entity
+    // lifetimes aggregation over the full event log runs exactly once.
+    val byDur = u.groupBy(col("duration"))
+      .agg(count(lit(1)).as("n_ending"),
+        sum(when(col("hit"), 1L).otherwise(0L)).as("n_events"),
+        first(col("n_users")).as("n_users"))
+      .localCheckpoint()
+    // at-risk at d = users whose lifetime reaches d = total − ending before d:
+    // exclusive prefix sum over the duration axis (two-phase, no window).
+    // The axis is provably small, so a handful of range partitions suffice —
+    // a 32-way shuffle+persist cycle would be pure fixed cost here.
+    val atRisk = Packing.prefixSum(byDur, "duration", "n_ending",
+        Seq("duration"), "ended_before", partitions = 4)
+      .select(col("duration"), col("ended_before"))
+    byDur.join(atRisk, Seq("duration"))
+      .select(col("duration"),
+        (col("n_users") - col("ended_before")).as("n_at_risk"),
+        col("n_events"))
+  }
+
   /** Kaplan-Meier time-to-first-event curve from an event log.
     *
     * An entity's clock starts at its first observed day; the EVENT is its
@@ -42,81 +94,31 @@ object Survival {
     *         would hit zero survivors (n_at_risk = n_events) are excluded
     *         (ln 0); they can only be terminal.
     */
-  /** Shared risk table: one row per distinct duration with at-risk and
-    * event counts — the exact integer state both estimators ([[kaplanMeier]],
-    * [[nelsonAalen]]) read. Same lifetimes/censoring semantics as
-    * documented on kaplanMeier; at-risk via the two-phase prefix sum. */
-  private[ops] def riskTable(events: DataFrame, eventPred: Column,
-      entityCol: String, tsCol: String): DataFrame = {
-    val day: Column = expr(s"unix_micros($tsCol) div 86400000000")
-    val lives = events.select(col(entityCol).as("entity"), day.as("day"),
-        eventPred.as("is_event"))
-      .groupBy(col("entity"))
-      .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"),
-        min(when(col("is_event"), col("day"))).as("event_day"))
-    val stats = lives.agg(count(lit(1)).as("n_users"))
-    val u = lives.crossJoin(broadcast(stats))
-      .select(
-        (coalesce(col("event_day"), col("last_day")) - col("first_day"))
-          .as("duration"),
-        col("event_day").isNotNull.as("hit"),
-        col("n_users"))
-    // One row per distinct duration (≤ observation-window days) — tiny, and
-    // consumed TWICE below (prefix sum + join). Materialize so the per-entity
-    // lifetimes aggregation over the full event log runs exactly once.
-    val byDur = u.groupBy(col("duration"))
-      .agg(count(lit(1)).as("n_ending"),
-        sum(when(col("hit"), 1L).otherwise(0L)).as("n_events"),
-        first(col("n_users")).as("n_users"))
-      .localCheckpoint()
-    // at-risk at d = users whose lifetime reaches d = total − ending before d:
-    // exclusive prefix sum over the duration axis (two-phase, no window).
-    // The axis is provably small, so a handful of range partitions suffice —
-    // a 32-way shuffle+persist cycle would be pure fixed cost here.
-    val atRisk = Packing.packSequences(byDur.select(col("duration"),
-          col("n_ending"), col("n_events"), col("n_users")),
-        "duration", "n_ending", orderCols = Seq("duration"),
-        seqTokens = Long.MaxValue, partitions = 4)
-      .select(col("id").as("duration"), col("start_tok").as("ended_before"))
-    byDur.join(atRisk, Seq("duration"))
-      .select(col("duration"),
-        (col("n_users") - col("ended_before")).as("n_at_risk"),
-        col("n_events"))
-  }
-
   def kaplanMeier(events: DataFrame, eventPred: Column,
       entityCol: String = "user_id", tsCol: String = "ts"): DataFrame = {
-    val km = riskTable(events, eventPred, entityCol, tsCol)
+    // running log-survival: second prefix sum, over the event rows
+    cumulative(riskTable(events, eventPred, entityCol, tsCol)
       .filter(col("n_events") > 0 && col("n_at_risk") > col("n_events"))
       .withColumn("lns_x6", floor(log(
         (col("n_at_risk") - col("n_events")).cast("double") / col("n_at_risk"))
-        * 1e6).cast("long"))
-      // duration-axis-sized and consumed twice (prefix sum + join): pin it
-      .localCheckpoint()
-    // running log-survival: second exclusive prefix sum over event rows
-    Packing.packSequences(km, "duration", "lns_x6",
-        orderCols = Seq("duration"), seqTokens = Long.MaxValue, partitions = 4)
-      .select(col("id").as("duration"),
-        (col("start_tok") + col("n_tokens")).as("cum_lns_x6"))
-      .join(km.select(col("duration"), col("n_at_risk"), col("n_events")),
-        Seq("duration"))
-      .select(col("duration"), col("n_at_risk"), col("n_events"),
-        col("cum_lns_x6"))
+        * 1e6).cast("long")), "lns_x6", "cum_lns_x6")
   }
 
-  /** Nelson–Aalen cumulative hazard H(d) = Σ_{d'≤d} dᵢ/nᵢ — the
-    * estimator actuaries/model-monitoring prefer when hazard INCREMENTS
-    * matter (KM answers "what fraction survives", NA answers "how much
-    * hazard has accumulated"). Fully integer: each term is the BIGINT
-    * division floor(n_events·1e9/n_at_risk) — no transcendental at all,
-    * so unlike KM's quantized ln there is zero ulp exposure — and the
-    * cumulative sum is the same two-phase prefix sum over the duration
-    * axis. Same lifetimes/censoring semantics as [[kaplanMeier]]; no
-    * terminal-duration exclusion (d/n is finite even when everyone
-    * ends: the last increment is exactly 1e9).
-    *
-    * @return (duration, n_at_risk, n_events, cum_h_x9) for durations
-    *         with ≥1 event; H(d) = cum_h_x9 / 1e9 */
+  /** The event durations of a risk-table frame with `out`, the running
+    * sum of its per-duration long `term` through that duration. */
+  private def cumulative(terms: DataFrame, term: String, out: String)
+      : DataFrame = {
+    // duration-axis-sized and read twice (prefix sum + join): pin it so
+    // the risk-table DAG is never re-derived
+    val t = terms.localCheckpoint()
+    Packing.prefixSum(t, "duration", term, Seq("duration"), out,
+        inclusive = true, partitions = 4)
+      .select(col("duration"), col(out))
+      .join(t.select(col("duration"), col("n_at_risk"), col("n_events")),
+        Seq("duration"))
+      .select(col("duration"), col("n_at_risk"), col("n_events"), col(out))
+  }
+
   /** Two-cohort log-rank test (Mantel–Cox): does time-to-first-event
     * differ between cohorts? The hypothesis-test companion to the
     * [[kaplanMeier]]/[[nelsonAalen]] curves: at every event time t the
@@ -148,17 +150,10 @@ object Survival {
     *         χ² = chi2_x6/1e6 */
   def logRank(events: DataFrame, eventPred: Column, cohortPred: Column,
       entityCol: String = "user_id", tsCol: String = "ts"): DataFrame = {
-    val day: Column = expr(s"unix_micros($tsCol) div 86400000000")
-    val lives = events.select(col(entityCol).as("entity"), day.as("day"),
-        eventPred.as("is_event"), cohortPred.as("is_a"))
-      .groupBy(col("entity"))
-      .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"),
-        min(when(col("is_event"), col("day"))).as("event_day"),
-        max(when(col("is_a"), lit("a")).otherwise(lit("b"))).as("cohort"))
-    val u = lives.select(
-      (coalesce(col("event_day"), col("last_day")) - col("first_day"))
-        .as("duration"),
-      col("event_day").isNotNull.as("hit"), col("cohort"))
+    val u = lifetimes(events, eventPred, entityCol, tsCol,
+        Seq(cohortPred.as("is_a")),
+        Seq(max(when(col("is_a"), lit("a")).otherwise(lit("b"))).as("cohort")))
+      .select(durationAndHit :+ col("cohort"): _*)
     // (duration, cohort) axis — ≤ 2·window-days rows, consumed by the
     // grid build AND the cohort totals: one lifetimes pass only.
     val byDurG = u.groupBy(col("duration"), col("cohort"))
@@ -174,12 +169,9 @@ object Survival {
       .join(byDurG, Seq("duration", "cohort"), "left")
       .na.fill(0L, Seq("n_ending", "d_g"))
       .localCheckpoint() // consumed by the prefix sum AND the rejoin
-    val ended = Packing.packSequencesGrouped(
-        grid.withColumn("dur_o", col("duration")), "cohort", "duration",
-        "n_ending", orderCols = Seq("dur_o"), seqTokens = Long.MaxValue,
-        partitions = 4)
-      .select(col("group").as("cohort"), col("id").as("duration"),
-        col("start_tok").as("ended_before"))
+    val ended = Packing.prefixSum(grid, "duration", "n_ending",
+        Seq("duration"), "ended_before", Some("cohort"), partitions = 4)
+      .select(col("cohort"), col("duration"), col("ended_before"))
     val ar = grid.join(ended, Seq("duration", "cohort"))
       .select(col("duration"), col("cohort"), col("d_g"),
         (col("n_g") - col("ended_before")).as("n_r"))
@@ -211,22 +203,25 @@ object Survival {
             * lit(1e6)).cast("long")).as("chi2_x6"))
   }
 
+  /** Nelson–Aalen cumulative hazard H(d) = Σ_{d'≤d} dᵢ/nᵢ — the
+    * estimator actuaries/model-monitoring prefer when hazard INCREMENTS
+    * matter (KM answers "what fraction survives", NA answers "how much
+    * hazard has accumulated"). Fully integer: each term is the BIGINT
+    * division floor(n_events·1e9/n_at_risk) — no transcendental at all,
+    * so unlike KM's quantized ln there is zero ulp exposure — and the
+    * cumulative sum is the same two-phase prefix sum over the duration
+    * axis. Same lifetimes/censoring semantics as [[kaplanMeier]]; no
+    * terminal-duration exclusion (d/n is finite even when everyone
+    * ends: the last increment is exactly 1e9).
+    *
+    * @return (duration, n_at_risk, n_events, cum_h_x9) for durations
+    *         with ≥1 event; H(d) = cum_h_x9 / 1e9 */
   def nelsonAalen(events: DataFrame, eventPred: Column,
       entityCol: String = "user_id", tsCol: String = "ts"): DataFrame = {
-    val na = riskTable(events, eventPred, entityCol, tsCol)
+    cumulative(riskTable(events, eventPred, entityCol, tsCol)
       .filter(col("n_events") > 0)
       .withColumn("h_x9",
-        expr("(n_events * CAST(1000000000 AS BIGINT)) div n_at_risk"))
-      // duration-axis-sized and consumed twice (prefix sum + join): pin it
-      // so the risk-table DAG is never re-derived
-      .localCheckpoint()
-    Packing.packSequences(na, "duration", "h_x9",
-        orderCols = Seq("duration"), seqTokens = Long.MaxValue, partitions = 4)
-      .select(col("id").as("duration"),
-        (col("start_tok") + col("n_tokens")).as("cum_h_x9"))
-      .join(na.select(col("duration"), col("n_at_risk"), col("n_events")),
-        Seq("duration"))
-      .select(col("duration"), col("n_at_risk"), col("n_events"),
-        col("cum_h_x9"))
+        expr("(n_events * CAST(1000000000 AS BIGINT)) div n_at_risk")),
+      "h_x9", "cum_h_x9")
   }
 }

@@ -720,30 +720,37 @@ object TextAnalysis {
       s"bpeTokenIds: base vocabulary exceeds graft.bpe.maxBaseVocab=$cap " +
         "distinct codepoint symbols — not natural text; raise the conf " +
         "if the codepoint diversity is genuinely intended")
-    val symId = new java.util.HashMap[String, Long]()
-    baseSyms.zipWithIndex.foreach { case (s, i) => symId.put(s, i.toLong) }
-    val b = baseSyms.length.toLong
-    mergeList.zipWithIndex.foreach { case ((l, r), i) =>
-      symId.putIfAbsent(l + r, b + i) // first round wins on re-fusions
-    }
+    val ids = symbolIds(baseSyms, mergeList)
     val seg = distinctW.as[String]
-      .mapPartitions { it =>
-        it.map { w =>
-          (w, segmentSymsLocal(w, mergeList).map { s =>
-            val v = symId.get(s)
-            // every symbol is a corpus codepoint or a merge product
-            if (v == null) throw new IllegalStateException(
-              s"bpeTokenIds: symbol '$s' missing from the vocabulary map")
-            v.longValue()
-          }.toSeq)
-        }
-      }.toDF("w", "wids")
+      .mapPartitions(_.map(w => (w, ids(segmentSymsLocal(w, mergeList)))))
+      .toDF("w", "wids")
     words.join(seg, "w")
       .groupBy(col("__id"))
       .agg(flatten(array_sort(collect_list(struct(col("pos"), col("wids"))))
         .getField("wids")).as("ids"))
       .select(col("__id").as(idCol),
         size(col("ids")).cast("long").as("n_tokens"), col("ids"))
+  }
+
+  /** The token-id lookup of a BPE vocabulary: base symbols take ids
+    * 0…b−1 in order, merge products b+i in round order (the first round
+    * wins on re-fusions). Every symbol of a segmented corpus word is a
+    * codepoint or a merge product, so a symbol outside the vocabulary is
+    * a named error, never a silent id. */
+  private[ops] def symbolIds(baseSyms: Array[String],
+      merges: Array[(String, String)]): Array[String] => Seq[Long] = {
+    val symId = new java.util.HashMap[String, java.lang.Long]()
+    baseSyms.zipWithIndex.foreach { case (s, i) => symId.put(s, i.toLong) }
+    val b = baseSyms.length.toLong
+    merges.zipWithIndex.foreach { case ((l, r), i) =>
+      symId.putIfAbsent(l + r, b + i)
+    }
+    syms => syms.map { s =>
+      val v = symId.get(s)
+      if (v == null) throw new IllegalStateException(
+        s"bpeTokenIds: symbol '$s' missing from the vocabulary map")
+      v.longValue()
+    }.toSeq
   }
 
   /** One word through the ordered merge replay: codepoint symbols, then
@@ -825,9 +832,8 @@ object TextAnalysis {
     val spectrum = counts.groupBy(col("n")).agg(count(lit(1)).as("k"))
       .withColumn("__negn", -col("n"))
       .localCheckpoint() // prefix pass + the k join-back both read it
-    val pre = Packing.packSequences(spectrum, "n", "k",
-        orderCols = Seq("__negn"), seqTokens = Long.MaxValue)
-      .select(col("id").as("n"), col("start_tok").as("prefix"))
+    val pre = Packing.prefixSum(spectrum, "n", "k", Seq("__negn"), "prefix")
+      .select(col("n"), col("prefix"))
     val pts = pre.join(spectrum.select(col("n"), col("k")), Seq("n"))
       .select(
         floor(log((col("prefix") * 2 + col("k") + 1).cast("double") / lit(2.0))

@@ -218,7 +218,7 @@ object EventStreams {
       // a timer older than the open session's deadline is stale (the
       // session grew after it was set) — defense in depth on top of the
       // delete-on-extend above
-      if (info.getExpiryTimeInMs >= s.end + gapMs) {
+      if (info.getExpiryTimeInMs() >= s.end + gapMs) {
         open.clear()
         Iterator.single(summary(uid, s))
       } else Iterator.empty

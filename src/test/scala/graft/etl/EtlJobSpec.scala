@@ -112,7 +112,7 @@ class EtlJobSpec extends SparkSpec {
     EtlJob.run(spark, cfg, pubDebug = true)
     val wide = spark.read.option("header", "true").csv(s"$dir/outdbg/debug-public")
     assert(wide.columns.contains("record_id") && wide.columns.contains("visit_date"))
-    val row = wide.filter($"record_id" === "r1").head
+    val row = wide.filter($"record_id" === "r1").head()
     assert(row.getAs[String]("visit_date") == "2021-01-27") // shifted, wide
   }
 

@@ -90,7 +90,7 @@ class SinksSpec extends SparkSpec {
       .map(_.getAbsolutePath).filter(_.endsWith(".parquet")).toSeq
     assert(files.size == 4)
     val ranges = files.map { f =>
-      val r = spark.read.parquet(f).agg(min($"id"), max($"id")).head
+      val r = spark.read.parquet(f).agg(min($"id"), max($"id")).head()
       (r.getLong(0), r.getLong(1))
     }.sortBy(_._1)
     // every file covers a tight range; consecutive ranges never overlap

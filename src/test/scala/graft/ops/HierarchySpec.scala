@@ -28,6 +28,6 @@ class HierarchySpec extends SparkSpec {
     val got = Hierarchy.ancestors(df, "c", "p", maxDepth = 5)
     assert(got.count() == 10) // 2 nodes x 5 depths
     assert(got.agg(org.apache.spark.sql.functions.max("depth"))
-      .head.getInt(0) == 5)
+      .head().getInt(0) == 5)
   }
 }

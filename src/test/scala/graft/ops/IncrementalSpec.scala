@@ -19,7 +19,7 @@ class IncrementalSpec extends SparkSpec {
       Incremental.aggState(delta, Seq("k"), Seq("v")), Seq("k"))
     val direct = Incremental.aggState(df, Seq("k"), Seq("v"))
     assert(merged.exceptAll(direct).isEmpty && direct.exceptAll(merged).isEmpty)
-    assert(merged.filter($"k" === "c").select($"n_rows").as[Long].head == 1L)
+    assert(merged.filter($"k" === "c").select($"n_rows").as[Long].head() == 1L)
   }
 
   test("profile: one row per column, exact stats, ONE scan in the plan") {

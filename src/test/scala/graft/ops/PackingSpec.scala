@@ -39,6 +39,17 @@ class PackingSpec extends SparkSpec {
         .orderBy("id").collect()
       assert(other.sameElements(base))
     }
+    // the statistics family's prefix sum runs the same two-phase plan
+    val sums = Packing.prefixSum(corpus(80), "doc_id", "nt",
+      Seq("fp", "doc_id"), "cum", inclusive = true).orderBy("doc_id").collect()
+    assert(sums.map(r => r.getLong(2) - r.getLong(1)).toSeq ==
+      base.map(_.getAs[Long]("start_tok")).toSeq)
+    for (shape <- Seq(corpus(80).repartition(7), corpus(80).coalesce(1));
+         parts <- Seq(2, 5)) {
+      val other = Packing.prefixSum(shape, "doc_id", "nt", Seq("fp", "doc_id"),
+        "cum", inclusive = true, partitions = parts).orderBy("doc_id").collect()
+      assert(other.sameElements(sums))
+    }
   }
 
   test("packSequences: degenerate partition counts (1, n rows, 2n rows)") {
@@ -79,6 +90,22 @@ class PackingSpec extends SparkSpec {
         .orderBy("id").collect()
       assert(out.sameElements(base), s"partitions=$parts")
     }
+    // grouped prefix sum over a value axis ordered by its own key
+    val byId = Packing.prefixSum(docs, "doc_id", "nt", Seq("doc_id"), "cum",
+      group = Some("grp")).orderBy("doc_id").collect()
+    byId.groupBy(_.getAs[Long]("grp")).values.foreach { rows =>
+      var expect = 0L
+      rows.sortBy(_.getAs[Long]("doc_id")).foreach { r =>
+        assert(r.getAs[Long]("cum") == expect)
+        expect += r.getAs[Long]("nt")
+      }
+    }
+    for (parts <- Seq(1, 7, 60, 120)) {
+      val out = Packing.prefixSum(docs.repartition(5), "doc_id", "nt",
+        Seq("doc_id"), "cum", group = Some("grp"), partitions = parts)
+        .orderBy("doc_id").collect()
+      assert(out.sameElements(byId), s"partitions=$parts")
+    }
   }
 
   test("packSequences: null/zero token docs occupy no tokens but keep a slot") {
@@ -87,6 +114,16 @@ class PackingSpec extends SparkSpec {
     val out = Packing.packSequences(docs, "doc_id", "nt",
       Seq("fp", "doc_id"), seqTokens = 4).orderBy("id").collect()
     assert(out.map(_.getAs[Long]("start_tok")).toSeq == Seq(0L, 5L, 5L))
+    // prefixSum: a NULL value counts 0, exclusive and inclusive alike
+    val nulls = Seq((1L, Some(5L)), (2L, None), (3L, Some(3L)))
+      .toDF("doc_id", "nt")
+    for ((inclusive, expect) <- Seq(false -> Seq(0L, 5L, 5L),
+        true -> Seq(5L, 5L, 8L))) {
+      val sums = Packing.prefixSum(nulls, "doc_id", "nt", Seq("doc_id"), "cum",
+        inclusive = inclusive).orderBy("doc_id").collect()
+      assert(sums.map(_.getAs[Long]("cum")).toSeq == expect)
+      assert(sums.map(_.getAs[Long]("nt")).toSeq == Seq(5L, 0L, 3L))
+    }
   }
 
   test("tokenQuotaSample: per-group budget, overshoot bounded by one doc") {

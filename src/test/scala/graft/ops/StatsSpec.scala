@@ -947,4 +947,49 @@ class StatsSpec extends SparkSpec {
     assert(got(("g1", "b")) == ((1L, 1L, 0L)))
     assert(got(("g2", "a")) == ((1L, 1L, 0L)))
   }
+
+  test("job floor: the contingency, prefix-sum and risk-table family keeps " +
+      "its (build, run) job counts — an eager barrier or an extra prefix " +
+      "pass changes the count without changing any result") {
+    val df = (1 to 24).map(i => (s"g${i % 3}", i.toLong, (i * 7 % 11).toLong,
+        (i % 4 + 1).toLong, i % 2 == 0, s"x${i % 4}", s"y${i % 3}"))
+      .toDF("g", "id", "v", "w", "side", "cx", "cy")
+    val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val ev = (1 to 12).flatMap { u =>
+      Seq((u.toLong, new java.sql.Timestamp(ts0.getTime), "view"),
+        (u.toLong, new java.sql.Timestamp(ts0.getTime + (u % 5 + 1) * 86400000L),
+          if (u % 3 == 0) "view" else "error"))
+    }.toDF("user_id", "ts", "event_type")
+    val isErr = col("event_type") === "error"
+    val got = Map(
+      "mutualInfo" -> jobFloor(Stats.mutualInfo(df, col("cx"), col("cy"), "p")),
+      "cramersV" -> jobFloor(Stats.cramersV(df, col("cx"), col("cy"), "p")),
+      "jsDivergenceDrift" -> jobFloor(Stats.jsDivergenceDrift(df, "g", "cx")),
+      "transitionEntropy" -> jobFloor(
+        Stats.transitionEntropy(df, Seq("g"), col("cx"), col("cy"))),
+      "cohenKappa" -> jobFloor(Stats.cohenKappa(df, col("cx"), col("cy"))),
+      "quantileNormalize" -> jobFloor(
+        Stats.quantileNormalize(df, Seq("g"), "id", col("v"))),
+      "globalQuantileCuts" -> jobFloor(
+        Stats.globalQuantileCuts(df, "id", col("v"), Seq(25, 50, 75))),
+      "weightedQuantiles" -> jobFloor(
+        Stats.weightedQuantiles(df, "g", col("v"), col("w"), Seq(50, 90))),
+      "kruskalWallis" -> jobFloor(Stats.kruskalWallis(df, "g", col("v"))),
+      "brownForsythe" -> jobFloor(Stats.brownForsythe(df, "g", col("v"))),
+      "ksTest2" -> jobFloor(Stats.ksTest2(df, col("side"), col("v"))),
+      "kaplanMeier" -> jobFloor(Survival.kaplanMeier(ev, isErr)),
+      "nelsonAalen" -> jobFloor(Survival.nelsonAalen(ev, isErr)),
+      "logRank" -> jobFloor(
+        Survival.logRank(ev, isErr, col("user_id") % 2 === 0)))
+    // each checkpointed cell frame is one build job; the prefix sums are
+    // their phase-2 totals and checkpoints plus the AQE map stages
+    assert(got == Map(
+      "mutualInfo" -> (2, 8), "cramersV" -> (2, 14),
+      "jsDivergenceDrift" -> (2, 7), "transitionEntropy" -> (2, 4),
+      "cohenKappa" -> (1, 7), "quantileNormalize" -> (7, 6),
+      "globalQuantileCuts" -> (7, 5), "weightedQuantiles" -> (8, 4),
+      "kruskalWallis" -> (10, 13), "brownForsythe" -> (14, 9),
+      "ksTest2" -> (18, 4), "kaplanMeier" -> (20, 2),
+      "nelsonAalen" -> (20, 2), "logRank" -> (16, 7)), got)
+  }
 }

@@ -272,6 +272,14 @@ class TextAnalysisSpec extends SparkSpec {
     } finally spark.conf.unset("graft.dsir.broadcastRatios")
   }
 
+  test("bpeTokenIds: a symbol outside the vocabulary is a named error, " +
+      "not token id 0") {
+    val ids = TextAnalysis.symbolIds(Array("a", "b"), Array(("a", "b")))
+    assert(ids(Array("ab", "a", "b")) == Seq(2L, 0L, 1L))
+    val e = intercept[IllegalStateException](ids(Array("a", "c")))
+    assert(e.getMessage.contains("symbol 'c' missing from the vocabulary map"))
+  }
+
   test("bpeTokenIds: id sequences ≡ independent in-test replay under the " +
       "pinned vocab contract; re-fused strings keep their FIRST id; " +
       "non-BMP codepoints are single base symbols") {

@@ -1557,14 +1557,19 @@ object EntityQueries {
   // co-purchase graph — the cheap community pass for assortment /
   // catalog segmentation. The oracle unrolls the three rounds; its
   // window argmax (count DESC, label ASC) is exactly the operator's
-  // min-over-(−count, label) struct aggregate.
-  private def q244(s: SparkSession, d: String): DataFrame = {
+  // min over the packed (−count, label) ArgmaxPack atom, and exactly the
+  // driver tier's argmax when the graph is small enough to take it.
+  private def q244(s: SparkSession, d: String): DataFrame =
+    Graph.labelPropagation(q244Edges(s, d), rounds = 3, symmetric = true)
+      .orderBy(col("node"))
+
+  /** q244's co-purchase edge frame: both directions of every part pair
+    * sharing an order. */
+  private[operators] def q244Edges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sets = Tables.lineitem(s, d).groupBy($"l_orderkey")
       .agg(collect_set($"l_partkey").as("ps"))
-    val edges = Graph.undirectedEdges(sets, "ps")
-    Graph.labelPropagation(edges, rounds = 3, symmetric = true)
-      .orderBy($"node")
+    Graph.undirectedEdges(sets, "ps")
   }
   private val q244Sql = {
     val rounds = (1 to 3).map { i =>

@@ -707,7 +707,8 @@ object Dedup {
     *
     * Adaptive small-graph path: the edge set here is the LSH *survivor*
     * set — orders of magnitude smaller than the corpus — and when it fits
-    * on the driver (≤ `localSolveMaxEdges`, default 2²⁰ ≈ 16 MB of longs)
+    * on the driver (≤ `localSolveMaxEdges`, default
+    * [[Graph.LocalMaxEdges]] = 2²⁰ ≈ 16 MB of long pairs)
     * a single collect + union-find replaces 3-6 shuffle rounds, the same
     * runtime adaptivity Spark itself applies when AQE converts a shuffle
     * join to broadcast. Distributed min-label propagation remains the path
@@ -717,7 +718,7 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxRounds: Int = 50,
-      localSolveMaxEdges: Long = 1L << 20): DataFrame = {
+      localSolveMaxEdges: Long = Graph.LocalMaxEdges): DataFrame = {
     val idType = pairs.schema(pairs.schema.fieldIndex(aCol)).dataType
     val undirected = pairs
       .select(col(aCol).as("u"), col(bCol).as("v"))

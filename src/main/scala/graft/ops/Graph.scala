@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 /** Iterative graph analytics over edge DataFrames. Companion to the
   * connected-components machinery in [[Dedup]] — same execution shape
@@ -1079,6 +1079,14 @@ object Graph {
     * checkpoint barrier with it. Kept apart from [[moveRounds]]: a plain
     * count argmax with no community totals or modularity score.
     *
+    * Small-graph tier: when the ids are `long`/`int` and the index holds
+    * at most [[LocalMaxEdges]] entries (Σ size(ns), one control-plane
+    * scalar off the checkpoint), the index is collected once and every
+    * round runs on the driver ([[localLabels]]) with the same synchronous
+    * semantics and the same argmax order; the result is a local frame
+    * with the loop's schema and rows. Larger or non-integral graphs run
+    * the distributed loop.
+    *
     * @param edges (src, dst) rows; pass both directions for undirected
     * @param symmetric caller-asserted mirrored edge set: the node set is
     *   the src key set and every node has in-neighbors, so the keep-old
@@ -1086,9 +1094,28 @@ object Graph {
     * @return (node, label) after `rounds` steps
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 3,
-      symmetric: Boolean = false): DataFrame = {
+      symmetric: Boolean = false): DataFrame =
+    labelPropagation(edges, rounds, symmetric, LocalMaxEdges)
+
+  /** Edges up to which a graph kernel collects its input and solves on
+    * the driver instead of running distributed rounds, 2²⁰: index entries
+    * in [[labelPropagation]], undirected pairs in
+    * [[Dedup.connectedComponents]]. */
+  private[ops] val LocalMaxEdges = 1L << 20
+
+  /** [[labelPropagation]] with the tier threshold explicit — specs force
+    * the distributed loop with `localMaxEdges = 0`. */
+  private[ops] def labelPropagation(edges: DataFrame, rounds: Int,
+      symmetric: Boolean, localMaxEdges: Long): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
     val adj = adjacency(edges)
+    val idType = adj.schema("src").dataType
+    val integral = (idType == LongType || idType == IntegerType) &&
+      adj.schema("ns").dataType.asInstanceOf[ArrayType].elementType == idType
+    if (integral && localMaxEdges > 0 && adj // control-plane scalar
+        .agg(coalesce(sum(size(col("ns"))), lit(0L))).head().getLong(0) <=
+        localMaxEdges)
+      return localLabels(adj, rounds, symmetric)
     var lab = nodesOf(adj, symmetric).select(col("node"), col("node").as("label"))
     for (r <- 1 to rounds) {
       val cnt = adj.join(lab.withColumnRenamed("node", "src"), "src")
@@ -1111,6 +1138,76 @@ object Graph {
       if (!symmetric && r < rounds) lab = lab.localCheckpoint(false)
     }
     lab
+  }
+
+  /** [[labelPropagation]]'s rounds on the driver over the collected
+    * index, mirroring the loop step for step: each round every labeled
+    * node sends its previous-round label to each entry of its `ns`; a
+    * node that receives messages adopts the max-count label, ties to the
+    * smallest signed label ([[ArgmaxPack]]'s order). Symmetric: the state
+    * is the src key set, then only the nodes that received a message (the
+    * inner merge). General: the state is every node, sinks included, and
+    * a node with no in-messages keeps its label (the keep-old merge).
+    * Output schema, nullability included, is the loop's. */
+  private def localLabels(adj: DataFrame, rounds: Int,
+      symmetric: Boolean): DataFrame = {
+    val spark = adj.sparkSession
+    import spark.implicits._
+    val rows = adj.select(col("src").cast("long"), col("ns").cast("array<bigint>"))
+      .as[(Long, Array[Long])].collect()
+    val all = (rows.iterator.map(_._1) ++ rows.iterator.flatMap(_._2)).toArray
+    java.util.Arrays.sort(all)
+    val ids = all.distinct // dense index i ↔ id ids(i), ascending
+    def ix(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    val n = ids.length
+    // in-neighbor lists in CSR form: node d's sources are in(off(d) until off(d + 1))
+    val off = new Array[Int](n + 1)
+    rows.foreach(_._2.foreach(v => off(ix(v) + 1) += 1))
+    for (i <- 1 to n) off(i) += off(i - 1)
+    val in = new Array[Int](off(n))
+    val next = off.clone()
+    rows.foreach { case (s, ns) =>
+      val si = ix(s)
+      ns.foreach { v => val d = ix(v); in(next(d)) = si; next(d) += 1 }
+    }
+    var lab = ids.clone()
+    var has = Array.fill(n)(!symmetric)
+    if (symmetric) rows.foreach(r => has(ix(r._1)) = true)
+    val buf = new Array[Long]((0 until n).foldLeft(0)((m, d) =>
+      math.max(m, off(d + 1) - off(d))))
+    for (_ <- 1 to rounds) {
+      val lab2 = new Array[Long](n)
+      val has2 = new Array[Boolean](n)
+      for (d <- 0 until n) {
+        var k = 0
+        for (j <- off(d) until off(d + 1) if has(in(j))) { buf(k) = lab(in(j)); k += 1 }
+        if (k > 0) {
+          // max count, then min label: the first longest run of the sorted labels
+          java.util.Arrays.sort(buf, 0, k)
+          var best = buf(0); var bestC = 0; var i = 0
+          while (i < k) {
+            var j = i
+            while (j < k && buf(j) == buf(i)) j += 1
+            if (j - i > bestC) { best = buf(i); bestC = j - i }
+            i = j
+          }
+          lab2(d) = best; has2(d) = true
+        } else if (!symmetric) { lab2(d) = lab(d); has2(d) = has(d) }
+      }
+      lab = lab2; has = has2
+    }
+    val idType = adj.schema("src").dataType
+    val out = (0 until n).filter(has).map { d =>
+      Row(if (idType == IntegerType) ids(d).toInt else ids(d), lab(d))
+    }
+    // the loop's nullability: node is an exploded `ns` entry (general: or
+    // a src key), the symmetric label an aggregate, the general one a
+    // coalesce over node
+    val entryNull = adj.schema("ns").dataType.asInstanceOf[ArrayType].containsNull
+    val nodeNull = entryNull || !symmetric && adj.schema("src").nullable
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      StructField("node", idType, nodeNull),
+      StructField("label", LongType, symmetric || nodeNull))))
   }
 
   /** Synchronous Louvain-style MODULARITY MOVES, fixed rounds — the

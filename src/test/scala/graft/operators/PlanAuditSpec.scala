@@ -621,12 +621,17 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q244: label propagation argmax is a struct-min AGGREGATE, not a " +
       "per-node window; symmetric rounds chain lazily into one plan") {
-    val p = planOf("q244_label_propagation")
+    // the distributed loop, forced on q244's own edge frame
+    val p = graft.ops.GraphSpec.loopLabelPropagation(
+      EntityQueries.q244Edges(spark, sfDir), 3, true).orderBy("node")
+      .queryExecution.executedPlan.toString
     assert(!p.contains("Window"),
       "the (count, label) argmax must not plan as a window sort")
     val gens = "Generate explode".r.findAllIn(p).length
     assert(gens >= 3, s"expected ≥3 in-task adjacency explodes, found $gens")
     assert(p.contains("Scan ExistingRDD"))
+    // the registered query at test scale: no round left in its plan
+    assert(!planOf("q244_label_propagation").contains("Generate explode"))
   }
 
   test("q245: perceptron confusion readout is one aggregate over the " +

@@ -13,7 +13,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * object hash codes and source line numbers stripped, then the number of
   * Spark jobs run while the query is built and while its rows are
   * collected. Two checkouts' dumps diff cleanly unless a plan or a job
-  * count changed.
+  * count changed. `q244_loop` names q244 forced onto the distributed
+  * label-propagation loop (the registered q244 takes the driver tier on
+  * small graphs).
   *
   * With no query named it prints the scan inventory instead: one
   * `MULTI <query> <table>=<n>,…` line per query that scans a parquet
@@ -40,11 +42,15 @@ object PlanDump {
     val spark = graft.GraftSession.builder("plan-dump", Some("local[4]"))
       .config("spark.sql.shuffle.partitions", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val queries = graft.SparkEntry.queries
+    val queries = graft.SparkEntry.queries ++ Map(
+      "q244_loop" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
+        graft.ops.GraphSpec.loopLabelPropagation(EntityQueries.q244Edges(s, d),
+          3, true).orderBy("node")))
     try {
-      if (names.isEmpty) scanInventory(spark, sfDir, queries)
+      if (names.isEmpty) scanInventory(spark, sfDir, graft.SparkEntry.queries)
       else names.foreach { n =>
-        val key = queries.keys.find(k => k == n || k.startsWith(n + "_"))
+        val key = Some(n).filter(queries.contains)
+          .orElse(graft.SparkEntry.queries.keys.find(_.startsWith(n + "_")))
           .getOrElse(sys.error(s"no registered query $n"))
         var df: org.apache.spark.sql.DataFrame = null
         val built = graft.SparkSpec.jobsIn(spark) { df = queries(key)(spark, sfDir) }

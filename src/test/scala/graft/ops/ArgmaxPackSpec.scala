@@ -66,9 +66,12 @@ class ArgmaxPackSpec extends SparkSpec {
     // triangle nodes see two labels, tie → min)
     val half = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L))
     val edges = (half ++ half.map(_.swap)).toDF("src", "dst")
-    val lpa = Graph.labelPropagation(edges, rounds = 1, symmetric = true)
-      .as[(Long, Long)].collect().toMap
-    assert(lpa == Map(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    // both paths: the driver tier (default) and the forced distributed loop
+    for (lpaDf <- Seq(Graph.labelPropagation(edges, rounds = 1, symmetric = true),
+        GraphSpec.loopLabelPropagation(edges, 1, true))) {
+      val lpa = lpaDf.as[(Long, Long)].collect().toMap
+      assert(lpa == Map(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    }
     val mm = Graph.modularityMoves(edges, rounds = 2)
       .as[(Long, Long)].collect().toMap
     // both communities collapse onto label 1 (hand-checked in GraphSpec's

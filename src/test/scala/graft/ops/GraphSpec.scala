@@ -423,19 +423,88 @@ class GraphSpec extends SparkSpec {
     val edges = clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(10L, 11L, 12L, 13L)) ++
       Seq((4L, 10L), (10L, 4L))
     val df = edges.toDF("src", "dst")
-    val got = Graph.labelPropagation(df, rounds = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(got == localLPA(edges, 3))
-    assert(Seq(1L, 2L, 3L).forall(got(_) == 1L),
-      "the first clique converges to its min label")
-    assert(Seq(11L, 12L, 13L).forall(got(_) == 10L),
-      "the second clique converges to ITS min label, not the global one")
-    val rep = Graph.labelPropagation(df.repartition(9), rounds = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(got == rep)
-    val sym = Graph.labelPropagation(df, rounds = 3, symmetric = true)
-      .as[(Long, Long)].collect().toMap
-    assert(got == sym, "symmetric fast path ≡ general on mirrored input")
+    // both paths: the driver tier (default) and the forced distributed loop
+    for (lpa <- Seq[LpaRun](Graph.labelPropagation(_, _, _),
+        GraphSpec.loopLabelPropagation)) {
+      val got = lpa(df, 3, false).as[(Long, Long)].collect().toMap
+      assert(got == localLPA(edges, 3))
+      assert(Seq(1L, 2L, 3L).forall(got(_) == 1L),
+        "the first clique converges to its min label")
+      assert(Seq(11L, 12L, 13L).forall(got(_) == 10L),
+        "the second clique converges to ITS min label, not the global one")
+      val rep = lpa(df.repartition(9), 3, false).as[(Long, Long)].collect().toMap
+      assert(got == rep)
+      val sym = lpa(df, 3, true).as[(Long, Long)].collect().toMap
+      assert(got == sym, "symmetric fast path ≡ general on mirrored input")
+    }
+  }
+
+  /** A labelPropagation entry point: (edges, rounds, symmetric). */
+  private type LpaRun = (org.apache.spark.sql.DataFrame, Int, Boolean) =>
+    org.apache.spark.sql.DataFrame
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.contains("LocalTableScan")
+
+  test("labelPropagation: the driver tier ≡ the distributed loop — same " +
+      "rows and schema on bridged, disconnected, self-loop, tie-heavy, " +
+      "sink, non-mirrored, negative-id, int-id and empty graphs") {
+    def clique(ids: Seq[Long]) =
+      for (a <- ids; b <- ids if a != b) yield (a, b)
+    def mirrored(es: Seq[(Long, Long)]) = es ++ es.map(_.swap)
+    val long = Seq(
+      "bridged cliques" -> (clique(Seq(1L, 2L, 3L, 4L)) ++
+        clique(Seq(10L, 11L, 12L, 13L)) ++ Seq((4L, 10L), (10L, 4L))),
+      "disconnected" -> (clique(Seq(1L, 2L, 3L)) ++
+        mirrored(Seq((20L, 21L), (21L, 22L), (22L, 23L))) ++ Seq((40L, 41L))),
+      "self-loops" -> Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L), (3L, 3L),
+        (3L, 1L), (4L, 4L)),
+      "tie-heavy star" -> (mirrored((1L to 6L).map(i => (0L, i))) ++
+        mirrored(Seq((1L, 2L), (3L, 4L), (5L, 6L)))),
+      "sink with no in-neighbors" -> Seq((7L, 1L), (1L, 2L), (2L, 1L),
+        (8L, 2L), (2L, 9L)),
+      "non-mirrored" -> Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 3L), (4L, 2L),
+        (6L, 6L)),
+      "negative ids" -> (clique(Seq(-5L, -3L, 2L)) ++ mirrored(Seq(
+        (Long.MinValue, 7L), (Long.MaxValue, 7L), (-1L, 7L), (Long.MinValue, -1L)))))
+    val ints = clique(Seq(1L, 2L, 3L, 9L)).toDF("src", "dst")
+      .select($"src".cast("int").as("src"), $"dst".cast("int").as("dst"))
+    val frames = long.map { case (name, es) => name -> es.toDF("src", "dst") } ++
+      Seq("int ids" -> ints, "empty" -> Seq.empty[(Long, Long)].toDF("src", "dst"))
+    for ((name, df) <- frames; symmetric <- Seq(false, true); rounds <- Seq(1, 3)) {
+      val at = s"$name, symmetric=$symmetric, rounds=$rounds"
+      val tier = Graph.labelPropagation(df, rounds, symmetric)
+      val loop = GraphSpec.loopLabelPropagation(df, rounds, symmetric)
+      assert(isLocal(tier) && !isLocal(loop), at)
+      assert(tier.schema == loop.schema, at)
+      assert(tier.collect().map(_.toString).sorted.toSeq ==
+        loop.collect().map(_.toString).sorted.toSeq, at)
+    }
+    assert(Graph.labelPropagation(ints, 2, false).schema("node").dataType ==
+      org.apache.spark.sql.types.IntegerType, "node keeps the int id type")
+  }
+
+  test("labelPropagation: string ids take the distributed loop") {
+    val df = Seq(("1", "2"), ("2", "1"), ("2", "3"), ("3", "2")).toDF("src", "dst")
+    val got = Graph.labelPropagation(df, rounds = 2)
+    assert(!isLocal(got))
+    assert(got.collect().map(_.toString).sorted.toSeq ==
+      GraphSpec.loopLabelPropagation(df, 2, false).collect().map(_.toString)
+        .sorted.toSeq)
+  }
+
+  test("labelPropagation: graft.graph.maxDegree raises the named cap " +
+      "error on the driver tier too") {
+    val star = (1L to 5L).flatMap(l => Seq((9L, l), (l, 9L))).toDF("src", "dst")
+    spark.conf.set("graft.graph.maxDegree", "3")
+    try {
+      val err = intercept[Exception] {
+        Graph.labelPropagation(star, rounds = 2, symmetric = true).collect()
+      }
+      assert(err.getMessage.contains("graft.graph.maxDegree"), err.getMessage)
+      assert(err.getMessage.contains("node 9"), err.getMessage)
+    } finally spark.conf.unset("graft.graph.maxDegree")
+    assert(isLocal(Graph.labelPropagation(star, rounds = 2, symmetric = true)))
   }
 
   test("degreeAssortativity: mirrored star is exactly -1 (hub meets " +
@@ -859,9 +928,11 @@ class GraphSpec extends SparkSpec {
   test("labelPropagation: a node with no in-neighbors keeps its own label") {
     // 7 → 1 only: node 7 has no inbound edges, must keep label 7
     val df = Seq((7L, 1L)).toDF("src", "dst")
-    val got = Graph.labelPropagation(df, rounds = 2)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(7L -> 7L, 1L -> 7L))
+    for (lpa <- Seq[LpaRun](Graph.labelPropagation(_, _, _),
+        GraphSpec.loopLabelPropagation)) {
+      val got = lpa(df, 2, false).as[(Long, Long)].collect().toMap
+      assert(got == Map(7L -> 7L, 1L -> 7L))
+    }
   }
 
   test("kTruss: K4 is its own 4-truss, pendant edges drop, and peel " +
@@ -1016,6 +1087,8 @@ class GraphSpec extends SparkSpec {
       "betweennessDependencies" -> jobFloor(
         Graph.betweennessDependencies(floorEdges, seeds, rounds = 4)),
       "labelPropagation" -> jobFloor(
+        GraphSpec.loopLabelPropagation(floorEdges, 3, true)),
+      "labelPropagation tier" -> jobFloor(
         Graph.labelPropagation(floorEdges, rounds = 3, symmetric = true)),
       "pageRank" -> jobFloor(
         Graph.pageRank(floorEdges, iterations = 5, symmetric = true)))
@@ -1024,6 +1097,9 @@ class GraphSpec extends SparkSpec {
     assert(got("bfsHops") == (28, 1), got)
     assert(got("bfsPathCounts") == (28, 1), got)
     assert(got("labelPropagation") == (1, 9), got)
+    // the tier: the index build, the Σ size(ns) scalar and the collect
+    // while built; reading the local frame runs no job
+    assert(got("labelPropagation tier") == (4, 0), got)
     assert(got("pageRank") == (3, 8), got)
     // the lazy backward states submit their AQE map stages while the
     // query is built, and one of those jobs races (51 or 52 build jobs,
@@ -1052,4 +1128,12 @@ class GraphSpec extends SparkSpec {
     assert(sampled.size == 6 && !sampled.contains(s))
     assert(sampled == single)
   }
+}
+
+object GraphSpec {
+  /** [[Graph.labelPropagation]] forced onto the distributed loop (tier
+    * threshold 0) — shared with the plan audits outside `graft.ops`. */
+  def loopLabelPropagation(edges: org.apache.spark.sql.DataFrame, rounds: Int,
+      symmetric: Boolean): org.apache.spark.sql.DataFrame =
+    Graph.labelPropagation(edges, rounds, symmetric, 0L)
 }

@@ -25,119 +25,6 @@ object Sinks {
   def csvSingle(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
-  /** ORC columnar sink — the alternate lake format (same pushdown/pruning
-    * behavior as parquet through the v1 FileFormat path). */
-  def orc(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).orc(path)
-
-  /** Data-lake layout sink: hive-partitioned parquet. Partition columns
-    * should be low-cardinality (event/date buckets), or small files
-    * proliferate — the caller picks them; this just wires the layout. */
-  def partitionedParquet(df: DataFrame, path: String, partitionCols: Seq[String],
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
-
-  /** Range-clustered parquet: `repartitionByRange` + in-partition sort on
-    * the cluster keys, so each output file covers a tight, non-overlapping
-    * key range. Parquet row-group min/max statistics then prune whole
-    * files/row-groups for key-range predicates at read time — the poor
-    * man's z-order, and the single highest-leverage layout choice for a
-    * 100 TB lake scanned by key. `files` also fixes the output file count
-    * (compaction: many small inputs → `files` right-sized outputs). */
-  def rangeClusteredParquet(df: DataFrame, path: String, files: Int,
-      clusterCols: Seq[String], mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val keys = clusterCols.map(col)
-    df.repartitionByRange(files, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode(mode).parquet(path)
-  }
-
-  /** Training-shard writer: pack documents into ≈`shardTokens`-token
-    * shards with the deterministic two-phase prefix sum (content-keyed
-    * `orderCols` ⇒ the same corpus always yields the same shards, across
-    * retries, partitionings, and clusters) and lay each shard out as its
-    * own hive partition — the unit a training loader streams, checkpoints,
-    * and resumes by. Per-shard overshoot is bounded by one document (a doc
-    * belongs to the shard its first token lands in).
-    *
-    * Scale: the packing output is a slim (id, shard) frame joined back to
-    * the full rows; `repartitionByRange` on shard keeps each output
-    * directory written by few tasks (shards are contiguous in the range
-    * partitioner) instead of every task appending to every partition. */
-  def tokenShardedParquet(docs: DataFrame, path: String, tokenCol: String,
-      orderCols: Seq[String], shardTokens: Long, idCol: String = "doc_id",
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val shards = graft.ops.Packing
-      .packSequences(docs, idCol, tokenCol, orderCols, shardTokens)
-      .select(col("id").as(idCol), col("seq_id").as("shard"))
-    docs.join(shards, Seq(idCol))
-      .repartitionByRange(col("shard"))
-      .write.mode(mode).partitionBy("shard").parquet(path)
-  }
-
-  /** Bloom-filtered parquet: per-column bloom filters in the file footers,
-    * so point-lookup scans (`key = x`, `key IN (…)`) skip row groups whose
-    * filter proves absence — the data-skipping complement to min/max stats
-    * (which only help when the file is SORTED on the probe column; blooms
-    * prune on high-cardinality columns in any order). This is the native
-    * parquet-mr feature, enabled per column via writer options; Spark's
-    * vectorized reader consumes the filters transparently.
-    *
-    * Use for 100 TB lookup tables probed by equality on non-cluster keys
-    * (the z-order/range sinks own the range-scan case). `fpp`/`ndv` size
-    * the filter per row group.
-    */
-  def bloomFilteredParquet(df: DataFrame, path: String, bloomCols: Seq[String],
-      ndv: Long = 100000L, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    val w = bloomCols.foldLeft(df.write) { (wr, c) =>
-      wr.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
-    }
-    w.mode(mode).parquet(path)
-  }
-
-  /** Z-order (Morton) clustered parquet: multi-dimensional locality, so
-    * file-level min/max statistics prune on ANY clustered dimension — a
-    * lexicographic sort ([[rangeClusteredParquet]]) prunes only on its
-    * leading column.
-    *
-    * Per column, rows map to one of 2^bits rank buckets whose boundaries
-    * come from `approxQuantile` (a sampled sketch — driver cost is
-    * 2^bits doubles per column), so skewed columns still spread evenly.
-    * The bucket codes' bits interleave into a single z-value; range
-    * repartition + in-partition sort on it gives each file a compact
-    * hypercube of the key space. The z-value column is computed with plain
-    * arithmetic/bitwise expressions (codegen), never a UDF, and is dropped
-    * before the write.
-    */
-  def zorderClusteredParquet(df: DataFrame, path: String, files: Int,
-      clusterCols: Seq[String], bits: Int = 4,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    require(clusterCols.size >= 2, "z-order needs >= 2 dims (use rangeClusteredParquet for 1)")
-    require(bits >= 1 && bits * clusterCols.size <= 62, "bits * dims must fit a long")
-    val nBuckets = 1 << bits
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val d = clusterCols.size
-    val buckets = clusterCols.map { c =>
-      val cuts = df.stat.approxQuantile(c, probs, 0.001).distinct.sorted
-      // rank bucket = #cuts below the value; a flat sum of comparisons
-      // (codegen-friendly — no nested CASE ladder). Nulls land in bucket 0.
-      cuts.foldLeft(lit(0)) { (acc, cut) =>
-        acc + when(col(c).cast("double") >= lit(cut), 1).otherwise(0)
-      }.cast("long")
-    }
-    val z = (0 until bits).flatMap { i =>
-      buckets.zipWithIndex.map { case (b, dim) =>
-        shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), i * d + (d - 1 - dim))
-      }
-    }.reduce(_ + _) // disjoint bit positions: + ≡ OR
-    df.withColumn("__zorder", z)
-      .repartitionByRange(files, col("__zorder"))
-      .sortWithinPartitions(col("__zorder"))
-      .drop("__zorder")
-      .write.mode(mode).parquet(path)
-  }
-
   /** Keyed JSON (S15; ipynb cell 13): `{key: {row...}}` per line. Spark map
     * keys cannot be null — a null key (e.g. from an upstream outer join)
     * renders as the literal "null" key instead of aborting the write. */

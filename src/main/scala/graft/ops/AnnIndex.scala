@@ -16,10 +16,9 @@ import org.apache.spark.sql.expressions.Window
   *    kernel pass, writing everything to parquet under `dir`.
   *  - `ivfAdd`/`pqAdd` encode NEW rows against the FROZEN artifact and
   *    append a batch-keyed postings/codes directory — the standard
-  *    train-once-add-many contract (FAISS discipline), and the same
-  *    batch-keyed-overwrite store layout as the streaming signature
-  *    stores (`graft.streaming.DocumentStreams`), so a replayed batch id
-  *    overwrites its own output and ingestion is idempotent.
+  *    train-once-add-many contract (FAISS discipline); each batch id
+  *    owns its output directory, so a replayed batch id overwrites its
+  *    own output and ingestion is idempotent.
   *  - `ivfProbe`/`pqProbe` answer queries from the LOADED artifact with
   *    the exact same integer-cosine math as the one-shot operators —
   *    probe of a loaded index is bit-identical to the fresh operator at
@@ -52,22 +51,16 @@ object AnnIndex {
   /** Train the coarse quantizer on `corpus` (seeded sample + optional
     * Lloyd refinement — [[Similarity.ivfTopK]]'s trainer) and write the
     * index: frozen centroids + the corpus encoded as
-    * `postings/batch_<buildBatchId>`. If the retrained centroids DIFFER
+    * `postings/batch_0`. If the retrained centroids DIFFER
     * from centroids already stored at `dir`, every existing posting was
     * encoded under a superseded quantizer (silently wrong list
     * assignments at nprobe < nlist) — the postings store is purged
     * before writing. A byte-identical retrain (an at-least-once REPLAY
     * of the build batch: same rows, same deterministic trainer) keeps
-    * later batches' postings untouched, so replays stay idempotent.
-    * `buildBatchId` lets a streaming caller whose first delivered batch
-    * id is N > 0 (index dir wiped, checkpoint retained) keep the build
-    * batch replay-idempotent too: the replay routes to [[ivfAdd]](N),
-    * which dynamic-overwrites the same `batch=N` partitions with
-    * identical frozen-quantizer encodes. */
+    * later batches' postings untouched, so replays stay idempotent. */
   def ivfBuild(corpus: DataFrame, dir: String, nlist: Int = 16,
       refineIters: Int = 0, idCol: String = "vec_id",
-      vecCol: String = "embedding", seedHash: String = "xx",
-      buildBatchId: Long = 0L): Unit = {
+      vecCol: String = "embedding", seedHash: String = "xx"): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = lloydRefine(corpus,
@@ -90,15 +83,14 @@ object AnnIndex {
       val post = new org.apache.hadoop.fs.Path(s"$dir/postings")
       if (fs.exists(post)) fs.delete(post, true) // stale-quantizer purge
     }
-    writePostings(corpus, cents, dir, buildBatchId, idCol, vecCol)
+    writePostings(corpus, cents, dir, 0L, idCol, vecCol)
   }
 
   /** Encode NEW rows against the frozen centroids and write them as
     * `postings/batch_<batchId>`: mode-overwrite per batch directory, so a
-    * replayed batch id is idempotent (the DocumentStreams store
-    * discipline). Existing postings are never touched. Ids must be
-    * UNIQUE across batches (the corpus-id contract everywhere in this
-    * engine): a re-ingested id under a NEW batch id duplicates its
+    * replayed batch id is idempotent. Existing postings are never
+    * touched. Ids must be UNIQUE across batches (the corpus-id contract
+    * everywhere in this engine): a re-ingested id under a NEW batch id duplicates its
     * posting and both copies score — dedupe upstream or replay under
     * the original batch id. */
   def ivfAdd(rows: DataFrame, dir: String, batchId: Long,

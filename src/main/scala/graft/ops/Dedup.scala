@@ -601,17 +601,9 @@ object Dedup {
     docs.join(exact(docs, textCol, idCol).select(col("keep_id").as(idCol)),
       Seq(idCol), "left_semi")
 
-  /** Apply near-duplicate pairs to a corpus: drop the higher id of every
-    * pair (greedy canonical-keep — standard near-dedup practice; use
-    * [[connectedComponents]] + keep-min-per-component when exact cluster
-    * canonicalization is required). */
-  def applyPairsDedup(docs: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    docs.join(pairs.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
-
   /** Near-dup resolution keeping the BEST member per cluster: real
     * pipelines keep the highest-quality copy of duplicated content, not
-    * the smallest id ([[applyPairsDedup]]'s greedy convention). Clusters
+    * the smallest id (the greedy drop-the-higher-id convention). Clusters
     * come from [[dedupClusters]] (exact connected components, so chained
     * near-dups collapse to ONE survivor); the winner is
     * argmax(quality, tie → min id); docs in no cluster pass through.
@@ -707,25 +699,29 @@ object Dedup {
     *
     * Adaptive small-graph path: the edge set here is the LSH *survivor*
     * set — orders of magnitude smaller than the corpus — and when it fits
-    * on the driver (≤ `localSolveMaxEdges`, default
-    * [[Graph.LocalMaxEdges]] = 2²⁰ ≈ 16 MB of long pairs)
-    * a single collect + union-find replaces 3-6 shuffle rounds, the same
-    * runtime adaptivity Spark itself applies when AQE converts a shuffle
-    * join to broadcast. Distributed min-label propagation remains the path
-    * for edge sets above the threshold (set it to 0 to force the loop).
+    * on the driver (≤ [[Graph.LocalMaxEdges]] = 2²⁰ undirected pairs,
+    * ≈ 16 MB of long pairs) a single collect + union-find replaces 3-6
+    * shuffle rounds, the same runtime adaptivity Spark itself applies
+    * when AQE converts a shuffle join to broadcast. Distributed min-label
+    * propagation remains the path for edge sets above the threshold.
     *
     * @return (id, component) for every id appearing in `pairs`
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxRounds: Int = 50,
-      localSolveMaxEdges: Long = Graph.LocalMaxEdges): DataFrame = {
+      bCol: String = "id_b", maxRounds: Int = 50): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxRounds, Graph.LocalMaxEdges)
+
+  /** [[connectedComponents]] with the driver-solve threshold explicit —
+    * specs force the distributed loop with `localMaxEdges = 0`. */
+  private[ops] def connectedComponents(pairs: DataFrame, aCol: String,
+      bCol: String, maxRounds: Int, localMaxEdges: Long): DataFrame = {
     val idType = pairs.schema(pairs.schema.fieldIndex(aCol)).dataType
     val undirected = pairs
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .distinct()
       .localCheckpoint()
     val integralIds = idType == LongType || idType == IntegerType
-    if (integralIds && undirected.count() <= localSolveMaxEdges)
+    if (integralIds && undirected.count() <= localMaxEdges)
       return localComponents(undirected, idType)
     val edges = undirected
       .union(undirected.select(col("v").as("u"), col("u").as("v")))

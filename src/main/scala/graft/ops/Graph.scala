@@ -1103,6 +1103,15 @@ object Graph {
     * [[Dedup.connectedComponents]]. */
   private[ops] val LocalMaxEdges = 1L << 20
 
+  /** Σ size(ns) of an index in one narrow job: per-partition sums
+    * collected and added on the driver (0 for an empty index) — a global
+    * aggregate would cost a map stage and a result job. */
+  private def indexEntries(adj: DataFrame): Long = {
+    import adj.sparkSession.implicits._
+    adj.select(size(col("ns")).cast("long")).as[Long]
+      .mapPartitions(it => Iterator.single(it.sum)).collect().sum
+  }
+
   /** [[labelPropagation]] with the tier threshold explicit — specs force
     * the distributed loop with `localMaxEdges = 0`. */
   private[ops] def labelPropagation(edges: DataFrame, rounds: Int,
@@ -1112,9 +1121,7 @@ object Graph {
     val idType = adj.schema("src").dataType
     val integral = (idType == LongType || idType == IntegerType) &&
       adj.schema("ns").dataType.asInstanceOf[ArrayType].elementType == idType
-    if (integral && localMaxEdges > 0 && adj // control-plane scalar
-        .agg(coalesce(sum(size(col("ns"))), lit(0L))).head().getLong(0) <=
-        localMaxEdges)
+    if (integral && localMaxEdges > 0 && indexEntries(adj) <= localMaxEdges)
       return localLabels(adj, rounds, symmetric)
     var lab = nodesOf(adj, symmetric).select(col("node"), col("node").as("label"))
     for (r <- 1 to rounds) {

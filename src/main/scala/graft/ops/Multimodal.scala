@@ -302,58 +302,9 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Plug-in audio codec — the CONTRACT behind the native-decoder seam
-    * (mp3/ogg/aac/…): sniff the container from the payload header, then
-    * decode to interleaved PCM16. Registered codecs are consulted by
-    * EVERY audio kernel ([[decodeAudio]], [[audioEnergyWindows]], raw
-    * [[audioDecode]]) after the built-in JDK WAV parser, so a plugged
-    * codec inherits the full feature surface — stats, energy windows,
-    * the `decoded` flag — with no kernel changes. Implementations must
-    * be Serializable (the registry is consulted inside mapPartitions
-    * closures) and deterministic (the engine's exactness contract:
-    * identical bytes → identical samples on every executor). On a
-    * cluster, register from a static initializer in the deployed jar so
-    * every executor JVM sees the codec. */
-  trait AudioCodec extends Serializable {
-    def name: String
-    /** Cheap header sniff: true iff this codec should attempt decode. */
-    def accepts(bytes: Array[Byte]): Boolean
-    /** Full decode: (sampleRate, channels, interleaved PCM16 samples),
-      * or None when the payload is corrupt despite the sniff. */
-    def decode(bytes: Array[Byte]): Option[(Int, Int, Array[Short])]
-  }
-
-  private val audioCodecs =
-    new java.util.concurrent.CopyOnWriteArrayList[AudioCodec]()
-
-  /** Register a codec (replaces a same-named one). Codecs are tried in
-    * registration order after the JDK WAV parser. */
-  def registerAudioCodec(c: AudioCodec): Unit = {
-    audioCodecs.removeIf(_.name == c.name)
-    audioCodecs.add(c)
-  }
-
-  def unregisterAudioCodec(name: String): Unit =
-    audioCodecs.removeIf(_.name == name)
-
-  /** First registered codec that sniffs AND decodes the payload; a codec
-    * that throws is treated as a miss (the next one gets its turn). */
-  private def pluginDecodePcm16(bytes: Array[Byte])
-      : Option[(Int, Int, Array[Short])] = {
-    val it = audioCodecs.iterator()
-    while (it.hasNext) {
-      val c = it.next()
-      val r =
-        try { if (c.accepts(bytes)) c.decode(bytes) else None }
-        catch { case _: Exception => None }
-      if (r.isDefined) return r
-    }
-    None
-  }
-
   /** STUB audio decode: deterministic pseudo-stats from content bytes —
     * the fallback for payloads [[audioDecode]] cannot read (compressed
-    * codecs with no REGISTERED [[AudioCodec]]; this is that seam). */
+    * codecs; the seam where a native decoder plugs in). */
   def fakeAudioDecode(bytes: Array[Byte]): (Int, Int, Long) = {
     val h = java.util.Arrays.hashCode(bytes)
     (8000 + math.abs(h % 4) * 4000, 1 + math.abs(h % 2),
@@ -365,22 +316,9 @@ object Multimodal {
     * PCM-signed 16-bit WAV; returns (sample_rate, channels, n_frames,
     * amplitude_sum) where amplitude_sum = Σ|sample| over every channel
     * sample — an exact integer content fingerprint, PCM being lossless.
-    * Payloads the JDK can't read are offered to the registered
-    * [[AudioCodec]]s; only then do callers fall back to
-    * [[fakeAudioDecode]], the native-decoder seam. */
+    * Callers fall back to [[fakeAudioDecode]], the native-decoder seam,
+    * for payloads the JDK can't read. */
   def audioDecode(bytes: Array[Byte]): Option[(Int, Int, Long, Long)] =
-    jdkWavDecode(bytes).orElse(
-      pluginDecodePcm16(bytes).map { case (sr, ch, samples) =>
-        var sum = 0L
-        var i = 0
-        while (i < samples.length) {
-          sum += math.abs(samples(i).toLong); i += 1
-        }
-        (sr, ch, (samples.length / ch).toLong, sum)
-      })
-
-  private def jdkWavDecode(bytes: Array[Byte])
-      : Option[(Int, Int, Long, Long)] =
     try {
       val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
         new java.io.ByteArrayInputStream(bytes))
@@ -478,14 +416,10 @@ object Multimodal {
       .toDF(idCol, "win_idx", "n_frames", "energy")
   }
 
-  /** Raw PCM16 sample decode shared by the audio kernels: the JDK WAV
-    * parser first, then the registered [[AudioCodec]]s — (sample_rate,
-    * channels, interleaved samples) or None for unreadable payloads. */
+  /** Raw PCM16 sample decode for the audio kernels via the JDK WAV
+    * parser — (sample_rate, channels, interleaved samples) or None for
+    * unreadable payloads. */
   private def decodePcm16(bytes: Array[Byte])
-      : Option[(Int, Int, Array[Short])] =
-    jdkDecodePcm16(bytes).orElse(pluginDecodePcm16(bytes))
-
-  private def jdkDecodePcm16(bytes: Array[Byte])
       : Option[(Int, Int, Array[Short])] =
     try {
       val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(

@@ -56,8 +56,15 @@ object RecordLinkage {
       .filter(length(col("key")) === keyLen)
       .groupBy(col("key")).agg(sort_array(collect_list(col("id"))).as("ids"))
       .localCheckpoint() // banding + both expansions read it; never recompute
-    // banding over DISTINCT keys: (seg_idx, seg_val, key)
-    val segs = pigeonholeSegments(groups, "key", keyLen, maxDist)
+    // banding over DISTINCT keys: (key, seg_idx, seg_val). A key splits
+    // into maxDist + 1 ceil-length segments, so two keys within Hamming
+    // maxDist share at least one identical segment (pigeonhole: recall 1.0)
+    val nSeg = maxDist + 1
+    val segLen = (keyLen + nSeg - 1) / nSeg
+    val segs = groups.select(col("key"),
+      posexplode(transform(sequence(lit(0), lit(nSeg - 1)),
+        s => substring(col("key"), (s * segLen + 1).cast("int"),
+          lit(segLen)))).as(Seq("seg_idx", "seg_val")))
     val a = segs.select(col("seg_idx"), col("seg_val"), col("key").as("key_a"))
     val b = segs.select(col("seg_idx"), col("seg_val"), col("key").as("key_b"))
     val keyPairs = a.join(b, Seq("seg_idx", "seg_val"))
@@ -83,26 +90,6 @@ object RecordLinkage {
           greatest(size(col("ids")) - col("i") - 1, lit(0)))).as("id_b"))
       .withColumn("dist", lit(0))
     inter.unionByName(intra)
-  }
-
-  /** Pigeonhole segmentation shared by [[hammingKeyJoin]] and the
-    * streaming image-dedup cross-batch store join
-    * (`DocumentStreams.ingestBatchImageDedup`): a length-`keyLen` key
-    * splits into `maxDist + 1` ceil-length segments, so two keys within
-    * Hamming `maxDist` share at least one identical segment — recall 1.0
-    * by construction. The two call sites MUST block identically (a
-    * rounding or count change that diverged them would silently lose
-    * the cross-batch recall guarantee), which is why this lives here
-    * and not inline at either site.
-    * @return (`keyCol`, seg_idx, seg_val) rows, other columns dropped */
-  private[graft] def pigeonholeSegments(df: DataFrame, keyCol: String,
-      keyLen: Int, maxDist: Int): DataFrame = {
-    val nSeg = maxDist + 1
-    val segLen = (keyLen + nSeg - 1) / nSeg
-    df.select(col(keyCol),
-      posexplode(transform(sequence(lit(0), lit(nSeg - 1)),
-        s => substring(col(keyCol), (s * segLen + 1).cast("int"),
-          lit(segLen)))).as(Seq("seg_idx", "seg_val")))
   }
 
   /** Edit-distance-1 vocabulary join via DELETION NEIGHBORHOODS (the

@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Batch sessionization: assign each event a per-user session index by
-  * inactivity gap — the batch counterpart of the streaming
-  * `session_window` path (graft.streaming.EventStreams).
+  * inactivity gap.
   *
   * Plan shape: ONE shuffle on the user key serves both windows (lag and
   * the running sum share the same partitioning and ordering, so Catalyst
@@ -36,18 +35,6 @@ object Sessionize {
     events
       .withColumn("session_idx", sum(isNew).over(run))
   }
-
-  /** Per-session summary: (user, session_idx) → bounds and event count.
-    * One extra aggregation on the already-user-partitioned plane. */
-  def sessions(events: DataFrame, gapSeconds: Long,
-      userCol: String = "user_id", tsCol: String = "ts",
-      tieCol: String = "event_id"): DataFrame =
-    byGap(events, gapSeconds, userCol, tsCol, tieCol)
-      .groupBy(col(userCol), col("session_idx"))
-      .agg(
-        min(col(tsCol)).as("session_start"),
-        max(col(tsCol)).as("session_end"),
-        count(lit(1)).as("n_events"))
 
   /** Top session PATHS: the ordered event-type sequence of each session
     * (truncated to its first `maxLen` steps — the standard cut that keeps

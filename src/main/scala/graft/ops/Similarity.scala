@@ -933,8 +933,8 @@ object Similarity {
 
   /** SemDedup-style semantic deduplication: assign every vector to its
     * max-cosine centroid, then drop near-duplicates WITHIN each cluster
-    * (greedy: the higher id of any pair at cosine ≥ τ, as
-    * [[Dedup.applyPairsDedup]]). Returns the kept corpus as
+    * (greedy: the higher id of any pair at cosine ≥ τ is dropped).
+    * Returns the kept corpus as
     * `(id, cluster_id)`.
     *
     * Clustering turns the O(N²) all-pairs scan into Σ|cluster|² — the

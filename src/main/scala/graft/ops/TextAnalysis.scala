@@ -105,8 +105,7 @@ object TextAnalysis {
     * on its own — the artifact a STREAMING scorer broadcasts
     * ([[graft.streaming.DocumentStreams.importanceScoreStream]]): train
     * the ratios on a batch corpus snapshot, score the firehose
-    * statelessly, retrain + restart to roll a new table (the
-    * perceptron scoreStream discipline). */
+    * statelessly, retrain + restart to roll a new table. */
   def importanceRatios(raw: DataFrame, target: DataFrame,
       textCol: String = "text"): DataFrame =
     importanceRatiosFrom(
@@ -660,8 +659,7 @@ object TextAnalysis {
 
   /** BPE TOKENIZE-TO-IDS — the last step of a real training-data writer
     * (the round-7 verdict's depth item #3): emit each document's token-ID
-    * SEQUENCE under the merge table, ready for
-    * [[graft.etl.Sinks.tokenShardedParquet]] so shards carry actual
+    * SEQUENCE under the merge table, so training shards carry actual
     * token streams, not just counts.
     *
     * Vocabulary contract (deterministic, engine-independent):
@@ -846,10 +844,8 @@ object TextAnalysis {
 
   /** The en-vs-rest language-filter feature vector (integer, exact on any
     * engine): en-stopword hits, other-language stopword hits, token
-    * count, digit count. ONE definition shared by the batch trainer
-    * query (q245) and the streaming scorer
-    * ([[graft.streaming.DocumentStreams.scoreStream]]) so trained
-    * weights apply to bit-identical features in both planes. */
+    * count, digit count — the feature vector of the batch trainer
+    * query (q245). */
   def langFilterFeatures(text: Column): Seq[Column] = Seq(
     stopwordHitCount(text, "en"),
     stopwordHitCount(text, "de") + stopwordHitCount(text, "es") +

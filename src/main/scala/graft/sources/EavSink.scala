@@ -92,39 +92,6 @@ class EavWrite(opts: Map[String, String], schema: StructType)
     * overwrites on the next attempt; without a manifest they are garbage
     * by contract. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-
-  /** Streaming face (`df.writeStream.format("graft-eav")`): identical
-    * envelope protocol, with the EPOCH folded into the chunk id —
-    * `(epoch << 48) | (partition << 32) | seq` — so a replayed micro-batch
-    * re-POSTs byte-identical ids and the idempotent receiver converges
-    * (the same batch-id-keyed contract as EventStreams.writeEnvelopes,
-    * here enforced by the engine's epoch plumbing instead of foreachBatch).
-    * Each epoch commit posts a per-epoch manifest carrying the epoch id. */
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-    new EavStreamingWrite(opts, chunkRows)
-}
-
-class EavStreamingWrite(opts: Map[String, String], chunkRows: Int)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new EavStreamingWriterFactory(opts, chunkRows)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.collect { case m: EavCommitMessage => m }
-    EavSink.poster(opts)(
-      s"""{"chunk_number":0,"manifest":true,"epoch":$epochId,""" +
-        s""""n_chunks":${ms.map(_.nChunks).sum},"n_rows":${ms.map(_.nRows).sum}}""")
-  }
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class EavStreamingWriterFactory(opts: Map[String, String], chunkRows: Int)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new EavDataWriter(partitionId, EavSink.poster(opts), chunkRows,
-      idBase = (epochId << 48) | (partitionId.toLong << 32))
 }
 
 class EavWriterFactory(opts: Map[String, String], chunkRows: Int)
@@ -134,13 +101,12 @@ class EavWriterFactory(opts: Map[String, String], chunkRows: Int)
 }
 
 /** Streams rows into fixed-size envelopes; holds at most one chunk. Chunk
-  * ids key on partitionId — and, in streaming mode, the epoch via
-  * `idBase` — NOT taskId, so a retried task/replayed batch reproduces the
+  * ids key on partitionId, NOT taskId, so a retried task reproduces the
   * identical envelope stream. */
-class EavDataWriter(partitionId: Int, post: String => Unit, chunkRows: Int,
-    idBase: Long = -1L) extends DataWriter[InternalRow] {
+class EavDataWriter(partitionId: Int, post: String => Unit, chunkRows: Int)
+    extends DataWriter[InternalRow] {
   private val buf = new util.ArrayList[String](chunkRows.min(1 << 16))
-  private val base = if (idBase >= 0) idBase else partitionId.toLong << 32
+  private val base = partitionId.toLong << 32
   private var seq = 0L
   private var rows = 0L
 

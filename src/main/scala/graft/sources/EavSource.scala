@@ -137,8 +137,7 @@ class EavTable(props: Map[String, String],
     s"graft-eav(${props.get("url").orElse(props.get("path")).getOrElse("?")})"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE)
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -146,11 +145,10 @@ class EavTable(props: Map[String, String],
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new EavScanBuilder(
       EavTransport.fromOptions(options.asScala.toMap),
-      Option(options.get("chunk_size")).map(_.toInt).getOrElse(100),
-      Option(options.get("max_chunks_per_trigger")).map(_.toInt).getOrElse(-1))
+      Option(options.get("chunk_size")).map(_.toInt).getOrElse(100))
 }
 
-class EavScanBuilder(transport: EavTransport, chunkSize: Int, maxChunksPerTrigger: Int = -1) extends ScanBuilder
+class EavScanBuilder(transport: EavTransport, chunkSize: Int) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownTopN
     with SupportsPushDownAggregates with SupportsPushDownTableSample {
@@ -258,8 +256,7 @@ class EavScanBuilder(transport: EavTransport, chunkSize: Int, maxChunksPerTrigge
   override def build(): Scan =
     if (aggregationPushed)
       new EavAggScan(transport, chunkSize, pushed, aggGroupBy, aggFuncs, sample)
-    else new EavScan(transport, chunkSize, required, pushed, limit, topN,
-      maxChunksPerTrigger, sample)
+    else new EavScan(transport, chunkSize, required, pushed, limit, topN, sample)
 }
 
 final case class EavChunk(recordIds: Array[String]) extends InputPartition
@@ -267,7 +264,6 @@ final case class EavChunk(recordIds: Array[String]) extends InputPartition
 class EavScan(transport: EavTransport, chunkSize: Int, required: StructType,
     pushed: Array[Filter], limit: Int = -1,
     topN: Array[(Int, Boolean)] = Array.empty,
-    maxChunksPerTrigger: Int = -1,
     sample: Option[(Double, Double, Long)] = None)
     extends Scan with Batch with SupportsRuntimeFiltering
     with SupportsReportStatistics {
@@ -306,9 +302,6 @@ class EavScan(transport: EavTransport, chunkSize: Int, required: StructType,
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new EavMicroBatchStream(transport, chunkSize, required, pushed, maxChunksPerTrigger)
   override def description(): String =
     s"graft-eav PushedFilters: ${pushed.mkString("[", ", ", "]")}, " +
       s"PushedLimit: ${if (limit >= 0) limit else "none"}, " +
@@ -328,73 +321,7 @@ class EavScan(transport: EavTransport, chunkSize: Int, required: StructType,
     EavSource.chunks(ids, chunkSize)
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new EavReaderFactory(transport, required, pushed, limit, topN, sample, columnar = true)
-}
-
-/** Stream position: number of record-id chunks fully processed. */
-final case class EavOffset(chunks: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = chunks.toString
-}
-
-/** Micro-batch face of the connector: the reference's chunked extraction
-  * loop (redcap-etl.py:99-128) as a Structured Streaming source. The
-  * offset is "record-id chunks processed"; each trigger extracts the next
-  * span of chunks, so an ETL run becomes an incremental, checkpointed,
-  * resumable stream instead of one monolithic batch — and a GROWING id
-  * universe (new participants appended) is picked up by later triggers.
-  *
-  * Offset-stability contract (the Kafka-style invariant): the id universe
-  * must grow append-only in chunk order — ids that would sort into
-  * already-processed chunks are NOT re-extracted (same as any offset-based
-  * source; a late-arriving historical id is a reprocessing event, handled
-  * upstream). `max_chunks_per_trigger` rate-limits via admission control —
-  * restart-safe because the limited latestOffset is computed from the
-  * checkpointed start offset, not connector state. */
-class EavMicroBatchStream(transport: EavTransport, chunkSize: Int, required: StructType,
-    pushed: Array[Filter], maxChunksPerTrigger: Int)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => V2Offset, ReadLimit}
-
-  private def allChunks(): Array[InputPartition] =
-    EavSource.chunks(transport.recordIds(), chunkSize)
-
-  override def initialOffset(): V2Offset = EavOffset(0L)
-  override def deserializeOffset(json: String): V2Offset = EavOffset(json.toLong)
-  override def commit(end: V2Offset): Unit = () // no source-side bookkeeping
-
-  override def getDefaultReadLimit: ReadLimit =
-    // interpreted as CHUNKS by this source (the Kafka pattern: rate-limit
-    // options are source-defined and resolved in latestOffset)
-    if (maxChunksPerTrigger > 0) ReadLimit.maxRows(maxChunksPerTrigger.toLong)
-    else ReadLimit.allAvailable()
-
-  override def latestOffset(): V2Offset =
-    throw new UnsupportedOperationException(
-      "admission-control source: use latestOffset(start, limit)")
-
-  override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = {
-    val total = allChunks().length.toLong
-    val s = start.asInstanceOf[EavOffset].chunks
-    val cap = limit match {
-      case _ if maxChunksPerTrigger > 0 => math.min(total, s + maxChunksPerTrigger)
-      case _ => total
-    }
-    EavOffset(math.max(s, cap))
-  }
-
-  override def planInputPartitions(start: V2Offset, end: V2Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[EavOffset].chunks.toInt
-    val e = end.asInstanceOf[EavOffset].chunks.toInt
-    if (e <= s) Array.empty
-    else allChunks().slice(s, e)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EavReaderFactory(transport, required, pushed)
-
-  override def stop(): Unit = ()
+    new EavReaderFactory(transport, required, pushed, limit, topN, sample)
 }
 
 /** Scan with a pushed (partial) aggregation: one output row per group per
@@ -488,19 +415,17 @@ class EavAggPartitionReader(transport: EavTransport, chunk: EavChunk,
 }
 
 class EavReaderFactory(transport: EavTransport, required: StructType,
-    pushed: Array[Filter], limit: Int = -1,
-    topN: Array[(Int, Boolean)] = Array.empty,
-    sample: Option[(Double, Double, Long)] = None,
-    columnar: Boolean = false) extends PartitionReaderFactory {
+    pushed: Array[Filter], limit: Int, topN: Array[(Int, Boolean)],
+    sample: Option[(Double, Double, Long)]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new EavPartitionReader(transport, partition.asInstanceOf[EavChunk], required,
       pushed, limit, topN, sample)
 
   /** Vectorized path for plain scans (filters/sample/pruning still apply
     * inside the fetch). Limit/top-n scans stay row-based — their early
-    * termination doesn't batch well — as does the streaming face. */
+    * termination doesn't batch well. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && topN.isEmpty && limit < 0
+    topN.isEmpty && limit < 0
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new EavColumnarPartitionReader(transport, partition.asInstanceOf[EavChunk],

@@ -11,10 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * at the join site, where the size knowledge lives.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -30,26 +26,12 @@ object Tables {
     * `spark.sql.legacy.parquet.nanosAsLong=true` it arrives as LongType nanos.
     * Expose both: `ts_ns` (exact, for ordering/arithmetic — matches DuckDB
     * `epoch_ns(ts)`) and `ts` (µs-truncated TimestampType for date functions,
-    * windows, streaming). Integer `div`, never double division: nanos ≈ 1.7e18
+    * windows). Integer `div`, never double division: nanos ≈ 1.7e18
     * exceeds a double's 53-bit mantissa.
     */
-  def events(s: SparkSession, d: String): DataFrame =
-    normalizeEvents(load(s, d, "events"))
-
-  /** The same events table as an unbounded stream (file source). The
-    * parquet "file" is a single file, and the streaming file source wants a
-    * directory — glob-filter the parent. Schema comes from a batch peek
-    * (streaming sources can't infer). */
-  def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val rawSchema = load(s, d, "events").schema
-    normalizeEvents(
-      s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d))
-  }
-
-  private def normalizeEvents(raw: DataFrame): DataFrame = {
+  def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
+    val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS) via nanosAsLong
         raw.withColumnRenamed("ts", "ts_ns")
@@ -66,22 +48,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register every test table as a temp view (events through the same
-    * ts/ts_ns normalization as [[events]]), plus the EAV connector as
-    * `eav` when `eavPath` is given — so the whole engine is drivable from
-    * pure SQL: `spark.sql("SELECT … FROM lineitem JOIN orders …")`.
-    * Temp views are metadata-only: each query still plans straight against
-    * the parquet scan (pruning/pushdown intact), nothing is materialized.
-    */
-  def registerAll(s: SparkSession, d: String, eavPath: Option[String] = None): Unit = {
-    all.foreach {
-      case "events" => events(s, d).createOrReplaceTempView("events")
-      case t => load(s, d, t).createOrReplaceTempView(t)
-    }
-    eavPath.foreach { p =>
-      s.read.format("graft-eav").option("path", p).load()
-        .createOrReplaceTempView("eav")
-    }
-  }
 }

@@ -2,19 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** Structured Streaming surface (SURVEY.md §2.10 EXT): the reference is
-  * strictly batch (its chunked HTTP loop is pagination, not streaming), so
-  * this module is the streaming re-expression of the same aggregation/dedup
-  * semantics over the `events` table shape:
+/** Stream faces of batch operators over the `events` table shape
   * (event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,
-  *  value DOUBLE, props STRING).
-  *
-  * Everything here takes a (possibly streaming) DataFrame and returns a
-  * transformed streaming DataFrame — plan-to-plan, identical to the batch
-  * operators; watermarks bound state so the plans run forever on unbounded
-  * input without unbounded executor memory.
+  * value DOUBLE, props STRING). The reference is strictly batch (its
+  * chunked HTTP loop is pagination, not streaming); each face here is
+  * pinned by EventStreamsSpec to the batch operator a registered query
+  * calls, on the same rows across micro-batch boundaries. Watermarks bound
+  * state so the plans run on unbounded input without unbounded executor
+  * memory.
   */
 object EventStreams {
 
@@ -29,213 +26,8 @@ object EventStreams {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
       .select(col("window.start").as("w_start"), col("event_type"), col("n"), col("sum_value"))
 
-  /** Sliding-window event rate per user. */
-  def slidingRate(events: DataFrame, windowLen: String = "10 minutes",
-      slide: String = "5 minutes", watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("user_id"), col("n"))
-
-  /** Session windows: activity bursts per user separated by ≥gap idle. */
-  def sessionCounts(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .select(col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"), col("user_id"), col("n"), col("sum_value"))
-
-  /** Streaming dedup by event_id with watermark-bounded state — the
-    * streaming form of the reference's first-seen-record dedup (A1). */
-  def dedupWithinWatermark(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-static enrichment join: the streaming fact side joins a batch
-    * dimension (broadcast per micro-batch) — the streaming form of the
-    * reference's field-map lookup. */
-  def enrichWithDimension(events: DataFrame, dim: DataFrame,
-      eventKey: String, dimKey: String): DataFrame =
-    events.join(broadcast(dim), col(eventKey) === col(dimKey), "left")
-
-  /** Stream-stream join: each click joined to the same user's purchases
-    * within [0, window] after it. Both sides watermarked so join state is
-    * evictable — unbounded state is the failure mode of naive
-    * stream-stream joins. */
-  def clickToPurchase(events: DataFrame, window: String = "30 minutes",
-      watermark: String = "30 minutes"): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermark)
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("value").as("amount"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermark)
-    clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr(s"INTERVAL $window"))
-      .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"), col("amount"))
-  }
-
-  // ---- custom state: per-user running aggregates via mapGroupsWithState
-
-  final case class UserEvent(event_id: Long, user_id: Long, event_type: String, value: Double)
-  final case class UserStats(user_id: Long, n_events: Long, total_value: Double, n_errors: Long)
-
-  /** Per-user running stats with explicit state — the
-    * `KeyValueGroupedDataset.mapGroupsWithState` path for semantics window
-    * aggregation can't express (cross-window running totals, custom
-    * eviction). NoTimeout here; production deployments bound state with an
-    * event-time timeout + watermark. */
-  def userStats(events: Dataset[UserEvent]): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[UserStats, UserStats](GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[UserEvent], state: GroupState[UserStats]) =>
-          val prev = state.getOption.getOrElse(UserStats(uid, 0L, 0.0, 0L))
-          val next = rows.foldLeft(prev) { (s, e) =>
-            UserStats(uid, s.n_events + 1,
-              // cents-exact accumulation, same contract as the batch side
-              (math.rint(s.total_value * 100) + math.rint(e.value * 100)) / 100,
-              s.n_errors + (if (e.event_type == "error") 1 else 0))
-          }
-          state.update(next)
-          next
-      }
-  }
-
   final case class TimedEvent(event_id: Long, user_id: Long, event_type: String,
       value: Double, ts: java.sql.Timestamp)
-  final case class SessionSummary(user_id: Long, n_events: Long,
-      start: java.sql.Timestamp, end: java.sql.Timestamp)
-
-  /** Completed-session emission via flatMapGroupsWithState: rows accumulate
-    * per user, and a session is EMITTED (0..n output rows per invocation —
-    * the 1→N shape mapGroupsWithState can't express) when either the
-    * event-time timeout fires after `gapMs` of silence, OR newly-arrived
-    * events are themselves ≥ gap away from the open session (the timeout
-    * alone would silently MERGE across a gap whenever the watermark hadn't
-    * crossed the deadline before the next batch for that key). State is
-    * bounded by the watermark + timeout. */
-  def sessionSummaries(events: Dataset[TimedEvent], gapMs: Long = 30 * 60 * 1000L): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long, Long, Long), SessionSummary](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[TimedEvent], state: GroupState[(Long, Long, Long, Long)]) =>
-          def summary(s: (Long, Long, Long, Long)) =
-            SessionSummary(uid, s._1, new java.sql.Timestamp(s._2), new java.sql.Timestamp(s._3))
-          if (state.hasTimedOut) {
-            val done = summary(state.get)
-            state.remove()
-            Iterator.single(done)
-          } else {
-            val ts = rows.map(_.ts.getTime).toSeq.sorted
-            // fold sorted timestamps into (n, start, end) runs split on gaps,
-            // seeded with the open session from state
-            val seed = state.getOption.toList
-            val runs = ts.foldLeft(seed) { (acc, t) =>
-              acc match {
-                case (n, s, e, _) :: rest if t - e < gapMs =>
-                  // min(s, t): a late-but-admitted event can precede the
-                  // open session's current start
-                  (n + 1, math.min(s, t), math.max(e, t), 0L) :: rest
-                case _ => (1L, t, t, 0L) :: acc
-              }
-            }
-            val (open :: completed) = runs: @unchecked
-            state.update(open)
-            state.setTimeoutTimestamp(open._3 + gapMs)
-            completed.reverseIterator.map(summary)
-          }
-      }
-  }
-
-  /** Open-session state for [[SessionProcessor]] (top-level-nested so the
-    * product encoder needs no outer instance). */
-  final case class OpenSession(n: Long, start: Long, end: Long)
-
-  /** [[sessionSummaries]] re-expressed on `transformWithState` — Spark 4's
-    * arbitrary-state API (typed state variables + explicit timers instead
-    * of one opaque state blob + a single implicit timeout). Same semantics,
-    * pinned by the spec: in-batch gap splits fold exactly like the
-    * flatMapGroupsWithState version; silence is closed by an event-time
-    * TIMER that is REPLACED whenever new events extend the open session
-    * (delete-then-register — registerTimer alone accumulates timers, and a
-    * stale one would close a session that has since grown).
-    *
-    * Requires the RocksDB state-store provider (the API refuses the HDFS
-    * store) — start queries under [[StateStores.withRocksDB]]; that is the
-    * at-scale configuration anyway. */
-  final class SessionProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, TimedEvent, SessionSummary] {
-    @transient private var open: ValueState[OpenSession] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState[OpenSession]("open",
-        org.apache.spark.sql.Encoders.product[OpenSession], TTLConfig.NONE)
-
-    private def summary(uid: Long, s: OpenSession) = SessionSummary(
-      uid, s.n, new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.end))
-
-    override def handleInputRows(uid: Long, rows: Iterator[TimedEvent],
-        tv: TimerValues): Iterator[SessionSummary] = {
-      val ts = rows.map(_.ts.getTime).toSeq.sorted
-      if (ts.isEmpty) return Iterator.empty
-      val seed = if (open.exists()) List(open.get()) else Nil
-      val runs = ts.foldLeft(seed) { (acc, t) =>
-        acc match {
-          case OpenSession(n, s, e) :: rest if t - e < gapMs =>
-            // min(s, t): a late-but-admitted event can precede the open
-            // session's current start
-            OpenSession(n + 1, math.min(s, t), math.max(e, t)) :: rest
-          case _ => OpenSession(1L, t, t) :: acc
-        }
-      }
-      val (openRun :: completed) = runs: @unchecked
-      seed.foreach { prior => // replace, don't accumulate, the close timer
-        if (prior.end != openRun.end) getHandle.deleteTimer(prior.end + gapMs)
-      }
-      if (seed.isEmpty || seed.head.end != openRun.end)
-        getHandle.registerTimer(openRun.end + gapMs)
-      open.update(openRun)
-      completed.reverseIterator.map(summary(uid, _))
-    }
-
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[SessionSummary] = {
-      if (!open.exists()) return Iterator.empty
-      val s = open.get()
-      // a timer older than the open session's deadline is stale (the
-      // session grew after it was set) — defense in depth on top of the
-      // delete-on-extend above
-      if (info.getExpiryTimeInMs() >= s.end + gapMs) {
-        open.clear()
-        Iterator.single(summary(uid, s))
-      } else Iterator.empty
-    }
-  }
-
-  /** [[sessionSummaries]] via [[SessionProcessor]]. */
-  def sessionSummariesTws(events: Dataset[TimedEvent],
-      gapMs: Long = 30 * 60 * 1000L): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
   final case class RateLimited(event_id: Long, user_id: Long,
       win_start: Long, rn: Int)
   final case class KeptBuffer(entries: Seq[(Long, Long)]) // (ts_us, event_id)
@@ -417,17 +209,6 @@ object EventStreams {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Envelope sink for streams (the reference's transmit path under
-    * `foreachBatch`, SURVEY §2.10): each micro-batch is chunked into JSON
-    * envelopes and appended under its batch id — idempotent on micro-batch
-    * replay (same batch id → same directory overwritten). */
-  def writeEnvelopes(stream: DataFrame, path: String,
-      chunkRows: Int = 50000): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      graft.etl.Sinks.envelopes(batch, chunkRows)
-        .write.mode("overwrite").text(s"$path/batch_$batchId")
-    }
-
   /** Streaming CDC apply — the streaming face of
     * `ops/Temporal.cdcCompact`: an insert/update/delete changelog compacts
     * to the current snapshot as a stateful latest-per-key aggregation
@@ -469,87 +250,6 @@ object EventStreams {
         sum(when(!col("__a"), 1L).otherwise(0L)).as("n_b"),
         sum(when(!col("__a") && col("__s"), 1L).otherwise(0L)).as("x_b")))
 
-  /** Streaming sample-ratio-mismatch guardrail face (the q232 batch
-    * statistic as a monitoring stream): per event-time window, count
-    * FIRST-SEEN users and how many landed in cohort A. Two chained
-    * stateful operators — watermarked dedup then a window aggregate —
-    * both with evictable state, so the plan runs forever; the cumulative
-    * readout ([[srmFromCounts]]) is one batch aggregate over the emitted
-    * window counts applying the identical exact-integer (n_a−n_b)²·10⁹/n
-    * statistic. Cohort assignment must be a deterministic function of
-    * the user (the A/B contract), so a user re-seen past the watermark
-    * re-counts in the SAME cohort: window counts inflate symmetrically
-    * and the mismatch signal stays directionally honest — the exact
-    * user-grain number is the batch operator's job.
-    *
-    * @param cohortA boolean column: user belongs to cohort A (else B) */
-  def srmWindowCounts(events: DataFrame, cohortA: Column,
-      windowLen: String = "10 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("user_id")
-      .groupBy(window(col("ts"), windowLen))
-      .agg(count(lit(1)).as("n_new_users"),
-        sum(when(cohortA, 1L).otherwise(0L)).as("n_a"))
-      .select(col("window.start").as("w_start"),
-        col("n_new_users"), col("n_a"))
-
-  /** Cumulative SRM readout over [[srmWindowCounts]] output — the same
-    * collapsed χ² vs a 50/50 split as the batch q232 statistic. The
-    * ·10⁹ quantization is a fixed double tree, NOT a long product: this
-    * readout sums every window ever emitted, and d²·10⁹ in long
-    * overflows at a cumulative imbalance of only ~96k users — i.e. the
-    * monitor would throw (ANSI) exactly when the mismatch it watches
-    * for becomes large. */
-  def srmFromCounts(counts: DataFrame): DataFrame =
-    counts
-      .agg(sum(col("n_new_users")).as("n_users"), sum(col("n_a")).as("n_a"))
-      .withColumn("n_b", col("n_users") - col("n_a"))
-      .withColumn("srm_x9",
-        when(col("n_users") > 0L,
-          floor((col("n_a") - col("n_b")).cast("double")
-            * (col("n_a") - col("n_b")).cast("double")
-            / col("n_users").cast("double") * lit(1e9)).cast("long")))
-
-  /** Streaming PSI drift face (the q187 batch statistic as a monitoring
-    * stream): bin live values against REFERENCE decile cuts — a 1-row
-    * broadcast batch frame of 9 cut values, so binning is stateless —
-    * and keep per-bin live counts as the one streaming aggregation
-    * (state: ≤10 fixed-width rows, bounded by the bin axis, not
-    * throughput; update/complete output). [[psiFromCounts]] then applies
-    * the identical quantized (p−q)·ln(p/q) tree against the reference
-    * bin counts. */
-  def psiBinCounts(stream: DataFrame, valueQ: Column,
-      cuts: DataFrame): DataFrame = {
-    val bin = (10 to 90 by 10).map(p =>
-      when(valueQ > col(s"p$p"), 1L).otherwise(0L)).reduce(_ + _)
-    stream.crossJoin(broadcast(cuts))
-      .select(bin.as("bin"))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n_cmp"))
-  }
-
-  /** PSI readout: join the live bin counts to the reference bin counts
-    * and emit per-bin quantized PSI terms — the identical fixed double
-    * tree as the batch population-stability query, so stream ≡ batch is
-    * spec-checkable term by term. Bins present on only one side carry a
-    * NULL term (the batch convention: a vanished/new bin is an alert of
-    * its own, not a number). */
-  def psiFromCounts(live: DataFrame, ref: DataFrame): DataFrame = {
-    val binned = ref.join(live, Seq("bin"), "full_outer")
-      .select(col("bin"), coalesce(col("n_ref"), lit(0L)).as("n_ref"),
-        coalesce(col("n_cmp"), lit(0L)).as("n_cmp"))
-    val tot = binned.agg(sum(col("n_ref")).as("tr"), sum(col("n_cmp")).as("tc"))
-    val pa = col("n_ref").cast("double") / col("tr").cast("double")
-    val pb = col("n_cmp").cast("double") / col("tc").cast("double")
-    binned.crossJoin(broadcast(tot))
-      .select(col("bin"), col("n_ref"), col("n_cmp"),
-        when(col("n_ref") > 0L && col("n_cmp") > 0L,
-          floor(((pa - pb) * log(pa / pb)) * lit(1e9)).cast("long"))
-          .as("psi_term_x9"))
-  }
-
   /** Streaming materialized-view refresh: each micro-batch aggregates to
     * its mergeable state (`ops/Incremental.aggState`) and merges into a
     * parquet state table via `foreachBatch` — the production shape of
@@ -558,9 +258,8 @@ object EventStreams {
     *
     * Replay safety: the merge is NOT idempotent (re-merging a replayed
     * batch double-counts), so the state directory is versioned by batch id
-    * and a replayed id overwrites its own version — the same
-    * batch-id-keyed idempotence contract as [[writeEnvelopes]] and the
-    * near-dup signature store. Read the view with [[readAggView]].
+    * and a replayed id overwrites its own version. Read the view with
+    * [[readAggView]].
     *
     * State paths resolve through the Hadoop FileSystem API (not
     * java.io.File), so the view lives wherever the checkpoint does — local

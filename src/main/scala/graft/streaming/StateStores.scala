@@ -2,50 +2,35 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 
-/** State-store configuration surface for large-state streaming queries.
-  *
-  * The default HDFS-backed state store keeps every version of the state
-  * map ON HEAP per executor — fine for windowed counters, fatal for the
-  * corpus-scale state this engine's streaming ops carry (the exact-dedup
-  * fingerprint ledger and near-dup signature store grow with DISTINCT
-  * corpus size; at 100 TB that is billions of keys). RocksDB keeps state
-  * off-heap on local SSD with incremental checkpointing; changelog
+/** State-store configuration for the `transformWithState` faces
+  * ([[EventStreams.rateLimitStream]], [[EventStreams.asofEnrichStream]]),
+  * which refuse the default HDFS-backed store. RocksDB keeps state
+  * off-heap on local disk with incremental checkpointing; changelog
   * checkpointing uploads per-batch deltas instead of full SST snapshots,
-  * making commit time independent of total state size.
-  *
-  * These are ordinary Spark confs — surfaced here (rather than scattered
-  * in call sites) so every streaming entry point opts in the same way,
-  * and so the spec can pin that the queries actually run under RocksDB.
+  * so commit time does not grow with total state size.
   */
 object StateStores {
 
   val RocksDBProviderClass =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** The 100 TB configuration: RocksDB provider, per-batch changelog
-    * checkpointing, one shared bounded block-cache/write-buffer budget
-    * across all state-store instances on an executor (without it each
-    * operator×partition instance sizes its own cache — unbounded in
-    * aggregate exactly when state is largest). */
-  def rocksDbConf(
-      changelogCheckpointing: Boolean = true,
-      boundedMemory: Boolean = true): Map[String, String] = Map(
+  /** RocksDB provider, per-batch changelog checkpointing, and one shared
+    * bounded block-cache/write-buffer budget across all state-store
+    * instances on an executor (without it each operator×partition
+    * instance sizes its own cache). */
+  private val rocksDbConf = Map(
     "spark.sql.streaming.stateStore.providerClass" -> RocksDBProviderClass,
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      changelogCheckpointing.toString,
-    "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" ->
-      boundedMemory.toString)
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true")
 
   /** Run `body` with the RocksDB state-store confs set on `spark`,
     * restoring prior values after. Streaming queries STARTED inside pick
     * up the provider for their whole lifetime (the provider is resolved at
     * query start and pinned in the checkpoint); queries started before are
     * untouched. */
-  def withRocksDB[T](spark: SparkSession,
-      extra: Map[String, String] = Map.empty)(body: => T): T = {
-    val confs = rocksDbConf() ++ extra
-    val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+  def withRocksDB[T](spark: SparkSession)(body: => T): T = {
+    val prior = rocksDbConf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    rocksDbConf.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prior.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -81,6 +81,29 @@ class AnnIndexSpec extends SparkSpec {
       nprobe = 16)) == brute)
   }
 
+  test("IVF rebuild: replayed build keeps later postings, new centroids purge them") {
+    val dir = tmp("ivfrebuild")
+    val b0 = emb.filter($"vec_id" % 3 === 0)
+    val b1 = emb.filter($"vec_id" % 3 === 1)
+    val b2 = emb.filter($"vec_id" % 3 === 2)
+    AnnIndex.ivfBuild(b0, dir, nlist = 16, seedHash = "md5")
+    AnnIndex.ivfAdd(b1, dir, batchId = 1L)
+    val both = rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10, nprobe = 16))
+    assert(both == rows(Similarity.bruteForceTopK(b0.unionByName(b1), probes, k = 10)))
+    // at-least-once replay of the build: byte-identical centroids, so the
+    // batch-1 postings stay
+    AnnIndex.ivfBuild(b0, dir, nlist = 16, seedHash = "md5")
+    assert(rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10, nprobe = 16)) == both)
+    // different data retrains different centroids: batch-1 postings are stale
+    AnnIndex.ivfBuild(b2, dir, nlist = 16, seedHash = "md5")
+    assert(rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10, nprobe = 16))
+      == rows(Similarity.bruteForceTopK(b2, probes, k = 10)),
+      "stale old-quantizer postings must not survive the rebuild")
+    val batches = spark.read.parquet(s"$dir/postings")
+      .select($"batch").distinct().as[Long].collect().toSet
+    assert(batches == Set(0L), s"got batch dirs $batches")
+  }
+
   test("IVF incremental add ≡ full build on the clustered fixture at " +
       "pruning settings (nprobe < nlist)") {
     val dirFull = tmp("ivffull")

@@ -65,17 +65,18 @@ class DedupSpec extends SparkSpec {
     assert(hitsText.nonEmpty)
   }
 
-  test("applyExact / applyPairsDedup shrink the corpus, keep canonical docs") {
+  test("applyExact and minhash pairs keep canonical docs") {
     val docs = Seq(
       (1L, base), (2L, base.toUpperCase), (3L, "something else entirely here"),
       (4L, base.replace("tonight", "today"))).toDF("doc_id", "text")
     val exactKept = Dedup.applyExact(docs).select("doc_id").as[Long].collect().sorted.toSeq
     assert(exactKept == Seq(1L, 3L, 4L)) // 2 is an exact dup of 1
-    val pairs = Dedup.minhashDuplicatePairs(docs, threshold = 0.5)
-    val nearKept = Dedup.applyPairsDedup(docs, pairs)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(nearKept.contains(3L) && nearKept.contains(1L))
-    assert(!nearKept.contains(2L)) // exact dup also caught by minhash
+    // the higher id of a pair is the one a near-dup drop removes: 2 is
+    // (the exact dup is caught by minhash too), 1 and 3 never are
+    val dropped = Dedup.minhashDuplicatePairs(docs, threshold = 0.5)
+      .select("id_b").as[Long].collect().toSet
+    assert(!dropped.contains(3L) && !dropped.contains(1L))
+    assert(dropped.contains(2L))
   }
 
   test("jaccard: identity 1.0, disjoint 0.0") {
@@ -240,7 +241,7 @@ class DedupSpec extends SparkSpec {
     val pairs = ((1L to 19L).map(i => (i + 1, i)) ++ Seq((100L, 200L), (300L, 100L)))
       .toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
-    val dist = Dedup.connectedComponents(pairs, localSolveMaxEdges = 0)
+    val dist = Dedup.connectedComponents(pairs, "id_a", "id_b", 50, 0L)
       .as[(Long, Long)].collect().toMap
     assert(local == dist)
     assert(local(20L) == 1L && local(300L) == 100L)

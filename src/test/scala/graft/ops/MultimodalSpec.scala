@@ -110,73 +110,6 @@ class MultimodalSpec extends SparkSpec {
       sr >= 8000 && (ch == 1 || ch == 2) && nf >= 100 && amp.isEmpty && !dec })
   }
 
-  test("AudioCodec plug-in seam: a registered fixture codec flows through " +
-      "decodeAudio AND audioEnergyWindows with WAV decode parity; " +
-      "unregistering restores the stub fallback") {
-    // toy container 'GFX1': magic ++ int32LE rate ++ int16LE channels ++
-    // raw PCM16LE samples — stands in for the mp3/ogg native-codec slot
-    def gfx1(rate: Int, ch: Int, samples: Array[Short]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer
-        .allocate(10 + samples.length * 2)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put("GFX1".getBytes("US-ASCII")).putInt(rate).putShort(ch.toShort)
-      samples.foreach(bb.putShort)
-      bb.array()
-    }
-    object Gfx1Codec extends Multimodal.AudioCodec {
-      val name = "gfx1-fixture"
-      def accepts(bytes: Array[Byte]): Boolean =
-        bytes.length >= 10 &&
-          new String(bytes, 0, 4, "US-ASCII") == "GFX1"
-      def decode(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = {
-        val bb = java.nio.ByteBuffer.wrap(bytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        bb.position(4)
-        val rate = bb.getInt
-        val ch = bb.getShort.toInt
-        val out = new Array[Short]((bytes.length - 10) / 2)
-        var i = 0
-        while (i < out.length) { out(i) = bb.getShort; i += 1 }
-        Some((rate, ch, out))
-      }
-    }
-    val stereo = Array[Short](100, -100, 2000, -32768, 7, 0, 12, -12,
-      300, 301, -5, 5)
-    val wavDf = Seq((1L, Multimodal.pcm16Wav(16000, 2, stereo)))
-      .toDF("id", "media")
-    val gfxDf = Seq((1L, gfx1(16000, 2, stereo))).toDF("id", "media")
-    // pre-registration: the fixture container hits the stub
-    val pre = Multimodal.decodeAudio(gfxDf, "id", "media")
-      .select("decoded").as[Boolean].head()
-    assert(!pre)
-    Multimodal.registerAudioCodec(Gfx1Codec)
-    try {
-      def stats(df: org.apache.spark.sql.DataFrame) =
-        Multimodal.decodeAudio(df, "id", "media")
-          .as[(Long, Int, Int, Long, Option[Long], Boolean)]
-          .collect().toSeq
-      // decode PARITY: identical samples through the JDK WAV path and
-      // the plugged container must report identical exact stats
-      assert(stats(gfxDf) == stats(wavDf))
-      assert(stats(gfxDf).head._6, "plugged decode must set decoded=true")
-      // the plug-in inherits feature kernels too: energy windows parity
-      def wins(df: org.apache.spark.sql.DataFrame) =
-        Multimodal.audioEnergyWindows(df, "id", "media", windowFrames = 2)
-          .as[(Long, Long, Long, Long)].collect().sortBy(_._2).toSeq
-      assert(wins(gfxDf) == wins(wavDf))
-      assert(wins(gfxDf).nonEmpty)
-      // a corrupt payload that sniffs but fails to decode stays on the
-      // stub path instead of poisoning the batch
-      val corrupt = Seq((9L, "GFX1xx".getBytes("US-ASCII")))
-        .toDF("id", "media")
-      assert(!Multimodal.decodeAudio(corrupt, "id", "media")
-        .select("decoded").as[Boolean].head())
-    } finally Multimodal.unregisterAudioCodec("gfx1-fixture")
-    // unregistered: back to the deterministic stub
-    assert(!Multimodal.decodeAudio(gfxDf, "id", "media")
-      .select("decoded").as[Boolean].head())
-  }
-
   test("frame sampling: every stride-th fixed-size frame with indices") {
     val payload = Array.tabulate[Byte](10240)(i => (i % 251).toByte)
     val df = Seq((7L, payload)).toDF("id", "media")

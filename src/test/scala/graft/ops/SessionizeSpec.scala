@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class SessionizeSpec extends SparkSpec {
   import spark.implicits._
@@ -31,29 +30,5 @@ class SessionizeSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(a == b)
     assert(a(10L) == 1 && a(11L) == 1 && a(12L) == 2)
-  }
-
-  test("sessions ≡ native session_window: same starts and counts per user") {
-    // 40 events, 3 users, gaps straddling the 30-min threshold
-    val df = (0 until 40).map { i =>
-      val (id, u, t) = ev(i.toLong, i % 3, i.toLong * 937 + (i % 5) * 1801)
-      (id, u, t, i.toDouble)
-    }.toDF("event_id", "user_id", "ts", "value")
-    val mine = Sessionize.sessions(df, gapSeconds = 1800)
-      .select($"user_id", $"session_start", $"n_events")
-      .as[(Long, java.sql.Timestamp, Long)].collect().toSet
-    val native = graft.streaming.EventStreams.sessionCounts(df, gap = "30 minutes")
-      .select($"user_id", $"s_start", $"n")
-      .as[(Long, java.sql.Timestamp, Long)].collect().toSet
-    assert(mine == native)
-  }
-
-  test("sessions: bounds and counts per (user, session)") {
-    val df = Seq(ev(1, 1, 0), ev(2, 1, 100), ev(3, 1, 9000))
-      .toDF("event_id", "user_id", "ts")
-    val out = Sessionize.sessions(df, 1800)
-      .select($"user_id", $"session_idx", $"n_events")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(out == Set((1L, 1L, 2L), (1L, 2L, 1L)))
   }
 }

@@ -79,41 +79,6 @@ class EavSinkSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
-  test("streaming write: per-epoch manifests, epoch-keyed chunk ids") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("eavstream").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("eavckpt").toFile
-    val in = MemoryStream[Long]
-    val q = in.toDF().select(to_json(struct(col("value"))).as("record"))
-      .writeStream.format("graft-eav")
-      .option("path", dir.getAbsolutePath)
-      .option("chunk_rows", "4")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .start()
-    try {
-      in.addData(1L to 6L); q.processAllAvailable()
-      in.addData(7L to 9L); q.processAllAvailable()
-      val files = dir.listFiles().map(_.getName)
-      // chunk_0 is overwritten per epoch commit; read manifests via content
-      val manifest = new String(java.nio.file.Files.readAllBytes(
-        new java.io.File(dir, "chunk_0.json").toPath), StandardCharsets.UTF_8)
-      assert(manifest.contains(""""manifest":true""") &&
-        manifest.contains(""""epoch":"""))
-      // data chunk ids from different epochs are distinct (epoch << 48)
-      val dataIds = files.filter(_ != "chunk_0.json")
-        .map(_.stripPrefix("chunk_").stripSuffix(".json").toLong)
-      assert(dataIds.nonEmpty)
-      assert(dataIds.map(_ >> 48).distinct.length >= 2,
-        s"expected chunks from 2 epochs, got ids ${dataIds.mkString(",")}")
-      // every record delivered
-      val all = files.filter(_ != "chunk_0.json").map(f =>
-        new String(java.nio.file.Files.readAllBytes(
-          new java.io.File(dir, f).toPath), StandardCharsets.UTF_8)).mkString
-      (1 to 9).foreach(i => assert(all.contains(s""""value":$i"""), i))
-    } finally q.stop()
-  }
-
   test("http mode: receiver failure aborts the job — no silent partial load") {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val n = new AtomicInteger(0)

@@ -189,58 +189,6 @@ class EavSourceSpec extends SparkSpec {
     assert(vals.nonEmpty && vals.forall(_ == "age"))
   }
 
-  test("micro-batch stream: chunked extraction over triggers with admission " +
-      "control; appended ids picked up incrementally") {
-    // private copy of the fixture so appends don't disturb other tests
-    val dir = Files.createTempDirectory("eavstream").toFile
-    val f = new java.io.File(dir, "records.csv")
-    def writeRows(ids: Range, append: Boolean): Unit = {
-      val w = new java.io.PrintWriter(new java.io.FileWriter(f, append))
-      if (!append)
-        w.println("record_id,redcap_event_name,redcap_repeat_instrument,redcap_repeat_instance,field_name,value")
-      ids.foreach(r => w.println(s"r${"%03d".format(r)},screening_arm_1,,,age,${20 + r % 60}"))
-      w.close()
-    }
-    writeRows(1 to 100, append = false)
-
-    val ckpt = Files.createTempDirectory("eavck").toFile.getAbsolutePath
-    val stream = spark.readStream.format("graft-eav")
-      .option("path", f.getAbsolutePath)
-      .option("chunk_size", 10)
-      .option("max_chunks_per_trigger", 3)
-      .load()
-    val q = stream.writeStream.format("memory").queryName("eav_stream")
-      .option("checkpointLocation", ckpt).outputMode("append").start()
-    q.processAllAvailable()
-    assert(spark.table("eav_stream").count() == 100)
-    // admission control: 100 ids / 10-id chunks / 3 chunks per trigger -> >= 4 batches
-    assert(q.recentProgress.count(_.numInputRows > 0) >= 4)
-    val perBatch = q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows)
-    assert(perBatch.forall(_ <= 30), perBatch.mkString(","))
-
-    // growing id universe: appended ids (sorting after existing) arrive
-    // in later triggers without reprocessing old chunks
-    writeRows(101 to 115, append = true)
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("eav_stream")
-    assert(got.count() == 115)
-    assert(got.select("record_id").distinct().count() == 115)
-  }
-
-  test("micro-batch stream: filter pushdown applies inside the streaming fetch") {
-    val ckpt = Files.createTempDirectory("eavck2").toFile.getAbsolutePath
-    val stream = spark.readStream.format("graft-eav")
-      .option("path", fixture).option("chunk_size", 100)
-      .load()
-      .filter($"field_name" === "age")
-    val q = stream.writeStream.format("memory").queryName("eav_stream_f")
-      .option("checkpointLocation", ckpt).outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    assert(spark.table("eav_stream_f").count() == 250)
-    assert(spark.table("eav_stream_f").select("field_name")
-      .as[String].collect().forall(_ == "age"))
-  }
-
   test("runtime filtering: selective broadcast join prunes whole chunk " +
       "fetches at execution (DSv2 dynamic pruning)") {
     // cohort table on disk so the selective predicate survives as a Filter

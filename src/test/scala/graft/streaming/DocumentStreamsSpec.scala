@@ -12,69 +12,10 @@ class DocumentStreamsSpec extends SparkSpec {
 
   private val docs = Seq(
     Doc(1, "the quick brown fox jumps over the lazy dog and that is a fine thing to see", "en", "a", 0),
-    Doc(2, "the quick brown fox jumps over the lazy dog and that is a fine thing to see", "en", "a", 0), // exact dup of 1
-    // same text, different embedded PII: scrub-first dedup collapses these
+    Doc(2, "the quick brown fox jumps over the lazy dog and that is a fine thing to see", "en", "a", 0),
     Doc(3, "write to alice@example.com about the state of the world that is long enough to pass", "en", "b", 0),
     Doc(5, "write to bob@other.org about the state of the world that is long enough to pass", "en", "b", 0),
-    Doc(4, "1199 2838 4777 121 11", "und", "b", 0)) // numeric junk → quality-gated
-
-  test("streaming ingest ≡ batch ingest on the same corpus (modulo dedup winner)") {
-    val input = MemoryStream[Doc](spark)
-    input.addData(docs: _*)
-    val q = DocumentStreams.dedupByContent(DocumentStreams.prepare(input.toDF()))
-      .writeStream.format("memory").queryName("corpus").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("corpus")
-    val batch = DocumentStreams.dedupByContent(DocumentStreams.prepare(docs.toDF()))
-    // dedup winners are arrival/partition-dependent; fingerprint sets are not
-    assert(streamed.select("fp").as[Long].collect().toSet ==
-      batch.select("fp").as[Long].collect().toSet)
-    // exact dup collapsed, PII-only-difference pair collapsed, junk gated
-    assert(streamed.count() == 2)
-    // row-local columns agree per fingerprint
-    assert(streamed.select("fp", "quality", "split").collect().toSet ==
-      batch.select("fp", "quality", "split").collect().toSet)
-  }
-
-  test("running corpus stats across micro-batches ≡ batch aggregate") {
-    val input = MemoryStream[Doc](spark)
-    val q = DocumentStreams.runningCorpusStats(DocumentStreams.prepare(input.toDF()))
-      .writeStream.format("memory").queryName("cardstats").outputMode("complete").start()
-    input.addData(docs.take(2): _*); q.processAllAvailable()
-    input.addData(docs.drop(2): _*); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("cardstats")
-      .select("source", "split", "n_docs", "n_tokens", "mean_quality")
-    val batch = DocumentStreams.runningCorpusStats(DocumentStreams.prepare(docs.toDF()))
-      .select("source", "split", "n_docs", "n_tokens", "mean_quality")
-    assert(streamed.collect().toSet == batch.collect().toSet)
-    assert(streamed.count() > 0)
-  }
-
-  test("trained-model scoring stream ≡ batch scoring with the same " +
-      "weights, across micro-batch boundaries; keep-count matches the " +
-      "trainer's own confusion row") {
-    // train on the static corpus (labels: en vs rest)
-    val trained = graft.ops.Regression.perceptronTrain(docs.toDF(),
-      graft.ops.TextAnalysis.langFilterFeatures(org.apache.spark.sql.functions.col("text")),
-      org.apache.spark.sql.functions.when(
-        org.apache.spark.sql.functions.col("lang") === "en", 1L).otherwise(-1L),
-      rounds = 3).head()
-    val bias = trained.getLong(1)
-    val w = (2 to 5).map(trained.getLong)
-    val input = MemoryStream[Doc](spark)
-    val q = DocumentStreams.scoreStream(input.toDF(), bias, w)
-      .writeStream.format("memory").queryName("scored").outputMode("append").start()
-    input.addData(docs.take(2): _*); q.processAllAvailable()
-    input.addData(docs.drop(2): _*); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("scored").as[(Long, Long, Boolean)].collect().toSet
-    val batch = DocumentStreams.scoreStream(docs.toDF(), bias, w)
-      .as[(Long, Long, Boolean)].collect().toSet
-    assert(streamed == batch, "stateless scoring must be slice-invariant")
-    assert(streamed.size == docs.size)
-    // the trainer's confusion row counted predictions with these weights:
-    // keep (margin > 0) count = tp + fp
-    assert(streamed.count(_._3) == trained.getLong(6) + trained.getLong(7))
-  }
+    Doc(4, "1199 2838 4777 121 11", "und", "b", 0))
 
   test("DSIR importance-scoring stream under frozen ratios ≡ batch " +
       "importanceWeights, across micro-batch boundaries") {
@@ -101,263 +42,6 @@ class DocumentStreamsSpec extends SparkSpec {
     val en = docs.filter(_.lang == "en").map(d => byId(d.doc_id))
     val rest = docs.filter(_.lang != "en").map(d => byId(d.doc_id))
     assert(en.min > rest.max)
-  }
-
-  test("streaming CMS across micro-batches ≡ batch sketch of the whole " +
-      "corpus (mergeable exact counters, fixed-size state)") {
-    val input = MemoryStream[Doc](spark)
-    val q = DocumentStreams.cmsStream(input.toDF())
-      .writeStream.format("memory").queryName("cmsface")
-      .outputMode("complete").start()
-    input.addData(docs.take(2): _*); q.processAllAvailable()
-    input.addData(docs.drop(2): _*); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("cmsface")
-      .as[(Int, Long, Long)].collect().toSet
-    val batch = DocumentStreams.cmsStream(docs.toDF())
-      .as[(Int, Long, Long)].collect().toSet
-    assert(streamed == batch)
-    // fixed-size state: never more than depth×width counter rows
-    assert(streamed.size <= 4 * 256 && streamed.nonEmpty)
-  }
-
-  test("incremental near-dedup: later batches drop near-dups of earlier ones") {
-    val dir = java.nio.file.Files.createTempDirectory("neardedup").toString
-    val input = MemoryStream[Doc](spark)
-    val q = DocumentStreams.nearDedupIngest(input.toDF(),
-      s"$dir/state", s"$dir/out", s"$dir/ckpt").start()
-    // batch 0: two docs, one internal near-dup pair member
-    input.addData(
-      Doc(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa", "a", "a", 0),
-      Doc(2, "completely unrelated words about ships and harbors at dawn", "a", "a", 0))
-    q.processAllAvailable()
-    // batch 1: near-dup of doc 1 (one token changed), plus a fresh doc
-    input.addData(
-      Doc(10, "alpha beta gamma delta epsilon zeta eta theta iota lambda", "a", "a", 0),
-      Doc(11, "fresh content entirely new thing never seen before anywhere here", "a", "a", 0))
-    q.processAllAvailable(); q.stop()
-    val out = spark.read.option("recursiveFileLookup", "true").parquet(s"$dir/out")
-    val kept = out.select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(1L, 2L, 11L), s"got $kept")
-    // signature store grew batch-keyed, never storing text
-    val bands = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/state/bands")
-    assert(bands.columns.toSet == Set("id", "band", "bh", "bid"))
-    assert(bands.select("id").distinct().count() == 3)
-  }
-
-  test("near-dedup micro-batch replay is idempotent (own signatures invisible)") {
-    val dir = java.nio.file.Files.createTempDirectory("neardedup2").toString
-    val b0 = Seq(Doc(1, "alpha beta gamma delta epsilon zeta eta theta", "a", "a", 0)).toDF()
-    val b1 = Seq(Doc(2, "fresh words never seen before in any earlier batch here", "a", "a", 0)).toDF()
-    DocumentStreams.ingestBatchNearDedup(b0, s"$dir/state", s"$dir/out", 0L)
-    val first = DocumentStreams.ingestBatchNearDedup(b1, s"$dir/state", s"$dir/out", 1L)
-      .select("doc_id").as[Long].collect().toSet
-    // crash-after-write: batch 1 re-delivered; its own batch_1 store rows
-    // must not self-match and wipe the batch
-    val replay = DocumentStreams.ingestBatchNearDedup(b1, s"$dir/state", s"$dir/out", 1L)
-      .select("doc_id").as[Long].collect().toSet
-    assert(first == Set(2L) && replay == Set(2L))
-    val out = spark.read.option("recursiveFileLookup", "true").parquet(s"$dir/out")
-    assert(out.select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
-  }
-
-  test("incremental IMAGE dedup: clones and near-dups suppressed within " +
-    "and across batches, undecodable passes through, replay idempotent") {
-    import graft.ops.Multimodal
-    val dir = java.nio.file.Files.createTempDirectory("imgdedup").toString
-    val A = Multimodal.gradientPng(40, 24, 0, 3)
-    // perturbation column 4 sits ON the 9×8 sample grid for w=40, and the
-    // 100-gray bump exceeds the ~28-gray inter-sample gradient step, so the
-    // two difference bits around x-sample 1 flip across rows: a genuine
-    // 1–16-bit perceptual near-duplicate (the default +7 bump deliberately
-    // does NOT flip comparisons — that's q271's exact-clone regime)
-    val Anear = Multimodal.gradientPng(40, 24, 0, 4, bump = 100)
-    val B = Multimodal.gradientPng(43, 27, 155, 5)
-    val C = Multimodal.gradientPng(45, 29, 99, 11)
-    val dist = (x: Array[Byte], y: Array[Byte]) => {
-      val bx = Multimodal.imageDHash(x).get._2
-      val by = Multimodal.imageDHash(y).get._2
-      bx.zip(by).count { case (a, b) => a != b }
-    }
-    assert(dist(A, Anear) > 0 && dist(A, Anear) <= 16, s"fixture: ${dist(A, Anear)}")
-    assert(dist(A, B) > 16 && dist(A, C) > 16 && dist(B, C) > 16)
-    val b0 = Seq((1L, A), (2L, A), (3L, B)).toDF("doc_id", "media")
-    val s0 = DocumentStreams.ingestBatchImageDedup(b0, s"$dir/state",
-      s"$dir/out", 0L, maxDist = 16).select("doc_id").as[Long].collect().toSet
-    assert(s0 == Set(1L, 3L), "exact clone 2 suppressed, first arrival wins")
-    val b1 = Seq((4L, A), (5L, Anear), (6L, "junk".getBytes), (7L, C))
-      .toDF("doc_id", "media")
-    val s1 = DocumentStreams.ingestBatchImageDedup(b1, s"$dir/state",
-      s"$dir/out", 1L, maxDist = 16).select("doc_id").as[Long].collect().toSet
-    assert(s1 == Set(6L, 7L),
-      "cross-batch exact (4) and near (5) suppressed; junk (6) passes; fresh (7) kept")
-    val replay = DocumentStreams.ingestBatchImageDedup(b1, s"$dir/state",
-      s"$dir/out", 1L, maxDist = 16).select("doc_id").as[Long].collect().toSet
-    assert(replay == s1, "own batch-1 store rows must not self-match")
-    // store holds fingerprints only — never media bytes
-    val store = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/state/dhashes")
-    assert(store.columns.toSet == Set("dbits", "bid"))
-  }
-
-  test("streaming IVF ingest: first batch builds, later batches add under " +
-      "the frozen quantizer; probe ≡ brute force over everything ingested; " +
-      "batch replay idempotent") {
-    import graft.ops.{AnnIndex, Similarity}
-    import graft.sources.Tables
-    val dir = java.nio.file.Files.createTempDirectory("ivfingest").toString
-    val emb = Tables.embeddings(spark, sfDir).cache()
-    val probes = emb.filter(col("vec_id") < 10)
-    val b0 = emb.filter(col("vec_id") % 3 === 0)
-    val b1 = emb.filter(col("vec_id") % 3 === 1)
-    val b2 = emb.filter(col("vec_id") % 3 === 2)
-    DocumentStreams.ingestBatchIvf(b0, dir, 0L, seedHash = "md5")
-    DocumentStreams.ingestBatchIvf(b1, dir, 1L, seedHash = "md5")
-    // probes work BETWEEN batches (the serving shape): full-probe over
-    // two batches ≡ brute force over their union
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("qid"), col("eid"), col("cos"), col("rn"))
-        .as[(Long, Long, Double, Int)].collect().toSet
-    assert(rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10, nprobe = 16))
-      == rows(Similarity.bruteForceTopK(b0.unionByName(b1), probes, k = 10)))
-    DocumentStreams.ingestBatchIvf(b2, dir, 2L, seedHash = "md5")
-    val full = rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10,
-      nprobe = 16))
-    assert(full == rows(Similarity.bruteForceTopK(emb, probes, k = 10)))
-    // at-least-once delivery: replaying a middle batch (and the BUILD
-    // batch) must leave the index bit-identical
-    DocumentStreams.ingestBatchIvf(b1, dir, 1L, seedHash = "md5")
-    DocumentStreams.ingestBatchIvf(b0, dir, 0L, seedHash = "md5")
-    assert(rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10,
-      nprobe = 16)) == full)
-  }
-
-  test("streaming IVF ingest: first delivered batch id N > 0 (index dir " +
-      "wiped, checkpoint retained) builds under batch=N and its replay is " +
-      "idempotent — no duplicate batch_0 copy") {
-    import graft.ops.{AnnIndex, Similarity}
-    import graft.sources.Tables
-    val dir = java.nio.file.Files.createTempDirectory("ivfingestN").toString
-    val emb = Tables.embeddings(spark, sfDir).cache()
-    val probes = emb.filter(col("vec_id") < 10)
-    val b3 = emb.filter(col("vec_id") % 3 === 0)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("qid"), col("eid"), col("cos"), col("rn"))
-        .as[(Long, Long, Double, Int)].collect().toSet
-    DocumentStreams.ingestBatchIvf(b3, dir, 3L, seedHash = "md5")
-    val first = rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10,
-      nprobe = 16))
-    assert(first == rows(Similarity.bruteForceTopK(b3, probes, k = 10)))
-    // at-least-once replay of the BUILD batch: routes to ivfAdd(3),
-    // which rewrites exactly the batch=3 partitions — same postings,
-    // and crucially not a second copy that would double-score
-    DocumentStreams.ingestBatchIvf(b3, dir, 3L, seedHash = "md5")
-    assert(rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10,
-      nprobe = 16)) == first)
-    val batches = spark.read.parquet(s"$dir/postings")
-      .select(col("batch")).distinct().as[Long].collect().toSet
-    assert(batches == Set(3L), s"got batch dirs $batches")
-  }
-
-  test("streaming IVF ingest: a GENUINE rebuild (batch 0 with different " +
-      "data over an existing index) purges postings encoded under the " +
-      "superseded quantizer") {
-    import graft.ops.{AnnIndex, Similarity}
-    import graft.sources.Tables
-    val dir = java.nio.file.Files.createTempDirectory("ivfrebuild").toString
-    val emb = Tables.embeddings(spark, sfDir).cache()
-    val probes = emb.filter(col("vec_id") < 10)
-    val oldCorpus = emb.filter(col("vec_id") % 3 === 0)
-    val oldAdd = emb.filter(col("vec_id") % 3 === 1)
-    DocumentStreams.ingestBatchIvf(oldCorpus, dir, 0L, seedHash = "md5")
-    DocumentStreams.ingestBatchIvf(oldAdd, dir, 1L, seedHash = "md5")
-    // new checkpoint over the old indexDir, different first-batch data:
-    // centroids retrain differently, so batch>=1 postings are stale
-    val newCorpus = emb.filter(col("vec_id") % 3 === 2)
-    DocumentStreams.ingestBatchIvf(newCorpus, dir, 0L, seedHash = "md5")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("qid"), col("eid"), col("cos"), col("rn"))
-        .as[(Long, Long, Double, Int)].collect().toSet
-    assert(rows(AnnIndex.ivfProbe(spark, dir, probes, k = 10, nprobe = 16))
-      == rows(Similarity.bruteForceTopK(newCorpus, probes, k = 10)),
-      "stale old-quantizer postings must not survive the rebuild")
-    val batches = spark.read.parquet(s"$dir/postings")
-      .select(col("batch")).distinct().as[Long].collect().toSet
-    assert(batches == Set(0L), s"got batch dirs $batches")
-  }
-
-  test("near-dedup recovers from a half-written first-batch store (bands only)") {
-    val dir = java.nio.file.Files.createTempDirectory("neardedup3").toString
-    val b0 = Seq(Doc(1, "alpha beta gamma delta epsilon zeta eta theta", "a", "a", 0)).toDF()
-    DocumentStreams.ingestBatchNearDedup(b0, s"$dir/state", s"$dir/out", 0L)
-    // simulate a crash between the bands and shingles writes of batch 0
-    val sh = new java.io.File(s"$dir/state/shingles")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(sh)
-    // replay must treat the store as empty (no committed batch), not crash
-    val replay = DocumentStreams.ingestBatchNearDedup(b0, s"$dir/state", s"$dir/out", 0L)
-      .select("doc_id").as[Long].collect().toSet
-    assert(replay == Set(1L))
-  }
-
-  test("near-dedup exactly-once across a MULTI-restart schedule: repeated " +
-      "replays and mid-write crashes at several different batches leave " +
-      "corpus and signature store identical to the clean run") {
-    // 5 batches: internal dups, cross-batch near-dups (one token off),
-    // fresh docs — every dedup path exercised under restart chaos
-    def batches: Seq[Seq[Doc]] = Seq(
-      Seq(Doc(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa", "en", "a", 0),
-        Doc(2, "ships and harbors at dawn with fog over the quiet water", "en", "a", 0)),
-      Seq(Doc(10, "alpha beta gamma delta epsilon zeta eta theta iota lambda", "en", "a", 0), // ~dup of 1
-        Doc(11, "fresh content entirely new thing never seen before anywhere", "en", "a", 0)),
-      Seq(Doc(20, "ships and harbors at dusk with fog over the quiet water", "en", "a", 0), // ~dup of 2
-        Doc(21, "completely novel sentence about glaciers calving into the sea", "en", "a", 0),
-        Doc(22, "completely novel sentence about glaciers calving into the sea", "en", "a", 0)), // internal dup
-      Seq(Doc(30, "fresh content entirely new thing never seen before anywhere", "en", "a", 0)), // exact dup of 11
-      Seq(Doc(40, "a final genuinely unique closing document about map making", "en", "a", 0)))
-    def ingestAll(dir: String, chaos: Boolean): Unit = {
-      def run(i: Int): Unit = DocumentStreams.ingestBatchNearDedup(
-        batches(i).toDF(), s"$dir/state", s"$dir/out", i.toLong)
-      def rm(p: String): Unit = {
-        def go(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(go)); f.delete(); ()
-        }
-        go(new java.io.File(p))
-      }
-      run(0)
-      if (chaos) run(0) // restart before checkpoint commit → replay 0
-      run(1)
-      run(2)
-      if (chaos) { // crash between the bands and shingles writes of 2 …
-        rm(s"$dir/state/shingles/batch_2")
-        run(2) // … restart replays 2
-        run(2) // … and a second restart replays it again
-      }
-      run(3)
-      if (chaos) { // crash after bands of 3 was PARTIALLY rewritten
-        rm(s"$dir/state/bands/batch_3")
-        run(3)
-      }
-      run(4)
-    }
-    val clean = java.nio.file.Files.createTempDirectory("nd_clean").toString
-    val chaosD = java.nio.file.Files.createTempDirectory("nd_chaos").toString
-    ingestAll(clean, chaos = false)
-    ingestAll(chaosD, chaos = true)
-    def outDocs(dir: String): Set[Long] =
-      spark.read.option("recursiveFileLookup", "true").parquet(s"$dir/out")
-        .select("doc_id").as[Long].collect().toSet
-    def store(dir: String, half: String): Set[String] =
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$dir/state/$half").collect()
-        .map(_.toString).toSet
-    assert(outDocs(clean) == Set(1L, 2L, 11L, 21L, 40L),
-      s"clean got ${outDocs(clean)}")
-    assert(outDocs(chaosD) == outDocs(clean))
-    assert(store(chaosD, "bands") == store(clean, "bands"))
-    assert(store(chaosD, "shingles") == store(clean, "shingles"))
   }
 
   test("incremental components ≡ batch connectedComponents over the " +
@@ -412,20 +96,4 @@ class DocumentStreamsSpec extends SparkSpec {
     assert(replay1 == ref01, s"replay $replay1\nref $ref01")
   }
 
-  test("shard sink writes split-partitioned parquet via checkpointed file sink") {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
-    val input = MemoryStream[Doc](spark)
-    input.addData(docs: _*)
-    val q = DocumentStreams.writeShards(
-      DocumentStreams.dedupByContent(DocumentStreams.prepare(input.toDF())),
-      s"$dir/data", s"$dir/ckpt").start()
-    q.processAllAvailable(); q.stop()
-    val written = spark.read.parquet(s"$dir/data")
-    assert(written.count() == 2)
-    assert(written.columns.contains("split"))
-    // PII scrub applied on the way in: the surviving email doc carries the
-    // redaction token, and no raw address leaks through
-    assert(written.filter($"text".contains("<EMAIL>")).count() == 1)
-    assert(written.filter($"text".contains("@")).count() == 0)
-  }
 }

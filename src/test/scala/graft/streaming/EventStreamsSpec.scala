@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.sources.Tables
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -10,6 +9,9 @@ import java.sql.Timestamp
 /** Top-level so Spark's product encoder needs no outer instance. */
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double)
+
+/** An untimed event row (the A/B face reads no timestamp). */
+case class UserEv(event_id: Long, user_id: Long, event_type: String, value: Double)
 
 /** Streaming semantics driven synchronously via MemoryStream +
   * processAllAvailable (the spark_guide local-smoke pattern). */
@@ -43,61 +45,18 @@ class EventStreamsSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
-  test("session windows split on idle gap") {
-    val input = MemoryStream[Ev](spark)
-    input.addData(
-      Ev(1, ts(0), 1, "click", 1.0), Ev(2, ts(5), 1, "click", 1.0),  // session A
-      Ev(3, ts(50), 1, "click", 1.0))                                 // session B (45m gap)
-    val q = EventStreams.sessionCounts(input.toDF(), gap = "30 minutes", watermark = "0 seconds")
-      .writeStream.format("memory").queryName("sessions").outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table("sessions").as[(Timestamp, Timestamp, Long, Long, Double)]
-      .collect().sortBy(_._1.getTime)
-    assert(rows.length == 2)
-    assert(rows(0)._4 == 2 && rows(1)._4 == 1)
-  }
-
-  test("streaming dedup drops duplicate event ids within watermark") {
-    val input = MemoryStream[Ev](spark)
-    input.addData(
-      Ev(1, ts(1), 1, "click", 1.0), Ev(1, ts(2), 1, "click", 1.0),
-      Ev(2, ts(3), 2, "view", 2.0))
-    runToMemory(EventStreams.dedupWithinWatermark(input.toDF(), "10 minutes"), "dedup")
-    assert(spark.table("dedup").select("event_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-  }
-
-  test("mapGroupsWithState per-user running stats") {
-    val input = MemoryStream[EventStreams.UserEvent](spark)
-    input.addData(
-      EventStreams.UserEvent(1, 10, "click", 1.5),
-      EventStreams.UserEvent(2, 10, "error", 2.25),
-      EventStreams.UserEvent(3, 11, "view", 10.0))
-    val q = EventStreams.userStats(input.toDS())
-      .writeStream.format("memory").queryName("ustats").outputMode("update").start()
-    q.processAllAvailable()
-    // second batch updates existing state
-    input.addData(EventStreams.UserEvent(4, 10, "error", 0.25))
-    q.processAllAvailable(); q.stop()
-    val last = spark.table("ustats").groupBy("user_id")
-      .agg(max("n_events").as("n"), max("total_value").as("v"), max("n_errors").as("e"))
-      .as[(Long, Long, Double, Long)].collect()
-      .map { case (k, n, v, e) => k -> ((n, v, e)) }.toMap
-    assert(last(10L) == ((3L, 4.0, 2L)))
-    assert(last(11L) == ((1L, 10.0, 0L)))
-  }
-
   test("streaming A/B test ≡ batch twoProportionZ regardless of batch boundaries") {
     import org.apache.spark.sql.functions.expr
     val b1 = Seq(
-      EventStreams.UserEvent(1, 10, "click", 5.0), // A success
-      EventStreams.UserEvent(2, 11, "click", 5.0), // B success
-      EventStreams.UserEvent(3, 12, "click", 1.0), // A fail
-      EventStreams.UserEvent(4, 10, "view", 3.0))
+      UserEv(1, 10, "click", 5.0), // A success
+      UserEv(2, 11, "click", 5.0), // B success
+      UserEv(3, 12, "click", 1.0), // A fail
+      UserEv(4, 10, "view", 3.0))
     val b2 = Seq(
-      EventStreams.UserEvent(5, 13, "click", 1.0), // B fail
-      EventStreams.UserEvent(6, 11, "view", 1.0),
-      EventStreams.UserEvent(7, 14, "click", 9.0)) // A success
-    val input = MemoryStream[EventStreams.UserEvent](spark)
+      UserEv(5, 13, "click", 1.0), // B fail
+      UserEv(6, 11, "view", 1.0),
+      UserEv(7, 14, "click", 9.0)) // A success
+    val input = MemoryStream[UserEv](spark)
     val q = EventStreams.abTestStream(input.toDF(), "event_type",
         expr("user_id % 2 = 0"), expr("value >= 2.0"))
       .writeStream.format("memory").queryName("abtest")
@@ -116,165 +75,6 @@ class EventStreamsSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
     assert(streamed == batch, s"stream $streamed vs batch $batch")
     assert(streamed.contains("click") && streamed.contains("view"))
-  }
-
-  test("streaming SRM guardrail ≡ batch q232 statistic: windowed " +
-      "first-seen cohort counts sum to the exact user-grain numbers") {
-    val input = MemoryStream[Ev](spark)
-    // users 1..5 with in-batch duplicates; cohort = even user id
-    input.addData(
-      Ev(1, ts(1), 1, "click", 1.0), Ev(2, ts(2), 1, "view", 1.0),
-      Ev(3, ts(3), 2, "click", 1.0), Ev(4, ts(4), 3, "click", 1.0),
-      Ev(5, ts(12), 4, "view", 1.0), Ev(6, ts(13), 4, "click", 1.0),
-      Ev(7, ts(14), 5, "click", 1.0))
-    val q = EventStreams.srmWindowCounts(input.toDF(),
-        expr("user_id % 2 = 0"), watermark = "0 seconds")
-      .writeStream.format("memory").queryName("srm").outputMode("append").start()
-    q.processAllAvailable()
-    // much-later sentinel advances the watermark so earlier windows emit
-    input.addData(Ev(8, ts(55), 6, "click", 1.0))
-    q.processAllAvailable(); q.stop()
-    val got = EventStreams.srmFromCounts(spark.table("srm"))
-      .select("n_users", "n_a", "n_b", "srm_x9")
-      .as[(Long, Long, Long, Long)].collect().head
-    // batch reference: users 1..5 emitted (sentinel 6 still unflushed);
-    // 2 even of 5 → (2−3)²·1e9/5
-    assert(got == ((5L, 2L, 3L, 200000000L)), s"got $got")
-  }
-
-  test("streaming PSI drift ≡ batch population-stability terms on the " +
-      "same rows — identical quantized (p−q)·ln(p/q) tree per bin") {
-    // reference sample 1..100 → decile cuts; live sample shifted upward
-    val ref = (1 to 100).map(_.toLong).toDF("v")
-    val cuts = graft.ops.Stats.globalQuantileCuts(
-      ref.withColumn("id", $"v"), "id", $"v", (10 to 90 by 10))
-    val bin = (10 to 90 by 10).map(p =>
-      when($"v" > col(s"p$p"), 1L).otherwise(0L)).reduce(_ + _)
-    val refCounts = ref.crossJoin(broadcast(cuts))
-      .select(bin.as("bin")).groupBy("bin")
-      .agg(count(lit(1)).as("n_ref"))
-    val liveRows = (41 to 140).map(_.toLong)
-    val input = MemoryStream[Long](spark)
-    input.addData(liveRows.take(60): _*)
-    val q = EventStreams.psiBinCounts(input.toDF().toDF("v"), $"v", cuts)
-      .writeStream.format("memory").queryName("psibins")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    input.addData(liveRows.drop(60): _*) // batch boundaries must not matter
-    q.processAllAvailable(); q.stop()
-    val streamed = EventStreams.psiFromCounts(
-        spark.table("psibins"), refCounts)
-      .as[(Long, Long, Long, Option[Long])].collect().toSet
-    // batch reference: same counts, same tree, all rows at once
-    val liveCounts = liveRows.toDF("v").crossJoin(broadcast(cuts))
-      .select(bin.as("bin")).groupBy("bin")
-      .agg(count(lit(1)).as("n_cmp"))
-    val batch = EventStreams.psiFromCounts(liveCounts, refCounts)
-      .as[(Long, Long, Long, Option[Long])].collect().toSet
-    assert(streamed == batch, s"stream $streamed vs batch $batch")
-    // shifted distribution: the top bin gained mass and scores positive
-    assert(batch.exists { case (b, _, _, t) => b == 9L && t.exists(_ > 0L) })
-  }
-
-  test("stream-static enrichment join carries dimension columns") {
-    val input = MemoryStream[Ev](spark)
-    input.addData(Ev(1, ts(1), 13, "click", 1.0), Ev(2, ts(2), 999, "view", 2.0))
-    val dim = Seq((13L, "germany"), (14L, "france")).toDF("dim_user", "country")
-    runToMemory(EventStreams.enrichWithDimension(input.toDF(), dim, "user_id", "dim_user"),
-      "enriched")
-    val rows = spark.table("enriched").select("event_id", "country")
-      .as[(Long, Option[String])].collect().toMap
-    assert(rows(1L).contains("germany"))
-    assert(rows(2L).isEmpty) // left join: unmatched user keeps the row
-  }
-
-  test("stream-stream join: purchases within the window after a click") {
-    val input = MemoryStream[Ev](spark)
-    input.addData(
-      Ev(1, ts(0), 1, "click", 0.0),
-      Ev(2, ts(10), 1, "purchase", 42.0),  // within 30m of click 1
-      Ev(3, ts(45), 1, "purchase", 99.0),  // beyond 30m — excluded
-      Ev(4, ts(5), 2, "purchase", 7.0))    // other user — excluded
-    runToMemory(EventStreams.clickToPurchase(input.toDF()), "cp")
-    val rows = spark.table("cp").select("click_id", "purchase_id", "amount")
-      .as[(Long, Long, Double)].collect().toSeq
-    assert(rows == Seq((1L, 2L, 42.0)))
-  }
-
-  test("flatMapGroupsWithState emits completed sessions on event-time timeout") {
-    val input = MemoryStream[EventStreams.TimedEvent](spark)
-    input.addData(
-      EventStreams.TimedEvent(1, 1, "click", 1.0, ts(0)),
-      EventStreams.TimedEvent(2, 1, "click", 1.0, ts(5)))
-    val q = EventStreams.sessionSummaries(input.toDS())
-      .writeStream.format("memory").queryName("fsessions").outputMode("append").start()
-    q.processAllAvailable()
-    // advance event time far past the gap so the timeout fires
-    input.addData(EventStreams.TimedEvent(9, 2, "click", 1.0, ts(59)))
-    q.processAllAvailable()
-    input.addData(EventStreams.TimedEvent(10, 2, "click", 1.0, ts(59)))
-    q.processAllAvailable(); q.stop()
-    val sessions = spark.table("fsessions")
-      .as[EventStreams.SessionSummary].collect().filter(_.user_id == 1)
-    assert(sessions.length == 1)
-    assert(sessions.head.n_events == 2)
-    assert(sessions.head.start == ts(0) && sessions.head.end == ts(5))
-  }
-
-  test("flatMapGroupsWithState: a gap inside one key's own data splits sessions " +
-      "even when no other key advances the watermark") {
-    val input = MemoryStream[EventStreams.TimedEvent](spark)
-    input.addData(
-      EventStreams.TimedEvent(1, 7, "click", 1.0, ts(0)),
-      EventStreams.TimedEvent(2, 7, "click", 1.0, ts(3)))
-    val q = EventStreams.sessionSummaries(input.toDS())
-      .writeStream.format("memory").queryName("gsessions").outputMode("append").start()
-    q.processAllAvailable()
-    // same user returns 50 min later — watermark never crossed the timeout
-    // between batches, the data-branch gap split must emit session 1
-    input.addData(EventStreams.TimedEvent(3, 7, "click", 1.0, ts(55)))
-    q.processAllAvailable(); q.stop()
-    val sessions = spark.table("gsessions")
-      .as[EventStreams.SessionSummary].collect()
-    assert(sessions.length == 1)
-    assert(sessions.head.n_events == 2 && sessions.head.end == ts(3))
-  }
-
-  test("transformWithState sessionizer ≡ flatMapGroupsWithState semantics " +
-      "(timeout close, in-batch gap split, timer replacement)") {
-    StateStores.withRocksDB(spark) {
-      val input = MemoryStream[EventStreams.TimedEvent](spark)
-      input.addData(
-        EventStreams.TimedEvent(1, 1, "click", 1.0, ts(0)),
-        EventStreams.TimedEvent(2, 1, "click", 1.0, ts(5)))
-      val q = EventStreams.sessionSummariesTws(input.toDS())
-        .writeStream.format("memory").queryName("tws").outputMode("append").start()
-      q.processAllAvailable()
-      // extend user 1's open session — the old close timer must be replaced
-      input.addData(EventStreams.TimedEvent(3, 1, "click", 1.0, ts(8)))
-      q.processAllAvailable()
-      // user 7: in-batch split (gap inside one key with no watermark help)
-      input.addData(
-        EventStreams.TimedEvent(4, 7, "click", 1.0, ts(1)),
-        EventStreams.TimedEvent(5, 7, "click", 1.0, ts(4)))
-      q.processAllAvailable()
-      input.addData(EventStreams.TimedEvent(6, 7, "click", 1.0, ts(55)))
-      q.processAllAvailable()
-      // push the watermark far past every deadline → timers close the rest
-      input.addData(EventStreams.TimedEvent(9, 2, "click", 1.0, ts(120)))
-      q.processAllAvailable()
-      input.addData(EventStreams.TimedEvent(10, 2, "click", 1.0, ts(120)))
-      q.processAllAvailable(); q.stop()
-      val sessions = spark.table("tws").as[EventStreams.SessionSummary]
-        .collect().toSet
-      // user 1: ONE session 0..8 (3 events — not closed early at ts(5))
-      assert(sessions.filter(_.user_id == 1) == Set(
-        EventStreams.SessionSummary(1, 3, ts(0), ts(8))))
-      // user 7: data-branch split emitted 1..4, then the timer closed 55
-      assert(sessions.filter(_.user_id == 7) == Set(
-        EventStreams.SessionSummary(7, 2, ts(1), ts(4)),
-        EventStreams.SessionSummary(7, 1, ts(55), ts(55))))
-    }
   }
 
   test("streaming as-of enrichment ≡ batch AsOfJoinExec on the same rows " +
@@ -321,31 +121,6 @@ class EventStreamsSpec extends SparkSpec {
       assert(streamed.exists(e => e.event_id == 1 &&
         e.signup_ts_us.contains(ts(15).getTime * 1000L)))
     }
-  }
-
-  test("foreachBatch envelope sink writes chunked JSON documents") {
-    val input = MemoryStream[Ev](spark)
-    input.addData((1 to 7).map(i => Ev(i, ts(i), 1, "click", 1.0)): _*)
-    val dir = java.nio.file.Files.createTempDirectory("env").toFile.getAbsolutePath
-    val q = EventStreams.writeEnvelopes(input.toDF(), dir, chunkRows = 3)
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val docs = spark.read.text(s"$dir/batch_0").as[String].collect()
-    assert(docs.length == 3) // 7 rows / 3-row chunks
-    assert(docs.forall(_.startsWith("""{"chunk_number":""")))
-    val total = docs.map(d => "\"event_id\"".r.findAllIn(d).length).sum
-    assert(total == 7)
-  }
-
-  test("file-backed stream: parquet events through readStream end-to-end") {
-    val stream = Tables.eventsStream(spark, sfDir)
-    val agg = EventStreams.tumblingCounts(stream, windowLen = "1 hour", watermark = "0 seconds")
-    val q = agg.writeStream.format("memory").queryName("filestream").outputMode("update").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("filestream")
-      .groupBy("w_start", "event_type").agg(max("n").as("n"))
-      .agg(sum("n")).as[Long].head()
-    assert(streamed == Tables.events(spark, sfDir).count())
   }
 
   test("streaming CDC compaction ≡ batch cdcCompact across out-of-order " +

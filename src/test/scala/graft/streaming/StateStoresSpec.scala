@@ -2,41 +2,51 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.max
+import java.sql.Timestamp
 
 class StateStoresSpec extends SparkSpec {
   import spark.implicits._
 
-  private val docs = Seq(
-    Doc(1, "the quick brown fox jumps over the lazy dog and that is a fine thing to see", "en", "a", 0),
-    Doc(2, "the quick brown fox jumps over the lazy dog and that is a fine thing to see", "en", "a", 0),
-    Doc(3, "a completely different document about distributed state stores and their checkpoints", "en", "b", 0),
-    Doc(4, "yet another unique body of text that should survive the dedup ledger intact", "en", "b", 0))
+  private def ts(minute: Int): Timestamp =
+    Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
 
-  test("stateful dedup under RocksDB ≡ default provider; provider actually engaged") {
+  // the 10:00 click window gets one event per micro-batch
+  private val batch1 = Seq(Ev(1, ts(1), 1, "click", 1.0), Ev(3, ts(11), 2, "view", 3.0))
+  private val batch2 = Seq(Ev(2, ts(4), 1, "click", 2.0), Ev(4, ts(12), 1, "click", 4.0))
+
+  /** Each window's final state (update mode may emit a window twice). */
+  private def finalWindows(table: String): Set[(Timestamp, String, Long, Double)] =
+    spark.table(table).groupBy("w_start", "event_type")
+      .agg(max("n").as("n"), max("sum_value").as("sum_value"))
+      .as[(Timestamp, String, Long, Double)].collect().toSet
+
+  test("tumbling windows under RocksDB ≡ default provider; provider actually engaged") {
     // default-provider run
-    val in1 = MemoryStream[Doc](spark)
-    in1.addData(docs: _*)
-    val q1 = DocumentStreams.dedupByContent(DocumentStreams.prepare(in1.toDF()))
-      .writeStream.format("memory").queryName("ss_default").outputMode("append").start()
+    val in1 = MemoryStream[Ev](spark)
+    in1.addData(batch1 ++ batch2: _*)
+    val q1 = EventStreams.tumblingCounts(in1.toDF())
+      .writeStream.format("memory").queryName("ss_default").outputMode("update").start()
     q1.processAllAvailable(); q1.stop()
 
     // RocksDB run, state accumulated across two micro-batches
-    val (fps2, metrics) = StateStores.withRocksDB(spark) {
+    val (rows2, metrics) = StateStores.withRocksDB(spark) {
       assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") ==
         StateStores.RocksDBProviderClass)
-      val in2 = MemoryStream[Doc](spark)
-      val q2 = DocumentStreams.dedupByContent(DocumentStreams.prepare(in2.toDF()))
-        .writeStream.format("memory").queryName("ss_rocks").outputMode("append").start()
-      in2.addData(docs.take(2): _*); q2.processAllAvailable()
-      in2.addData(docs.drop(2): _*); q2.processAllAvailable()
+      val in2 = MemoryStream[Ev](spark)
+      val q2 = EventStreams.tumblingCounts(in2.toDF())
+        .writeStream.format("memory").queryName("ss_rocks").outputMode("update").start()
+      in2.addData(batch1: _*); q2.processAllAvailable()
+      in2.addData(batch2: _*); q2.processAllAvailable()
       val m = q2.lastProgress.stateOperators(0).customMetrics
       q2.stop()
-      (spark.table("ss_rocks").select($"fp").as[Long].collect().toSet, m)
+      (finalWindows("ss_rocks"), m)
     }
-    // same dedup ledger semantics under either provider
-    assert(fps2 ==
-      spark.table("ss_default").select($"fp").as[Long].collect().toSet)
-    assert(fps2.size == 3) // exact dup collapsed across batches
+    // same window state under either provider
+    assert(rows2 == finalWindows("ss_default"))
+    assert(rows2.size == 3)
+    // the 10:00 click window's state carried across the two batches
+    assert(rows2.contains((ts(0), "click", 2L, 3.0)), rows2)
     // the query really ran on RocksDB: its provider-specific metrics exist
     val keys = metrics.keySet()
     assert(keys.stream().anyMatch(_.startsWith("rocksdb")),

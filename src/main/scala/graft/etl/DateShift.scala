@@ -16,7 +16,9 @@ import graft.functions.{LenientDate, LenientTimestamp}
   *  - `fixedShift`: date + constant seconds (dcc_transforms.py:130-174)
   *
   * Output granularity per field comes from the field map's date status
-  * (Model.dateStatusGranularity). Cleaned rows get
+  * (Model.dateStatusGranularity), compiled on the driver
+  * ([[FieldMap.Rules]]) into one `IN` predicate per status, so tagging a
+  * row is a CASE in the row's own stage, not a join. Cleaned rows get
   * `kpmp_date_cleaned = true` and `kpmp_date_cleaned_type = <the full
   * status verbatim>` (dcc_transforms.py:103 stores date_type; the `[9:]`
   * slice applies only to transform METADATA granularity) — the PHI filter
@@ -38,43 +40,33 @@ object DateShift {
 
   final case class Result(eav: DataFrame, errors: DataFrame)
 
-  /** (field_name, granularity-pattern, cleaned-type) rows of the map. */
-  private def dateFields(fieldMap: DataFrame): DataFrame = {
-    val granularity = Model.dateStatusGranularity.foldLeft(lit(null).cast("string")) {
-      case (acc, (status, pattern)) => when(col("status") === status, pattern).otherwise(acc)
-    }
-    FieldMap.normalize(fieldMap)
-      .filter(col("status").isin(Model.dateStatuses: _*))
-      .dropDuplicates("field_name") // see PhiFilter: no join fan-out on dup control rows
-      .select(
-        col("field_name"),
-        granularity.as("__gran"),
-        // the cleaned-type IS the full status (dcc_transforms.py:103 stores
-        // date_type verbatim; the [9:] slice applies only to the
-        // transform-metadata granularity field)
-        col("status").as("__ctype"))
-  }
-
   /** Render `ts` at the row's granularity — `date_format` needs a literal
-    * pattern, so this is a 4-arm CASE (still codegen'd). */
+    * pattern, so this is a 4-arm CASE on the row's date status (still
+    * codegen'd). */
   private def renderByGran(ts: Column): Column =
-    Model.dateStatusGranularity.values.toSeq.sorted.foldLeft(lit(null).cast("string")) {
-      case (acc, pattern) =>
-        when(col("__gran") === pattern, date_format(ts, pattern)).otherwise(acc)
+    Model.dateStatusGranularity.toSeq.sorted.foldLeft(lit(null).cast("string")) {
+      case (acc, (status, pattern)) =>
+        when(col("__ctype") === status, date_format(ts, pattern)).otherwise(acc)
     }
 
-  /** Tag each EAV row with its date-field granularity (null = not a date
-    * field) via broadcast join on the control table. */
-  private def tagged(eav: DataFrame, fieldMap: DataFrame): DataFrame =
-    eav.join(broadcast(dateFields(fieldMap)), Seq("field_name"), "left")
+  /** Tag each EAV row with its date status (`__ctype`, null = not a date
+    * field): a CASE over the compiled map's date fields, one `IN` per
+    * status. The cleaned-type IS the full status (dcc_transforms.py:103
+    * stores date_type verbatim; the [9:] slice applies only to the
+    * transform-metadata granularity field). */
+  private def tagged(eav: DataFrame, fieldMap: FieldMap.Rules): DataFrame =
+    eav.withColumn("__ctype", fieldMap.dates.groupMap(_._2)(_._1).toSeq.sortBy(_._1)
+      .foldLeft(lit(null).cast("string")) { case (acc, (status, fields)) =>
+        when(FieldMap.isIn(col("field_name"), fields), status).otherwise(acc)
+      })
 
   /** Shared core: tag date fields, rewrite `value` with `rendered` where the
     * row parses (and `extraOk` holds), mark cleaned, surface failures.
     * Only date-field rows are parsed; every use of `__parsed` is guarded
     * by `isDate`. */
-  private def applyShift(eav: DataFrame, fieldMap: DataFrame, rendered: Column,
+  private def applyShift(eav: DataFrame, fieldMap: FieldMap.Rules, rendered: Column,
       extraOk: Column = lit(true)): Result = {
-    val isDate = col("__gran").isNotNull
+    val isDate = col("__ctype").isNotNull
     val t = tagged(eav, fieldMap)
       .withColumn("__parsed", when(isDate, LenientDate.parseTs(col("value"))))
     val ok = isDate && col("__parsed").isNotNull && extraOk
@@ -103,7 +95,7 @@ object DateShift {
 
   /** Mode 1: per-record dob shift. `standardDate` is the anchor all records
     * land on (ISO string, config `standard_date`). */
-  def dobShift(eav: DataFrame, fieldMap: DataFrame, standardDate: String,
+  def dobShift(eav: DataFrame, fieldMap: FieldMap.Rules, standardDate: String,
       dobField: String = "np_dob"): Result = {
     val anchor = anchorSeconds(eav, standardDate)
     // deterministic "winner" per record: max parsed dob (see scaladoc)
@@ -123,14 +115,14 @@ object DateShift {
   }
 
   /** Mode 2: seconds-until-standard-date (integer string output). */
-  def totalSeconds(eav: DataFrame, fieldMap: DataFrame, standardDate: String): Result = {
+  def totalSeconds(eav: DataFrame, fieldMap: FieldMap.Rules, standardDate: String): Result = {
     val anchor = anchorSeconds(eav, standardDate)
     val secs = (anchor - unix_timestamp(col("__parsed"))).cast("long")
     applyShift(eav, fieldMap, secs.cast("string"))
   }
 
   /** Mode 3: constant shift (config `shifting_seconds`). */
-  def fixedShift(eav: DataFrame, fieldMap: DataFrame, shiftSeconds: Long): Result = {
+  def fixedShift(eav: DataFrame, fieldMap: FieldMap.Rules, shiftSeconds: Long): Result = {
     val shifted = timestamp_seconds(unix_timestamp(col("__parsed")) + lit(shiftSeconds))
     applyShift(eav, fieldMap, renderByGran(shifted))
   }

@@ -11,15 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object DictionaryJob {
 
-  /** The 18 metadata fields, dictionary_extraction.py:10-29. */
-  val metadataFields: Seq[String] = Seq(
-    "field_name", "form_name", "section_header", "field_type", "field_label",
-    "select_choices_or_calculations", "field_note",
-    "text_validation_type_or_show_slider_number", "text_validation_min",
-    "text_validation_max", "identifier", "branching_logic", "required_field",
-    "custom_alignment", "question_number", "matrix_group_name",
-    "matrix_ranking", "field_annotation")
-
   /** Columns kept in the output dictionary (extraction keeps the analytic
     * subset + curation columns; dictionary_extraction.py:48-61,76-81). */
   val keepColumns: Seq[String] = Seq(

@@ -10,6 +10,12 @@ import graft.sources.IniConfig
   *   transforms (per `dcc_transforms`) → PHI filter → envelopes + header →
   *   NDJSON out (the `--fake` path) or a caller-supplied POST.
   *
+  * The field map is read and compiled on the driver ([[FieldMap.rules]]),
+  * so the date shift and the PHI filter inline it as predicates instead of
+  * joining it. The `--fake` path writes its two envelope streams at once;
+  * the POST path ([[EtlMain]]: header, then data, then transform chunks),
+  * `writeout` and `pubDebug` stay in order.
+  *
   * A reference user keeps their INI sections (`default`, `dcc_transforms`,
   * `redcap`, `datalake`) and swaps the runtime.
   */
@@ -47,7 +53,7 @@ object EtlJob {
     * activate a transform the reference would skip; `resolved` (with its
     * interpolation + default fallback) applies only to values known present. */
   def transformsFromConfig(spark: SparkSession, config: IniConfig,
-      fieldMap: DataFrame): Seq[EtlTransform] = {
+      fieldMap: FieldMap.Rules): Seq[EtlTransform] = {
     def c(k: String): Option[String] =
       config.get("dcc_transforms", k).flatMap(_ => config.resolved("dcc_transforms", k))
     val date = c("datetransform_type").map { mode =>
@@ -88,7 +94,7 @@ object EtlJob {
     }
     val fieldMapPath = config.resolved("default", "field_map_file")
       .getOrElse(throw new IllegalArgumentException("config: field_map_file required"))
-    val fieldMap = FieldMap.load(spark, fieldMapPath)
+    val fieldMap = FieldMap.rules(spark, fieldMapPath)
     val eav = readEav(spark, config)
     val transforms = transformsFromConfig(spark, config, fieldMap)
     val result = Pipeline.run(eav, fieldMap, transforms)
@@ -123,9 +129,11 @@ object EtlJob {
     if (fake) {
       config.resolved("default", "out_dir").foreach { out =>
         // raw envelope documents, one per line (the reference's write_out
-        // emits the chunk JSON verbatim — a json() write would re-wrap it)
-        envelopes.write.mode("overwrite").text(s"$out/envelopes")
-        recordEnvelopes.foreach(_.write.mode("overwrite").text(s"$out/transform_envelopes"))
+        // emits the chunk JSON verbatim — a json() write would re-wrap it);
+        // neither stream reads the other, so both are written at once
+        concurrently(
+          envelopes.write.mode("overwrite").text(s"$out/envelopes"),
+          recordEnvelopes.foreach(_.write.mode("overwrite").text(s"$out/transform_envelopes")))
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$out/header.json"), header)
       }
@@ -149,5 +157,22 @@ object EtlJob {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).text(path)
     }
     Output(result, envelopes, recordEnvelopes, header)
+  }
+
+  /** Runs `main` on this thread while a thread started here runs `side`;
+    * returns once both have ended, rethrowing the first failure with the
+    * other one suppressed. A thread started by the caller inherits its
+    * Spark local properties (job group, job tags, scheduler pool), which a
+    * pooled thread would not, so both halves' jobs belong to the call. */
+  private[etl] def concurrently(main: => Unit, side: => Unit): Unit = {
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def attempt(body: => Unit): Unit = try body catch {
+      case e: Throwable => if (!failure.compareAndSet(null, e)) failure.get.addSuppressed(e)
+    }
+    val thread = new Thread(() => attempt(side), "etl-side-write")
+    thread.start()
+    attempt(main)
+    thread.join()
+    Option(failure.get).foreach(e => throw e)
   }
 }

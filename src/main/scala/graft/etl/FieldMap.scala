@@ -1,9 +1,13 @@
 package graft.etl
 
+import scala.io.Source
+import scala.language.implicitConversions
+
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.CodecStreams
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -12,13 +16,68 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 /** Field-map control-plane table (SURVEY.md §1.2 item 2, J1).
   *
   * The reference loads the CSV into a driver-side dict for O(1) probes
-  * (/root/reference/redcap-etl.py:294-297); the Spark-native equivalent is a
-  * small DataFrame marked for broadcast at the join site — same build-side
-  * hash table, built once per executor instead of once per process.
+  * (redcap-etl.py:294-297). The Spark-native equivalent is
+  * the same dict compiled into [[FieldMap.Rules]]: `field_name` sets that
+  * the date shift and the PHI filter inline as `IN`/`InSet` predicates, so
+  * the map never becomes a join side. The map is bounded by the REDCap
+  * dictionary, not by participant count; the calc-variable and
+  * secondary-id tables, which do grow with participants, stay distributed
+  * frames ([[FieldMap.load]]).
   */
 object FieldMap {
 
   private val options = Map("header" -> "true", "mode" -> "FAILFAST")
+
+  /** The field map as the de-id stages read it, deduplicated on
+    * `field_name` keeping the first row in file order (the reference's dict
+    * build keeps the last; duplicates in a curated control table are an
+    * upstream data bug, and first-wins is deterministic). Two scopes, as
+    * the stages have always deduplicated:
+    *  - `dates`: (field, date status) over the date-status rows only — the
+    *    date shift's view, in file order;
+    *  - `known`, `phiDates`, `include`: over all rows — the PHI filter's
+    *    view; `include` groups the `Include` fields by their parsed
+    *    `restrict_to_event_list` (None = every event).
+    * A null `field_name` is kept as a key but matches no EAV row, as in an
+    * equi-join. */
+  final case class Rules(
+      known: Set[String],
+      dates: Seq[(String, String)],
+      phiDates: Set[String],
+      include: Map[Option[Set[String]], Set[String]])
+
+  object Rules {
+    /** A field-map frame compiled with one collect (a local frame runs no
+      * job). */
+    implicit def compiled(fieldMap: DataFrame): Rules = compile(
+      normalize(fieldMap).select("field_name", "status", "restrict_to_event_list")
+        .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))))
+
+    /** (field_name, status, restrict_to_event_list) rows, in file order. */
+    def compile(rows: Seq[(String, String, String)]): Rules = {
+      def dated(rs: Seq[(String, String, String)]) = rs.filter(r => Model.dateStatuses.contains(r._2))
+      val first = rows.distinctBy(_._1)
+      Rules(first.map(_._1).toSet, dated(rows).distinctBy(_._1).map(r => r._1 -> r._2),
+        dated(first).map(_._1).toSet, first.filter(_._2 == "Include")
+          .groupMap(r => events(r._3))(_._1).view.mapValues(_.toSet).toMap)
+    }
+
+    /** An event list as `trim(split(list, ","))` reads it; null or blank
+      * means every event. Spark's `trim` strips spaces only (a tab stays
+      * part of the event name), unlike `String.trim`. */
+    private def events(list: String): Option[Set[String]] = {
+      def trim(s: String) = s.replaceAll("^ +| +$", "")
+      Option(list).filter(trim(_).nonEmpty).map(_.split(",", -1).map(trim).toSet)
+    }
+  }
+
+  /** `c IN (values)` without nulls, sorted so plans stay stable; false
+    * when nothing is left. */
+  private[etl] def isIn(c: Column, values: Iterable[String]): Column =
+    values.filter(_ != null).toSeq.sorted match {
+      case Seq() => lit(false)
+      case vs => c.isin(vs: _*)
+    }
 
   /** Read a field-map CSV; pandas' NaN→None normalization
     * (redcap-etl.py:296) is how Spark's csv reader already behaves
@@ -27,17 +86,39 @@ object FieldMap {
     * runs no Spark job. */
   def load(spark: SparkSession, path: String): DataFrame = {
     val reader = spark.read.options(options)
-    headerSchema(spark, path).fold(reader.csv(path))(reader.schema(_).csv(path))
+    oneFile(spark, path).fold(reader.csv(path))(f => reader.schema(f._2).csv(path))
   }
 
-  /** The schema Spark's header inference gives `path`, built with the same
-    * helpers from the header line of its one data file: a file, or a
-    * directory (e.g. a `Sinks.csvSingle` output) whose only visible entry
-    * is a file. None otherwise — with several files Spark takes the header
-    * from the first file by split size, which only its own inference
-    * reproduces — and for a glob, a missing path or an empty file, which
-    * Spark's reader then handles and reports itself. */
-  private def headerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  /** The field map at `path`, compiled. One data file is parsed on the
+    * driver by Spark's own line-mode CSV parser with [[load]]'s options
+    * and column pruning, so this runs no Spark job; otherwise it is
+    * [[load]]ed and collected once. */
+  def rules(spark: SparkSession, path: String): Rules =
+    oneFile(spark, path).fold(Rules.compiled(load(spark, path))) { case (file, schema) =>
+      val wanted = Seq("field_name", "status", "restrict_to_event_list")
+      val required = StructType(schema.filter(c => wanted.contains(c.name)))
+      val at = wanted.map(required.fieldNames.indexOf(_))
+      val csv = csvOptions(spark)
+      val in = CodecStreams.createInputStream(spark.sparkContext.hadoopConfiguration, file)
+      try Rules.compile(Bridge.csvLines(Source.fromInputStream(in, csv.charset).getLines(),
+          schema, required, csv).map { row =>
+        val v = at.map(i => if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i).toString)
+        (v(0), v(1), v(2))
+      }.toVector)
+      finally in.close()
+    }
+
+  private def csvOptions(spark: SparkSession): CSVOptions =
+    new CSVOptions(options, true, spark.conf.get("spark.sql.session.timeZone"))
+
+  /** The one data file of `path` and the schema Spark's header inference
+    * gives it, built with the same helpers from its header line: a file,
+    * or a directory (e.g. a `Sinks.csvSingle` output) whose only visible
+    * entry is a file. None otherwise — with several files Spark takes the
+    * header from the first file by split size, which only its own
+    * inference reproduces — and for a glob, a missing path or an empty
+    * file, which Spark's reader then handles and reports itself. */
+  private def oneFile(spark: SparkSession, path: String): Option[(Path, StructType)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
     if (Bridge.isGlobPath(p)) return None
@@ -49,14 +130,13 @@ object FieldMap {
       else fs.listStatus(p).toSeq.filterNot(s => Bridge.isHiddenPath(s.getPath.getName))
     files match {
       case Seq(f) if f.isFile =>
-        val csv = new CSVOptions(options, true,
-          spark.conf.get("spark.sql.session.timeZone"))
+        val csv = csvOptions(spark)
         for {
           line <- CSVUtils.readHeaderLine(f.getPath, csv, conf)
           tokens <- Option(new CsvParser(csv.asParserSettings).parseLine(line))
         } yield {
           val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
-          StructType(CSVUtils.makeSafeHeader(tokens, caseSensitive, csv)
+          f.getPath -> StructType(CSVUtils.makeSafeHeader(tokens, caseSensitive, csv)
             .map(StructField(_, StringType)))
         }
       case _ => None

@@ -1,41 +1,14 @@
 package graft.etl
 
-import org.apache.spark.sql.types._
-
 /** Core data model (SURVEY.md §1).
   *
   * The EAV plane is intentionally a DataFrame (dynamic attribute space —
   * `field_name`/`value` carry arbitrary study fields as strings, per the
-  * reference's `type=eav` export, /root/reference/redcap-etl.py:84,123-127).
-  * Fixed contracts get case classes + Encoders.
+  * reference's `type=eav` export, redcap-etl.py:84,123-127;
+  * `EavSource.schema` holds its columns). The control-table constants live
+  * here.
   */
 object Model {
-
-  /** One row per (record, event, repeat-instance, field) —
-    * /root/reference/redcap-etl.py:166-176 shows the exact shape. */
-  val eavSchema: StructType = StructType(Seq(
-    StructField("record_id", StringType),
-    StructField("redcap_event_name", StringType),
-    StructField("redcap_repeat_instrument", StringType),
-    StructField("redcap_repeat_instance", StringType),
-    StructField("field_name", StringType),
-    StructField("value", StringType),
-    // set by the in-place date transform, /root/reference/dcc_transforms.py:101-103
-    StructField("kpmp_date_cleaned", BooleanType, nullable = true),
-    StructField("kpmp_date_cleaned_type", StringType, nullable = true)))
-
-  /** Fixed 4-column transform-output contract, /root/reference/transform.py:16-24. */
-  final case class TransformRecord(
-      record_id: String,
-      namespace: String,
-      field_name: String,
-      field_value: String)
-
-  val transformRecordSchema: StructType = StructType(Seq(
-    StructField("record_id", StringType),
-    StructField("namespace", StringType),
-    StructField("field_name", StringType),
-    StructField("field_value", StringType)))
 
   /** Field-map control table columns, /root/reference/dictionary_extraction.py:48-61. */
   val fieldMapColumns: Seq[String] = Seq(

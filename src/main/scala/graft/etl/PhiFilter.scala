@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * Fields absent from the map are dropped and reported once (:322-327) —
   * here a distinct side output instead of a driver dict.
   *
-  * One broadcast hash join + one filter expression: the whole cascade stays
-  * in whole-stage codegen; the map is a control table (thousands of rows at
-  * most) so broadcast is always correct, at any data scale.
+  * The map arrives compiled ([[FieldMap.Rules]], thousands of fields at
+  * most), so the whole cascade is one filter of `IN`/`InSet` predicates
+  * over literal field and event sets: no join, no exchange, and it stays
+  * in whole-stage codegen at any data scale.
   */
 object PhiFilter {
 
@@ -28,39 +29,21 @@ object PhiFilter {
   private val dagCol: Column = col("field_name") === "redcap_data_access_group"
   private val completeCol: Column = col("field_name").endsWith("_complete")
 
-  def apply(eav: DataFrame, fieldMap: DataFrame): Result = {
-    val fm = FieldMap.normalize(fieldMap)
-      // a duplicated field_name row in the control CSV must not fan out
-      // every matching EAV row through the join; the reference's dict
-      // build collapses duplicates (last-wins on file order — an ordering
-      // a distributed read can't see, so: any-wins, and duplicates in a
-      // curated control table are an upstream data bug either way)
-      .dropDuplicates("field_name")
-      .select(
-        col("field_name"),
-        col("status").as("__fm_status"),
-        col("restrict_to_event_list").as("__fm_events"),
-        lit(true).as("__fm_known"))
+  def apply(eav: DataFrame, fieldMap: FieldMap.Rules): Result = {
+    val field = col("field_name")
+    // one disjunct per distinct event list, in a stable order; a null
+    // event never passes a restricted list
+    val include = fieldMap.include.toSeq.sortBy(_._1.map(_.toSeq.sorted.mkString(","))).map {
+      case (events, fields) =>
+        val f = FieldMap.isIn(field, fields)
+        events.fold(f)(ev => f && FieldMap.isIn(col("redcap_event_name"), ev))
+    }.foldLeft(lit(false))(_ || _)
+    val cleanedDate = FieldMap.isIn(field, fieldMap.phiDates) && col("kpmp_date_cleaned") === true
 
-    val joined = eav.join(broadcast(fm), Seq("field_name"), "left")
-
-    // coalesce: unmatched left-join rows carry NULL, and !NULL is NULL (not
-    // true) — without this the unknown-field side output would be empty.
-    val known = coalesce(col("__fm_known"), lit(false))
-    // restrict_to_event_list: comma-separated event names; null/blank = all.
-    val eventOk = col("__fm_events").isNull || trim(col("__fm_events")) === "" ||
-      array_contains(transform(split(col("__fm_events"), ","), e => trim(e)),
-        col("redcap_event_name"))
-    val include = known && col("__fm_status") === "Include" && eventOk
-    val cleanedDate = known && col("__fm_status").isin(Model.dateStatuses: _*) &&
-      col("kpmp_date_cleaned") === true
-
-    val keep = dagCol || completeCol || include || cleanedDate
-
-    val kept = joined.filter(keep).select(eav.columns.toIndexedSeq.map(col): _*)
-    val unknown = joined
-      .filter(!dagCol && !completeCol && !known)
-      .select(col("field_name")).distinct()
-    Result(kept, unknown, kept.select(col("field_name")).distinct())
+    val kept = eav.filter(dagCol || completeCol || include || cleanedDate)
+    val unknown = eav
+      .filter(!dagCol && !completeCol && !FieldMap.isIn(field, fieldMap.known))
+      .select(field).distinct()
+    Result(kept, unknown, kept.select(field).distinct())
   }
 }

@@ -150,9 +150,4 @@ object Sinks {
     s"""{"chunk_number":0,"transform_metadata":$transforms,""" +
       s""""redcap_metadata_filtered":${jsonArr(metadata)}}"""
   }
-
-  /** Back-compat shape for small dictionaries passed as a bare frame. */
-  def headerDocument(transformRecords: Option[DataFrame], metadata: Option[DataFrame]): String =
-    s"""{"chunk_number":0,"transform_metadata":${jsonArr(transformRecords)},""" +
-      s""""redcap_metadata_filtered":${jsonArr(metadata)}}"""
 }

@@ -39,7 +39,7 @@ trait EtlTransform {
   * (the reference logs them; dcc_transforms.py:57-73).
   */
 final class DateShiftTransform(
-    fieldMap: DataFrame,
+    fieldMap: FieldMap.Rules,
     mode: String,                    // dob_shifting | total_seconds | date_shifting
     standardDate: String = "2010-01-01",
     shiftSeconds: Long = 0L,
@@ -75,12 +75,10 @@ final class DateShiftTransform(
     * return None, exactly like the reference). */
   override def metadata(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
     if (mode != "total_seconds") None
-    else Some {
-      FieldMap.normalize(fieldMap)
-        .filter(col("status").isin(Model.dateStatuses: _*))
-        .dropDuplicates("field_name")
-        .select(col("field_name"),
-          regexp_replace(col("status"), "^Transform", "").as("granularity"))
+    else {
+      import spark.implicits._
+      Some(fieldMap.dates.map { case (f, status) => (f, status.stripPrefix("Transform")) }
+        .toDF("field_name", "granularity"))
     }
 }
 
@@ -183,23 +181,12 @@ object Pipeline {
         * shipped once in the header document (Sinks.headerDocument). */
       transformMetadata: Seq[(String, DataFrame)])
 
-  def run(eav: DataFrame, fieldMap: DataFrame, transforms: Seq[EtlTransform]): Result = {
-    var plane = eav
-    val appended = Seq.newBuilder[DataFrame]
-    val errs = Seq.newBuilder[DataFrame]
-    transforms.foreach { t =>
-      val out = t(plane)
-      plane = out.eav
-      out.records.foreach(appended += _)
-      out.errors.foreach(errs += _)
-    }
-    val phi = PhiFilter(plane, fieldMap)
-    def unionAll(dfs: Seq[DataFrame]): Option[DataFrame] = dfs match {
-      case Nil => None
-      case h :: t => Some(t.foldLeft(h)(_.unionByName(_)))
-    }
+  def run(eav: DataFrame, fieldMap: FieldMap.Rules, transforms: Seq[EtlTransform]): Result = {
+    // each transform reads the plane the one before it left
+    val outs = transforms.scanLeft(TransformOutput(eav))((prev, t) => t(prev.eav))
+    val phi = PhiFilter(outs.last.eav, fieldMap)
     val meta = transforms.flatMap(t => t.metadata(eav.sparkSession).map(t.namespace -> _))
-    Result(phi.kept, unionAll(appended.result()), phi.unknownFields,
-      phi.uniqueFields, unionAll(errs.result()), meta)
+    Result(phi.kept, outs.flatMap(_.records).reduceOption(_ unionByName _), phi.unknownFields,
+      phi.uniqueFields, outs.flatMap(_.errors).reduceOption(_ unionByName _), meta)
   }
 }

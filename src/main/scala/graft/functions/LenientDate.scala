@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Lenient ISO-8601 parsing (SURVEY.md F1): REDCap values are strings at
   * mixed granularities (`yyyy`, `yyyy-MM`, date, minute, second, with space
@@ -24,7 +23,4 @@ object LenientDate {
 
   /** Parse a lenient ISO string to TimestampType; null when unparseable. */
   def parseTs(c: Column): Column = LenientTimestamp(c)
-
-  /** Render a timestamp at one of the four reference granularities. */
-  def render(ts: Column, pattern: String): Column = date_format(ts, pattern)
 }

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ↔ Expression bridge: Spark 4 made these conversions
   * `private[sql]`, so extension libraries expose them from inside the
@@ -34,4 +37,12 @@ object Bridge {
     org.apache.spark.deploy.SparkHadoopUtil.get.isGlobPath(p)
   def isHiddenPath(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** Spark's line-mode CSV read of one whole file's `lines`
+    * (`private[sql]`): header skipped, blank lines dropped, each row parsed
+    * into `required`'s columns under `options`' parse mode. */
+  def csvLines(lines: Iterator[String], schema: StructType, required: StructType,
+      options: CSVOptions): Iterator[InternalRow] =
+    UnivocityParser.parseIterator(lines, new UnivocityParser(schema, required, options),
+      new CSVHeaderChecker(required, options, "CSV file", isStartOfFile = true), required)
 }

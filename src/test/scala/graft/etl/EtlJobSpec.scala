@@ -11,28 +11,11 @@ class EtlJobSpec extends SparkSpec {
 
   private lazy val dir = Files.createTempDirectory("etljob").toFile.getAbsolutePath
 
-  private def write(name: String, content: String): String = {
-    val f = java.nio.file.Paths.get(dir, name)
-    Files.writeString(f, content)
-    f.toString
-  }
+  private def write(name: String, content: String): String = EtlJobSpec.write(dir, name, content)
 
-  private lazy val eavCsv = write("records.csv",
-    """record_id,redcap_event_name,redcap_repeat_instrument,redcap_repeat_instance,field_name,value
-      |r1,screening_arm_1,,,np_dob,1990-05-20
-      |r1,screening_arm_1,,,age,34
-      |r1,screening_arm_1,,,visit_date,2001-06-15
-      |r1,screening_arm_1,,,ssn,123-45-6789
-      |r2,screening_arm_1,,,age,55
-      |""".stripMargin)
+  private lazy val eavCsv = write("records.csv", EtlJobSpec.records)
 
-  private lazy val fieldMapCsv = write("fieldmap.csv",
-    """field_name,status,restrict_to_event_list
-      |age,Include,
-      |visit_date,TransformDate,
-      |ssn,Exclude,
-      |np_dob,Exclude,
-      |""".stripMargin)
+  private lazy val fieldMapCsv = write("fieldmap.csv", EtlJobSpec.fieldMap)
 
   private lazy val config = IniConfig.parse(
     s"""[default]
@@ -163,32 +146,54 @@ class EtlJobSpec extends SparkSpec {
 
   test("job floor: the three control-table loads run no job, so a full run " +
       "with field map, calc-variable table and secondary-id map runs 3 fewer") {
-    val deid = write("deid.csv",
-      """study_id,exp_age_decade
-        |r1,3
-        |""".stripMargin)
-    val secondary = write("secondary.csv",
-      """redcap_record_id,secondary_id
-        |r1,S-001
-        |r2,S-002
-        |""".stripMargin)
+    val cfg = EtlJobSpec.floorConfig(dir)
+    assert(jobsOf(FieldMap.load(spark, fieldMapCsv)) == 0)
+    assert(jobsOf(FieldMap.rules(spark, fieldMapCsv)) == 0)
+    EtlJob.run(spark, cfg) // warm: first-use jobs stay out of the count
+    // 17 when each load ran a header-inference job; 14 when the date shift
+    // and the PHI filter each joined the field map (a dedup shuffle and a
+    // broadcast apiece)
+    assert(jobsOf(EtlJob.run(spark, cfg)) == 10)
+    // each of the two one-id chunks is extracted four times: for the dob
+    // shift table and the shifted plane (data stream), and for the
+    // calc-variable and secondary-id id lists (transform stream)
+    val fetches = graft.sources.EavSource.chunkFetches.get
+    EtlJob.run(spark, cfg)
+    assert(graft.sources.EavSource.chunkFetches.get - fetches == 8)
+  }
+
+  test("the two envelope streams are written at once: a failing side write " +
+      "throws its own error once both have ended, and leaves no job running") {
+    val bad = write("deid-malformed.csv", "study_id,exp_age_decade\nr1,3,extra\n")
+    val out = s"$dir/outfail"
     val cfg = IniConfig.parse(
       s"""[default]
          |field_map_file = $fieldMapCsv
-         |out_dir = $dir/outfloor
+         |out_dir = $out
          |[dcc_transforms]
-         |datetransform_type = dob_shifting
-         |standard_date = 2010-01-01
-         |dob_shift_inplace = true
-         |deid_data_file = $deid
-         |secondary_id_file = $secondary
+         |deid_data_file = $bad
          |[redcap]
          |eav_source = $eavCsv
          |""".stripMargin)
-    assert(jobsOf(FieldMap.load(spark, fieldMapCsv)) == 0)
-    EtlJob.run(spark, cfg) // warm: first-use jobs stay out of the count
-    // 17 when each load ran a header-inference job
-    assert(jobsOf(EtlJob.run(spark, cfg)) == 14)
+    val e = intercept[Exception](EtlJob.run(spark, cfg))
+    // the deid table is read by the transform stream only
+    assert(e.getMessage.contains("deid-malformed.csv"), e.getMessage)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(Files.exists(java.nio.file.Paths.get(s"$out/envelopes/_SUCCESS")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$out/transform_envelopes/_SUCCESS")))
+  }
+
+  test("concurrently: the side thread's jobs run under the caller's job group; " +
+      "the first failure is thrown with the other suppressed") {
+    val sc = spark.sparkContext
+    def job(): Unit = sc.parallelize(1 to 4, 2).count()
+    assert(jobsOf(EtlJob.concurrently(job(), job())) == 2)
+    val e = intercept[IllegalStateException](EtlJob.concurrently(
+      { Thread.sleep(200); throw new IllegalArgumentException("main") },
+      throw new IllegalStateException("side")))
+    assert(e.getMessage == "side")
+    assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("main"))
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
   }
 
   test("EtlMain parses the reference's argparse surface") {
@@ -209,5 +214,59 @@ class EtlJobSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       EtlJob.run(spark, config, projectInfo = Map("project_id" -> "99"))
     }
+  }
+}
+
+object EtlJobSpec {
+  def write(dir: String, name: String, content: String): String = {
+    val f = java.nio.file.Paths.get(dir, name)
+    Files.writeString(f, content)
+    f.toString
+  }
+
+  val records: String =
+    """record_id,redcap_event_name,redcap_repeat_instrument,redcap_repeat_instance,field_name,value
+      |r1,screening_arm_1,,,np_dob,1990-05-20
+      |r1,screening_arm_1,,,age,34
+      |r1,screening_arm_1,,,visit_date,2001-06-15
+      |r1,screening_arm_1,,,ssn,123-45-6789
+      |r2,screening_arm_1,,,age,55
+      |""".stripMargin
+
+  val fieldMap: String =
+    """field_name,status,restrict_to_event_list
+      |age,Include,
+      |visit_date,TransformDate,
+      |ssn,Exclude,
+      |np_dob,Exclude,
+      |""".stripMargin
+
+  /** The job-floor run, written under `dir`: the two records extracted in
+    * two one-id chunks, an in-place dob shift, a calc-variable table and a
+    * secondary-id map, both envelope streams written under `dir/outfloor`. */
+  def floorConfig(dir: String): IniConfig = {
+    val deid = write(dir, "deid.csv",
+      """study_id,exp_age_decade
+        |r1,3
+        |""".stripMargin)
+    val secondary = write(dir, "secondary.csv",
+      """redcap_record_id,secondary_id
+        |r1,S-001
+        |r2,S-002
+        |""".stripMargin)
+    IniConfig.parse(
+      s"""[default]
+         |field_map_file = ${write(dir, "fieldmap.csv", fieldMap)}
+         |out_dir = $dir/outfloor
+         |[dcc_transforms]
+         |datetransform_type = dob_shifting
+         |standard_date = 2010-01-01
+         |dob_shift_inplace = true
+         |deid_data_file = $deid
+         |secondary_id_file = $secondary
+         |[redcap]
+         |eav_source = ${write(dir, "records.csv", records)}
+         |chunk_size = 1
+         |""".stripMargin)
   }
 }

@@ -129,7 +129,7 @@ class PipelineSpec extends SparkSpec {
     // total rows across envelopes == kept rows
     val total = docs.map(d => "\"record_id\"".r.findAllIn(d).length).sum
     assert(total == result.kept.count())
-    val header = Sinks.headerDocument(result.transformRecords, None)
-    assert(header.startsWith("""{"chunk_number":0,"transform_metadata":["""))
+    val header = Sinks.headerDocument(result.transformMetadata, None)
+    assert(header.startsWith("""{"chunk_number":0,"transform_metadata":{"""))
   }
 }

@@ -26,7 +26,7 @@ class SinksSpec extends SparkSpec {
     val ids = envs.map(e => """"chunk_number":(\d+)""".r.findFirstMatchIn(e).get.group(1).toLong)
     assert(ids.forall(_ >= 1))
     assert(ids.distinct.length == ids.length)
-    assert(Sinks.headerDocument(None, None).startsWith("""{"chunk_number":0,"""))
+    assert(Sinks.headerDocument(Nil, None).startsWith("""{"chunk_number":0,"""))
   }
 
   test("envelope meta fields on every chunk; None renders as JSON null") {

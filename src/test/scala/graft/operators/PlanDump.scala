@@ -17,6 +17,12 @@ import org.apache.spark.sql.execution.FormattedMode
   * label-propagation loop (the registered q244 takes the driver tier on
   * small graphs).
   *
+  * `etl_run` names `EtlJob.run` on EtlJobSpec's job-floor fixture (its own
+  * files, whatever `sfDir` is): the normalized plan of every write the run
+  * executes, caught by a `QueryExecutionListener` and sorted (the two
+  * envelope streams finish in either order), then the run's job and
+  * EAV chunk-fetch counts.
+  *
   * With no query named it prints the scan inventory instead: one
   * `MULTI <query> <table>=<n>,…` line per query that scans a parquet
   * table two or more times (the input of NoRecomputeSweepSpec's
@@ -48,19 +54,44 @@ object PlanDump {
           3, true).orderBy("node")))
     try {
       if (names.isEmpty) scanInventory(spark, sfDir, graft.SparkEntry.queries)
-      else names.foreach { n =>
-        val key = Some(n).filter(queries.contains)
-          .orElse(graft.SparkEntry.queries.keys.find(_.startsWith(n + "_")))
-          .getOrElse(sys.error(s"no registered query $n"))
-        var df: org.apache.spark.sql.DataFrame = null
-        val built = graft.SparkSpec.jobsIn(spark) { df = queries(key)(spark, sfDir) }
-        val plan = df.queryExecution.explainString(FormattedMode)
-        val run = graft.SparkSpec.jobsIn(spark) { df.collect() }
-        println(s"==== $key")
-        println(normalize(plan).trim)
-        println(s"jobs build=$built run=$run")
+      else names.foreach {
+        case "etl_run" => etlRun(spark)
+        case n =>
+          val key = Some(n).filter(queries.contains)
+            .orElse(graft.SparkEntry.queries.keys.find(_.startsWith(n + "_")))
+            .getOrElse(sys.error(s"no registered query $n"))
+          var df: org.apache.spark.sql.DataFrame = null
+          val built = graft.SparkSpec.jobsIn(spark) { df = queries(key)(spark, sfDir) }
+          val plan = df.queryExecution.explainString(FormattedMode)
+          val run = graft.SparkSpec.jobsIn(spark) { df.collect() }
+          println(s"==== $key")
+          println(normalize(plan).trim)
+          println(s"jobs build=$built run=$run")
       }
     } finally spark.stop()
+  }
+
+  private def etlRun(spark: org.apache.spark.sql.SparkSession): Unit = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val dir = java.nio.file.Files.createTempDirectory("plandump-etl").toString
+    val cfg = graft.etl.EtlJobSpec.floorConfig(dir)
+    graft.etl.EtlJob.run(spark, cfg) // warm: first-use jobs stay out of the count
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "command")
+          writes.add(normalize(qe.explainString(FormattedMode)).replace(dir, "<fixture>").trim)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val fetch0 = graft.sources.EavSource.chunkFetches.get
+    // jobsIn drains the listener bus, so every write has been seen after it
+    val jobs = try graft.SparkSpec.jobsIn(spark)(graft.etl.EtlJob.run(spark, cfg))
+      finally spark.listenerManager.unregister(listener)
+    val fetches = graft.sources.EavSource.chunkFetches.get - fetch0
+    println("==== etl_run")
+    writes.toArray(Array.empty[String]).sorted.foreach(println)
+    println(s"jobs run=$jobs chunk_fetches=$fetches")
   }
 
   private def scanInventory(spark: org.apache.spark.sql.SparkSession,

@@ -21,6 +21,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // range-theta → bucketed equi-join rewrite (opt-in by
     // graft.rangeJoin.bucketWidth; no-op otherwise)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
+    // a global sort of a local relation runs on the driver (no exchange)
+    ext.injectOptimizerRule(_ => graft.plans.LocalSort)
     // physical planning for the custom as-of join operator
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectFunction((

@@ -38,6 +38,9 @@ object FieldMap {
     *  - `known`, `phiDates`, `include`: over all rows — the PHI filter's
     *    view; `include` groups the `Include` fields by their parsed
     *    `restrict_to_event_list` (None = every event).
+    * Fail-closed: a field whose first row is `Include` but which also has
+    * a date-status row is a PHI date, not an `Include` field, so only its
+    * cleaned date rows pass the PHI filter — never an unshifted value.
     * A null `field_name` is kept as a key but matches no EAV row, as in an
     * equi-join. */
   final case class Rules(
@@ -57,9 +60,12 @@ object FieldMap {
     def compile(rows: Seq[(String, String, String)]): Rules = {
       def dated(rs: Seq[(String, String, String)]) = rs.filter(r => Model.dateStatuses.contains(r._2))
       val first = rows.distinctBy(_._1)
+      val dateFields = dated(rows).map(_._1).toSet
+      val (datedInclude, include) =
+        first.filter(_._2 == "Include").partition(r => dateFields(r._1))
       Rules(first.map(_._1).toSet, dated(rows).distinctBy(_._1).map(r => r._1 -> r._2),
-        dated(first).map(_._1).toSet, first.filter(_._2 == "Include")
-          .groupMap(r => events(r._3))(_._1).view.mapValues(_.toSet).toMap)
+        (dated(first) ++ datedInclude).map(_._1).toSet,
+        include.groupMap(r => events(r._3))(_._1).view.mapValues(_.toSet).toMap)
     }
 
     /** An event list as `trim(split(list, ","))` reads it; null or blank

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   *      passes the optional `restrict_to_event_list`          (:329-341)
   *   4. field is in the map with a date-transform status AND the row was
   *      already cleaned (`kpmp_date_cleaned`) — fail-closed: an uncleaned
-  *      date row is PHI and is dropped                        (:342-351)
+  *      date row is PHI and is dropped                        (:342-351);
+  *      a field with both an `Include` and a date-status row counts as a
+  *      date here, never as `Include` ([[FieldMap.Rules]])
   * Fields absent from the map are dropped and reported once (:322-327) —
   * here a distinct side output instead of a driver dict.
   *

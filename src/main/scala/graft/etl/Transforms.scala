@@ -72,13 +72,14 @@ final class DateShiftTransform(
   /** Field→granularity dictionary (the reference's get_transform_metadata,
     * dcc_transforms.py:176-190: granularity = `status[9:]`, and the
     * dictionary is published ONLY in total_seconds mode — other modes
-    * return None, exactly like the reference). */
+    * return None, exactly like the reference). A date-status row with a
+    * null `field_name` names no field, so it gets no dictionary row. */
   override def metadata(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
     if (mode != "total_seconds") None
     else {
       import spark.implicits._
-      Some(fieldMap.dates.map { case (f, status) => (f, status.stripPrefix("Transform")) }
-        .toDF("field_name", "granularity"))
+      Some(fieldMap.dates.collect { case (f, status) if f != null =>
+        (f, status.stripPrefix("Transform")) }.toDF("field_name", "granularity"))
     }
 }
 

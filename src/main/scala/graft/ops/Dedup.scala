@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -700,9 +700,10 @@ object Dedup {
     * Adaptive small-graph path: the edge set here is the LSH *survivor*
     * set — orders of magnitude smaller than the corpus — and when it fits
     * on the driver (≤ [[Graph.LocalMaxEdges]] = 2²⁰ undirected pairs,
-    * ≈ 16 MB of long pairs) a single collect + union-find replaces 3-6
-    * shuffle rounds, the same runtime adaptivity Spark itself applies
-    * when AQE converts a shuffle join to broadcast. Distributed min-label
+    * ≈ 16 MB of long pairs) a row count and one packed collect
+    * ([[Graph.localPairs]], labelPropagation's tier decision) +
+    * union-find replace 3-6 shuffle rounds, the same runtime adaptivity
+    * Spark itself applies when AQE converts a shuffle join to broadcast. Distributed min-label
     * propagation remains the path for edge sets above the threshold.
     *
     * @return (id, component) for every id appearing in `pairs`
@@ -720,9 +721,9 @@ object Dedup {
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .distinct()
       .localCheckpoint()
-    val integralIds = idType == LongType || idType == IntegerType
-    if (integralIds && undirected.count() <= localMaxEdges)
-      return localComponents(undirected, idType)
+    val local = if (idType == LongType || idType == IntegerType)
+      Graph.localPairs(undirected, "u", "v", localMaxEdges) else None
+    if (local.isDefined) return localComponents(pairs.sparkSession, local.get, idType)
     val edges = undirected
       .union(undirected.select(col("v").as("u"), col("u").as("v")))
       .distinct()
@@ -775,12 +776,9 @@ object Dedup {
     * smaller) + path compression — every node's root IS the minimum id
     * reachable from it, identical to the fixpoint of the distributed
     * loop. Control-plane bounded by the caller's threshold check. */
-  private def localComponents(undirected: DataFrame,
+  private def localComponents(spark: SparkSession, packed: Array[Array[Long]],
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val spark = undirected.sparkSession
     import spark.implicits._
-    val es = undirected.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].collect()
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -789,7 +787,8 @@ object Dedup {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    es.foreach { case (u, v) =>
+    for (p <- packed; i <- 0 until p.length by 2) {
+      val (u, v) = (p(i), p(i + 1))
       parent.putIfAbsent(u, u); parent.putIfAbsent(v, v)
       val ru = find(u); val rv = find(v)
       if (ru != rv) {

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 /** Iterative graph analytics over edge DataFrames. Companion to the
   * connected-components machinery in [[Dedup]] — same execution shape
@@ -33,21 +33,28 @@ object Graph {
     * above any healthy adjacency, far below an OOM-at-collect_set. */
   private[ops] def guardDegree(adj: DataFrame, nodeCol: String,
       nsCol: String): DataFrame = {
-    val cap = adj.sparkSession.conf
-      .get("graft.graph.maxDegree", "1000000").toLong
+    val cap = maxDegree(adj.sparkSession)
     val t = adj.schema(adj.schema.fieldIndex(nsCol)).dataType.catalogString
     adj.withColumn(nsCol,
       when(size(col(nsCol)) <= cap, col(nsCol))
-        .otherwise(raise_error(concat(
-          lit(s"graph adjacency degree cap graft.graph.maxDegree=$cap " +
-            "exceeded: node "),
-          col(nodeCol).cast("string"),
-          lit(" has degree "), size(col(nsCol)).cast("string"),
-          lit(" — pre-cap or salt-split hub nodes upstream " +
-            "(Profile.joinSizeAudit ranks the hubs), or raise the conf " +
-            "if executor rows this large are genuinely intended")))
+        .otherwise(raise_error(concat(degreeCapMessage(cap,
+          col(nodeCol).cast("string"), size(col(nsCol)).cast("string"))(lit): _*))
           .cast(t)))
   }
+
+  private def maxDegree(spark: SparkSession): Long =
+    spark.conf.get("graft.graph.maxDegree", "1000000").toLong
+
+  /** [[guardDegree]]'s error text in its five parts (text, the node,
+    * text, its degree, text), with `text` lifting the literal parts —
+    * `lit` for the in-plan guard, `identity` for the driver tier. */
+  private def degreeCapMessage[T](cap: Long, node: T, degree: T)(
+      text: String => T): Seq[T] =
+    Seq(text(s"graph adjacency degree cap graft.graph.maxDegree=$cap " +
+        "exceeded: node "), node, text(" has degree "), degree,
+      text(" — pre-cap or salt-split hub nodes upstream " +
+        "(Profile.joinSizeAudit ranks the hubs), or raise the conf " +
+        "if executor rows this large are genuinely intended"))
 
   /** The ADJACENCY INDEX the round loops probe: one (src, ns[]) row per
     * node with out-edges — V index rows instead of E edge rows. Each
@@ -1079,13 +1086,16 @@ object Graph {
     * checkpoint barrier with it. Kept apart from [[moveRounds]]: a plain
     * count argmax with no community totals or modularity score.
     *
-    * Small-graph tier: when the ids are `long`/`int` and the index holds
-    * at most [[LocalMaxEdges]] entries (Σ size(ns), one control-plane
-    * scalar off the checkpoint), the index is collected once and every
-    * round runs on the driver ([[localLabels]]) with the same synchronous
-    * semantics and the same argmax order; the result is a local frame
-    * with the loop's schema and rows. Larger or non-integral graphs run
-    * the distributed loop.
+    * Small-graph tier: when the ids are `long`/`int` and the edge frame
+    * has at most [[LocalMaxEdges]] non-null (src, dst) rows, the rows are
+    * collected once ([[localPairs]]) and the graph is built and every
+    * round run on the driver ([[localLabels]]) with the same synchronous
+    * semantics, the same argmax order and the same
+    * `graft.graph.maxDegree` error; the result is a local frame with the
+    * loop's schema and rows. The tier reads `edges` twice (a row count,
+    * then the collect), so pass a barriered frame — [[undirectedEdges]]
+    * output is one. A larger graph pays the row count and runs the
+    * distributed loop; other id types go to the loop directly.
     *
     * @param edges (src, dst) rows; pass both directions for undirected
     * @param symmetric caller-asserted mirrored edge set: the node set is
@@ -1098,18 +1108,29 @@ object Graph {
     labelPropagation(edges, rounds, symmetric, LocalMaxEdges)
 
   /** Edges up to which a graph kernel collects its input and solves on
-    * the driver instead of running distributed rounds, 2²⁰: index entries
-    * in [[labelPropagation]], undirected pairs in
+    * the driver instead of running distributed rounds, 2²⁰: non-null edge
+    * rows in [[labelPropagation]], undirected pairs in
     * [[Dedup.connectedComponents]]. */
   private[ops] val LocalMaxEdges = 1L << 20
 
-  /** Σ size(ns) of an index in one narrow job: per-partition sums
-    * collected and added on the driver (0 for an empty index) — a global
-    * aggregate would cost a map stage and a result job. */
-  private def indexEntries(adj: DataFrame): Long = {
-    import adj.sparkSession.implicits._
-    adj.select(size(col("ns")).cast("long")).as[Long]
-      .mapPartitions(it => Iterator.single(it.sum)).collect().sum
+  /** The non-null (a, b) rows of a `long`/`int`-id edge frame when there
+    * are at most `max` of them, as one primitive array per partition
+    * holding a₀, b₀, a₁, b₁, …; None above `max`. Two narrow jobs: the
+    * row count (per-partition counts added on the driver — a global count
+    * would cost a map stage and a result job), then the collect, so
+    * `edges` is read twice. */
+  private[ops] def localPairs(edges: DataFrame, a: String, b: String,
+      max: Long): Option[Array[Array[Long]]] = {
+    import edges.sparkSession.implicits._
+    val pairs = edges.filter(col(a).isNotNull && col(b).isNotNull)
+      .select(col(a).cast("long"), col(b).cast("long")).as[(Long, Long)]
+    if (pairs.mapPartitions(it => Iterator.single(it.size.toLong)).collect().sum > max)
+      None
+    else Some(pairs.mapPartitions { it =>
+      val packed = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { case (u, v) => packed += u; packed += v }
+      Iterator.single(packed.result())
+    }.collect())
   }
 
   /** [[labelPropagation]] with the tier threshold explicit — specs force
@@ -1117,12 +1138,14 @@ object Graph {
   private[ops] def labelPropagation(edges: DataFrame, rounds: Int,
       symmetric: Boolean, localMaxEdges: Long): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
-    val adj = adjacency(edges)
-    val idType = adj.schema("src").dataType
+    val idType = edges.schema("src").dataType
     val integral = (idType == LongType || idType == IntegerType) &&
-      adj.schema("ns").dataType.asInstanceOf[ArrayType].elementType == idType
-    if (integral && localMaxEdges > 0 && indexEntries(adj) <= localMaxEdges)
-      return localLabels(adj, rounds, symmetric)
+      edges.schema("dst").dataType == idType
+    val local = if (integral && localMaxEdges > 0)
+      localPairs(edges, "src", "dst", localMaxEdges) else None
+    if (local.isDefined)
+      return localLabels(edges.sparkSession, local.get, idType, rounds, symmetric)
+    val adj = adjacency(edges)
     var lab = nodesOf(adj, symmetric).select(col("node"), col("node").as("label"))
     for (r <- 1 to rounds) {
       val cnt = adj.join(lab.withColumnRenamed("node", "src"), "src")
@@ -1147,74 +1170,135 @@ object Graph {
     lab
   }
 
-  /** [[labelPropagation]]'s rounds on the driver over the collected
-    * index, mirroring the loop step for step: each round every labeled
-    * node sends its previous-round label to each entry of its `ns`; a
+  /** [[labelPropagation]]'s rounds on the driver over the collected edge
+    * rows ([[localPairs]]), mirroring the loop step for step. The graph
+    * is built in linear time: ids get dense indices from a primitive hash
+    * ([[DenseIds]]), renumbered so that index order is signed id order;
+    * a counting sort buckets the out-lists, each is sorted and
+    * deduplicated as `collect_set` does and checked against
+    * `graft.graph.maxDegree` with [[guardDegree]]'s message, and a second
+    * counting pass turns them into in-neighbor lists. Each round every
+    * labeled node sends its previous-round label along its out-list; a
     * node that receives messages adopts the max-count label, ties to the
-    * smallest signed label ([[ArgmaxPack]]'s order). Symmetric: the state
-    * is the src key set, then only the nodes that received a message (the
-    * inner merge). General: the state is every node, sinks included, and
-    * a node with no in-messages keeps its label (the keep-old merge).
-    * Output schema, nullability included, is the loop's. */
-  private def localLabels(adj: DataFrame, rounds: Int,
-      symmetric: Boolean): DataFrame = {
-    val spark = adj.sparkSession
-    import spark.implicits._
-    val rows = adj.select(col("src").cast("long"), col("ns").cast("array<bigint>"))
-      .as[(Long, Array[Long])].collect()
-    val all = (rows.iterator.map(_._1) ++ rows.iterator.flatMap(_._2)).toArray
-    java.util.Arrays.sort(all)
-    val ids = all.distinct // dense index i ↔ id ids(i), ascending
-    def ix(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
-    val n = ids.length
-    // in-neighbor lists in CSR form: node d's sources are in(off(d) until off(d + 1))
-    val off = new Array[Int](n + 1)
-    rows.foreach(_._2.foreach(v => off(ix(v) + 1) += 1))
-    for (i <- 1 to n) off(i) += off(i - 1)
-    val in = new Array[Int](off(n))
-    val next = off.clone()
-    rows.foreach { case (s, ns) =>
-      val si = ix(s)
-      ns.foreach { v => val d = ix(v); in(next(d)) = si; next(d) += 1 }
+    * smallest ([[ArgmaxPack]]'s order). Symmetric: the state is the src
+    * key set, then only the nodes that received a message (the inner
+    * merge). General: the state is every node, sinks included, and a node
+    * with no in-messages keeps its label (the keep-old merge). The output
+    * is in node order, with the loop's schema: both columns nullable, as
+    * the loop's node is an exploded entry of the index's guarded `ns`. */
+  private def localLabels(spark: SparkSession, packed: Array[Array[Long]],
+      idType: DataType, rounds: Int, symmetric: Boolean): DataFrame = {
+    val m = packed.iterator.map(_.length / 2).sum
+    val dense = new DenseIds
+    val src = new Array[Int](m)
+    val dst = new Array[Int](m)
+    var k = 0
+    for (p <- packed; i <- 0 until p.length by 2) {
+      src(k) = dense(p(i)); dst(k) = dense(p(i + 1)); k += 1
     }
-    var lab = ids.clone()
-    var has = Array.fill(n)(!symmetric)
-    if (symmetric) rows.foreach(r => has(ix(r._1)) = true)
-    val buf = new Array[Long]((0 until n).foldLeft(0)((m, d) =>
-      math.max(m, off(d + 1) - off(d))))
+    val ids = dense.ids
+    java.util.Arrays.sort(ids) // node index i ↔ id ids(i), ascending
+    val n = ids.length
+    val rank = new Array[Int](n)
+    for (i <- 0 until n) rank(dense(ids(i))) = i
+    // out-lists: node s's targets in out(off(s) until off(s + 1))
+    val off = new Array[Int](n + 1)
+    for (e <- 0 until m) {
+      src(e) = rank(src(e)); dst(e) = rank(dst(e)); off(src(e) + 1) += 1
+    }
+    for (i <- 1 to n) off(i) += off(i - 1)
+    val out = new Array[Int](m)
+    val at = java.util.Arrays.copyOf(off, n)
+    for (e <- 0 until m) { out(at(src(e))) = dst(e); at(src(e)) += 1 }
+    // collect_set: sort and dedup each list in place, compacting the CSR
+    val cap = maxDegree(spark)
+    var w = 0
+    for (s <- 0 until n) {
+      val (from, to) = (off(s), off(s + 1))
+      off(s) = w
+      java.util.Arrays.sort(out, from, to)
+      for (j <- from until to)
+        if (w == off(s) || out(w - 1) != out(j)) { out(w) = out(j); w += 1 }
+      if (w - off(s) > cap) throw org.apache.spark.sql.graft.Bridge.raisedError(
+        degreeCapMessage(cap, ids(s).toString, (w - off(s)).toString)(identity).mkString)
+    }
+    off(n) = w
+    // in-neighbor lists: node d's sources in in(inOff(d) until inOff(d + 1))
+    val inOff = new Array[Int](n + 1)
+    for (j <- 0 until w) inOff(out(j) + 1) += 1
+    for (i <- 1 to n) inOff(i) += inOff(i - 1)
+    val in = new Array[Int](w)
+    val next = java.util.Arrays.copyOf(inOff, n)
+    for (s <- 0 until n; j <- off(s) until off(s + 1)) {
+      in(next(out(j))) = s; next(out(j)) += 1
+    }
+    // labels are node indices, so the smallest label is the smallest id
+    var lab = Array.range(0, n)
+    var has = Array.tabulate(n)(s => !symmetric || off(s + 1) > off(s))
+    val cnt = new Array[Int](n)
     for (_ <- 1 to rounds) {
-      val lab2 = new Array[Long](n)
+      val lab2 = new Array[Int](n)
       val has2 = new Array[Boolean](n)
       for (d <- 0 until n) {
-        var k = 0
-        for (j <- off(d) until off(d + 1) if has(in(j))) { buf(k) = lab(in(j)); k += 1 }
-        if (k > 0) {
-          // max count, then min label: the first longest run of the sorted labels
-          java.util.Arrays.sort(buf, 0, k)
-          var best = buf(0); var bestC = 0; var i = 0
-          while (i < k) {
-            var j = i
-            while (j < k && buf(j) == buf(i)) j += 1
-            if (j - i > bestC) { best = buf(i); bestC = j - i }
-            i = j
-          }
-          lab2(d) = best; has2(d) = true
-        } else if (!symmetric) { lab2(d) = lab(d); has2(d) = has(d) }
+        // max count, then min label, in one pass over the in-neighbors
+        var best = -1
+        var bestC = 0
+        for (j <- inOff(d) until inOff(d + 1) if has(in(j))) {
+          val l = lab(in(j))
+          cnt(l) += 1
+          if (cnt(l) > bestC || cnt(l) == bestC && l < best) { best = l; bestC = cnt(l) }
+        }
+        for (j <- inOff(d) until inOff(d + 1)) cnt(lab(in(j))) = 0
+        if (best >= 0) { lab2(d) = best; has2(d) = true }
+        else if (!symmetric) { lab2(d) = lab(d); has2(d) = has(d) }
       }
       lab = lab2; has = has2
     }
-    val idType = adj.schema("src").dataType
-    val out = (0 until n).filter(has).map { d =>
-      Row(if (idType == IntegerType) ids(d).toInt else ids(d), lab(d))
+    val rows = new java.util.ArrayList[Row]()
+    for (d <- 0 until n if has(d))
+      rows.add(Row(if (idType == IntegerType) ids(d).toInt else ids(d), ids(lab(d))))
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("node", idType), StructField("label", LongType))))
+  }
+
+  /** Dense indices for `long` ids in first-seen order: open addressing
+    * with linear probing over a power-of-two table, doubled at half load
+    * (Fibonacci hashing picks the slot from the product's high bits). */
+  private final class DenseIds {
+    private var bits = 10
+    private var keys = new Array[Long](1 << bits)
+    private var slots = new Array[Int](1 << bits) // index + 1; 0 = empty
+    private var found = new Array[Long](1 << (bits - 1))
+    private var n = 0
+
+    /** The ids added so far, in first-seen order. */
+    def ids: Array[Long] = java.util.Arrays.copyOf(found, n)
+
+    /** The index of `id`, added if new. */
+    def apply(id: Long): Int = {
+      var h = slotOf(id)
+      if (slots(h) == 0) {
+        if (n == found.length) { grow(); h = slotOf(id) }
+        keys(h) = id; slots(h) = n + 1; found(n) = id; n += 1
+      }
+      slots(h) - 1
     }
-    // the loop's nullability: node is an exploded `ns` entry (general: or
-    // a src key), the symmetric label an aggregate, the general one a
-    // coalesce over node
-    val entryNull = adj.schema("ns").dataType.asInstanceOf[ArrayType].containsNull
-    val nodeNull = entryNull || !symmetric && adj.schema("src").nullable
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
-      StructField("node", idType, nodeNull),
-      StructField("label", LongType, symmetric || nodeNull))))
+
+    /** The slot holding `id`, or the empty slot where it goes. */
+    private def slotOf(id: Long): Int = {
+      val mask = keys.length - 1
+      var h = ((id * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+      while (slots(h) != 0 && keys(h) != id) h = (h + 1) & mask
+      h
+    }
+
+    private def grow(): Unit = {
+      bits += 1
+      keys = new Array[Long](1 << bits)
+      slots = new Array[Int](1 << bits)
+      found = java.util.Arrays.copyOf(found, 1 << (bits - 1))
+      for (i <- 0 until n) { val h = slotOf(found(i)); keys(h) = found(i); slots(h) = i + 1 }
+    }
   }
 
   /** Synchronous Louvain-style MODULARITY MOVES, fixed rounds — the

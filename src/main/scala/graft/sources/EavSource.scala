@@ -58,6 +58,11 @@ object EavSource {
     * meaningful in local mode where executors share the JVM. */
   val chunkFetches = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Observability counter: number of id-universe requests issued
+    * (`EavTransport.recordIds`, ≙ `get_study_ids`) — one per table and
+    * read options, however many times its frames are planned. */
+  val idRequests = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** The 6 CSV-plane columns (the cleaned-flag columns are engine-side). */
   val schema: StructType = StructType(Seq(
     StructField("record_id", StringType),
@@ -142,13 +147,28 @@ class EavTable(props: Map[String, String],
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new EavWriteBuilder(props ++ info.options.asScala.toMap, info)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EavScanBuilder(
-      EavTransport.fromOptions(options.asScala.toMap),
-      Option(options.get("chunk_size")).map(_.toInt).getOrElse(100))
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val opts = options.asScala.toMap
+    val transport = EavTransport.fromOptions(opts)
+    new EavScanBuilder(transport,
+      Option(options.get("chunk_size")).map(_.toInt).getOrElse(100),
+      () => universes.computeIfAbsent(opts, _ => {
+        EavSource.idRequests.incrementAndGet()
+        transport.recordIds()
+      }))
+  }
+
+  /** The id universe per read options, requested once: every physical
+    * planning of a frame over this table (each write, count or collect)
+    * chunks the same universe, as the reference calls `get_study_ids`
+    * once. Concurrent plannings (the two envelope writes) wait for the one
+    * request. Runtime id filtering stays per scan. */
+  private val universes =
+    new java.util.concurrent.ConcurrentHashMap[Map[String, String], Seq[String]]()
 }
 
-class EavScanBuilder(transport: EavTransport, chunkSize: Int) extends ScanBuilder
+class EavScanBuilder(transport: EavTransport, chunkSize: Int,
+    universe: () => Seq[String]) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownTopN
     with SupportsPushDownAggregates with SupportsPushDownTableSample {
@@ -255,13 +275,14 @@ class EavScanBuilder(transport: EavTransport, chunkSize: Int) extends ScanBuilde
 
   override def build(): Scan =
     if (aggregationPushed)
-      new EavAggScan(transport, chunkSize, pushed, aggGroupBy, aggFuncs, sample)
-    else new EavScan(transport, chunkSize, required, pushed, limit, topN, sample)
+      new EavAggScan(transport, universe, chunkSize, pushed, aggGroupBy, aggFuncs, sample)
+    else new EavScan(transport, universe, chunkSize, required, pushed, limit, topN, sample)
 }
 
 final case class EavChunk(recordIds: Array[String]) extends InputPartition
 
-class EavScan(transport: EavTransport, chunkSize: Int, required: StructType,
+class EavScan(transport: EavTransport, universe: () => Seq[String], chunkSize: Int,
+    required: StructType,
     pushed: Array[Filter], limit: Int = -1,
     topN: Array[(Int, Boolean)] = Array.empty,
     sample: Option[(Double, Double, Long)] = None)
@@ -312,11 +333,11 @@ class EavScan(transport: EavTransport, chunkSize: Int, required: StructType,
       s"PushedSample: ${sample.map { case (lo, hi, _) => s"[$lo, $hi)" }.getOrElse("none")}, " +
       s"ReadSchema: ${required.catalogString}"
 
-  /** The id-universe scan (≙ `get_study_ids`, redcap-etl.py:137-161): a
-    * cheap driver-side pass that yields only ids, then 1 partition per
-    * `chunkSize` ids. */
+  /** The id universe (≙ `get_study_ids`, redcap-etl.py:137-161: a cheap
+    * ids-only request, made once per table by [[EavTable]]) less any
+    * runtime-filtered ids, then 1 partition per `chunkSize` ids. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val all = transport.recordIds()
+    val all = universe()
     val ids = runtimeIds.fold(all)(keep => all.filter(keep.contains))
     EavSource.chunks(ids, chunkSize)
   }
@@ -327,7 +348,8 @@ class EavScan(transport: EavTransport, chunkSize: Int, required: StructType,
 /** Scan with a pushed (partial) aggregation: one output row per group per
   * chunk. readSchema order is the V2 contract: group-by columns first, then
   * one column per aggregate (counts as BIGINT, min/max as the column type). */
-class EavAggScan(transport: EavTransport, chunkSize: Int, pushed: Array[Filter],
+class EavAggScan(transport: EavTransport, universe: () => Seq[String], chunkSize: Int,
+    pushed: Array[Filter],
     groupBy: Array[Int], aggs: Array[EavSource.EavAgg],
     sample: Option[(Double, Double, Long)] = None) extends Scan with Batch {
   import EavSource._
@@ -350,7 +372,7 @@ class EavAggScan(transport: EavTransport, chunkSize: Int, pushed: Array[Filter],
       s"GroupBy: [${groupBy.map(EavSource.schema.fieldNames(_)).mkString(", ")}]"
 
   override def planInputPartitions(): Array[InputPartition] =
-    EavSource.chunks(transport.recordIds(), chunkSize)
+    EavSource.chunks(universe(), chunkSize)
   override def createReaderFactory(): PartitionReaderFactory =
     new EavAggReaderFactory(transport, pushed, groupBy, aggs, sample)
 }

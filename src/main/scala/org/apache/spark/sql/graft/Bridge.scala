@@ -31,6 +31,12 @@ object Bridge {
       session: org.apache.spark.sql.SparkSession): Unit =
     ext.registerFunctions(session.sessionState.functionRegistry)
 
+  /** The error `raise_error(message)` throws (`private[spark]`), so a
+    * check run on the driver fails like its in-plan twin. */
+  def raisedError(message: String): RuntimeException =
+    new org.apache.spark.SparkRuntimeException("USER_RAISED_EXCEPTION",
+      Map("errorMessage" -> message))
+
   /** Spark's own file-listing rules (`private[spark]`): a path with glob
     * characters, and a name the file index skips (`_SUCCESS`, `.crc`). */
   def isGlobPath(p: org.apache.hadoop.fs.Path): Boolean =

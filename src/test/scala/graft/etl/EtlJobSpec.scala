@@ -162,6 +162,15 @@ class EtlJobSpec extends SparkSpec {
     assert(graft.sources.EavSource.chunkFetches.get - fetches == 8)
   }
 
+  test("the EAV id universe is requested once per run, however many plans " +
+      "chunk it") {
+    val cfg = EtlJobSpec.floorConfig(dir)
+    val before = graft.sources.EavSource.idRequests.get
+    EtlJob.run(spark, cfg)
+    // 9 when every physical planning of the extract asked the transport
+    assert(graft.sources.EavSource.idRequests.get - before == 1)
+  }
+
   test("the two envelope streams are written at once: a failing side write " +
       "throws its own error once both have ended, and leaves no job running") {
     val bad = write("deid-malformed.csv", "study_id,exp_age_decade\nr1,3,extra\n")

@@ -8,7 +8,10 @@ import org.apache.spark.sql.catalyst.plans.logical.Join
 /** The field map compiled on the driver (FieldMap.Rules): the date shift
   * and the PHI filter see the same rows they saw when each joined the map
   * after a `dropDuplicates("field_name")`. Every expected row below is
-  * what that join-based implementation produced on the same input. */
+  * what that join-based implementation produced on the same input, except
+  * two fixes: a field listed as `Include` and as a date status passes the
+  * PHI filter only as a cleaned date, and a null-named date row gets no
+  * granularity dictionary row. */
 class FieldMapRulesSpec extends SparkSpec {
   import spark.implicits._
   import FieldMapRulesSpec.Seen
@@ -46,13 +49,13 @@ class FieldMapRulesSpec extends SparkSpec {
   private val dupEav = eav(("r1", "a", "d", "2001-06-15"), ("r2", "a", "d", "not a date"))
 
   test("a field listed as Include and as a date status: the date shift reads " +
-      "its first date-status row, the PHI filter its first row") {
+      "its first date-status row, the PHI filter passes only its cleaned dates") {
     val shifted = Seq("r1|a|d|2001-06-16|TransformDate", "r2|a|d|not a date|null")
     val errors = Seq("r2|d|not a date")
-    // Include first: the PHI filter passes the field uncleaned rows too
+    // Include first: still fail-closed — the unparseable value is dropped,
+    // not passed unshifted
     assert(seen(map(("d", "Include", null), ("d", "TransformDate", null)), dupEav) ==
-      Seen(shifted, errors, Seq("r1|a|d|2001-06-16", "r2|a|d|not a date"),
-        Nil, Seq("d"), Seq("d|Date")))
+      Seen(shifted, errors, Seq("r1|a|d|2001-06-16"), Nil, Seq("d"), Seq("d|Date")))
     // date status first: only the cleaned row passes
     assert(seen(map(("d", "TransformDate", null), ("d", "Include", null)), dupEav) ==
       Seen(shifted, errors, Seq("r1|a|d|2001-06-16"), Nil, Seq("d"), Seq("d|Date")))
@@ -60,7 +63,7 @@ class FieldMapRulesSpec extends SparkSpec {
     assert(seen(map(("d", "Include", null), ("d", "TransformDateYear", null),
         ("d", "TransformDate", null)), dupEav) ==
       Seen(Seq("r1|a|d|2001|TransformDateYear", "r2|a|d|not a date|null"), errors,
-        Seq("r1|a|d|2001", "r2|a|d|not a date"), Nil, Seq("d"), Seq("d|DateYear")))
+        Seq("r1|a|d|2001"), Nil, Seq("d"), Seq("d|DateYear")))
   }
 
   test("event lists split on commas and trim spaces only, as Spark's trim does") {
@@ -82,8 +85,8 @@ class FieldMapRulesSpec extends SparkSpec {
     assert(s == Seen(
       Seq("r1|a|null|2001-06-15|null", "r1|a|u|v|null", "r1|a|x|v|null"), Nil,
       Seq("r1|a|x|v"), Seq("u"), Seq("x"),
-      // the granularity dictionary keeps the map's null-named date row
-      Seq("null|Date")))
+      // a null-named date row names no field: no dictionary row
+      Nil))
   }
 
   test("a null event passes only an unrestricted (null or blank) event list") {

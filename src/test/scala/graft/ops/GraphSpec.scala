@@ -466,11 +466,26 @@ class GraphSpec extends SparkSpec {
       "non-mirrored" -> Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 3L), (4L, 2L),
         (6L, 6L)),
       "negative ids" -> (clique(Seq(-5L, -3L, 2L)) ++ mirrored(Seq(
-        (Long.MinValue, 7L), (Long.MaxValue, 7L), (-1L, 7L), (Long.MinValue, -1L)))))
+        (Long.MinValue, 7L), (Long.MaxValue, 7L), (-1L, 7L), (Long.MinValue, -1L)))),
+      // parallel edges count once (collect_set), in the tier as in the loop
+      "duplicate edges" -> (clique(Seq(1L, 2L, 3L)) ++ clique(Seq(1L, 2L, 3L)) ++
+        Seq((4L, 1L), (4L, 1L), (4L, 1L), (5L, 1L), (5L, 2L), (1L, 5L), (2L, 5L),
+          (6L, 6L), (6L, 6L))))
     val ints = clique(Seq(1L, 2L, 3L, 9L)).toDF("src", "dst")
       .select($"src".cast("int").as("src"), $"dst".cast("int").as("dst"))
+    // a null endpoint is not a node: its row drops before either path
+    val nulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), Some(1L)), (Some(2L), None), (None, Some(3L)), (None, None),
+      (Some(3L), Some(1L)), (Some(1L), Some(3L)), (Some(4L), None))
+      .toDF("src", "dst")
+    val intDups = (clique(Seq(7L, 8L)) ++ clique(Seq(7L, 8L)) ++
+        Seq((9L, 7L), (9L, 8L), (9L, 9L))).toDF("src", "dst")
+      .union(Seq[(Option[Long], Option[Long])]((None, Some(7L))).toDF("src", "dst"))
+      .select($"src".cast("int").as("src"), $"dst".cast("int").as("dst"))
     val frames = long.map { case (name, es) => name -> es.toDF("src", "dst") } ++
-      Seq("int ids" -> ints, "empty" -> Seq.empty[(Long, Long)].toDF("src", "dst"))
+      Seq("null endpoints" -> nulls, "int ids" -> ints,
+        "int ids, duplicates and a null" -> intDups,
+        "empty" -> Seq.empty[(Long, Long)].toDF("src", "dst"))
     for ((name, df) <- frames; symmetric <- Seq(false, true); rounds <- Seq(1, 3)) {
       val at = s"$name, symmetric=$symmetric, rounds=$rounds"
       val tier = Graph.labelPropagation(df, rounds, symmetric)
@@ -1097,9 +1112,9 @@ class GraphSpec extends SparkSpec {
     assert(got("bfsHops") == (28, 1), got)
     assert(got("bfsPathCounts") == (28, 1), got)
     assert(got("labelPropagation") == (1, 9), got)
-    // the tier: the index build, the Σ size(ns) read (one narrow job)
-    // and the collect while built; reading the local frame runs no job
-    assert(got("labelPropagation tier") == (3, 0), got)
+    // the tier: the edge-row count and the packed collect, both narrow
+    // jobs while built; reading the local frame runs no job
+    assert(got("labelPropagation tier") == (2, 0), got)
     assert(got("pageRank") == (3, 8), got)
     // the lazy backward states submit their AQE map stages while the
     // query is built, and one of those jobs races (51 or 52 build jobs,

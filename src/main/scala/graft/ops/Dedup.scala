@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField
   *  - pathological buckets (boilerplate shingles) are capped: a bucket with
   *    more than `maxBucketSize` docs is DROPPED from candidate generation —
   *    at web scale such buckets are near-identical spam whose pairs explode
-  *    quadratically. The drop is observable: run [[oversizedMinhashBuckets]]
-  *    with the same parameters to audit what the cap excluded.
+  *    quadratically.
   */
 object Dedup {
 
@@ -308,22 +307,6 @@ object Dedup {
     }
   }
 
-  /** Audit for the candidate-generation bucket cap: (band, bucket hash,
-    * member count) of every LSH bucket the rep-level pipeline would DROP
-    * at these parameters — so a pipeline can report/alert on excluded
-    * volume instead of silently losing the largest duplicate cluster.
-    * Since `minhashDuplicatePairs` LSH-bands one representative per
-    * distinct content, this audits the rep plane; pair [[oversizedCloneGroups]]
-    * for the clone-group cap, which is the other drop class. */
-  def oversizedMinhashBuckets(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", k: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = 1000): DataFrame = {
-    minhashBandRows(docs, textCol, idCol, k, bands) // same lanes/band hash as the pairs path
-      .groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > maxBucketSize)
-  }
-
   // ------------------------------------------------------- clone groups
   // Identical normalized text ⇒ identical shingle set ⇒ identical result
   // against every third doc, so the pair and corpus-statistics operators
@@ -400,23 +383,12 @@ object Dedup {
     cross.unionByName(intra)
   }
 
-  /** Audit for the clone-group cap in [[minhashDuplicatePairs]]: (content
-    * hash, representative id, member count) of every identical-content
-    * group whose members will NOT fan out into pairs at these parameters
-    * (only the rep participates). Alert on this alongside
-    * [[oversizedMinhashBuckets]] — together they cover everything the
-    * pair pipeline drops. */
-  def oversizedCloneGroups(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxBucketSize: Int = 1000): DataFrame =
-    contentGroups(contentKeyed(docs, textCol, idCol), count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > maxBucketSize)
-
   // ------------------------------------------------------------ LSH pairs
   /** Near-duplicate pairs via MinHash LSH banding + exact-Jaccard
     * verification, run on one representative per distinct content (the
     * clone-group pre-stage). Identical to the direct pipeline on every
     * doc; clone groups larger than `maxBucketSize` pair through their rep
-    * only ([[oversizedCloneGroups]] lists them).
+    * only.
     *
     * @param bands     b bands of r = k/bands rows; P(candidate) ≈
     *                  1-(1-s^r)^b — defaults catch s ≳ 0.5
@@ -470,7 +442,7 @@ object Dedup {
 
   /** The LSH + exact-verification pipeline over content-DISTINCT docs.
     * Call this directly when the corpus is exact-deduped BY CONSTRUCTION
-    * (e.g. right after [[applyExact]]) — it skips the wrapper's
+    * (e.g. after keeping each [[exact]] `keep_id`) — it skips the wrapper's
     * clone-group pass entirely; [[minhashDuplicatePairs]] is the safe
     * general entry. Identical-content docs that DO slip in are simply
     * redundant LSH work, never wrong output. Nothing shuffles before the
@@ -594,13 +566,6 @@ object Dedup {
   }
 
   // ------------------------------------------------------------- apply
-  /** Deduplicated corpus by exact content: keep one doc (min id) per
-    * normalized-content group — the operational form of [[exact]]. */
-  def applyExact(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    docs.join(exact(docs, textCol, idCol).select(col("keep_id").as(idCol)),
-      Seq(idCol), "left_semi")
-
   /** Near-dup resolution keeping the BEST member per cluster: real
     * pipelines keep the highest-quality copy of duplicated content, not
     * the smallest id (the greedy drop-the-higher-id convention). Clusters
@@ -1373,8 +1338,8 @@ object Dedup {
     * `n_missed_grams / n_dup_grams` is the measured recall loss that Lee
     * et al.'s duplicate-clustering argument predicts is small; when it
     * is not, re-shard with fewer, larger shards (or a different seed and
-    * a second pass). House style: the oversizedMinhashBuckets pattern —
-    * run on a sample, read the number, then size the real job.
+    * a second pass). Run it on a sample, read the number, then size the
+    * real job.
     *
     * Scale note: grams group by their TEXT (not a hash) so the audit is
     * exactly replayable relationally; that shuffles gramLen-char keys —

@@ -319,36 +319,12 @@ object Multimodal {
     * Callers fall back to [[fakeAudioDecode]], the native-decoder seam,
     * for payloads the JDK can't read. */
   def audioDecode(bytes: Array[Byte]): Option[(Int, Int, Long, Long)] =
-    try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val fmt = ais.getFormat
-      if (fmt.getEncoding !=
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
-          fmt.getSampleSizeInBits != 16) None
-      else {
-        val frameSize = fmt.getFrameSize // channels * 2 bytes
-        val big = fmt.isBigEndian
-        val buf = new Array[Byte](frameSize * 1024)
-        var sum = 0L
-        var totalBytes = 0L
-        var n = ais.read(buf)
-        while (n > 0) {
-          var i = 0
-          while (i + 1 < n) { // n is a frame multiple by the API contract
-            val s =
-              if (big) ((buf(i) << 8) | (buf(i + 1) & 0xFF)).toShort
-              else ((buf(i + 1) << 8) | (buf(i) & 0xFF)).toShort
-            sum += math.abs(s.toLong)
-            i += 2
-          }
-          totalBytes += n
-          n = ais.read(buf)
-        }
-        Some((fmt.getSampleRate.toInt, fmt.getChannels,
-          totalBytes / frameSize, sum))
-      }
-    } catch { case _: Exception => None }
+    decodePcm16(bytes).map { case (rate, ch, samples) =>
+      var sum = 0L
+      var i = 0
+      while (i < samples.length) { sum += math.abs(samples(i).toLong); i += 1 }
+      (rate, ch, samples.length.toLong / ch, sum)
+    }
 
   /** Partition-batched audio decode — the [[decodeDimensions]] seam for
     * the second modality: real `javax.sound.sampled` WAV decode first

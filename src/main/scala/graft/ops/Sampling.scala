@@ -26,10 +26,6 @@ object Sampling {
   def bucket(key: Column): Column =
     graft.functions.RollingFingerprint(key.cast("string")) % 100
 
-  /** Keep ~`pct`% of rows, decided by [[bucket]] of `key`. */
-  def hashSample(df: DataFrame, key: Column, pct: Int): DataFrame =
-    df.filter(bucket(key) < pct)
-
   /** Per-stratum sampling rates (percent), e.g. downsample dominant event
     * classes while keeping rare ones whole. Unlisted strata fall back to
     * `defaultPct`. The rate lookup is a codegen'd CASE cascade — the
@@ -45,7 +41,7 @@ object Sampling {
   /** Deterministic WEIGHTED (importance) sampling: keep a row with
     * probability `weight` ∈ [0,1] — e.g. sample proportional to quality
     * when building a mixture — decided by a content-keyed uniform, so the
-    * kept set is reproducible like [[hashSample]]. The uniform is the
+    * kept set is reproducible like [[stratifiedSample]]. The uniform is the
     * fingerprint mod 10⁶ scaled to [0,1): 1e-6 probability granularity,
     * exact cross-engine (integer mod, one double division). */
   def weightedSample(df: DataFrame, key: Column, weight: Column): DataFrame =

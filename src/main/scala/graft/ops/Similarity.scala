@@ -16,17 +16,12 @@ import org.apache.spark.sql.expressions.Window
   *  - [[bruteForceTopK]]: queries broadcast against the full corpus; right
   *    for |queries| ≪ |corpus| (the common "probe" shape). O(|Q|·N) but
   *    embarrassingly parallel, no shuffle of the corpus.
-  *  - [[lshTopK]]: sign-random-projection buckets; only same-bucket pairs
-  *    score. Probes multiple tables; recall tunable by (tables, bits).
   */
 object Similarity {
 
   /** float[] → integer milli-units (exact in double before floor). */
   def quantize(vec: Column): Column =
     transform(vec, x => floor(x.cast("double") * 1000 + 0.5).cast("long"))
-
-  def dotInt(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
   def normInt(a: Column): Column =
     aggregate(transform(a, x => x * x), lit(0L), (acc, x) => acc + x)
@@ -49,15 +44,6 @@ object Similarity {
     aggregate(
       transform(a, x => x.cast("decimal(19,0)") * x.cast("decimal(19,0)")),
       lit(0L).cast("decimal(38,0)"), (acc, x) => acc + x)
-
-  /** Exact cosine between quantized vectors, as double.
-    * sqrt(na)*sqrt(nb), NOT sqrt(na*nb): the long product overflows for
-    * high-dim/unnormalized vectors (≈1536 dims × |x|≳30 → na·nb ≈ 2e24 > 2^63,
-    * and ANSI long multiply throws); each factor alone stays below 2^53 so
-    * the doubles are exact and both engines round the sqrt identically. */
-  def cosine(a: Column, b: Column): Column =
-    dotInt(a, b).cast("double") /
-      (sqrt(normInt(a).cast("double")) * sqrt(normInt(b).cast("double")))
 
   // ---- pairwise-scoring kernels -------------------------------------
   // The O(|Q|·N) / O(N²) dot-product loops are the one place the
@@ -409,43 +395,6 @@ object Similarity {
       t += 1
     }
     out
-  }
-
-  /** LSH-bucketed approximate top-k: per table, queries meet only
-    * same-bucket corpus rows; union across tables, dedupe, rank. Buckets
-    * and scores run in the mapPartitions kernel (quantize once per row);
-    * only (qid, eid, cos) triples shuffle into the ranking window. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      bits: Int = 8, tables: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      excludeSelf: Boolean = true): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qRows = collectProbes(queries, idCol, vecCol)
-      .map { case (id, v) =>
-        val q = quantizeJvm(v)
-        (id, q, normJvm(q), srpBuckets(q, bits, tables))
-      }
-    val bc = spark.sparkContext.broadcast(qRows)
-    val scored = corpus.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val qs = bc.value
-        it.flatMap { case (eid, ev) =>
-          val e = quantizeJvm(ev)
-          val en = normJvm(e)
-          val eb = srpBuckets(e, bits, tables)
-          qs.iterator.collect {
-            case (qid, qv, qn, qb) if !(excludeSelf && qid == eid) &&
-              (0 until tables).exists(t => qb(t) == eb(t)) =>
-              (qid, eid, cosJvm(dotJvm(qv, e), qn, en))
-          }
-        }
-      }.toDF("qid", "eid", "cos")
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("eid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("eid"), col("cos"), col("rn"))
   }
 
   // ---- IVF-Flat ------------------------------------------------------
@@ -836,7 +785,7 @@ object Similarity {
   /** Distributed SRP-bucketed near-dup pairs — [[cosineNearDupPairs]]'s
     * scale path: NOTHING collects to the driver. Each vector hashes to
     * `tables` independent `bits`-wide sign-random-projection buckets in a
-    * zero-shuffle kernel (same [[srpBuckets]] as lshTopK); only (id, table,
+    * zero-shuffle kernel ([[srpBuckets]]); only (id, table,
     * bucket) rows shuffle into the bucket exchange; same-bucket pairs are
     * verified with the exact integer cosine after a semi-join-pruned
     * re-read of candidate vectors — the same candidate→verify shape as

@@ -42,7 +42,6 @@ case class AsOfJoin(
     rightKeys: Seq[Expression],
     leftTime: Expression,
     rightTime: Expression,
-    forward: Boolean = false,
     tolerance: Option[Long] = None,
     broadcastRight: Boolean = false) extends BinaryNode {
 
@@ -58,11 +57,11 @@ case class AsOfJoin(
   * right side broadcast-small — the zero-shuffle broadcast probe. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoin(l, r, lk, rk, lt, rt, fwd, tol, bcast) =>
+    case AsOfJoin(l, r, lk, rk, lt, rt, tol, bcast) =>
       if (bcast)
-        BroadcastAsOfJoinExec(lk, rk, lt, rt, fwd, tol, planLater(l), planLater(r)) :: Nil
+        BroadcastAsOfJoinExec(lk, rk, lt, rt, tol, planLater(l), planLater(r)) :: Nil
       else
-        AsOfJoinExec(lk, rk, lt, rt, fwd, tol, planLater(l), planLater(r)) :: Nil
+        AsOfJoinExec(lk, rk, lt, rt, tol, planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
 }
@@ -87,7 +86,6 @@ case class AsOfJoinExec(
     rightKeys: Seq[Expression],
     leftTime: Expression,
     rightTime: Expression,
-    forward: Boolean,
     tolerance: Option[Long],
     left: SparkPlan,
     right: SparkPlan) extends BinaryExecNode {
@@ -132,12 +130,12 @@ case class AsOfJoinExec(
     val rOut = right.output
     val (lKeys, rKeys) = (leftKeys, rightKeys)
     val (lTime, rTime) = (leftTime, rightTime)
-    val (fwd, tol) = (forward, tolerance)
+    val tol = tolerance
     val outAttrs = output
     left.execute().zipPartitions(right.execute(), preservesPartitioning = true) {
       (lIter, rIter) =>
         new AsOfMergeIterator(lIter, rIter, lOut, rOut, lKeys, rKeys,
-          lTime, rTime, fwd, tol, outAttrs, numOutputRows, numMatchedRows)
+          lTime, rTime, tol, outAttrs, numOutputRows, numMatchedRows)
     }
   }
 }
@@ -154,7 +152,6 @@ case class BroadcastAsOfJoinExec(
     rightKeys: Seq[Expression],
     leftTime: Expression,
     rightTime: Expression,
-    forward: Boolean,
     tolerance: Option[Long],
     left: SparkPlan,
     right: SparkPlan) extends BinaryExecNode {
@@ -192,7 +189,7 @@ case class BroadcastAsOfJoinExec(
     val lOut = left.output
     val (lKeys, rKeys) = (leftKeys, rightKeys)
     val (lTime, rTime) = (leftTime, rightTime)
-    val (fwd, tol) = (forward, tolerance)
+    val tol = tolerance
     val timeType = leftTime.dataType
     val outAttrs = output
 
@@ -230,26 +227,20 @@ case class BroadcastAsOfJoinExec(
         var matched: InternalRow = null
         if (!lKey.anyNull && !lTimeR.isNullAt(0)) {
           lookup.get(lKey).foreach { arr =>
-            // binary search: last index with time <= probe (backward) /
-            // first with time >= probe (forward)
+            // binary search: last index with time <= probe
             var lo = 0; var hi = arr.length - 1; var found = -1
             while (lo <= hi) {
               val mid = (lo + hi) >>> 1
-              val c = probeOrd.compare(arr(mid)._1, lTimeR)
-              if (if (fwd) c >= 0 else c <= 0) {
+              if (probeOrd.compare(arr(mid)._1, lTimeR) <= 0) {
                 found = mid
-                if (fwd) hi = mid - 1 else lo = mid + 1
-              } else {
-                if (fwd) lo = mid + 1 else hi = mid - 1
-              }
+                lo = mid + 1
+              } else hi = mid - 1
             }
             if (found >= 0) {
-              // backward converges to the LAST admissible index, forward to
-              // the FIRST — matching the merge exec's tie behavior exactly
+              // the LAST admissible index — the merge exec's "latest wins"
               val ok = tol.forall { t =>
-                val lt = AsOfJoinExec.timeLong(lTimeR, timeType)
-                val rt = AsOfJoinExec.timeLong(arr(found)._1, timeType)
-                (if (fwd) rt - lt else lt - rt) <= t
+                AsOfJoinExec.timeLong(lTimeR, timeType) -
+                  AsOfJoinExec.timeLong(arr(found)._1, timeType) <= t
               }
               if (ok) matched = arr(found)._2
             }
@@ -283,13 +274,10 @@ object AsOfJoinExec {
 
 /** Per-partition streaming merge. Both inputs sorted by (keys…, time).
   *
-  * Backward: consumed right rows at or before the probe become the buffered
+  * Consumed right rows at or before the probe become the buffered
   * candidate ("latest wins"); tolerance rejects a candidate farther than
   * `tol` behind the probe — no earlier candidate could be closer, so the
-  * probe is unmatched. Forward: the cursor stops at the first right row at
-  * or after the probe and matches it WITHOUT consuming (later probes may
-  * need the same row); null times sort first and are consumed as
-  * non-matching. */
+  * probe is unmatched. */
 private final class AsOfMergeIterator(
     lIter: Iterator[InternalRow],
     rIter: Iterator[InternalRow],
@@ -299,7 +287,6 @@ private final class AsOfMergeIterator(
     rKeys: Seq[Expression],
     lTime: Expression,
     rTime: Expression,
-    forward: Boolean,
     tolerance: Option[Long],
     outAttrs: Seq[Attribute],
     numOutputRows: SQLMetric,
@@ -328,17 +315,12 @@ private final class AsOfMergeIterator(
   private var rHas = false
   advanceRight()
 
-  // Current candidate (backward only): the best (latest admissible) right
+  // Current candidate: the best (latest admissible) right
   // row seen for candidateKey. Copied out of the cursor buffers.
   private var candidate: InternalRow = _
   private var candidateKey: InternalRow = _
   private var candidateTime: Long = 0L // long-backed value; set iff tolerance defined
   private val timeType = lTime.dataType
-
-  /** Forward-direction tolerance: right time within `tol` after the probe. */
-  private def withinTolerance(lt: InternalRow, rt: InternalRow): Boolean =
-    tolerance.forall(t => AsOfJoinExec.timeLong(rt, timeType) -
-      AsOfJoinExec.timeLong(lt, timeType) <= t)
 
   private def advanceRight(): Unit = {
     if (rIter.hasNext) {
@@ -359,53 +341,34 @@ private final class AsOfMergeIterator(
     val lTimeR = lTimeProj(lRow)
     var matched: InternalRow = null
     if (!lKey.anyNull && !lTimeR.isNullAt(0)) {
-      if (forward) {
-        // Advance to the first right row at or after (lKey, lTime); nulls
-        // and earlier times are non-matches for every later probe too.
-        var advancing = true
-        while (advancing && rHas) {
-          val c = keyOrd.compare(rKey, lKey)
-          if (c < 0 || (c == 0 && (rTimeRow.isNullAt(0) ||
-              timeOrd.compare(rTimeRow, lTimeR) < 0))) {
+      // Advance the cursor over every right row at or before (lKey, lTime).
+      var advancing = true
+      while (advancing && rHas) {
+        val c = keyOrd.compare(rKey, lKey)
+        if (c < 0) {
+          advanceRight() // earlier key: can never match a later left row
+        } else if (c == 0) {
+          if (rTimeRow.isNullAt(0)) {
+            advanceRight() // null time never matches
+          } else if (timeOrd.compare(rTimeRow, lTimeR) <= 0) {
+            // Admissible for this (and any later) left row: remember it.
+            // Rows later in sort order overwrite — "latest wins".
+            candidate = rRow.copy()
+            candidateKey = rKey.copy()
+            if (tolerance.isDefined)
+              candidateTime = AsOfJoinExec.timeLong(rTimeRow, timeType)
             advanceRight()
           } else {
-            advancing = false
+            advancing = false // future right row: stop, keep for later lefts
           }
+        } else {
+          advancing = false // right is on a later key
         }
-        if (rHas && keyOrd.compare(rKey, lKey) == 0 &&
-            withinTolerance(lTimeR, rTimeRow)) {
-          matched = rRow // not consumed: the next probe may need it too
-        }
-      } else {
-        // Advance the cursor over every right row at or before (lKey, lTime).
-        var advancing = true
-        while (advancing && rHas) {
-          val c = keyOrd.compare(rKey, lKey)
-          if (c < 0) {
-            advanceRight() // earlier key: can never match a later left row
-          } else if (c == 0) {
-            if (rTimeRow.isNullAt(0)) {
-              advanceRight() // null time never matches
-            } else if (timeOrd.compare(rTimeRow, lTimeR) <= 0) {
-              // Admissible for this (and any later) left row: remember it.
-              // Rows later in sort order overwrite — "latest wins".
-              candidate = rRow.copy()
-              candidateKey = rKey.copy()
-              if (tolerance.isDefined)
-                candidateTime = AsOfJoinExec.timeLong(rTimeRow, timeType)
-              advanceRight()
-            } else {
-              advancing = false // future right row: stop, keep for later lefts
-            }
-          } else {
-            advancing = false // right is on a later key
-          }
-        }
-        if (candidate != null && keyOrd.compare(candidateKey, lKey) == 0 &&
-            tolerance.forall(t =>
-              AsOfJoinExec.timeLong(lTimeR, timeType) - candidateTime <= t)) {
-          matched = candidate
-        }
+      }
+      if (candidate != null && keyOrd.compare(candidateKey, lKey) == 0 &&
+          tolerance.forall(t =>
+            AsOfJoinExec.timeLong(lTimeR, timeType) - candidateTime <= t)) {
+        matched = candidate
       }
     }
     numOutputRows += 1
@@ -434,23 +397,6 @@ object AsOfJoinOps {
       leftKeys: Seq[String], rightKeys: Seq[String],
       leftTime: String, rightTime: String,
       tolerance: Option[Long] = None,
-      broadcastRight: Boolean = false): DataFrame =
-    asof(left, right, leftKeys, rightKeys, leftTime, rightTime,
-      forward = false, tolerance, broadcastRight)
-
-  /** Forward as-of: the EARLIEST right row with `rightTime >= leftTime`. */
-  def asofForward(left: DataFrame, right: DataFrame,
-      leftKeys: Seq[String], rightKeys: Seq[String],
-      leftTime: String, rightTime: String,
-      tolerance: Option[Long] = None,
-      broadcastRight: Boolean = false): DataFrame =
-    asof(left, right, leftKeys, rightKeys, leftTime, rightTime,
-      forward = true, tolerance, broadcastRight)
-
-  private def asof(left: DataFrame, right: DataFrame,
-      leftKeys: Seq[String], rightKeys: Seq[String],
-      leftTime: String, rightTime: String,
-      forward: Boolean, tolerance: Option[Long],
       broadcastRight: Boolean = false): DataFrame = {
     val spark = left.sparkSession
     ensureRegistered(spark)
@@ -464,8 +410,7 @@ object AsOfJoinOps {
           s"column $n not in [${p.output.map(_.name).mkString(", ")}]"))
     val node = AsOfJoin(lPlan, rPlan,
       leftKeys.map(attr(lPlan, _)), rightKeys.map(attr(rPlan, _)),
-      attr(lPlan, leftTime), attr(rPlan, rightTime), forward, tolerance,
-      broadcastRight)
+      attr(lPlan, leftTime), attr(rPlan, rightTime), tolerance, broadcastRight)
     org.apache.spark.sql.graft.Bridge.ofRows(spark, node)
   }
 

@@ -171,6 +171,43 @@ class EtlJobSpec extends SparkSpec {
     assert(graft.sources.EavSource.idRequests.get - before == 1)
   }
 
+  test("the pipeline's graft-eav scans: a record_id distinct pushed into the " +
+      "scan, the np_dob filter pushed, and every plain scan read columnar") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val cfg = EtlJobSpec.floorConfig(dir)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "command") plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // jobsOf drains the listener bus, so every write has been seen after it
+    try jobsOf(EtlJob.run(spark, cfg))
+    finally spark.listenerManager.unregister(listener)
+    // AQE's final plans, stages and subqueries included
+    val walk = new AdaptiveSparkPlanHelper {}
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    val scans = all.flatMap(p => walk.collectWithSubqueries(p) {
+      case b: BatchScanExec if b.scan.description.startsWith("graft-eav") => b
+    })
+    val described = scans.map(_.scan.description)
+    assert(described.exists(_.contains("PushedAggregation: [] GroupBy: [record_id]")),
+      described.mkString("\n"))
+    assert(described.exists(_.contains("EqualTo(field_name,np_dob)")),
+      described.mkString("\n"))
+    // the group-by scans emit rows; every other scan sits under ColumnarToRow
+    val plain = scans.filterNot(_.scan.description.contains("PushedAggregation"))
+    val columnar = all.flatMap(p => walk.collectWithSubqueries(p) {
+      case ColumnarToRowExec(InputAdapter(scan)) => scan
+      case ColumnarToRowExec(scan) => scan
+    })
+    assert(plain.nonEmpty && plain.forall(s => columnar.exists(_ eq s)),
+      described.mkString("\n"))
+  }
+
   test("the two envelope streams are written at once: a failing side write " +
       "throws its own error once both have ended, and leaves no job running") {
     val bad = write("deid-malformed.csv", "study_id,exp_age_decade\nr1,3,extra\n")

@@ -65,11 +65,11 @@ class DedupSpec extends SparkSpec {
     assert(hitsText.nonEmpty)
   }
 
-  test("applyExact and minhash pairs keep canonical docs") {
+  test("exact keep_id and minhash pairs keep canonical docs") {
     val docs = Seq(
       (1L, base), (2L, base.toUpperCase), (3L, "something else entirely here"),
       (4L, base.replace("tonight", "today"))).toDF("doc_id", "text")
-    val exactKept = Dedup.applyExact(docs).select("doc_id").as[Long].collect().sorted.toSeq
+    val exactKept = Dedup.exact(docs).select("keep_id").as[Long].collect().sorted.toSeq
     assert(exactKept == Seq(1L, 3L, 4L)) // 2 is an exact dup of 1
     // the higher id of a pair is the one a near-dup drop removes: 2 is
     // (the exact dup is caught by minhash too), 1 and 3 never are
@@ -157,11 +157,6 @@ class DedupSpec extends SparkSpec {
       // cap below the clone-group size: members don't fan out at all
       assert(pairsOf(3).count() == 0, name)
     }
-    // ...and the companion audit reports exactly that dropped group
-    val audited = Dedup.oversizedCloneGroups(df, maxBucketSize = 3)
-      .select("rep", "n_docs").as[(Long, Long)].collect()
-    assert(audited.toSeq == Seq((10L, 6L)))
-    assert(Dedup.oversizedCloneGroups(df).count() == 0) // default cap: nothing dropped
   }
 
   test("job floor: the near-dup family runs a fixed number of jobs on a " +

@@ -1,22 +1,31 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SamplingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("hashSample: deterministic, partition-invariant, subset of input") {
+  /** One rate for every row: a stratum no row has, `pct` as the default. */
+  private def sampled(df: DataFrame, pct: Int): Array[Long] =
+    Sampling.stratifiedSample(df, lit("all"), $"id", Map("none" -> 0), pct)
+      .as[Long].collect().sorted
+
+  test("one-rate stratifiedSample: deterministic, partition-invariant, bucket < pct") {
     val df = (0L until 1000L).toDF("id")
-    val a = Sampling.hashSample(df, $"id", 20).as[Long].collect().sorted
-    val b = Sampling.hashSample(df.repartition(7), $"id", 20).as[Long].collect().sorted
+    val a = sampled(df, 20)
+    val b = sampled(df.repartition(7), 20)
     assert(a.sameElements(b))            // partition-order invariant
     assert(a.toSet.subsetOf((0L until 1000L).toSet))
     // rate lands near 20% (hash buckets are near-uniform)
     assert(a.length > 100 && a.length < 300)
+    // the kept rows are exactly those whose bucket is below the rate
+    val byBucket = df.filter(Sampling.bucket($"id") < 20).as[Long].collect().sorted
+    assert(a.sameElements(byBucket))
     // pct 100 keeps everything, 0 keeps nothing
-    assert(Sampling.hashSample(df, $"id", 100).count() == 1000)
-    assert(Sampling.hashSample(df, $"id", 0).count() == 0)
+    assert(sampled(df, 100).length == 1000)
+    assert(sampled(df, 0).isEmpty)
   }
 
   test("stratifiedSample: per-stratum rates, default for unlisted strata") {
@@ -33,8 +42,8 @@ class SamplingSpec extends SparkSpec {
 
   test("sampling nests consistently: pct 10 ⊆ pct 50 (bucket monotonicity)") {
     val df = (0L until 500L).toDF("id")
-    val small = Sampling.hashSample(df, $"id", 10).as[Long].collect().toSet
-    val big = Sampling.hashSample(df, $"id", 50).as[Long].collect().toSet
+    val small = sampled(df, 10).toSet
+    val big = sampled(df, 50).toSet
     assert(small.subsetOf(big))
   }
 

@@ -112,24 +112,7 @@ class AsOfJoinSpec extends SparkSpec {
     }
   }
 
-  test("forward direction: earliest right at or after the probe; shared rows not consumed") {
-    val left = leftDf(Seq(
-      (1L: java.lang.Long, 10L: java.lang.Long, 1L),   // -> rt=10 (equal admissible)
-      (1L: java.lang.Long, 11L: java.lang.Long, 2L),   // -> rt=12; same row later reused
-      (1L: java.lang.Long, 12L: java.lang.Long, 3L),   // -> rt=12 again (not consumed by lid=2)
-      (1L: java.lang.Long, 13L: java.lang.Long, 4L)))  // nothing after -> null
-    val right = rightDf(Seq(
-      (1L: java.lang.Long, null, 400L),                // null time: never a forward match
-      (1L: java.lang.Long, 7L: java.lang.Long, 401L),
-      (1L: java.lang.Long, 10L: java.lang.Long, 402L),
-      (1L: java.lang.Long, 12L: java.lang.Long, 403L)))
-    val got = AsOfJoinOps.asofForward(left, right, Seq("k"), Seq("rk"), "t", "rt")
-      .select($"lid", $"rid").as[(Long, Option[Long])].collect().toMap
-    assert(got == Map(1L -> Some(402L), 2L -> Some(403L),
-      3L -> Some(403L), 4L -> None))
-  }
-
-  test("tolerance bounds the match distance in both directions") {
+  test("tolerance bounds the backward match distance") {
     val left = leftDf(Seq(
       (1L: java.lang.Long, 10L: java.lang.Long, 1L),
       (1L: java.lang.Long, 30L: java.lang.Long, 2L)))
@@ -140,35 +123,12 @@ class AsOfJoinSpec extends SparkSpec {
         tolerance = Some(5L))
       .select($"lid", $"rid").as[(Long, Option[Long])].collect().toMap
     assert(back == Map(1L -> Some(501L), 2L -> None)) // 30-8=22 > 5
-    val fwd = AsOfJoinOps.asofForward(left, right, Seq("k"), Seq("rk"), "t", "rt",
-        tolerance = Some(3L))
+    // the bound is inclusive: 10-8=2 admits at tolerance 2, not at 1
+    def at(tol: Long) = AsOfJoinOps.asofBackward(left, right, Seq("k"), Seq("rk"),
+        "t", "rt", tolerance = Some(tol))
       .select($"lid", $"rid").as[(Long, Option[Long])].collect().toMap
-    assert(fwd == Map(1L -> None, 2L -> Some(502L))) // 33-10=23 > 3; 33-30=3 ok
-  }
-
-  test("property: forward direction ≡ per-row reference semantics") {
-    val rnd = new scala.util.Random(7)
-    for (c <- 1 to 6) {
-      val nl = 1 + rnd.nextInt(40)
-      val nr = rnd.nextInt(40)
-      def nk: java.lang.Long = if (rnd.nextInt(12) == 0) null else (rnd.nextInt(5).toLong: java.lang.Long)
-      def nt: java.lang.Long = if (rnd.nextInt(12) == 0) null else (rnd.nextInt(20).toLong: java.lang.Long)
-      val lRows = (1 to nl).map(i => (nk, nt, i.toLong))
-      val rRows = (1 to nr).map(i => (nk, nt, 100L + i))
-      val tol = if (rnd.nextBoolean()) Some(rnd.nextInt(6).toLong) else None
-      val got = AsOfJoinOps.asofForward(leftDf(lRows), rightDf(rRows),
-          Seq("k"), Seq("rk"), "t", "rt", tol)
-        .select($"lid", $"rt").as[(Long, Option[Long])].collect().toMap
-      val expected = lRows.map { case (k, t, lid) =>
-        lid -> (for {
-          kk <- Option(k); tt <- Option(t)
-          best <- rRows.collect { case (rk, rt, _) if rk == kk && rt != null &&
-              rt >= tt && tol.forall(rt - tt <= _) => rt.longValue }
-            .reduceOption(_ min _)
-        } yield best)
-      }.toMap
-      assert(got == expected, s"case $c: nl=$nl nr=$nr tol=$tol")
-    }
+    assert(at(2L) == Map(1L -> Some(501L), 2L -> None))
+    assert(at(1L) == Map(1L -> None, 2L -> None))
   }
 
   test("broadcast as-of: zero-shuffle plan, results ≡ co-partitioned merge") {
@@ -192,9 +152,9 @@ class AsOfJoinSpec extends SparkSpec {
     assert(a.nonEmpty && a == b)
   }
 
-  test("property: broadcast path ≡ merge path, both directions with tolerance") {
+  test("property: broadcast path ≡ merge path, with and without tolerance") {
     val rnd = new scala.util.Random(99)
-    for (c <- 1 to 4; fwd <- Seq(false, true)) {
+    for (c <- 1 to 8) {
       val nl = 1 + rnd.nextInt(30)
       val nr = rnd.nextInt(30)
       def nk: java.lang.Long = if (rnd.nextInt(12) == 0) null else (rnd.nextInt(4).toLong: java.lang.Long)
@@ -202,11 +162,10 @@ class AsOfJoinSpec extends SparkSpec {
       val l = leftDf((1 to nl).map(i => (nk, nt, i.toLong)))
       val r = rightDf((1 to nr).map(i => (nk, nt, 100L + i)))
       val tol = if (rnd.nextBoolean()) Some(rnd.nextInt(5).toLong) else None
-      def run(bcast: Boolean) = (if (fwd)
-          AsOfJoinOps.asofForward(l, r, Seq("k"), Seq("rk"), "t", "rt", tol, bcast)
-        else AsOfJoinOps.asofBackward(l, r, Seq("k"), Seq("rk"), "t", "rt", tol, bcast))
-        .select($"lid", $"rt").as[(Long, Option[Long])].collect().toMap
-      assert(run(true) == run(false), s"case $c fwd=$fwd tol=$tol")
+      def run(bcast: Boolean) =
+        AsOfJoinOps.asofBackward(l, r, Seq("k"), Seq("rk"), "t", "rt", tol, bcast)
+          .select($"lid", $"rt").as[(Long, Option[Long])].collect().toMap
+      assert(run(true) == run(false), s"case $c tol=$tol")
     }
   }
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import java.nio.file.Files
-import org.apache.spark.sql.functions.{count, countDistinct, lit, max, min}
+import org.apache.spark.sql.functions.{count, countDistinct, lit, min}
 
 class EavSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -82,22 +82,21 @@ class EavSourceSpec extends SparkSpec {
     assert(df.count() == 250) // only np_dob rows
   }
 
-  test("limit pushdown: per-chunk cap in the scan, global limit still exact") {
+  test("limit: Spark caps the scan's rows, result exact") {
     val df = read.load().limit(7)
-    assert(df.queryExecution.executedPlan.toString.contains("PushedLimit: 7"))
+    assert(df.queryExecution.executedPlan.toString.contains("CollectLimit 7"))
     assert(df.count() == 7)
-    // pushed limit composes with pushed filters (both inside the fetch)
+    // the limit composes with pushed filters (filters inside the fetch)
     val filtered = read.load().filter($"field_name" === "age").limit(5)
     assert(filtered.count() == 5)
     assert(filtered.select("field_name").as[String].collect().forall(_ == "age"))
   }
 
-  test("top-n pushdown: ORDER BY + LIMIT lands in the scan, result exact") {
+  test("top-n: ORDER BY + LIMIT above the scan, result exact") {
     val df = read.load().orderBy($"record_id".desc, $"field_name").limit(6)
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedTopN") && plan.contains("record_id DESC"),
-      s"no pushed top-n in: $plan")
-    // exact equality with the unpushed formulation (binary string order)
+    assert(plan.contains("TakeOrderedAndProject(limit=6"), plan)
+    // exact equality with the sort done here (binary string order)
     val exp = read.load().collect()
       .map(r => (r.getString(0), r.getString(4), r.getString(5)))
       .sortBy { case (rid, fn, _) => (rid, fn) }(
@@ -118,22 +117,20 @@ class EavSourceSpec extends SparkSpec {
 
   test("aggregate pushdown: per-chunk partial group-by lands in the scan, " +
       "final aggregate still exact") {
-    val df = read.load().groupBy($"field_name")
-      .agg(count(lit(1)).as("n"), min($"value").as("mn"), max($"value").as("mx"))
+    val df = read.load().select("record_id").distinct()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregation"), s"no pushed aggregation in: $plan")
-    val got = df.as[(String, Long, String, String)].collect().toSet
-    // oracle: same CSV through the plain text reader
-    val raw = spark.read.option("header", true).csv(fixture)
-    val exp = raw.groupBy($"field_name")
-      .agg(count(lit(1)).as("n"), min($"value").as("mn"), max($"value").as("mx"))
-      .as[(String, Long, String, String)].collect().toSet
-    assert(got == exp && got.size == 3)
-    // composes with pushed filters (filter applied before the per-chunk agg)
+    assert(plan.contains("PushedAggregation: [] GroupBy: [record_id]"),
+      s"no pushed aggregation in: $plan")
+    assert(df.as[String].collect().sorted.toSeq ==
+      (1 to 250).map(r => s"r$r").sorted)
+    // composes with pushed filters (filter applied before the per-chunk
+    // distinct), and a two-column key keeps the group-by order
     val filtered = read.load().filter($"field_name" === "age")
-      .groupBy($"redcap_event_name").agg(count(lit(1)).as("n"))
-    assert(filtered.queryExecution.executedPlan.toString.contains("PushedAggregation"))
-    assert(filtered.as[(String, Long)].collect().toSeq == Seq(("screening_arm_1", 250L)))
+      .select("redcap_event_name", "field_name").distinct()
+    assert(filtered.queryExecution.executedPlan.toString
+      .contains("GroupBy: [redcap_event_name, field_name]"))
+    assert(filtered.as[(String, String)].collect().toSeq ==
+      Seq(("screening_arm_1", "age")))
   }
 
   test("aggregate pushdown declines: distinct counts and residual filters") {
@@ -143,9 +140,22 @@ class EavSourceSpec extends SparkSpec {
     assert(distinctAgg.as[(String, Long)].collect().toMap ==
       Map("age" -> 250L, "np_dob" -> 250L, "visit_date" -> 250L))
     val residual = read.load().filter($"value".contains("1990"))
-      .groupBy($"field_name").agg(count(lit(1)).as("n"))
+      .select("record_id").distinct()
     assert(!residual.queryExecution.executedPlan.toString.contains("PushedAggregation"))
-    assert(residual.as[(String, Long)].collect().toMap == Map("np_dob" -> 250L))
+    assert(residual.count() == 250)
+    // aggregate functions decline: Spark aggregates the scanned rows
+    val counted = read.load().groupBy($"field_name")
+      .agg(count(lit(1)).as("n"), min($"value").as("mn"))
+    assert(!counted.queryExecution.executedPlan.toString.contains("PushedAggregation"))
+    val raw = spark.read.option("header", true).csv(fixture)
+    val exp = raw.groupBy($"field_name")
+      .agg(count(lit(1)).as("n"), min($"value").as("mn"))
+      .as[(String, Long, String)].collect().toSet
+    assert(counted.as[(String, Long, String)].collect().toSet == exp && exp.size == 3)
+    val star = read.load()
+    assert(!star.groupBy().count().queryExecution.executedPlan.toString
+      .contains("PushedAggregation"))
+    assert(star.count() == 750)
   }
 
   test("columnar read path: plain scans vectorize (ColumnarToRow in plan), " +
@@ -159,63 +169,53 @@ class EavSourceSpec extends SparkSpec {
     val viaCsv = spark.read.option("header", true).csv(fixture)
       .na.fill("").collect().map(_.toSeq).toSet
     assert(df.collect().map(_.toSeq).toSet == viaCsv)
-    // filter + pruning still vectorized; limit/top-n fall back to rows
+    // filter + pruning and a limit above the scan still vectorized
     val filtered = read.load().filter($"field_name" === "age").select("record_id", "value")
     assert(filtered.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(filtered.count() == 250)
     val limited = read.load().limit(7)
-    assert(!limited.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(limited.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(limited.count() == 7)
   }
 
-  test("table-sample pushdown: Sample evaluated inside the fetch, " +
-      "deterministic, roughly proportional") {
+  test("sample: Spark's Sample above the scan, deterministic per seed") {
     val df = read.load().sample(0.3, seed = 17)
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedSample: [0.0, 0.3)"), s"no pushed sample in: $plan")
-    assert(!plan.contains("Sample "), s"Sample operator survived the push: $plan")
+    assert(plan.contains("Sample 0.0, 0.3"), s"no Sample operator in: $plan")
     val n1 = df.count()
     assert(n1 > 750 * 0.15 && n1 < 750 * 0.45, s"got $n1 of 750")
-    // content-keyed: identical result on every run, any plan shape
+    // same seed, same chunking: identical rows on every run
     assert(read.load().sample(0.3, seed = 17).count() == n1)
     val rows1 = df.collect().map(_.toSeq).toSet
     assert(read.load().sample(0.3, seed = 17).collect().map(_.toSeq).toSet == rows1)
-    // sample-below-filter composes (the rule pushes a Sample only when the
-    // scan is its direct child); the filter stays above, results correct
+    // a filter above the sample: results correct
     val filtered = read.load().sample(0.5, seed = 3).filter($"field_name" === "age")
-    val fPlan = filtered.queryExecution.executedPlan.toString
-    assert(fPlan.contains("PushedSample: [0.0, 0.5)"), fPlan)
     val vals = filtered.select("field_name").as[String].collect()
     assert(vals.nonEmpty && vals.forall(_ == "age"))
   }
 
-  test("runtime filtering: selective broadcast join prunes whole chunk " +
-      "fetches at execution (DSv2 dynamic pruning)") {
-    // cohort table on disk so the selective predicate survives as a Filter
-    // node (a LocalRelation would constant-fold it away and DPP needs a
-    // visible selective filter on the build side)
-    val dimDir = Files.createTempDirectory("eavdim").resolve("cohort").toString
-    (1 to 250).map(r => (s"r$r", if (r <= 3) "keep" else "drop"))
-      .toDF("record_id", "cohort").write.parquet(dimDir)
-    val dim = spark.read.parquet(dimDir).filter($"cohort" === "keep")
-
-    val fact = read.load() // 250 ids / 100-id chunks = 3 chunks
-    val joined = fact.join(dim, "record_id")
-    EavSource.chunkFetches.set(0L)
-    val rows = joined.collect()
-    assert(rows.length == 9, s"expected 3 ids x 3 rows, got ${rows.length}")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("RuntimeFilters: [") && !plan.contains("RuntimeFilters: []"),
-      s"no runtime filter on the scan: ${plan.take(800)}")
-    // r1,r2,r3 all sort into the first id chunk -> 1 fetch instead of 3:
-    // at scale, 2 of 3 REST requests were never issued
-    assert(EavSource.chunkFetches.get() == 1L,
-      s"expected 1 chunk fetch, got ${EavSource.chunkFetches.get()}")
-
-    // without a runtime-filterable join, all 3 chunks fetch
-    EavSource.chunkFetches.set(0L)
-    assert(fact.count() == 750)
-    assert(EavSource.chunkFetches.get() == 3L)
+  test("a user-specified read schema is refused at load(), before any job; " +
+      "the source has no write path") {
+    val jobs = jobsOf {
+      for (ddl <- Seq("record_id INT, value STRING", "record_id STRING, foo STRING")) {
+        val e = intercept[UnsupportedOperationException] {
+          spark.read.format("graft-eav").schema(ddl).option("path", fixture).load()
+        }
+        assert(e.getClass.getName == "org.apache.spark.SparkUnsupportedOperationException")
+        assert(e.getMessage.contains("does not support user-specified schema"),
+          e.getMessage)
+      }
+    }
+    assert(jobs == 0)
+    val out = Files.createTempDirectory("eavwrite").toString
+    val w = intercept[Exception] {
+      Seq("x").toDF("value").write.format("graft-eav").option("path", out)
+        .mode("append").save()
+    }
+    // no BATCH_WRITE: Spark falls back to the V1 write path, which refuses
+    assert(w.isInstanceOf[org.apache.spark.SparkException], w.toString)
+    assert(w.getMessage.contains("EavSourceProvider does not allow create table as select"),
+      w.getMessage)
   }
 
   test("reported statistics let Catalyst broadcast a small extraction") {

@@ -3,7 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import graft.functions.{LenientDate, LenientTimestamp}
+import org.apache.spark.sql.types.LongType
+import graft.functions.{DictionaryLookup, LenientDate, LenientTimestamp}
 
 /** Date de-identification (SURVEY.md J2/F1-F5;
   * /root/reference/dcc_transforms.py:34-174), three modes:
@@ -85,30 +86,42 @@ object DateShift {
     * time zone. A null anchor would shift every date row to null (and the
     * PHI filter would admit it as cleaned) or drop it without an error, so
     * an unparseable value fails here. */
-  private def anchorSeconds(eav: DataFrame, standardDate: String): Column = {
+  private def anchorSeconds(eav: DataFrame, standardDate: String): Long = {
     val tz = eav.sparkSession.conf.get("spark.sql.session.timeZone")
     val micros = LenientTimestamp(Literal(standardDate), Some(tz)).eval()
     if (micros == null) throw new IllegalArgumentException(
       s"[dcc_transforms] standard_date: cannot parse '$standardDate' as a date")
-    lit(Math.floorDiv(micros.asInstanceOf[Long], 1000000L))
+    Math.floorDiv(micros.asInstanceOf[Long], 1000000L)
   }
 
   /** Mode 1: per-record dob shift. `standardDate` is the anchor all records
-    * land on (ISO string, config `standard_date`). */
+    * land on (ISO string, config `standard_date`).
+    *
+    * The shift table is built here, in one job: the executors parse the
+    * `dobField` rows with the same expression as every date row, and the
+    * driver keeps the max parsed dob per record — one entry per participant,
+    * as the reference's `shift_dict` (dcc_transforms.py:44-49). The plane
+    * then probes it per row as a broadcast dictionary
+    * ([[graft.functions.DictionaryLookup]]), so the shift adds no join and
+    * no exchange to the plane's stage. */
   def dobShift(eav: DataFrame, fieldMap: FieldMap.Rules, standardDate: String,
       dobField: String = "np_dob"): Result = {
     val anchor = anchorSeconds(eav, standardDate)
     // deterministic "winner" per record: max parsed dob (see scaladoc)
-    val shifts = eav
-      .filter(col("field_name") === dobField)
-      .select(col("record_id"), LenientDate.parseTs(col("value")).as("__dob"))
-      .filter(col("__dob").isNotNull)
-      .groupBy(col("record_id"))
-      .agg(max(col("__dob")).as("__dob"))
-      .select(col("record_id"), (anchor - unix_timestamp(col("__dob"))).as("__shift_s"))
-    // shift table: one row per participant — small relative to the EAV fact
-    // plane, but grows with SF, so let AQE pick broadcast vs shuffle.
-    val withShift = eav.join(shifts, Seq("record_id"), "left")
+    val dobs = scala.collection.mutable.HashMap.empty[String, Long]
+    // an unparsed dob is skipped here, not filtered in the plan, which
+    // would parse each row twice (once in the pushed-down filter)
+    eav.filter(col("field_name") === dobField)
+      .select(col("record_id"), unix_timestamp(LenientDate.parseTs(col("value"))))
+      .collect().foreach { r =>
+        if (!r.isNullAt(1)) {
+          val dob = r.getLong(1)
+          dobs.updateWith(r.getString(0))(old => Some(old.fold(dob)(math.max(_, dob))))
+        }
+      }
+    val shift = DictionaryLookup(eav.sparkSession, col("record_id"), "dob_shift",
+      dobs.iterator.map { case (id, dob) => id -> (anchor - dob) }, LongType)
+    val withShift = eav.withColumn("__shift_s", shift)
     val shifted = timestamp_seconds(unix_timestamp(col("__parsed")) + col("__shift_s"))
     applyShift(withShift, fieldMap,
       renderByGran(shifted), extraOk = col("__shift_s").isNotNull)
@@ -116,7 +129,7 @@ object DateShift {
 
   /** Mode 2: seconds-until-standard-date (integer string output). */
   def totalSeconds(eav: DataFrame, fieldMap: FieldMap.Rules, standardDate: String): Result = {
-    val anchor = anchorSeconds(eav, standardDate)
+    val anchor = lit(anchorSeconds(eav, standardDate))
     val secs = (anchor - unix_timestamp(col("__parsed"))).cast("long")
     applyShift(eav, fieldMap, secs.cast("string"))
   }

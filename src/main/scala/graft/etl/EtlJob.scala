@@ -12,8 +12,10 @@ import graft.sources.IniConfig
   *
   * The field map is read and compiled on the driver ([[FieldMap.rules]]),
   * so the date shift and the PHI filter inline it as predicates instead of
-  * joining it. The `--fake` path writes its two envelope streams at once;
-  * the POST path ([[EtlMain]]: header, then data, then transform chunks),
+  * joining it; the per-participant tables (dob shift, calc variables,
+  * secondary ids) are driver dictionaries probed per row, so each envelope
+  * stream is one stage. The `--fake` path writes its two envelope streams
+  * at once; the POST path ([[EtlMain]]: header, then data, then transform chunks),
   * `writeout` and `pubDebug` stay in order.
   *
   * A reference user keeps their INI sections (`default`, `dcc_transforms`,
@@ -63,14 +65,14 @@ object EtlJob {
         // reference: getboolean(..., fallback=False), dcc_transforms.py:34-36
         inPlace = c("dob_shift_inplace").exists(asBool))
     }
+    // both control tables are read on the driver when the transform runs
     val calc = c("deid_data_file").map(p =>
-      new CalcVariableTransform(FieldMap.load(spark, p),
-        idColumn = config.resolved("redcap", "study_id_column").getOrElse("study_id"),
+      new CalcVariableTransform(() => FieldMap.table(spark, p), "CalcVars",
+        config.resolved("redcap", "study_id_column").getOrElse("study_id"),
         // the transform's header dictionary (dcc_transforms.py:272-278)
-        deidDataDictionary = c("deid_data_dictionary_file")
-          .map(f => FieldMap.load(spark, f))))
+        c("deid_data_dictionary_file").map(f => FieldMap.load(spark, f))))
     val secondary = c("secondary_id_file").map(p =>
-      new SecondaryIdTransform(FieldMap.load(spark, p)))
+      new SecondaryIdTransform(() => FieldMap.table(spark, p), "SecondaryID", "secondary_id"))
     Seq(date, calc, secondary).flatten
   }
 

@@ -2,9 +2,11 @@ package graft.etl
 
 import scala.io.Source
 import scala.language.implicitConversions
+import scala.util.control.NonFatal
 
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.CodecStreams
@@ -20,9 +22,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * the same dict compiled into [[FieldMap.Rules]]: `field_name` sets that
   * the date shift and the PHI filter inline as `IN`/`InSet` predicates, so
   * the map never becomes a join side. The map is bounded by the REDCap
-  * dictionary, not by participant count; the calc-variable and
-  * secondary-id tables, which do grow with participants, stay distributed
-  * frames ([[FieldMap.load]]).
+  * dictionary, not by participant count. The calc-variable and
+  * secondary-id tables, which grow with participants (one entry each), are
+  * read on the driver the same way ([[FieldMap.table]]) and probed as
+  * broadcast dictionaries, as the reference holds them in driver dicts.
   */
 object FieldMap {
 
@@ -52,9 +55,13 @@ object FieldMap {
   object Rules {
     /** A field-map frame compiled with one collect (a local frame runs no
       * job). */
-    implicit def compiled(fieldMap: DataFrame): Rules = compile(
-      normalize(fieldMap).select("field_name", "status", "restrict_to_event_list")
-        .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))))
+    implicit def compiled(fieldMap: DataFrame): Rules =
+      compile(Table.of(normalize(fieldMap, columns)))
+
+    /** The columns the stages read, in [[compile]]'s order. */
+    private[FieldMap] val columns = Seq("field_name", "status", "restrict_to_event_list")
+
+    private[FieldMap] def compile(t: Table): Rules = compile(t.rows.map(v => (v(0), v(1), v(2))))
 
     /** (field_name, status, restrict_to_event_list) rows, in file order. */
     def compile(rows: Seq[(String, String, String)]): Rules = {
@@ -95,23 +102,54 @@ object FieldMap {
     oneFile(spark, path).fold(reader.csv(path))(f => reader.schema(f._2).csv(path))
   }
 
-  /** The field map at `path`, compiled. One data file is parsed on the
-    * driver by Spark's own line-mode CSV parser with [[load]]'s options
-    * and column pruning, so this runs no Spark job; otherwise it is
-    * [[load]]ed and collected once. */
+  /** The field map at `path`, compiled, from the three columns the stages
+    * read ([[table]]: no Spark job for one data file). */
   def rules(spark: SparkSession, path: String): Rules =
-    oneFile(spark, path).fold(Rules.compiled(load(spark, path))) { case (file, schema) =>
-      val wanted = Seq("field_name", "status", "restrict_to_event_list")
-      val required = StructType(schema.filter(c => wanted.contains(c.name)))
-      val at = wanted.map(required.fieldNames.indexOf(_))
-      val csv = csvOptions(spark)
-      val in = CodecStreams.createInputStream(spark.sparkContext.hadoopConfiguration, file)
-      try Rules.compile(Bridge.csvLines(Source.fromInputStream(in, csv.charset).getLines(),
-          schema, required, csv).map { row =>
-        val v = at.map(i => if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i).toString)
-        (v(0), v(1), v(2))
-      }.toVector)
-      finally in.close()
+    Rules.compile(table(spark, path, Some(Rules.columns)))
+
+  /** A control CSV as the driver holds it: column names and rows of
+    * strings (null for an empty cell), in file order. */
+  private[etl] final case class Table(columns: IndexedSeq[String], rows: Vector[Array[String]]) {
+    /** The position of column `name`; a missing one fails, naming the
+      * columns the table has. */
+    def index(name: String): Int = columns.indexOf(name) match {
+      case -1 => throw new IllegalArgumentException(
+        s"control table has no column '$name' (columns: ${columns.mkString(", ")})")
+      case i => i
+    }
+  }
+
+  private[etl] object Table {
+    /** `df` collected with every column rendered by Spark's `cast(string)`
+      * (a local frame runs no job). */
+    def of(df: DataFrame): Table = Table(df.columns.toIndexedSeq,
+      df.select(df.columns.toIndexedSeq.map(c => col(s"`$c`").cast("string")): _*)
+        .collect().iterator.map(r => Array.tabulate(r.length)(r.getString)).toVector)
+  }
+
+  /** The CSV at `path` read on the driver, pruned to `wanted` (absent ones
+    * read as null; None keeps every column). One data file is parsed by
+    * Spark's own line-mode CSV parser with [[load]]'s options and column
+    * pruning, so this runs no Spark job, and a parse failure names the
+    * file; otherwise the file set is [[load]]ed and collected once. */
+  private[etl] def table(spark: SparkSession, path: String,
+      wanted: Option[Seq[String]] = None): Table =
+    oneFile(spark, path) match {
+      case None =>
+        val df = load(spark, path)
+        Table.of(wanted.fold(df)(w => normalize(df, w)))
+      case Some((file, schema)) =>
+        val names = wanted.getOrElse(schema.fieldNames.toSeq)
+        val required = StructType(schema.filter(c => names.contains(c.name)))
+        val at = names.map(required.fieldNames.indexOf(_)).toArray
+        val csv = csvOptions(spark)
+        val in = CodecStreams.createInputStream(spark.sparkContext.hadoopConfiguration, file)
+        try Table(names.toIndexedSeq, Bridge.csvLines(
+            Source.fromInputStream(in, csv.charset).getLines(), schema, required, csv).map { row =>
+          at.map(i => if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i).toString)
+        }.toVector)
+        catch { case NonFatal(e) => throw new SparkException(s"cannot read $file: ${e.getMessage}", e) }
+        finally in.close()
     }
 
   private def csvOptions(spark: SparkSession): CSVOptions =
@@ -152,11 +190,12 @@ object FieldMap {
   /** Normalize an in-memory or loaded frame to the canonical column set;
     * missing control columns materialize as nulls so downstream expressions
     * never need existence checks. */
-  def normalize(df: DataFrame): DataFrame = {
+  def normalize(df: DataFrame): DataFrame = normalize(df, Model.fieldMapColumns)
+
+  private def normalize(df: DataFrame, columns: Seq[String]): DataFrame = {
     val present = df.columns.toSet
-    val cols = Model.fieldMapColumns.map { c =>
+    df.select(columns.map { c =>
       if (present(c)) col(s"`$c`") else lit(null).cast("string").as(c)
-    }
-    df.select(cols: _*)
+    }: _*)
   }
 }

@@ -1,15 +1,18 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
+import graft.functions.DictionaryLookup
 
 /** Plan-to-plan transform modules (SURVEY.md §2.11;
   * /root/reference/transform.py:4-39). Each transform takes the EAV plane
   * and returns a possibly-rewritten EAV plane, appended TransformRecord
   * rows under its namespace, and an error side-channel — the reference's
   * `process_records` 1→N generator contract plus its logging channel,
-  * expressed as DataFrame → DataFrame (plan composition, nothing
-  * materializes until the sink).
+  * expressed as DataFrame → DataFrame (plan composition: nothing
+  * materializes until the sink, except that `dob_shifting` collects its
+  * shift table in one job when applied).
   */
 final case class TransformOutput(
     eav: DataFrame,
@@ -86,37 +89,48 @@ final class DateShiftTransform(
 /** Calc-variable enrichment (SURVEY.md J3+R2;
   * /root/reference/dcc_transforms.py:177-268): distinct participant ids
   * probe the wide de-id table; every matched calc column fans out to one
-  * TransformRecord. The wide→EAV reshape is `unpivot`, the probe an inner
-  * join — Catalyst plans the distinct as partial aggregation, and the join
-  * shuffles on record_id (or broadcasts under AQE when the de-id table is
-  * small).
+  * TransformRecord. The table is read once on the driver
+  * ([[FieldMap.table]] for the config's file, one collect for a frame)
+  * into a dictionary id → the record's (column, value) pairs, which each
+  * id probes as a broadcast variable and `inline`s — no join, no exchange.
+  * The id list itself is a `record_id` distinct the graft-eav scan answers
+  * whole.
   */
-final class CalcVariableTransform(
-    deidWide: DataFrame,
-    // the reference's data_namespace verbatim (dcc_transforms.py:190)
-    val namespace: String = "CalcVars",
-    idColumn: String = "study_id",
-    /** Curated de-id data dictionary CSV (config `deid_data_dictionary_file`)
-      * published as this transform's header dictionary. */
-    deidDataDictionary: Option[DataFrame] = None) extends EtlTransform {
+final class CalcVariableTransform private[etl] (
+    deid: () => FieldMap.Table,
+    val namespace: String,
+    idColumn: String,
+    deidDataDictionary: Option[DataFrame]) extends EtlTransform {
+
+  def this(
+      deidWide: DataFrame,
+      // the reference's data_namespace verbatim (dcc_transforms.py:190)
+      namespace: String = "CalcVars",
+      idColumn: String = "study_id",
+      /** Curated de-id data dictionary CSV (config `deid_data_dictionary_file`)
+        * published as this transform's header dictionary. */
+      deidDataDictionary: Option[DataFrame] = None) =
+    this(() => FieldMap.Table.of(deidWide), namespace, idColumn, deidDataDictionary)
+
+  private lazy val table = deid()
+  private val recordType = ArrayType(new StructType()
+    .add("field_name", StringType, nullable = false)
+    .add("field_value", StringType, nullable = false), containsNull = false)
+
   def apply(eav: DataFrame): TransformOutput = {
-    // study_id → redcap_id rename, dcc_transforms.py:231-232; dedupe the
-    // control side so a duplicated participant row can't fan out records
-    // (reference dict build collapses duplicates)
-    val wide = deidWide.withColumnRenamed(idColumn, "redcap_id")
-      .dropDuplicates("redcap_id")
-    val ids = eav.select(col("record_id")).distinct()
-    val joined = ids.join(wide, ids("record_id") === wide("redcap_id"), "inner")
-    val valueCols = wide.columns.filter(_ != "redcap_id")
-    val records = joined
-      .unpivot(
-        Array(col("record_id")),
-        // fillna('') applies to every column (dcc_transforms.py:233):
-        // cast-then-coalesce so numeric nulls become "" too
-        valueCols.map(c => coalesce(col(c).cast("string"), lit("")).as(c)),
-        "field_name", "field_value")
-      .withColumn("namespace", lit(namespace))
-      .select("record_id", "namespace", "field_name", "field_value")
+    // study_id → redcap_id, dcc_transforms.py:231-232; a duplicated
+    // participant row can't fan out records — the first in file order wins
+    // (the reference's dict build collapses duplicates)
+    val id = table.index(idColumn)
+    val valueCols = table.columns.indices.filter(_ != id)
+    val calc = DictionaryLookup(eav.sparkSession, col("record_id"), "calc_variables",
+      table.rows.iterator.map(r => r(id) -> valueCols.map(i =>
+        // fillna('') applies to every column (dcc_transforms.py:233); the
+        // values are Spark's cast(string), so numeric nulls become "" too
+        Row(table.columns(i), Option(r(i)).getOrElse("")))),
+      recordType)
+    val records = eav.select(col("record_id")).distinct()
+      .select(col("record_id"), lit(namespace).as("namespace"), inline(calc))
     TransformOutput(eav, Some(records))
   }
 
@@ -131,26 +145,37 @@ final class CalcVariableTransform(
     }
 }
 
-/** Secondary-ID mapping (SURVEY.md J4;
-  * /root/reference/dcc_transforms.py:271-306): left lookup join, missing
-  * mapping → null value row (the reference emits None). The mapping file is
-  * a control table → broadcast.
+/** Secondary-ID mapping (SURVEY.md J4; the reference's
+  * dcc_transforms.py:271-306): every distinct participant id gets one
+  * row, a missing mapping a null value (the reference emits None). The
+  * mapping is a control table read once on the driver, as for
+  * [[CalcVariableTransform]], and probed per id as a broadcast dictionary.
   */
-final class SecondaryIdTransform(
-    mapping: DataFrame,              // redcap_record_id, secondary_id
-    // the reference's data_namespace verbatim (dcc_transforms.py:282)
-    val namespace: String = "SecondaryID",
-    outputField: String = "secondary_id") extends EtlTransform {
+final class SecondaryIdTransform private[etl] (
+    mapping: () => FieldMap.Table,  // redcap_record_id, secondary_id
+    val namespace: String,
+    outputField: String) extends EtlTransform {
+
+  def this(
+      mapping: DataFrame,
+      // the reference's data_namespace verbatim (dcc_transforms.py:282)
+      namespace: String = "SecondaryID",
+      outputField: String = "secondary_id") =
+    this(() => FieldMap.Table.of(mapping), namespace, outputField)
+
+  private lazy val table = mapping()
+
   def apply(eav: DataFrame): TransformOutput = {
-    val ids = eav.select(col("record_id")).distinct()
-    val dedupedMapping = mapping.dropDuplicates("redcap_record_id") // see CalcVariableTransform
-    val records = ids
-      .join(broadcast(dedupedMapping), ids("record_id") === dedupedMapping("redcap_record_id"), "left")
+    val (id, secondary) = (table.index("redcap_record_id"), table.index("secondary_id"))
+    // first row per id wins, see CalcVariableTransform
+    val secondaryId = DictionaryLookup(eav.sparkSession, col("record_id"), "secondary_ids",
+      table.rows.iterator.map(r => r(id) -> r(secondary)), StringType)
+    val records = eav.select(col("record_id")).distinct()
       .select(
         col("record_id"),
         lit(namespace).as("namespace"),
         lit(outputField).as("field_name"),
-        col("secondary_id").cast("string").as("field_value"))
+        secondaryId.as("field_value"))
     TransformOutput(eav, Some(records))
   }
 

@@ -359,8 +359,11 @@ object Graph {
     * @return (src, dst) distinct, both directions of every in-group pair
     */
   def undirectedEdges(sets: DataFrame, setCol: String): DataFrame = {
-    // lazy: the first consumer (typically the adjacency build's
-    // exchange) materializes the distinct frame — no separate job
+    // lazy only in its final stage: the localCheckpoint call itself opens a
+    // SQL execution, and AQE's execute() materializes every shuffle stage
+    // below it (the input's collect_set and this distinct) before it
+    // returns. The first consumer then runs the final stage that fills
+    // the checkpoint blocks.
     val und = orderedPairs(sets, setCol).distinct().localCheckpoint(false)
     und.unionByName(und.select(col("dst").as("src"), col("src").as("dst")))
   }

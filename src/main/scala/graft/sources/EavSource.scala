@@ -30,7 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `record_id` / `field_name` / `redcap_event_name` evaluate inside the
   *    fetch, everything else stays a residual Spark filter;
   *  - `SupportsPushDownAggregates` for group-by-only aggregations (a
-  *    `distinct` id list): each chunk returns its distinct keys.
+  *    `distinct` id list): each chunk returns its distinct keys, and a key
+  *    with `record_id` needs no aggregate above the scan.
   *
   * The schema is fixed ([[EavSource.schema]]); a user-specified read schema
   * is refused at `load()`, and the source has no write path.
@@ -96,7 +97,9 @@ object EavSource {
   }
 
   /** The id universe cut into `chunkSize`-id partitions (≙ the reference's
-    * 100-ids-per-request loop). */
+    * 100-ids-per-request loop). The universe is distinct
+    * ([[EavTransport.recordIds]]), so each id lands in exactly one chunk,
+    * which a complete aggregate push relies on. */
   private[sources] def chunks(ids: Seq[String], chunkSize: Int): Array[InputPartition] =
     ids.grouped(chunkSize).map(g => EavChunk(g.toArray): InputPartition).toArray
 
@@ -162,21 +165,30 @@ class EavScanBuilder(transport: EavTransport, chunkSize: Int,
 
   /** ≙ a server-side distinct in the extraction request: a group-by-only
     * aggregation (a distinct id list) on source columns makes each chunk
-    * return its distinct keys instead of its raw rows. PARTIAL push —
-    * `supportCompletePushDown` stays false because chunks dedupe
-    * independently, so Spark keeps the cross-chunk aggregate on top.
-    * Aggregate functions decline, and so do residual filters, which can't
-    * run above a pre-aggregated fetch. */
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    if (hadResidual || agg.aggregateExpressions.nonEmpty) return false
+    * return its distinct keys instead of its raw rows. Aggregate functions
+    * decline, and so do residual filters, which can't run above a
+    * pre-aggregated fetch. */
+  override def pushAggregation(agg: Aggregation): Boolean =
+    groupColumns(agg).exists { gb => groupBy = Some(gb); true }
+
+  /** COMPLETE push when the keys include `record_id`: the chunks partition
+    * the id universe, so a key never occurs in two chunks and the chunks'
+    * distinct keys are already the distinct — Spark drops its aggregate.
+    * Other keys (`[redcap_event_name, field_name]`) repeat across chunks,
+    * so Spark keeps the cross-chunk aggregate on top. */
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
+    groupColumns(agg).exists(_.contains(EavSource.schema.fieldIndex("record_id")))
+
+  /** The group-by columns' positions, when the aggregation can be pushed. */
+  private def groupColumns(agg: Aggregation): Option[Array[Int]] = {
+    if (hadResidual || agg.aggregateExpressions.nonEmpty) return None
     val gb = agg.groupByExpressions.toSeq.map {
       case r: NamedReference if r.fieldNames.length == 1 &&
           EavSource.schema.fieldNames.contains(r.fieldNames.head) =>
         Some(EavSource.schema.fieldIndex(r.fieldNames.head))
       case _ => None
     }
-    if (gb.exists(_.isEmpty)) false
-    else { groupBy = Some(gb.flatten.toArray); true }
+    if (gb.exists(_.isEmpty)) None else Some(gb.flatten.toArray)
   }
 
   override def build(): Scan = groupBy match {

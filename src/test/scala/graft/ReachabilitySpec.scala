@@ -19,6 +19,7 @@ class ReachabilitySpec extends AnyFunSuite {
     // roots: called from outside the scanned sources
     "SparkEntry.entry" -> "the flagship entry point the driver calls by name",
     "Bridge.registerExtensionFunctions" -> "applies GraftExtensions' SQL functions to a live session",
+    "FieldMap.compiled" -> "implicit DataFrame => Rules conversion scalac inserts (q32, q33, q36)",
     // SURVEY.md S-rows the reference implements
     "Sinks.ndjson" -> "S-row: NDJSON file sink",
     "Sinks.keyedJson" -> "S-row: keyed JSON sink",

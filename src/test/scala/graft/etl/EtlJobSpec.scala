@@ -149,13 +149,16 @@ class EtlJobSpec extends SparkSpec {
     val cfg = EtlJobSpec.floorConfig(dir)
     assert(jobsOf(FieldMap.load(spark, fieldMapCsv)) == 0)
     assert(jobsOf(FieldMap.rules(spark, fieldMapCsv)) == 0)
+    assert(jobsOf(FieldMap.table(spark, fieldMapCsv)) == 0)
     EtlJob.run(spark, cfg) // warm: first-use jobs stay out of the count
-    // 17 when each load ran a header-inference job; 14 when the date shift
-    // and the PHI filter each joined the field map (a dedup shuffle and a
-    // broadcast apiece)
-    assert(jobsOf(EtlJob.run(spark, cfg)) == 10)
+    // 3: the dob collect and the two envelope writes. 10 when the dob
+    // shift table, the calc-variable table and the secondary-id map were
+    // joins (a shuffle, then a broadcast or a shuffle each) and the id
+    // lists kept a final aggregate; 14 when the date shift and the PHI
+    // filter each joined the field map too
+    assert(jobsOf(EtlJob.run(spark, cfg)) == 3)
     // each of the two one-id chunks is extracted four times: for the dob
-    // shift table and the shifted plane (data stream), and for the
+    // collect and the shifted plane (data stream), and for the
     // calc-variable and secondary-id id lists (transform stream)
     val fetches = graft.sources.EavSource.chunkFetches.get
     EtlJob.run(spark, cfg)
@@ -171,25 +174,34 @@ class EtlJobSpec extends SparkSpec {
     assert(graft.sources.EavSource.idRequests.get - before == 1)
   }
 
-  test("the pipeline's graft-eav scans: a record_id distinct pushed into the " +
-      "scan, the np_dob filter pushed, and every plain scan read columnar") {
-    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+  /** The executed plans of one `EtlJob.run` on the job-floor fixture, with
+    * the name of the action that ran each (`command` for a write). */
+  private def runPlans(): Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     val cfg = EtlJobSpec.floorConfig(dir)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (f == "command") plans.add(qe.executedPlan)
+        plans.add(f -> qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    // jobsOf drains the listener bus: an earlier run's plans are delivered
+    // before the listener is registered, and every plan of this run after
+    jobsOf(())
     spark.listenerManager.register(listener)
-    // jobsOf drains the listener bus, so every write has been seen after it
     try jobsOf(EtlJob.run(spark, cfg))
     finally spark.listenerManager.unregister(listener)
-    // AQE's final plans, stages and subqueries included
-    val walk = new AdaptiveSparkPlanHelper {}
-    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    plans.toArray(Array.empty[(String, SparkPlan)]).toSeq
+  }
+
+  // AQE's final plans, stages and subqueries included
+  private val walk = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  test("the pipeline's graft-eav scans: a record_id distinct pushed into the " +
+      "scan, the np_dob filter pushed, and every plain scan read columnar") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val all = runPlans().map(_._2)
     val scans = all.flatMap(p => walk.collectWithSubqueries(p) {
       case b: BatchScanExec if b.scan.description.startsWith("graft-eav") => b
     })
@@ -208,10 +220,52 @@ class EtlJobSpec extends SparkSpec {
       described.mkString("\n"))
   }
 
+  test("plan shape: each envelope write is one stage, with no exchange, no " +
+      "broadcast exchange and no sort aggregate; the per-participant tables " +
+      "are dictionary probes") {
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    val writes = runPlans().collect { case ("command", p) => p }
+    assert(writes.length == 2)
+    val offending = writes.flatMap(p => walk.collectWithSubqueries(p) {
+      case e @ (_: ShuffleExchangeLike | _: BroadcastExchangeLike | _: SortAggregateExec) =>
+        e.nodeName
+    })
+    assert(offending.isEmpty, writes.mkString("\n"))
+    val text = writes.flatMap(p => walk.collectWithSubqueries(p) {
+      case s => s.verboseString(Int.MaxValue)
+    }).mkString("\n")
+    for (probe <- Seq("dob_shift[1](", "calc_variables[1](", "secondary_ids[2]("))
+      assert(text.contains(probe), s"no $probe in:\n$text")
+  }
+
   test("the two envelope streams are written at once: a failing side write " +
       "throws its own error once both have ended, and leaves no job running") {
+    val out = java.nio.file.Paths.get(dir, "outfail")
+    Files.createDirectories(out)
+    // the transform stream's output path cannot be made (a link into a
+    // regular file), so its write fails while the data stream runs
+    Files.writeString(out.resolve("blocker"), "")
+    Files.createSymbolicLink(out.resolve("transform_envelopes"), out.resolve("blocker/none"))
+    val cfg = IniConfig.parse(
+      s"""[default]
+         |field_map_file = $fieldMapCsv
+         |out_dir = $out
+         |[dcc_transforms]
+         |secondary_id_file = ${write("secondary-fail.csv", "redcap_record_id,secondary_id\nr1,S-1\n")}
+         |[redcap]
+         |eav_source = $eavCsv
+         |""".stripMargin)
+    val e = intercept[Exception](EtlJob.run(spark, cfg))
+    assert(e.getMessage.contains("transform_envelopes"), e.getMessage)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(Files.exists(out.resolve("envelopes/_SUCCESS")))
+  }
+
+  test("a malformed control table fails the run on the driver, naming its " +
+      "file, before any job") {
     val bad = write("deid-malformed.csv", "study_id,exp_age_decade\nr1,3,extra\n")
-    val out = s"$dir/outfail"
+    val out = s"$dir/outmalformed"
     val cfg = IniConfig.parse(
       s"""[default]
          |field_map_file = $fieldMapCsv
@@ -221,12 +275,10 @@ class EtlJobSpec extends SparkSpec {
          |[redcap]
          |eav_source = $eavCsv
          |""".stripMargin)
-    val e = intercept[Exception](EtlJob.run(spark, cfg))
-    // the deid table is read by the transform stream only
+    var e: Exception = null
+    assert(jobsOf { e = intercept[Exception](EtlJob.run(spark, cfg)) } == 0)
     assert(e.getMessage.contains("deid-malformed.csv"), e.getMessage)
-    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
-    assert(Files.exists(java.nio.file.Paths.get(s"$out/envelopes/_SUCCESS")))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$out/transform_envelopes/_SUCCESS")))
+    assert(!Files.exists(java.nio.file.Paths.get(out)))
   }
 
   test("concurrently: the side thread's jobs run under the caller's job group; " +

@@ -116,6 +116,56 @@ class PipelineSpec extends SparkSpec {
     assert(none.transformMetadata.isEmpty)
   }
 
+  test("enrichment control tables: a duplicated id keeps its first row in " +
+      "file order, and a null id matches nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("enrich").toString
+    def write(name: String, content: String) = EtlJobSpec.write(dir, name, content)
+    val cfg = graft.sources.IniConfig.parse(
+      s"""[dcc_transforms]
+         |deid_data_file = ${write("deid.csv",
+        """study_id,exp_age_decade,exp_race
+          |r1,3,White
+          |r2,5,
+          |r1,9,Asian
+          |,7,Black
+          |""".stripMargin)}
+         |secondary_id_file = ${write("secondary.csv",
+        """redcap_record_id,secondary_id
+          |r1,S-001
+          |,S-NULL
+          |r1,S-999
+          |r2,
+          |""".stripMargin)}
+         |""".stripMargin)
+    val ids = Seq("r1", "r2", "r3", null).map(Tuple1(_)).toDF("record_id")
+    val plane = ids.selectExpr("record_id", "'' AS redcap_event_name",
+      "'' AS redcap_repeat_instrument", "'' AS redcap_repeat_instance",
+      "'age' AS field_name", "'1' AS value",
+      "CAST(NULL AS BOOLEAN) AS kpmp_date_cleaned",
+      "CAST(NULL AS STRING) AS kpmp_date_cleaned_type")
+    val expected = Set[(String, String, String, String)](
+      ("r1", "CalcVars", "exp_age_decade", "3"), ("r1", "CalcVars", "exp_race", "White"),
+      ("r2", "CalcVars", "exp_age_decade", "5"), ("r2", "CalcVars", "exp_race", ""),
+      ("r1", "SecondaryID", "secondary_id", "S-001"),
+      ("r2", "SecondaryID", "secondary_id", null),
+      ("r3", "SecondaryID", "secondary_id", null),
+      // every extracted id gets a secondary-id row, a null one included
+      (null, "SecondaryID", "secondary_id", null))
+    def records(ts: Seq[EtlTransform]) = Pipeline.run(plane, fieldMap, ts)
+      .transformRecords.get.as[(String, String, String, String)].collect()
+    // the config path (control tables read from their files)
+    val fromFiles = records(EtlJob.transformsFromConfig(spark, cfg, fieldMap))
+    assert(fromFiles.length == expected.size && fromFiles.toSet == expected)
+    // frames a caller passes, in one partition so file order is row order
+    val deidFrame = Seq(("r1", 3, "White"), ("r2", 5, null), ("r1", 9, "Asian"),
+      (null, 7, "Black")).toDF("study_id", "exp_age_decade", "exp_race").coalesce(1)
+    val mappingFrame = Seq(("r1", "S-001"), (null, "S-NULL"), ("r1", "S-999"),
+      ("r2", null)).toDF("redcap_record_id", "secondary_id").coalesce(1)
+    val fromFrames = records(Seq(new CalcVariableTransform(deidFrame),
+      new SecondaryIdTransform(mappingFrame)))
+    assert(fromFrames.length == expected.size && fromFrames.toSet == expected)
+  }
+
   test("envelope sink: chunking + header document") {
     val result = Pipeline.run(eav, fieldMap, Seq(
       new DateShiftTransform(fieldMap, "dob_shifting", standardDate = "2010-01-01")))

@@ -12,16 +12,17 @@ import org.apache.spark.sql.execution.FormattedMode
   * the formatted physical plan with expression ids, RDD ids, lambda names,
   * object hash codes and source line numbers stripped, then the number of
   * Spark jobs run while the query is built and while its rows are
-  * collected. Two checkouts' dumps diff cleanly unless a plan or a job
-  * count changed. `q244_loop` names q244 forced onto the distributed
-  * label-propagation loop (the registered q244 takes the driver tier on
-  * small graphs).
+  * collected. Codegen and query-stage ids are blanked too: AQE numbers
+  * independent stages in the order they finish. Two checkouts' dumps
+  * diff cleanly unless a plan or a job count changed. `q244_loop` names
+  * q244 forced onto the distributed label-propagation loop (the
+  * registered q244 takes the driver tier on small graphs).
   *
   * `etl_run` names `EtlJob.run` on EtlJobSpec's job-floor fixture (its own
-  * files, whatever `sfDir` is): the normalized plan of every write the run
-  * executes, caught by a `QueryExecutionListener` and sorted (the two
-  * envelope streams finish in either order), then the run's job and
-  * EAV chunk-fetch counts.
+  * files, whatever `sfDir` is): the normalized plan of every query the run
+  * executes (the dob collect and the two envelope writes), caught by a
+  * `QueryExecutionListener` and sorted (the two envelope streams finish in
+  * either order), then the run's job and EAV chunk-fetch counts.
   *
   * With no query named it prints the scan inventory instead: one
   * `MULTI <query> <table>=<n>,…` line per query that scans a parquet
@@ -41,6 +42,10 @@ object PlanDump {
     .replaceAll("\\.scala:\\d+", ".scala")          // source line numbers
     .replaceAll("plan_id=\\d+", "plan_id=")
     .replaceAll("@[0-9a-f]{4,8}\\b", "@")          // object hash codes
+    // whole-stage codegen and AQE query-stage ids follow the order in
+    // which AQE materializes independent stages, which races run to run
+    .replaceAll("\\[codegen id : \\d+\\]", "[codegen id : ]")
+    .replaceAll("(QueryStage\\nOutput [^\\n]*\\nArguments: )\\d+", "$1")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -75,22 +80,23 @@ object PlanDump {
     import org.apache.spark.sql.execution.QueryExecution
     val dir = java.nio.file.Files.createTempDirectory("plandump-etl").toString
     val cfg = graft.etl.EtlJobSpec.floorConfig(dir)
-    graft.etl.EtlJob.run(spark, cfg) // warm: first-use jobs stay out of the count
-    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    // warm: first-use jobs stay out of the count; jobsIn also drains the
+    // listener bus, so none of the warm run's plans reaches the listener
+    graft.SparkSpec.jobsIn(spark)(graft.etl.EtlJob.run(spark, cfg))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (f == "command")
-          writes.add(normalize(qe.explainString(FormattedMode)).replace(dir, "<fixture>").trim)
+        plans.add(normalize(qe.explainString(FormattedMode)).replace(dir, "<fixture>").trim)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     val fetch0 = graft.sources.EavSource.chunkFetches.get
-    // jobsIn drains the listener bus, so every write has been seen after it
+    // jobsIn drains the listener bus, so every plan has been seen after it
     val jobs = try graft.SparkSpec.jobsIn(spark)(graft.etl.EtlJob.run(spark, cfg))
       finally spark.listenerManager.unregister(listener)
     val fetches = graft.sources.EavSource.chunkFetches.get - fetch0
     println("==== etl_run")
-    writes.toArray(Array.empty[String]).sorted.foreach(println)
+    plans.toArray(Array.empty[String]).sorted.foreach(println)
     println(s"jobs run=$jobs chunk_fetches=$fetches")
   }
 

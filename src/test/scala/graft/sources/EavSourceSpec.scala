@@ -133,6 +133,71 @@ class EavSourceSpec extends SparkSpec {
       Seq(("screening_arm_1", "age")))
   }
 
+  test("complete aggregate push: a key with record_id is answered by the " +
+      "scan alone, a key without it keeps Spark's final aggregate") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // AQE's plan, descended into (an adaptive root hides its children)
+    def aggregatesAndExchanges(df: org.apache.spark.sql.DataFrame) =
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case a: BaseAggregateExec => a.nodeName
+        case e: Exchange => e.nodeName
+      }
+    val csv = spark.read.option("header", true).csv(fixture).na.fill("")
+    for (key <- Seq(Seq("record_id"), Seq("record_id", "field_name"))) {
+      val df = read.load().select(key.head, key.tail: _*).distinct()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains(s"PushedAggregation: [] GroupBy: [${key.mkString(", ")}]"), plan)
+      assert(aggregatesAndExchanges(df).isEmpty, plan)
+      val exp = csv.select(key.head, key.tail: _*).distinct().collect().map(_.toSeq)
+      val got = df.collect().map(_.toSeq)
+      assert(got.length == exp.length && got.toSet == exp.toSet && exp.length >= 250)
+    }
+    // [redcap_event_name, field_name] repeats across chunks: partial push
+    val partial = read.load().select("redcap_event_name", "field_name").distinct()
+    val plan = partial.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedAggregation: [] GroupBy: [redcap_event_name, field_name]"), plan)
+    assert(aggregatesAndExchanges(partial).nonEmpty, plan)
+    assert(partial.as[(String, String)].collect().sorted.toSeq == Seq(
+      ("followup_arm_1", "visit_date"), ("screening_arm_1", "age"),
+      ("screening_arm_1", "np_dob")))
+    // a residual filter declines the push, complete or partial
+    val residual = read.load().filter($"value".contains("1990")).select("record_id").distinct()
+    assert(!residual.queryExecution.executedPlan.toString.contains("PushedAggregation"))
+    assert(aggregatesAndExchanges(residual).nonEmpty)
+    assert(residual.count() == 250)
+  }
+
+  test("complete aggregate push stays exact when the transport over-returns " +
+      "other chunks' rows") {
+    val ids = (1 to 250).map(r => s"r$r")
+    val rows = ids.flatMap(r => Seq(Array(r, "screening_arm_1", "", "", "age", "1"),
+      Array(r, "followup_arm_1", "", "", "age", "2")))
+    // every fetch answers with the whole export, whatever ids it asked for;
+    // the chunk's id set keeps each id's rows in its own chunk only
+    val greedy = new EavTransport {
+      override def recordIds(): Seq[String] = ids
+      override def fetchChunk(recordIds: Array[String],
+          filters: Array[org.apache.spark.sql.sources.Filter]): Seq[Array[String]] = rows
+      override def sizeHintBytes(): Long = 1L
+    }
+    val builder = new EavScanBuilder(greedy, 100, () => greedy.recordIds())
+    import org.apache.spark.sql.connector.expressions.{Expression, Expressions}
+    import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation}
+    val agg = new Aggregation(Array.empty[AggregateFunc],
+      Array[Expression](Expressions.column("record_id")))
+    assert(builder.supportCompletePushDown(agg) && builder.pushAggregation(agg))
+    val scan = builder.build().toBatch
+    val factory = scan.createReaderFactory()
+    val got = scan.planInputPartitions().toSeq.flatMap { p =>
+      val reader = factory.createReader(p)
+      Iterator.continually(reader).takeWhile(_.next())
+        .map(_.get().getUTF8String(0).toString).toList
+    }
+    assert(got.length == 250 && got.toSet == ids.toSet)
+  }
+
   test("aggregate pushdown declines: distinct counts and residual filters") {
     val distinctAgg = read.load().groupBy($"field_name")
       .agg(countDistinct($"record_id").as("n"))

@@ -18,6 +18,13 @@ import graft.sources.IniConfig
   * at once; the POST path ([[EtlMain]]: header, then data, then transform chunks),
   * `writeout` and `pubDebug` stay in order.
   *
+  * The `--fake` layout under the local directory `out_dir`: `envelopes/`
+  * and `transform_envelopes/` (one envelope document per line in
+  * `part-<partition>-<attempt>.txt` files, plus `_SUCCESS`) and
+  * `header.json`. [[Sinks.writeText]] commits each stream directory on the
+  * driver once all of its tasks have succeeded, so a failed stream leaves
+  * its previous directory in place.
+  *
   * A reference user keeps their INI sections (`default`, `dcc_transforms`,
   * `redcap`, `datalake`) and swaps the runtime.
   */
@@ -77,14 +84,15 @@ object EtlJob {
   }
 
   /** Full run. `fake=true` (the reference's `--fake`) writes envelopes as
-    * NDJSON under `out_dir` instead of POSTing; `pubDebug=true` (the
+    * NDJSON under `out_dir` instead of POSTing (`out_dir` is a local path:
+    * one with a URI scheme fails before any job); `pubDebug=true` (the
     * reference's `--pub-debug`, redcap-etl.py:28,382-397,421-422) also
     * writes the transform records pivoted wide (record × field) as a
     * single human-inspectable CSV `debug-public` under `out_dir`;
     * `writeout=Some(path)` (the reference's `-w/--writeout`,
     * redcap-etl.py:29,216-221,261-262) additionally streams every
     * transmitted chunk document — header first, then data, then
-    * per-transform — into ONE NDJSON file at `path`. */
+    * per-transform — into ONE NDJSON file in the local directory `path`. */
   def run(spark: SparkSession, config: IniConfig,
       projectInfo: Map[String, String] = Map.empty,
       fake: Boolean = true,
@@ -94,6 +102,11 @@ object EtlJob {
     config.get("redcap", "project_id").foreach { expected =>
       if (projectInfo.nonEmpty) Preconditions.validateProject(expected, projectInfo)
     }
+    // the local outputs are written with java.nio: a URI fails here, not
+    // after the envelope writes
+    val outDir = config.resolved("default", "out_dir").filter(_ => fake)
+      .map(Sinks.localPath(_, "[default] out_dir"))
+    val writeoutDir = writeout.map(Sinks.localPath(_, "writeout"))
     val fieldMapPath = config.resolved("default", "field_map_file")
       .getOrElse(throw new IllegalArgumentException("config: field_map_file required"))
     val fieldMap = FieldMap.rules(spark, fieldMapPath)
@@ -128,17 +141,16 @@ object EtlJob {
           .join(result.uniqueFields, Seq("field_name"), "left_semi")
       }
     val header = Sinks.headerDocument(result.transformMetadata, filteredMetadata)
-    if (fake) {
-      config.resolved("default", "out_dir").foreach { out =>
-        // raw envelope documents, one per line (the reference's write_out
-        // emits the chunk JSON verbatim — a json() write would re-wrap it);
-        // neither stream reads the other, so both are written at once
-        concurrently(
-          envelopes.write.mode("overwrite").text(s"$out/envelopes"),
-          recordEnvelopes.foreach(_.write.mode("overwrite").text(s"$out/transform_envelopes")))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/header.json"), header)
-      }
+    import spark.implicits._
+    outDir.foreach { out =>
+      // raw envelope documents, one per line (the reference's write_out
+      // emits the chunk JSON verbatim — a json() write would re-wrap it);
+      // neither stream reads the other, so both are written at once
+      concurrently(
+        Sinks.writeText(envelopes.as[String], out.resolve("envelopes")),
+        recordEnvelopes.foreach(e =>
+          Sinks.writeText(e.as[String], out.resolve("transform_envelopes"))))
+      java.nio.file.Files.writeString(out.resolve("header.json"), header)
     }
     if (pubDebug) {
       for {
@@ -146,8 +158,7 @@ object EtlJob {
         records <- result.transformRecords
       } Sinks.csvSingle(Reshape.pivotEav(records), s"$out/debug-public")
     }
-    writeout.foreach { path =>
-      import spark.implicits._
+    writeoutDir.foreach { path =>
       import org.apache.spark.sql.functions.{col, lit}
       // one file, reference append order: header doc, data chunks,
       // transform chunks (a debug sink — coalesce(1) is the point)
@@ -155,8 +166,7 @@ object EtlJob {
         df.select(lit(o).as("o"), col(df.columns.head).as("value"))
       val all = (tag(Seq(header).toDF("value"), 0) +: tag(envelopes, 1) +:
         recordEnvelopes.map(tag(_, 2)).toSeq).reduce(_ unionByName _)
-      all.coalesce(1).sortWithinPartitions("o").select("value")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).text(path)
+      Sinks.writeText(all.coalesce(1).sortWithinPartitions("o").select("value").as[String], path)
     }
     Output(result, envelopes, recordEnvelopes, header)
   }

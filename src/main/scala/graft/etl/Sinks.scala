@@ -1,7 +1,14 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, LinkOption, Path, Paths, StandardOpenOption}
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Sinks (SURVEY.md S11-S15).
   *
@@ -13,12 +20,117 @@ import org.apache.spark.sql.functions._
   * the chunk-1 "carries transforms + metadata" special case
   * (redcap-etl.py:244-248) becomes a separate header document — ordered
   * sinks don't distribute.
+  *
+  * The `--fake` path's envelope directories and `-w`'s file are written by
+  * [[writeText]]: each task writes its own partition with `java.nio`, and
+  * the driver commits the files once every task has succeeded — no Hadoop
+  * file writer, so no per-task Hadoop conf, `.crc` files or `_temporary`
+  * tree. Its outputs are local directories ([[localPath]]).
   */
 object Sinks {
 
   /** NDJSON file sink (S11; redcap-etl.py:216-221): one JSON doc per line. */
   def ndjson(df: DataFrame, path: String, mode: SaveMode = SaveMode.Append): Unit =
     df.write.mode(mode).json(path)
+
+  /** A config value naming a local output path. A value with a URI scheme
+    * (`hdfs://…`, `s3a://…`, `file:…`) is refused with an error naming
+    * `what`: [[writeText]] and the header write go through `java.nio`. */
+  private[etl] def localPath(value: String, what: String): Path = {
+    if ("^[A-Za-z][A-Za-z0-9+.-]*:".r.findPrefixOf(value).isDefined)
+      throw new IllegalArgumentException(
+        s"config: $what must be a local path, not a URI: $value")
+    Paths.get(value).toAbsolutePath
+  }
+
+  /** The name of one partition's file and the partition it holds. */
+  private[etl] final case class Part(partition: Int, file: String)
+
+  /** Writes `lines` as text into the directory `dir`, replacing it: every
+    * line as its UTF-8 bytes and `\n` (a null line as an empty one), as
+    * Spark's text writer does; one `part-<partition>-<attempt>.txt` per
+    * non-empty partition, and `_SUCCESS`.
+    *
+    * One `collect` runs it, so it is a tracked SQL execution: each task
+    * writes its partition into a hidden staging directory beside `dir` and
+    * returns its file's name. Once every task has succeeded, [[publish]]
+    * moves exactly those files into place; a failed write leaves the
+    * previous `dir` as it was and drops the staging directory. An existing
+    * `dir` must be a directory: a file or a link there is refused, not
+    * replaced. */
+  private[etl] def writeText(lines: Dataset[String], dir: Path): Unit = {
+    import lines.sparkSession.implicits._
+    if (Files.exists(dir, LinkOption.NOFOLLOW_LINKS) &&
+        !Files.isDirectory(dir, LinkOption.NOFOLLOW_LINKS))
+      throw new FileAlreadyExistsException(dir.toString, null,
+        "exists and is not a directory")
+    Files.createDirectories(dir.getParent)
+    val staging = Files.createDirectory(beside(dir, "staging"))
+    try {
+      val into = staging.toString
+      val parts = lines.mapPartitions(writePart(_, into)).collect()
+      publish(staging, parts.map(_.file).toSeq, dir)
+    } finally {
+      // best effort: a lost speculative attempt may still be writing here,
+      // and a cleanup error must not hide the write's own
+      try deleteTree(staging) catch { case NonFatal(_) => }
+    }
+  }
+
+  /** Task side of [[writeText]]: the partition's lines into a file of its
+    * own in `staging` (none for an empty partition), counted in the task's
+    * output metrics. */
+  private def writePart(lines: Iterator[String], staging: String): Iterator[Part] =
+    if (!lines.hasNext) Iterator.empty
+    else {
+      val ctx = TaskContext.get()
+      val name = f"part-${ctx.partitionId()}%05d-${ctx.taskAttemptId()}.txt"
+      val out = new java.io.BufferedOutputStream(Files.newOutputStream(
+        Paths.get(staging, name), StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE), 1 << 16)
+      var records, bytes = 0L
+      try lines.foreach { line =>
+        if (line != null) {
+          val b = line.getBytes(UTF_8)
+          out.write(b)
+          bytes += b.length
+        }
+        out.write('\n')
+        bytes += 1
+        records += 1
+      } finally out.close()
+      Bridge.setOutputMetrics(records, bytes)
+      Iterator.single(Part(ctx.partitionId(), name))
+    }
+
+  /** Driver side of [[writeText]]: moves the named `files` (and no other)
+    * out of `staging` into a fresh directory beside `dir`, writes
+    * `_SUCCESS` there, then swaps it in for `dir` and drops the previous
+    * output, which stays in place if anything up to the swap fails. */
+  private[etl] def publish(staging: Path, files: Seq[String], dir: Path): Unit = {
+    val fresh = Files.createDirectory(beside(dir, "new"))
+    try {
+      files.foreach(f => Files.move(staging.resolve(f), fresh.resolve(f)))
+      Files.createFile(fresh.resolve("_SUCCESS"))
+    } catch { case e: Throwable => deleteTree(fresh); throw e }
+    val previous = Some(beside(dir, "old")).filter(_ =>
+      Files.exists(dir, LinkOption.NOFOLLOW_LINKS))
+    previous.foreach(Files.move(dir, _))
+    try Files.move(fresh, dir) catch {
+      case e: Throwable => previous.foreach(Files.move(_, dir)); deleteTree(fresh); throw e
+    }
+    previous.foreach(deleteTree)
+  }
+
+  /** A fresh hidden name beside `dir`, which Spark's file listing skips. */
+  private def beside(dir: Path, tag: String): Path =
+    dir.resolveSibling(s".${dir.getFileName}.$tag-${java.util.UUID.randomUUID}")
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) {
+      val all = Files.walk(p)
+      try all.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+      finally all.close()
+    }
 
   /** Single-file CSV with header (S13/S14; redcap-etl.py:397). Debug /
     * control-plane outputs only — coalesce(1) serializes the write. */

@@ -4,6 +4,8 @@ import java.io.IOException
 import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets
 
+import scala.collection.immutable.HashSet
+
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 
 /** Transport seam of the `graft-eav` connector: how raw EAV CSV rows reach
@@ -55,23 +57,40 @@ object EavTransport {
     * blank lines dropped, naive comma split (the EAV plane is our own
     * writer/stub — no embedded commas/quotes). */
   private[sources] def parseCsv(body: String): Seq[Array[String]] =
-    body.linesIterator.drop(1).filter(_.nonEmpty).map(_.split(",", -1)).toList
+    dataLines(body).map(_.split(",", -1)).toList
+
+  /** The lines [[parseCsv]] splits: all but the header, blank ones dropped. */
+  private def dataLines(body: String): Iterator[String] =
+    body.linesIterator.drop(1).filter(_.nonEmpty)
+
+  /** A data line's id field, unsplit: the text before its first comma (the
+    * whole line without one), i.e. the first field [[parseCsv]] yields. */
+  private def idField(line: String): String = {
+    val comma = line.indexOf(',')
+    if (comma < 0) line else line.substring(0, comma)
+  }
+
+  /** [[parseCsv]]'s rows whose id is in `ids`, splitting only those. */
+  private[sources] def parseCsvFor(body: String, ids: Set[String]): Seq[Array[String]] =
+    dataLines(body).filter(l => ids.contains(idField(l))).map(_.split(",", -1)).toList
+
+  /** The distinct, sorted ids of [[parseCsv]]'s rows, with no split. */
+  private[sources] def csvIds(body: String): Seq[String] =
+    dataLines(body).map(idField).distinct.toSeq.sorted
 }
 
 /** Local-file transport: the zero-egress stand-in. Chunk "requests" filter
   * the file by id — the same rows a server-side `records[i]=` restriction
   * would return. */
 final case class FileEavTransport(path: String) extends EavTransport {
-  /** The whole file, decoded as UTF-8 and parsed like an HTTP body. */
-  private def rows(): Seq[Array[String]] = EavTransport.parseCsv(new String(
+  /** The whole file, decoded as UTF-8; it parses like an HTTP body. */
+  private def body(): String = new String(
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-    StandardCharsets.UTF_8))
-  override def recordIds(): Seq[String] = rows().map(_(0)).distinct.sorted
+    StandardCharsets.UTF_8)
+  override def recordIds(): Seq[String] = EavTransport.csvIds(body())
   override def fetchChunk(recordIds: Array[String],
-      filters: Array[Filter]): Seq[Array[String]] = {
-    val idSet = recordIds.toSet
-    rows().filter(r => idSet.contains(r(0)))
-  }
+      filters: Array[Filter]): Seq[Array[String]] =
+    EavTransport.parseCsvFor(body(), HashSet.from(recordIds))
   override def sizeHintBytes(): Long = new java.io.File(path).length()
 }
 

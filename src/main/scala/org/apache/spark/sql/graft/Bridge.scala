@@ -44,6 +44,14 @@ object Bridge {
   def isHiddenPath(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 
+  /** Sets the running task's written records and bytes (the setters are
+    * `private[spark]`), as Spark's file writers do. */
+  def setOutputMetrics(records: Long, bytes: Long): Unit = {
+    val m = org.apache.spark.TaskContext.get().taskMetrics().outputMetrics
+    m.setRecordsWritten(records)
+    m.setBytesWritten(bytes)
+  }
+
   /** Spark's line-mode CSV read of one whole file's `lines`
     * (`private[sql]`): header skipped, blank lines dropped, each row parsed
     * into `required`'s columns under `options`' parse mode. */

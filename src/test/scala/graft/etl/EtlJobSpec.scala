@@ -175,7 +175,7 @@ class EtlJobSpec extends SparkSpec {
   }
 
   /** The executed plans of one `EtlJob.run` on the job-floor fixture, with
-    * the name of the action that ran each (`command` for a write). */
+    * the name of the action that ran each (`collect` for all three). */
   private def runPlans(): Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     val cfg = EtlJobSpec.floorConfig(dir)
@@ -225,7 +225,10 @@ class EtlJobSpec extends SparkSpec {
       "are dictionary probes") {
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
-    val writes = runPlans().collect { case ("command", p) => p }
+    // the two stream writes: the actions that return Sinks.Part rows
+    val writes = runPlans().collect {
+      case ("collect", p) if p.schema.fieldNames.sameElements(Array("partition", "file")) => p
+    }
     assert(writes.length == 2)
     val offending = writes.flatMap(p => walk.collectWithSubqueries(p) {
       case e @ (_: ShuffleExchangeLike | _: BroadcastExchangeLike | _: SortAggregateExec) =>
@@ -243,8 +246,9 @@ class EtlJobSpec extends SparkSpec {
       "throws its own error once both have ended, and leaves no job running") {
     val out = java.nio.file.Paths.get(dir, "outfail")
     Files.createDirectories(out)
-    // the transform stream's output path cannot be made (a link into a
-    // regular file), so its write fails while the data stream runs
+    // the transform stream's output path is a link into a regular file,
+    // which the writer refuses to replace, so that write fails while the
+    // data stream runs
     Files.writeString(out.resolve("blocker"), "")
     Files.createSymbolicLink(out.resolve("transform_envelopes"), out.resolve("blocker/none"))
     val cfg = IniConfig.parse(
@@ -260,6 +264,24 @@ class EtlJobSpec extends SparkSpec {
     assert(e.getMessage.contains("transform_envelopes"), e.getMessage)
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
     assert(Files.exists(out.resolve("envelopes/_SUCCESS")))
+    assert(Files.isSymbolicLink(out.resolve("transform_envelopes")))
+  }
+
+  test("an out_dir with a URI scheme fails on the driver, naming the key, " +
+      "before any job") {
+    for (uri <- Seq("hdfs://namenode:8020/etl/out", "s3a://bucket/etl/out", s"file:$dir/outuri")) {
+      val cfg = IniConfig.parse(
+        s"""[default]
+           |field_map_file = $fieldMapCsv
+           |out_dir = $uri
+           |[redcap]
+           |eav_source = $eavCsv
+           |""".stripMargin)
+      var e: IllegalArgumentException = null
+      assert(jobsOf { e = intercept[IllegalArgumentException](EtlJob.run(spark, cfg)) } == 0, uri)
+      assert(e.getMessage.contains("[default] out_dir"), e.getMessage)
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "outuri")))
   }
 
   test("a malformed control table fails the run on the driver, naming its " +

@@ -62,6 +62,30 @@ class EavSourceSpec extends SparkSpec {
     assert(df.select("record_id").distinct().count() == 2)
   }
 
+  test("the file transport returns the rows of splitting every line, " +
+      "though it splits only the lines it returns, malformed lines included") {
+    val body = Seq(
+      "record_id,redcap_event_name,redcap_repeat_instrument,redcap_repeat_instance,field_name,value",
+      "r1,screening_arm_1,,,age,41",
+      "r1", // no comma: the whole line is the id
+      ",screening_arm_1,,,age,9", // empty id
+      "r2,screening_arm_1,,,city,Zürich,extra,,", // too many fields
+      "r2,short",
+      "",
+      "r10,screening_arm_1,,,age,3\r",
+      "r3,screening_arm_1,,,food,🍕",
+      "r3,,,,,").mkString("\n")
+    val f = Files.createTempFile("eavmalformed", ".csv")
+    Files.write(f, body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val transport = FileEavTransport(f.toString)
+    val all = EavTransport.parseCsv(body)
+    assert(transport.recordIds() == all.map(_(0)).distinct.sorted)
+    for (ids <- Seq(Array("r1"), Array("", "r2"), Array("r1", "r10", "r3", "r9"), Array.empty[String])) {
+      val got = transport.fetchChunk(ids, Array.empty).map(_.toSeq)
+      assert(got == all.filter(r => ids.contains(r(0))).map(_.toSeq), ids.mkString(","))
+    }
+  }
+
   test("filter pushdown: field_name equality lands in PushedFilters") {
     val df = read.load().filter($"field_name" === "age")
     val plan = df.queryExecution.executedPlan.toString

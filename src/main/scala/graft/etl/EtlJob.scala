@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.sources.IniConfig
 
 /** Config-driven pipeline entry point — the reference's `main()` lifecycle
@@ -147,9 +147,9 @@ object EtlJob {
       // emits the chunk JSON verbatim — a json() write would re-wrap it);
       // neither stream reads the other, so both are written at once
       concurrently(
-        Sinks.writeText(envelopes.as[String], out.resolve("envelopes")),
+        Sinks.writeText(envelopes, out.resolve("envelopes")),
         recordEnvelopes.foreach(e =>
-          Sinks.writeText(e.as[String], out.resolve("transform_envelopes"))))
+          Sinks.writeText(e, out.resolve("transform_envelopes"))))
       java.nio.file.Files.writeString(out.resolve("header.json"), header)
     }
     if (pubDebug) {
@@ -162,13 +162,14 @@ object EtlJob {
       import org.apache.spark.sql.functions.{col, lit}
       // one file, reference append order: header doc, data chunks,
       // transform chunks (a debug sink — coalesce(1) is the point)
-      val tag = (df: DataFrame, o: Int) =>
+      val tag = (df: Dataset[_], o: Int) =>
         df.select(lit(o).as("o"), col(df.columns.head).as("value"))
       val all = (tag(Seq(header).toDF("value"), 0) +: tag(envelopes, 1) +:
         recordEnvelopes.map(tag(_, 2)).toSeq).reduce(_ unionByName _)
       Sinks.writeText(all.coalesce(1).sortWithinPartitions("o").select("value").as[String], path)
     }
-    Output(result, envelopes, recordEnvelopes, header)
+    Output(result, envelopes.toDF("envelope"),
+      recordEnvelopes.map(_.toDF("envelope")), header)
   }
 
   /** Runs `main` on this thread while a thread started here runs `side`;

@@ -173,9 +173,12 @@ object Sinks {
     * CONTRACT DIVERGENCE from the reference: chunk numbers are unique and
     * ascending-per-partition but NOT contiguous (the reference's 1,2,3,…
     * requires a global sequence — a serialization point). Receivers that
-    * validate contiguity should use [[envelopesSequential]]. */
+    * validate contiguity should use [[envelopesSequential]].
+    *
+    * A `Dataset[String]`, so [[writeText]] reads the strings the chunking
+    * task made without decoding and re-encoding them. */
   def envelopes(df: DataFrame, chunkRows: Int = 50000,
-      meta: Seq[(String, Option[String])] = Nil): DataFrame = {
+      meta: Seq[(String, Option[String])] = Nil): Dataset[String] = {
     val spark = df.sparkSession
     import spark.implicits._
     val extra = metaFields(meta)
@@ -187,7 +190,7 @@ object Sinks {
         chunk.mkString(
           s"""{"chunk_number":$id$extra,"redcap_records":[""", ",", "]}")
       }
-    }.toDF("envelope")
+    }
   }
 
   /** Reference-parity envelopes: contiguous chunk_number 1,2,3,… like

@@ -1558,13 +1558,16 @@ object EntityQueries {
   // catalog segmentation. The oracle unrolls the three rounds; its
   // window argmax (count DESC, label ASC) is exactly the operator's
   // min over the packed (−count, label) ArgmaxPack atom, and exactly the
-  // driver tier's argmax when the graph is small enough to take it.
+  // driver tier's argmax when the graph is small enough to take it. The
+  // graph is read from its (order, part) rows, so a small one is built on
+  // the driver straight from lineitem.
   private def q244(s: SparkSession, d: String): DataFrame =
-    Graph.labelPropagation(q244Edges(s, d), rounds = 3, symmetric = true)
+    Graph.coOccurrenceLabels(Tables.lineitem(s, d), "l_orderkey", "l_partkey", 3)
       .orderBy(col("node"))
 
   /** q244's co-purchase edge frame: both directions of every part pair
-    * sharing an order. */
+    * sharing an order (the distributed path of q244's
+    * [[Graph.coOccurrenceLabels]]). */
   private[operators] def q244Edges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sets = Tables.lineitem(s, d).groupBy($"l_orderkey")

@@ -1089,16 +1089,18 @@ object Graph {
     * checkpoint barrier with it. Kept apart from [[moveRounds]]: a plain
     * count argmax with no community totals or modularity score.
     *
-    * Small-graph tier: when the ids are `long`/`int` and the edge frame
-    * has at most [[LocalMaxEdges]] non-null (src, dst) rows, the rows are
-    * collected once ([[localPairs]]) and the graph is built and every
-    * round run on the driver ([[localLabels]]) with the same synchronous
-    * semantics, the same argmax order and the same
-    * `graft.graph.maxDegree` error; the result is a local frame with the
-    * loop's schema and rows. The tier reads `edges` twice (a row count,
-    * then the collect), so pass a barriered frame — [[undirectedEdges]]
-    * output is one. A larger graph pays the row count and runs the
-    * distributed loop; other id types go to the loop directly.
+    * Small-graph tier: when the ids are `long`/`int`, the edge frame is
+    * deterministic and it has at most [[LocalMaxEdges]] non-null
+    * (src, dst) rows, the rows are collected once ([[localPairs]]) and the
+    * graph is built and every round run on the driver ([[localLabels]])
+    * with the same synchronous semantics, the same argmax order and the
+    * same `graft.graph.maxDegree` error; the result is a local frame with
+    * the loop's schema and rows. The tier reads `edges` twice (a row
+    * count, then the collect), so pass a barriered frame —
+    * [[undirectedEdges]] output is one. A larger graph pays the row count
+    * and runs the distributed loop; other id types and a nondeterministic
+    * frame go to the loop directly. A co-occurrence graph is cheaper
+    * through [[coOccurrenceLabels]], which takes its membership rows.
     *
     * @param edges (src, dst) rows; pass both directions for undirected
     * @param symmetric caller-asserted mirrored edge set: the node set is
@@ -1113,7 +1115,8 @@ object Graph {
   /** Edges up to which a graph kernel collects its input and solves on
     * the driver instead of running distributed rounds, 2²⁰: non-null edge
     * rows in [[labelPropagation]], undirected pairs in
-    * [[Dedup.connectedComponents]]. */
+    * [[Dedup.connectedComponents]], membership rows and mirrored pairs in
+    * [[coOccurrenceLabels]]. */
   private[ops] val LocalMaxEdges = 1L << 20
 
   /** The non-null (a, b) rows of a `long`/`int`-id edge frame when there
@@ -1121,9 +1124,12 @@ object Graph {
     * holding a₀, b₀, a₁, b₁, …; None above `max`. Two narrow jobs: the
     * row count (per-partition counts added on the driver — a global count
     * would cost a map stage and a result job), then the collect, so
-    * `edges` is read twice. */
+    * `edges` is read twice. A nondeterministic frame could give the
+    * collect other rows than the count saw, so it gets None without a
+    * job; a checkpointed frame is deterministic. */
   private[ops] def localPairs(edges: DataFrame, a: String, b: String,
       max: Long): Option[Array[Array[Long]]] = {
+    if (!edges.queryExecution.analyzed.deterministic) return None
     import edges.sparkSession.implicits._
     val pairs = edges.filter(col(a).isNotNull && col(b).isNotNull)
       .select(col(a).cast("long"), col(b).cast("long")).as[(Long, Long)]
@@ -1173,14 +1179,169 @@ object Graph {
     lab
   }
 
+  /** [[labelPropagation]] over the co-occurrence graph of a membership
+    * frame: defined as, and giving the same rows and schema as,
+    * `labelPropagation(undirectedEdges(members.groupBy(group)
+    * .agg(collect_set(member).as("ps")), "ps"), rounds, symmetric = true)`.
+    * Two members are neighbors when some group holds both; a null member
+    * is in no group, and the null group is one group.
+    *
+    * Small-graph tier, one step upstream of [[labelPropagation]]'s: when
+    * [[localCoOccurrence]] builds the mirrored pairs on the driver (both
+    * columns `long`/`int`, a deterministic frame, at most
+    * [[LocalMaxEdges]] membership rows and mirrored pairs), they go
+    * straight to the driver rounds ([[localLabels]]): two narrow jobs, no
+    * shuffle, no checkpoint. Otherwise it runs exactly that distributed
+    * expression, edge tier included; a graph refused by the sizing job
+    * pays that one job on top.
+    *
+    * @param members (group, member) rows, any duplication
+    * @return (node, label) after `rounds` steps, node typed as `member`
+    */
+  def coOccurrenceLabels(members: DataFrame, group: String, member: String,
+      rounds: Int): DataFrame =
+    coOccurrenceLabels(members, group, member, rounds, LocalMaxEdges)
+
+  /** [[coOccurrenceLabels]] with the tier threshold explicit — specs force
+    * the distributed loop, past both tiers, with `localMax = 0`. */
+  private[ops] def coOccurrenceLabels(members: DataFrame, group: String,
+      member: String, rounds: Int, localMax: Long): DataFrame = {
+    require(rounds >= 1, "labelPropagation needs at least one round")
+    val local = if (localMax > 0)
+      localCoOccurrence(members, group, member, localMax) else None
+    local match {
+      case Some(pairs) => localLabels(members.sparkSession, pairs,
+        members.select(col(member)).schema.head.dataType, rounds, symmetric = true)
+      case None => labelPropagation(undirectedEdges(members.groupBy(col(group))
+        .agg(collect_set(col(member)).as("ps")), "ps"), rounds, symmetric = true,
+        localMax)
+    }
+  }
+
+  /** The mirrored co-occurrence pairs of a membership frame — both
+    * directions of every pair of distinct members sharing a group, packed
+    * as [[localPairs]] packs its rows — when both columns are
+    * `long`/`int`, the frame is deterministic, and it has at most `max`
+    * non-null-member rows and at most `max` mirrored pairs,
+    * Σ k(k − 1) over the groups with k a group's distinct members; None
+    * otherwise. Two narrow jobs read `members`: a sizing job, whose tasks
+    * stop reading past `max` rows and add up Σ k(k − 1) over their own
+    * rows (a lower bound of the true Σ, since a group's rows may span
+    * partitions), then the collect of the rows. The driver groups them
+    * ([[MemberSets]]), checks the exact Σ and emits the pairs. */
+  private[ops] def localCoOccurrence(members: DataFrame, group: String,
+      member: String, max: Long): Option[Array[Array[Long]]] = {
+    val types = members.select(col(group), col(member)).schema.map(_.dataType)
+    if (!types.forall(t => t == LongType || t == IntegerType) ||
+        !members.queryExecution.analyzed.deterministic) return None
+    import members.sparkSession.implicits._
+    val bound = math.min(max, Int.MaxValue / 2) // the pairs fill one array
+    val rows = members.filter(col(member).isNotNull)
+      .select(col(group).isNull, coalesce(col(group).cast("long"), lit(0L)),
+        col(member).cast("long"))
+      .as[(Boolean, Long, Long)]
+    val sized = rows.mapPartitions { it =>
+      val sets = new MemberSets
+      while (it.hasNext && sets.rows <= bound) {
+        val (nullGroup, g, m) = it.next()
+        sets.add(nullGroup, g, m)
+      }
+      Iterator.single((sets.rows.toLong, if (sets.rows > bound) 0L else sets.pairs))
+    }.collect()
+    if (sized.map(_._1).sum > bound || sized.map(_._2).sum > bound) return None
+    val sets = new MemberSets
+    rows.mapPartitions { it =>
+      val packed, nulls = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { case (nullGroup, g, m) =>
+        if (nullGroup) nulls += m else { packed += g; packed += m }
+      }
+      Iterator.single((packed.result(), nulls.result()))
+    }.collect().foreach { case (packed, nulls) =>
+      for (i <- 0 until packed.length by 2) sets.add(false, packed(i), packed(i + 1))
+      nulls.foreach(sets.add(true, 0L, _))
+    }
+    if (sets.pairs > bound) None else Some(Array(sets.mirrored))
+  }
+
+  /** (group, member) rows gathered on primitive arrays for
+    * [[localCoOccurrence]]: groups and members get dense indices
+    * ([[DenseIds]]), the null-group rows form one group of their own, as
+    * `groupBy` makes them, and each group keeps its distinct members, as
+    * `collect_set` does ([[keyedSets]]). */
+  private final class MemberSets {
+    private val groups = new DenseIds
+    private val members = new DenseIds
+    private val grp = new scala.collection.mutable.ArrayBuilder.ofInt
+    private val mem = new scala.collection.mutable.ArrayBuilder.ofInt
+    var rows = 0
+
+    def add(nullGroup: Boolean, group: Long, member: Long): Unit = {
+      grp += (if (nullGroup) -1 else groups(group))
+      mem += members(member)
+      rows += 1
+    }
+
+    // group i's distinct member indices: sets(off(i) until off(i + 1))
+    private lazy val (off, sets) = {
+      val g = grp.result()
+      val nullGroup = groups.size
+      for (k <- g.indices if g(k) < 0) g(k) = nullGroup
+      keyedSets(g, mem.result(), nullGroup + 1)
+    }
+
+    /** The mirrored pair count, Σ k(k − 1) over the groups. */
+    lazy val pairs: Long = (0 until off.length - 1).iterator.map { i =>
+      val k = (off(i + 1) - off(i)).toLong
+      k * (k - 1)
+    }.sum
+
+    /** Both directions of every pair of distinct members sharing a group,
+      * packed a₀, b₀, a₁, b₁, …. */
+    def mirrored: Array[Long] = {
+      val ids = members.ids
+      val out = new Array[Long](2 * pairs.toInt)
+      var w = 0
+      for (i <- 0 until off.length - 1; a <- off(i) until off(i + 1);
+          b <- off(i) until off(i + 1) if a != b) {
+        out(w) = ids(sets(a)); out(w + 1) = ids(sets(b)); w += 2
+      }
+      out
+    }
+  }
+
+  /** Each key's distinct values, ascending, as a CSR pair (off, vals):
+    * key i's values are `vals(off(i) until off(i + 1))`. A counting sort
+    * buckets the rows by key, then each bucket is sorted and deduplicated
+    * in place, as `collect_set` keeps a set. Row e is (keys(e), vals(e)),
+    * each key in [0, n). */
+  private def keyedSets(keys: Array[Int], vals: Array[Int],
+      n: Int): (Array[Int], Array[Int]) = {
+    val off = new Array[Int](n + 1)
+    for (e <- keys.indices) off(keys(e) + 1) += 1
+    for (i <- 1 to n) off(i) += off(i - 1)
+    val out = new Array[Int](keys.length)
+    val at = java.util.Arrays.copyOf(off, n)
+    for (e <- keys.indices) { out(at(keys(e))) = vals(e); at(keys(e)) += 1 }
+    var w = 0
+    for (s <- 0 until n) {
+      val (from, to) = (off(s), off(s + 1))
+      off(s) = w
+      java.util.Arrays.sort(out, from, to)
+      for (j <- from until to)
+        if (w == off(s) || out(w - 1) != out(j)) { out(w) = out(j); w += 1 }
+    }
+    off(n) = w
+    (off, out)
+  }
+
   /** [[labelPropagation]]'s rounds on the driver over the collected edge
-    * rows ([[localPairs]]), mirroring the loop step for step. The graph
-    * is built in linear time: ids get dense indices from a primitive hash
-    * ([[DenseIds]]), renumbered so that index order is signed id order;
-    * a counting sort buckets the out-lists, each is sorted and
-    * deduplicated as `collect_set` does and checked against
-    * `graft.graph.maxDegree` with [[guardDegree]]'s message, and a second
-    * counting pass turns them into in-neighbor lists. Each round every
+    * rows ([[localPairs]], [[localCoOccurrence]]), mirroring the loop
+    * step for step. The graph is built in linear time: ids get dense
+    * indices from a primitive hash ([[DenseIds]]), renumbered so that
+    * index order is signed id order; the out-lists are bucketed, sorted
+    * and deduplicated as `collect_set` does ([[keyedSets]]) and checked
+    * against `graft.graph.maxDegree` with [[guardDegree]]'s message, and
+    * a counting pass turns them into in-neighbor lists. Each round every
     * labeled node sends its previous-round label along its out-list; a
     * node that receives messages adopts the max-count label, ties to the
     * smallest ([[ArgmaxPack]]'s order). Symmetric: the state is the src
@@ -1204,28 +1365,14 @@ object Graph {
     val n = ids.length
     val rank = new Array[Int](n)
     for (i <- 0 until n) rank(dense(ids(i))) = i
-    // out-lists: node s's targets in out(off(s) until off(s + 1))
-    val off = new Array[Int](n + 1)
-    for (e <- 0 until m) {
-      src(e) = rank(src(e)); dst(e) = rank(dst(e)); off(src(e) + 1) += 1
-    }
-    for (i <- 1 to n) off(i) += off(i - 1)
-    val out = new Array[Int](m)
-    val at = java.util.Arrays.copyOf(off, n)
-    for (e <- 0 until m) { out(at(src(e))) = dst(e); at(src(e)) += 1 }
-    // collect_set: sort and dedup each list in place, compacting the CSR
+    for (e <- 0 until m) { src(e) = rank(src(e)); dst(e) = rank(dst(e)) }
+    // out-lists: node s's distinct targets in out(off(s) until off(s + 1))
+    val (off, out) = keyedSets(src, dst, n)
     val cap = maxDegree(spark)
-    var w = 0
-    for (s <- 0 until n) {
-      val (from, to) = (off(s), off(s + 1))
-      off(s) = w
-      java.util.Arrays.sort(out, from, to)
-      for (j <- from until to)
-        if (w == off(s) || out(w - 1) != out(j)) { out(w) = out(j); w += 1 }
-      if (w - off(s) > cap) throw org.apache.spark.sql.graft.Bridge.raisedError(
-        degreeCapMessage(cap, ids(s).toString, (w - off(s)).toString)(identity).mkString)
-    }
-    off(n) = w
+    for (s <- 0 until n if off(s + 1) - off(s) > cap)
+      throw org.apache.spark.sql.graft.Bridge.raisedError(degreeCapMessage(cap,
+        ids(s).toString, (off(s + 1) - off(s)).toString)(identity).mkString)
+    val w = off(n)
     // in-neighbor lists: node d's sources in in(inOff(d) until inOff(d + 1))
     val inOff = new Array[Int](n + 1)
     for (j <- 0 until w) inOff(out(j) + 1) += 1
@@ -1276,6 +1423,9 @@ object Graph {
 
     /** The ids added so far, in first-seen order. */
     def ids: Array[Long] = java.util.Arrays.copyOf(found, n)
+
+    /** The number of ids added so far. */
+    def size: Int = n
 
     /** The index of `id`, added if new. */
     def apply(id: Long): Int = {

@@ -57,7 +57,7 @@ class SinksSpec extends SparkSpec {
   test("transmit: every envelope delivered exactly once via foreachPartition") {
     val df = (1 to 10).map(i => (i, s"v$i")).toDF("id", "v").repartition(3)
     SinksSpec.posted.clear()
-    Sinks.transmit(Sinks.envelopes(df, chunkRows = 4), SinksSpec.record)
+    Sinks.transmit(Sinks.envelopes(df, chunkRows = 4).toDF("envelope"), SinksSpec.record)
     val docs = SinksSpec.posted.toList
     assert(docs.forall(_.startsWith("""{"chunk_number":""")))
     val total = docs.map(d => "\"id\"".r.findAllIn(d).length).sum

@@ -522,6 +522,129 @@ class GraphSpec extends SparkSpec {
     assert(isLocal(Graph.labelPropagation(star, rounds = 2, symmetric = true)))
   }
 
+  /** (group, member) rows as a `g`, `m` membership frame. */
+  private def memberships(rows: (Option[Long], Option[Long])*) =
+    rows.toDF("g", "m")
+
+  test("co-occurrence tier ≡ distributed path — same rows and schema on " +
+      "overlapping groups, a null group, null members, duplicate rows, " +
+      "singleton groups, int ids, negative ids and empty input") {
+    def rows(gs: (Long, Seq[Long])*) =
+      gs.flatMap { case (g, ms) => ms.map(m => (Option(g), Option(m))) }
+    // the same pair comes from several groups; 3 is in three of them
+    val overlapping = rows(1L -> Seq(1L, 2L, 3L), 2L -> Seq(2L, 3L, 4L),
+      3L -> Seq(3L, 4L, 5L), 4L -> Seq(10L, 11L), 5L -> Seq(11L, 12L),
+      6L -> Seq(1L, 2L), 7L -> Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L))
+    val fixtures = Seq(
+      "overlapping groups" -> memberships(overlapping: _*),
+      // a group's rows in several partitions: the sizing Σ is a lower bound
+      "overlapping groups, repartitioned" ->
+        memberships(overlapping: _*).repartition(3),
+      // the null group is one group, as groupBy makes it
+      "a null group" -> memberships((None, Some(1L)), (None, Some(2L)),
+        (None, Some(7L)), (Some(1L), Some(1L)), (Some(1L), Some(3L)),
+        (None, Some(7L))),
+      // a null member is in no group; an all-null group has no pair
+      "null members" -> memberships((Some(1L), None), (Some(1L), Some(2L)),
+        (Some(1L), Some(3L)), (Some(2L), None), (Some(3L), None),
+        (Some(3L), Some(4L)), (None, None), (Some(3L), Some(2L))),
+      // repeated rows are one member, as collect_set keeps them
+      "duplicate rows" -> memberships(rows(1L -> Seq(1L, 1L, 2L, 2L),
+        2L -> Seq(2L, 3L, 3L, 2L), 3L -> Seq(5L, 5L)): _*),
+      "singleton groups" -> memberships(rows(1L -> Seq(1L), 2L -> Seq(2L),
+        3L -> Seq(3L), 4L -> Seq(3L, 5L), 5L -> Seq(6L)): _*),
+      "int ids" -> memberships(overlapping: _*)
+        .select($"g".cast("int").as("g"), $"m".cast("int").as("m")),
+      "int members, long groups" -> memberships(overlapping: _*)
+        .select($"g", $"m".cast("int").as("m")),
+      "negative ids" -> memberships(rows(Long.MinValue -> Seq(-5L, Long.MaxValue, 0L),
+        -1L -> Seq(Long.MinValue, -5L), Long.MaxValue -> Seq(Long.MinValue,
+          Long.MaxValue), 0L -> Seq(7L, -5L, -1L)): _*),
+      "empty" -> memberships())
+    for ((name, df) <- fixtures; rounds <- Seq(1, 3)) {
+      val at = s"$name, rounds=$rounds"
+      val tier = Graph.coOccurrenceLabels(df, "g", "m", rounds)
+      val loop = Graph.coOccurrenceLabels(df, "g", "m", rounds, 0L)
+      assert(isLocal(tier) && !isLocal(loop), at)
+      assert(tier.schema == loop.schema, at)
+      assert(tier.collect().map(_.toString).sorted.toSeq ==
+        loop.collect().map(_.toString).sorted.toSeq, at)
+    }
+  }
+
+  test("coOccurrenceLabels: string ids take the loop; a decimal group " +
+      "skips the co-occurrence tier without a job") {
+    val strings = Seq(("a", "1"), ("a", "2"), ("b", "2"), ("b", "3"))
+      .toDF("g", "m")
+    val got = Graph.coOccurrenceLabels(strings, "g", "m", 2)
+    assert(!isLocal(got))
+    assert(got.collect().map(_.toString).sorted.toSeq ==
+      Graph.coOccurrenceLabels(strings, "g", "m", 2, 0L).collect()
+        .map(_.toString).sorted.toSeq)
+    val decimal = memberships((Some(1L), Some(1L)), (Some(1L), Some(2L)),
+        (Some(2L), Some(2L)), (Some(2L), Some(3L)))
+      .select($"g".cast("decimal(20,0)").as("g"), $"m")
+    var none: Option[Array[Array[Long]]] = Some(Array.empty)
+    assert(jobsOf {
+      none = Graph.localCoOccurrence(decimal, "g", "m", Graph.LocalMaxEdges)
+    } == 0)
+    assert(none.isEmpty)
+    // the distributed expression runs, its own edge tier included
+    assert(Graph.coOccurrenceLabels(decimal, "g", "m", 2).collect().map(_.toString)
+      .sorted.toSeq == Graph.coOccurrenceLabels(decimal, "g", "m", 2, 0L)
+      .collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("coOccurrenceLabels: graft.graph.maxDegree raises the named cap " +
+      "error on the co-occurrence tier") {
+    // node 9 shares a group with each of 1..5: degree 5
+    val star = memberships((1L to 5L).flatMap(g =>
+      Seq((Some(g), Some(9L)), (Some(g), Some(g)))): _*)
+    spark.conf.set("graft.graph.maxDegree", "3")
+    try {
+      val err = intercept[Exception] {
+        Graph.coOccurrenceLabels(star, "g", "m", 2).collect()
+      }
+      assert(err.getMessage.contains("graft.graph.maxDegree"), err.getMessage)
+      assert(err.getMessage.contains("node 9"), err.getMessage)
+    } finally spark.conf.unset("graft.graph.maxDegree")
+    assert(isLocal(Graph.coOccurrenceLabels(star, "g", "m", 2)))
+  }
+
+  test("a nondeterministic input never reaches a tier's two reads: the " +
+      "edge and membership tiers refuse it without a job; past its " +
+      "barrier the distributed path reads it once") {
+    import org.apache.spark.sql.functions.rand
+    val edges = floorEdges.filter(rand(7) < 0.5)
+    assert(!isLocal(Graph.labelPropagation(edges, 3, symmetric = false)))
+    assert(Graph.labelPropagation(edges, 3, symmetric = false).collect()
+      .map(_.toString).sorted.toSeq == GraphSpec.loopLabelPropagation(
+        edges, 3, false).collect().map(_.toString).sorted.toSeq)
+    val members = memberships((1L to 40L).map(i =>
+      (Some(i % 7), Some(i % 11))): _*).filter(rand(7) < 0.5)
+    val pairs = floorEdges.toDF("id_a", "id_b").filter(rand(7) < 0.5)
+    for ((name, tier) <- Seq[(String, () => Option[Array[Array[Long]]])](
+        "localPairs" -> (() => Graph.localPairs(edges, "src", "dst", Graph.LocalMaxEdges)),
+        "localCoOccurrence" -> (() =>
+          Graph.localCoOccurrence(members, "g", "m", Graph.LocalMaxEdges)))) {
+      var got: Option[Array[Array[Long]]] = Some(Array.empty)
+      assert(jobsOf { got = tier() } == 0 && got.isEmpty, name)
+    }
+    // their deterministic twins do take the tier
+    assert(Graph.localPairs(floorEdges, "src", "dst", Graph.LocalMaxEdges).isDefined)
+    assert(Graph.localCoOccurrence(memberships((Some(1L), Some(2L))), "g", "m",
+      Graph.LocalMaxEdges).isDefined)
+    // coOccurrenceLabels and connectedComponents read the input once,
+    // through a localCheckpoint, before any tier sees it: the checkpointed
+    // rows are deterministic, and the results equal the loop's
+    assert(Graph.coOccurrenceLabels(members, "g", "m", 3).collect()
+      .map(_.toString).sorted.toSeq == Graph.coOccurrenceLabels(members, "g",
+        "m", 3, 0L).collect().map(_.toString).sorted.toSeq)
+    assert(Dedup.connectedComponents(pairs).collect().map(_.toString).sorted
+      .toSeq == Dedup.connectedComponents(pairs, "id_a", "id_b", 50, 0L)
+      .collect().map(_.toString).sorted.toSeq)
+  }
+
   test("degreeAssortativity: mirrored star is exactly -1 (hub meets " +
       "leaves only); regular cycle has zero degree variance → null; " +
       "layout-invariant") {
@@ -1091,6 +1214,11 @@ class GraphSpec extends SparkSpec {
     (half ++ half.map(_.swap)).toDF("src", "dst")
   }
 
+  // the same graph as (group, member) rows: 16 mirrored pairs from 10 rows
+  private lazy val floorMembers = Seq(1L -> Seq(1L, 2L, 3L), 2L -> Seq(3L, 4L),
+      3L -> Seq(4L, 5L, 6L), 4L -> Seq(6L, 7L))
+    .flatMap { case (g, ms) => ms.map((g, _)) }.toDF("g", "m")
+
   test("job floor: the round kernels run a fixed number of jobs — a " +
       "barrier turned eager or a probe added in a shared kernel changes " +
       "the count without changing any result") {
@@ -1106,7 +1234,16 @@ class GraphSpec extends SparkSpec {
       "labelPropagation tier" -> jobFloor(
         Graph.labelPropagation(floorEdges, rounds = 3, symmetric = true)),
       "pageRank" -> jobFloor(
-        Graph.pageRank(floorEdges, iterations = 5, symmetric = true)))
+        Graph.pageRank(floorEdges, iterations = 5, symmetric = true)),
+      "coOccurrenceLabels tier" -> jobFloor(
+        Graph.coOccurrenceLabels(floorMembers, "g", "m", 3)),
+      // over the bound (10 rows > 8): the sizing job, then today's path
+      "coOccurrenceLabels over 8" -> jobFloor(
+        Graph.coOccurrenceLabels(floorMembers, "g", "m", 3, 8L)),
+      "labelPropagation over 8" -> jobFloor(Graph.labelPropagation(
+        Graph.undirectedEdges(floorMembers.groupBy($"g")
+          .agg(org.apache.spark.sql.functions.collect_set($"m").as("ps")), "ps"),
+        3, true, 8L)))
     // BFS: the per-layer count jobs plus their AQE map stages; every
     // backward state and every PageRank/LPA round stays lazy
     assert(got("bfsHops") == (28, 1), got)
@@ -1115,6 +1252,11 @@ class GraphSpec extends SparkSpec {
     // the tier: the edge-row count and the packed collect, both narrow
     // jobs while built; reading the local frame runs no job
     assert(got("labelPropagation tier") == (2, 0), got)
+    // the co-occurrence tier: the sizing job and the row collect, no
+    // shuffle and no checkpoint; a refusal costs the sizing job only
+    assert(got("coOccurrenceLabels tier") == (2, 0), got)
+    val (overBuilt, overRun) = got("labelPropagation over 8")
+    assert(got("coOccurrenceLabels over 8") == (overBuilt + 1, overRun), got)
     assert(got("pageRank") == (3, 8), got)
     // the lazy backward states submit their AQE map stages while the
     // query is built, and one of those jobs races (51 or 52 build jobs,
